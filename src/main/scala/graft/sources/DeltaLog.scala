@@ -1633,15 +1633,19 @@ object DeltaLog {
 
   /** Newest committed version the log knows — JSON commits or the
     * checkpoint (after log-retention cleanup the checkpoint may be the
-    * only record of the counter).
+    * only record of the counter). -1 when the log holds neither: the
+    * base of a fresh table, whose first commit claims version 0.
     */
-  def latestVersion(tablePath: String): Long = {
-    val logDir = new File(tablePath, "_delta_log")
-    val known = Option(logDir.listFiles()).getOrElse(Array.empty)
+  private[sources] def headVersion(logDir: File): Long =
+    (Option(logDir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.matches("""\d{20}\.json""")).map(versionOf).toSeq ++
-      lastCheckpointVersion(logDir)
-    require(known.nonEmpty, s"not a Delta table: $tablePath")
-    known.max
+      lastCheckpointVersion(logDir)).maxOption.getOrElse(-1L)
+
+  /** [[headVersion]] of an existing table. */
+  def latestVersion(tablePath: String): Long = {
+    val head = headVersion(new File(tablePath, "_delta_log"))
+    require(head >= 0L, s"not a Delta table: $tablePath")
+    head
   }
 
   private def pathOf(action: Map[String, Any], f: File): String =

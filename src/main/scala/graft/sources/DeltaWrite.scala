@@ -19,8 +19,8 @@ import org.apache.spark.sql.DataFrame
   *    them, so a crashed writer leaves garbage files, never a torn table;
   *  - the commit file is staged then published to `NNNN…N.json` by an
   *    atomic link(2) that FAILS if the version exists — optimistic
-  *    concurrency exactly like real Delta (loser retries at the next
-  *    version), spec-pinned; POSIX rename would silently replace;
+  *    concurrency exactly like real Delta ([[publish]] states the
+  *    protocol), spec-pinned; POSIX rename would silently replace;
   *  - version 0 carries `protocol` (minReader 1 / minWriter 2) and
   *    `metaData` (schemaString, no partition columns) so stock readers
   *    accept the table.
@@ -42,26 +42,6 @@ object DeltaWrite {
   private def commitFiles(logDir: File): Array[File] =
     Option(logDir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.matches("""\d{20}\.json"""))
-
-  /** Next commit version: one past the newest version the log knows —
-    * JSON commits OR the checkpoint. After a log-retention cleanup
-    * ([[expireLog]]) the checkpoint may be the ONLY record of the
-    * version counter; ignoring it would restart at 0 and corrupt the
-    * table (two incompatible version-0 commits).
-    */
-  private def nextVersion(logDir: File): Long = {
-    val known = commitFiles(logDir).map(versionOf) ++
-      DeltaLog.lastCheckpointVersion(logDir)
-    if (known.isEmpty) 0L else known.max + 1
-  }
-
-  /** A log is a table once it has any commit record — JSON commits or a
-    * checkpoint that survived log cleanup.
-    */
-  private def requireTable(logDir: File, tablePath: String): Unit =
-    require(commitFiles(logDir).nonEmpty ||
-        DeltaLog.lastCheckpointVersion(logDir).isDefined,
-      s"not a Delta table: $tablePath")
 
   /** Write `df`'s rows as parquet under the table root (staged then moved
     * to uuid names), returning the published-in-root file names.
@@ -86,25 +66,19 @@ object DeltaWrite {
   /** Publish `actions` as commit `version`, atomically. Throws
     * [[ConcurrentCommitException]] if that version was committed
     * concurrently.
+    *
+    * THE COMMIT PROTOCOL of every Delta op: a commit claims the version
+    * after the one it read, or it fails. An op that reads the log
+    * (merge, delete, overwrite, optimize, restore, metadata changes)
+    * captures `base` = [[DeltaLog.headVersion]] BEFORE it reads the
+    * snapshot and publishes once at `base + 1` — a commit landing after
+    * the capture makes that claim fail fast, because rebasing the stale
+    * read set would resurrect or double rows; a no-op returns `base`.
+    * Only blind appends retry, through [[publishWithRetry]].
     */
   private[graft] def publish(logDir: File, version: Long,
-      actions: Seq[String]): Unit = {
-    val tmp = new File(logDir, s".tmp-${java.util.UUID.randomUUID}.json")
-    Files.write(tmp.toPath, actions.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    val target = new File(logDir, f"$version%020d.json")
-    // ATOMIC claim of the version: link(2) fails with EEXIST if the target
-    // exists — unlike rename(2), which POSIX makes silently REPLACE it (a
-    // plain ATOMIC_MOVE here would let two writers both "win" version N
-    // and one commit vanish; the spec pins this refusal)
-    try Files.createLink(target.toPath, tmp.toPath)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp.toPath)
-        throw new ConcurrentCommitException(
-          s"concurrent Delta commit: version $version already exists in " +
-            s"$logDir — retry at the next version")
-    } finally Files.deleteIfExists(tmp.toPath)
-  }
+      actions: Seq[String]): Unit =
+    publishStreamed(logDir, version, actions, Seq.empty, Seq.empty)
 
   private def headerActions(df: DataFrame,
       partitionCols: Seq[String] = Seq.empty): Seq[String] =
@@ -163,46 +137,29 @@ object DeltaWrite {
       schema: org.apache.spark.sql.types.StructType): String =
     addAction(f, fileStats(f, schema))
 
-  /** Claim-the-next-version retry loop for appends, whose DATA can never
-    * conflict (real Delta's conflict matrix allows concurrent appends;
-    * only the VERSION NUMBER is contended) — but whose VALIDATION can go
-    * stale: a concurrent commit may carry a metaData/protocol action
-    * (ALTER ADD CONSTRAINT, schema change, column-mapping upgrade), and
-    * real Delta fails appends across those (MetadataChangedException)
-    * rather than committing a batch the new metadata never screened. So
-    * each attempt calls `preClaim(version)` BEFORE claiming: the caller
-    * re-validates iff a metaData/protocol commit landed since its last
-    * check ([[metadataChangedBetween]]). The exactly-once reasoning of
-    * [[appendIdempotent]] applies: versions are dense, so every commit
-    * < `version` exists when `preClaim` runs, and a successful claim of
-    * `version` proves no unvalidated commit slipped between the check
-    * and the claim. On a lost race the version is recomputed, `preClaim`
-    * re-runs, and `actions` is re-evaluated with the new version (the
-    * version-0 header appears exactly when this writer creates the
-    * table). Only [[ConcurrentCommitException]] retries — any other
-    * failure escapes immediately. Ops that READ the snapshot before
-    * writing (merge / delete / overwrite / optimize / restore) still
-    * fail fast on a lost race: their read set may be stale and a silent
-    * rebase could resurrect or double rows.
+  /** The append retry loop. Appends' DATA can never conflict (real
+    * Delta's conflict matrix allows concurrent appends; only the VERSION
+    * NUMBER is contended), so each attempt claims head + 1 and a lost
+    * claim re-runs through [[ConcurrentCommitException.retry]]. Before
+    * each claim `attempt(version)` returns the actions to claim it with
+    * — the version-0 header appears exactly when this writer creates the
+    * table — or None to veto the commit. Versions are dense, so every
+    * commit below `version` exists when `attempt` runs, and a successful
+    * claim proves none slipped between its checks and the claim: the
+    * caller re-validates there when a metaData/protocol commit landed
+    * ([[revalidateOnMetadataChange]]; real Delta fails appends across
+    * those with MetadataChangedException rather than commit a batch the
+    * new metadata never screened) and re-reads its txn record.
     */
-  private def publishWithRetry(logDir: File,
-      actions: Long => Seq[String], attempts: Int = 32,
-      preClaim: Long => Unit = _ => ()): Long = {
-    var left = attempts
-    while (true) {
-      val version = nextVersion(logDir)
-      preClaim(version)
-      try {
-        publish(logDir, version, actions(version))
-        return version
-      } catch {
-        case e: ConcurrentCommitException =>
-          left -= 1
-          if (left <= 0) throw e
+  private def publishWithRetry(logDir: File)(
+      attempt: Long => Option[Seq[String]]): Option[Long] =
+    ConcurrentCommitException.retry {
+      val version = DeltaLog.headVersion(logDir) + 1
+      attempt(version).map { actions =>
+        publish(logDir, version, actions)
+        version
       }
     }
-    -1L // unreachable
-  }
 
   /** True iff any committed version in (`after`, `until`) carries a
     * metaData or protocol action — the signal that an append's
@@ -238,13 +195,9 @@ object DeltaWrite {
     }
   }
 
-  /** Seams for the cross-format mirror ([[Uniform.icebergToDelta]]):
-    * version counter and version-0 header, without exposing the
-    * internals more widely.
+  /** Seam for the cross-format mirror ([[Uniform.icebergToDelta]]): the
+    * version-0 header, without exposing the internals more widely.
     */
-  private[sources] def nextMirrorVersion(logDir: File): Long =
-    nextVersion(logDir)
-
   private[sources] def mirrorHeader(
       schema: org.apache.spark.sql.types.StructType): Seq[String] =
     headerActions(schema, Seq.empty)
@@ -277,9 +230,7 @@ object DeltaWrite {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types._
     val logDir = new File(tablePath, "_delta_log")
-    if (commitFiles(logDir).isEmpty &&
-      DeltaLog.lastCheckpointVersion(logDir).isEmpty)
-      return (df, df.schema)
+    if (DeltaLog.headVersion(logDir) < 0L) return (df, df.schema)
     val meta = DeltaLog.tableMetaData(spark, tablePath)
     val mode = DeltaLog.mappingMode(meta)
     if (mode == "none") return (df, df.schema)
@@ -508,27 +459,89 @@ object DeltaWrite {
   }
 
   /** APPEND `df` as one atomic commit; returns the committed version. */
-  def append(df: DataFrame, tablePath: String): Long = {
+  def append(df: DataFrame, tablePath: String): Long =
+    appendCommit(df, tablePath, Seq.empty, None).get // no txn: no veto
+
+  /** The append family's one body ([[append]], [[appendPartitioned]],
+    * [[appendIdempotent]]): screen the batch, stage its files, then
+    * commit through [[publishWithRetry]]. With `txn` = (appId, epoch)
+    * the commit carries Delta's transaction identifier, and each attempt
+    * re-reads the txn table AFTER choosing its version: the commit this
+    * writer lost to may be another worker retrying the SAME epoch, so a
+    * recorded epoch vetoes the commit (staged files deleted, None)
+    * instead of doubling the batch.
+    */
+  private def appendCommit(df: DataFrame, tablePath: String,
+      partitionCols: Seq[String], txn: Option[(String, Long)]): Option[Long] = {
+    val spark = df.sparkSession
     val root = new File(tablePath)
     val logDir = new File(root, "_delta_log")
     logDir.mkdirs()
-    val validatedAt = nextVersion(logDir) - 1
-    requireSatisfiesConstraints(df.sparkSession, tablePath, df, "append")
-    requirePartitioningMatches(df.sparkSession, tablePath, Seq.empty)
+    val op =
+      if (txn.isDefined) "idempotent append"
+      else if (partitionCols.nonEmpty) "partitioned append"
+      else "append"
+    val validatedAt = DeltaLog.headVersion(logDir)
+    requireSatisfiesConstraints(spark, tablePath, df, op)
+    requirePartitioningMatches(spark, tablePath, partitionCols)
     onAppendRaceWindow()
-    // column-mapped tables stage PHYSICAL-named (and id-stamped) files
-    val (stage, physSchema) = physicalizeForStage(df.sparkSession, tablePath, df)
-    val files = stageDataFiles(stage, root)
-    // footer stats computed once; only the version-dependent header is
-    // re-evaluated on a lost concurrency race
-    val adds = files.map(addWithStats(_, physSchema))
-    publishWithRetry(logDir, version => {
-      val header = if (version == 0L) headerActions(df) else Seq.empty
-      header ++ adds :+
+    val revalidate =
+      revalidateOnMetadataChange(logDir, tablePath, df, op, validatedAt)
+    // COLUMN-MAPPED tables append first-class: the batch is authored
+    // against the LOGICAL schema, staged under PHYSICAL column names
+    // (id-stamped footers in id mode), and partitioned batches land in
+    // PHYSICAL hive dirs — the pv keys every mapped add records
+    val (stage, physSchema) = physicalizeForStage(spark, tablePath, df)
+    val (files, adds) =
+      stageAdds(spark, tablePath, root, stage, physSchema, partitionCols)
+    // an idempotent epoch may be empty: its txn record still lands
+    require(files.nonEmpty || txn.isDefined,
+      s"no data files produced for $tablePath")
+    val txnAction = txn.map { case (appId, epoch) =>
+      s"""{"txn":{"appId":"${jsonEscape(appId)}","version":$epoch}}"""
+    }
+    val commitInfo =
+      if (txn.isDefined)
+        """{"commitInfo":{"operation":"STREAMING UPDATE","operationParameters":{}}}"""
+      else
         """{"commitInfo":{"operation":"WRITE","operationParameters":{"mode":"Append"}}}"""
-    }, preClaim =
-      revalidateOnMetadataChange(logDir, tablePath, df, "append", validatedAt))
+    publishWithRetry(logDir) { version =>
+      if (txn.exists { case (appId, epoch) =>
+          DeltaLog.latestTxnVersions(tablePath).get(appId).exists(_ >= epoch)
+        }) {
+        files.foreach(f => Files.deleteIfExists(f.toPath))
+        None
+      } else {
+        revalidate(version)
+        val header =
+          if (version == 0L) headerActions(df, partitionCols) else Seq.empty
+        Some(header ++ txnAction ++ adds :+ commitInfo)
+      }
+    }
   }
+
+  /** Stage `staged` as data files under the table root — flat, or in
+    * hive `col=value/` dirs when `partCols` is non-empty — and render
+    * their add actions with footer stats over the DATA columns of
+    * `statsSchema` (partition values live in the log, not the footers).
+    * The shared landing step of every writer that adds rows.
+    */
+  private def stageAdds(spark: org.apache.spark.sql.SparkSession,
+      tablePath: String, root: File, staged: DataFrame,
+      statsSchema: org.apache.spark.sql.types.StructType,
+      partCols: Seq[String]): (Seq[File], Seq[String]) =
+    if (partCols.isEmpty) {
+      val fs = stageDataFiles(staged, root)
+      (fs, fs.map(addWithStats(_, statsSchema)))
+    } else {
+      val physParts = physPartitionCols(spark, tablePath, partCols)
+      val moved = stagePartitionedFiles(staged, root, physParts)
+      val dataSchema = org.apache.spark.sql.types.StructType(
+        statsSchema.fields.filterNot(f => physParts.contains(f.name)))
+      (moved.map(_._1), moved.map { case (f, pv) =>
+        partitionedAddAction(root, f, pv, dataSchema, dataChange = true)
+      })
+    }
 
   /** Outcome of a [[merge]] commit. */
   final case class MergeStats(version: Long, filesRewritten: Int,
@@ -576,7 +589,7 @@ object DeltaWrite {
     val spark = source.sparkSession
     val root = new File(tablePath)
     val logDir = new File(root, "_delta_log")
-    requireTable(logDir, tablePath)
+    val base = DeltaLog.latestVersion(tablePath)
     val adds = DeltaLog.liveAdds(spark, tablePath)
     val meta = DeltaLog.tableMetaData(spark, tablePath)
     val mapMode = DeltaLog.mappingMode(meta)
@@ -661,7 +674,7 @@ object DeltaWrite {
     require(srcCount == 0L || kstats.getLong(1) <= 1L,
       "merge source has multiple rows for the same key (ambiguous match)")
     if (srcCount == 0L) // empty batch: a no-op, not an empty commit
-      return MergeStats(nextVersion(logDir) - 1, 0, 0, 0L, 0L)
+      return MergeStats(base, 0, 0, 0L, 0L)
     val srcKeys = src.select(keys.map(c => col(s"`$c`")): _*)
     // the extra match condition with SQL join NULL semantics (a NULL
     // evaluation is a non-match, never an update)
@@ -805,19 +818,8 @@ object DeltaWrite {
       else physicalizeForStage(spark, tablePath, out,
         logicalOverride = evolvedLogical)
     val (files, addActions) =
-      if (partCols.isEmpty) {
-        val fs = stageDataFiles(outStaged, root)
-        (fs, fs.map(addWithStats(_, outStatsSchema)))
-      } else {
-        val physParts = physPartitionCols(spark, tablePath, partCols)
-        val moved = stagePartitionedFiles(outStaged, root, physParts)
-        val dataSchema = StructType(
-          outStatsSchema.fields.filterNot(f => physParts.contains(f.name)))
-        (moved.map(_._1), moved.map { case (f, pv) =>
-          partitionedAddAction(root, f, pv, dataSchema, dataChange = true)
-        })
-      }
-    val version = nextVersion(logDir)
+      stageAdds(spark, tablePath, root, outStaged, outStatsSchema, partCols)
+    val version = base + 1
     val removes = touchedAdds.map(removeAction(_))
     // an evolving merge commits a NEW metaData action with the merged
     // schema — table id, partitioning, and configuration all carry
@@ -888,7 +890,7 @@ object DeltaWrite {
       count_distinct, lit}
     val root = new File(tablePath)
     val logDir = new File(root, "_delta_log")
-    requireTable(logDir, tablePath)
+    val base = DeltaLog.latestVersion(tablePath)
     val adds = DeltaLog.liveAdds(spark, tablePath)
     val meta = DeltaLog.tableMetaData(spark, tablePath)
     val mapMode = DeltaLog.mappingMode(meta)
@@ -918,7 +920,7 @@ object DeltaWrite {
     require(srcCount == 0L || kstats.getLong(1) <= 1L,
       "merge source has multiple rows for the same key (ambiguous match)")
     if (srcCount == 0L) // empty batch: a no-op, not an empty commit
-      return MergeStats(nextVersion(logDir) - 1, 0, 0, 0L, 0L)
+      return MergeStats(base, 0, 0, 0L, 0L)
     val srcKeys = src.select(keys.map(c => col(s"`$c`")): _*)
     val condT = matchCondition.map(c =>
       org.apache.spark.sql.functions.coalesce(c, lit(false)))
@@ -962,18 +964,7 @@ object DeltaWrite {
         if (mapMode == "none") (src, src.schema)
         else physicalizeForStage(spark, tablePath, src)
       val (files, addActions) =
-        if (partCols.isEmpty) {
-          val fs = stageDataFiles(outStaged, root)
-          (fs, fs.map(addWithStats(_, outStatsSchema)))
-        } else {
-          val physParts = physPartitionCols(spark, tablePath, partCols)
-          val moved = stagePartitionedFiles(outStaged, root, physParts)
-          val dataSchema = org.apache.spark.sql.types.StructType(
-            outStatsSchema.fields.filterNot(f => physParts.contains(f.name)))
-          (moved.map(_._1), moved.map { case (f, pv) =>
-            partitionedAddAction(root, f, pv, dataSchema, dataChange = true)
-          })
-        }
+        stageAdds(spark, tablePath, root, outStaged, outStatsSchema, partCols)
       // CDF: identical shape to the CoW merge — matched old rows as
       // update_preimage, their batch replacements as update_postimage,
       // unmatched source rows as insert; all O(batch)
@@ -993,7 +984,7 @@ object DeltaWrite {
       val protoAction =
         if (touched.isEmpty) Seq.empty
         else dvProtocolAction(tablePath, mapMode != "none")
-      val version = nextVersion(logDir)
+      val version = base + 1
       publish(logDir, version,
         protoAction ++ dvKillActions(touched) ++ addActions ++ cdcActions :+
         """{"commitInfo":{"operation":"MERGE","operationParameters":{"mode":"merge-on-read"}}}""")
@@ -1063,10 +1054,9 @@ object DeltaWrite {
       tablePath: String,
       predicate: org.apache.spark.sql.Column): DeleteStats = {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.StructType
     val root = new File(tablePath)
     val logDir = new File(root, "_delta_log")
-    requireTable(logDir, tablePath)
+    val base = DeltaLog.latestVersion(tablePath)
     val adds = DeltaLog.liveAdds(spark, tablePath)
     val mapMode = DeltaLog.mappingMode(DeltaLog.tableMetaData(spark, tablePath))
     val partCols = DeltaLog.recordedPartitionColumns(spark, tablePath)
@@ -1075,7 +1065,7 @@ object DeltaWrite {
     val candidateAdds = prunePartitionConjuncts(spark, tablePath, adds,
       predicate)
     if (candidateAdds.isEmpty)
-      return DeleteStats(nextVersion(logDir) - 1, 0, 0, 0L)
+      return DeleteStats(base, 0, 0, 0L)
     // match scan: snapshot read (existing DVs applied, typed partition
     // columns injected from the log so the predicate may reference
     // them), with physical row identity captured BEFORE the pv join
@@ -1091,7 +1081,7 @@ object DeltaWrite {
         throw new IllegalStateException(
           s"matched file not in live set: $uri")))
     if (touchedAdds.isEmpty)
-      return DeleteStats(nextVersion(logDir) - 1, 0, 0, 0L)
+      return DeleteStats(base, 0, 0, 0L)
     // decode touched files through the snapshot reader (mapping
     // resolved, DVs applied, typed pv injected)
     val touchedRows =
@@ -1111,18 +1101,8 @@ object DeltaWrite {
       else physicalizeForStage(spark, tablePath, survivors)
     val (files, addActions) =
       if (survivors.isEmpty) (Seq.empty[File], Seq.empty[String])
-      else if (partCols.isEmpty) {
-        val fs = stageDataFiles(survivorsStaged, root)
-        (fs, fs.map(addWithStats(_, statsSchema)))
-      } else {
-        val physParts = physPartitionCols(spark, tablePath, partCols)
-        val moved = stagePartitionedFiles(survivorsStaged, root, physParts)
-        val dataSchema = StructType(
-          statsSchema.fields.filterNot(f => physParts.contains(f.name)))
-        (moved.map(_._1), moved.map { case (f, pv) =>
-          partitionedAddAction(root, f, pv, dataSchema, dataChange = true)
-        })
-      }
+      else stageAdds(spark, tablePath, root, survivorsStaged, statsSchema,
+        partCols)
     // CDF: survivors re-add under new uuids, so add/remove derivation
     // would wrongly report them deleted+inserted — publish the exact
     // deleted rows instead (O(deleted), not O(touched files)); mapped
@@ -1139,7 +1119,7 @@ object DeltaWrite {
             passthrough = Seq("_change_type"))._1
         stageCdc(staged, root)
       }
-    val version = nextVersion(logDir)
+    val version = base + 1
     val removes = touchedAdds.map(removeAction(_))
     publish(logDir, version,
       removes ++ addActions ++ cdcActions :+
@@ -1178,10 +1158,9 @@ object DeltaWrite {
       tablePath: String, predicate: org.apache.spark.sql.Column,
       df: DataFrame): ReplaceStats = {
     import org.apache.spark.sql.functions.{coalesce, col, count, lit}
-    import org.apache.spark.sql.types.StructType
     val root = new File(tablePath)
     val logDir = new File(root, "_delta_log")
-    requireTable(logDir, tablePath)
+    val base = DeltaLog.latestVersion(tablePath)
     val adds = DeltaLog.liveAdds(spark, tablePath)
     val mapMode = DeltaLog.mappingMode(DeltaLog.tableMetaData(spark, tablePath))
     val partCols = DeltaLog.recordedPartitionColumns(spark, tablePath)
@@ -1231,7 +1210,7 @@ object DeltaWrite {
     val rowsDeleted = touchedRows.fold(0L)(_.filter(predicate).count())
     val rowsInserted = batch.count()
     if (touchedAdds.isEmpty && rowsInserted == 0L)
-      return ReplaceStats(nextVersion(logDir) - 1, 0, 0, 0L, 0L)
+      return ReplaceStats(base, 0, 0, 0L, 0L)
     val survivors = touchedRows.map(_.filter(
       !coalesce(predicate, lit(false))))
     val out = survivors.fold(batch)(_.unionByName(batch))
@@ -1253,19 +1232,9 @@ object DeltaWrite {
       else physicalizeForStage(spark, tablePath, out)
     val (files, addActions) =
       if (out.isEmpty) (Seq.empty[File], Seq.empty[String])
-      else if (partCols.isEmpty) {
-        val fs = stageDataFiles(outStaged, root)
-        (fs, fs.map(addWithStats(_, outStatsSchema)))
-      } else {
-        val physParts = physPartitionCols(spark, tablePath, partCols)
-        val moved = stagePartitionedFiles(outStaged, root, physParts)
-        val dataSchema = StructType(
-          outStatsSchema.fields.filterNot(f => physParts.contains(f.name)))
-        (moved.map(_._1), moved.map { case (f, pv) =>
-          partitionedAddAction(root, f, pv, dataSchema, dataChange = true)
-        })
-      }
-    val version = nextVersion(logDir)
+      else stageAdds(spark, tablePath, root, outStaged, outStatsSchema,
+        partCols)
+    val version = base + 1
     publish(logDir, version,
       touchedAdds.map(removeAction(_)) ++ addActions ++ cdcActions :+
         s"""{"commitInfo":{"operation":"WRITE","operationParameters":{"mode":"Overwrite","predicate":"replaceWhere"}}}""")
@@ -1304,13 +1273,13 @@ object DeltaWrite {
       tablePath: String): Long = {
     val root = new File(tablePath)
     val logDir = new File(root, "_delta_log")
-    requireTable(logDir, tablePath)
+    val base = DeltaLog.latestVersion(tablePath)
     val meta = DeltaLog.tableMetaData(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"cannot enable CDF: no metaData action in the log of $tablePath"))
     // PRESERVE existing configuration keys (dropping, say, a
     // columnMapping mode would corrupt the table) and add the property
-    setConfiguration(meta, logDir,
+    setConfiguration(meta, logDir, base,
       Map("delta.enableChangeDataFeed" -> "true"))
   }
 
@@ -1319,10 +1288,11 @@ object DeltaWrite {
     * TBLPROPERTIES` engine shared by CDF enablement and CHECK
     * constraints. All other metaData fields (table id, schema, partition
     * columns) carry forward verbatim. `extraActions` ride the same
-    * commit (e.g. a protocol upgrade).
+    * commit (e.g. a protocol upgrade). Commits at `base + 1`, `base`
+    * being the head the caller captured before it read `meta`.
     */
   private def setConfiguration(meta: Map[String, Any], logDir: File,
-      set: Map[String, String], unset: Set[String] = Set.empty,
+      base: Long, set: Map[String, String], unset: Set[String] = Set.empty,
       extraActions: Seq[String] = Seq.empty,
       newSchemaJson: Option[String] = None,
       operation: String = "SET TBLPROPERTIES",
@@ -1350,7 +1320,7 @@ object DeltaWrite {
     val opParamsJson = opParams.toSeq.sortBy(_._1).map { case (k, v) =>
       s""""${jsonEscape(k)}":"${jsonEscape(v)}""""
     }.mkString("{", ",", "}")
-    val version = nextVersion(logDir)
+    val version = base + 1
     publish(logDir, version, extraActions ++ Seq(
       metaDataActionJson(str("id"),
         newSchemaJson.getOrElse(str("schemaString")), partCols, configJson),
@@ -1416,7 +1386,7 @@ object DeltaWrite {
       tablePath: String): Long = {
     import org.apache.spark.sql.types._
     val logDir = new File(tablePath, "_delta_log")
-    requireTable(logDir, tablePath)
+    val base = DeltaLog.latestVersion(tablePath)
     val meta = DeltaLog.tableMetaData(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"no metaData action in $tablePath — cannot upgrade"))
@@ -1450,7 +1420,7 @@ object DeltaWrite {
       else
         s"""{"protocol":{"minReaderVersion":2,"minWriterVersion":${
           math.max(5, minW)}}}"""
-    setConfiguration(meta, logDir,
+    setConfiguration(meta, logDir, base,
       Map("delta.columnMapping.mode" -> "name",
         "delta.columnMapping.maxColumnId" -> nextId.toString),
       extraActions = Seq(proto),
@@ -1489,8 +1459,7 @@ object DeltaWrite {
     // was expired (checkpoint-only) has no 0.json, so publish(…, 0L)
     // would "succeed" with actions invisible below the checkpoint —
     // the same existence test physicalizeForStage uses
-    require(!logDir.isDirectory || (commitFiles(logDir).isEmpty &&
-        DeltaLog.lastCheckpointVersion(logDir).isEmpty),
+    require(DeltaLog.headVersion(logDir) < 0L,
       s"table already exists: $tablePath (id mode is creation-time " +
         "only — real Delta's rule; existing tables upgrade to name mode)")
     def nested(dt: DataType): Boolean = dt match {
@@ -1569,7 +1538,7 @@ object DeltaWrite {
       tablePath: String, oldName: String, newName: String): Long = {
     import org.apache.spark.sql.types._
     val logDir = new File(tablePath, "_delta_log")
-    requireTable(logDir, tablePath)
+    val base = DeltaLog.latestVersion(tablePath)
     val meta = DeltaLog.tableMetaData(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"no metaData action in $tablePath"))
@@ -1604,7 +1573,7 @@ object DeltaWrite {
       if (priorPartCols.contains(oldName))
         Some(priorPartCols.map(c => if (c == oldName) newName else c))
       else None
-    setConfiguration(meta, logDir, Map.empty,
+    setConfiguration(meta, logDir, base, Map.empty,
       newSchemaJson = Some(renamed.json),
       operation = "RENAME COLUMN",
       opParams = Map("from" -> oldName, "to" -> newName),
@@ -1626,7 +1595,7 @@ object DeltaWrite {
       tablePath: String, name: String): Long = {
     import org.apache.spark.sql.types._
     val logDir = new File(tablePath, "_delta_log")
-    requireTable(logDir, tablePath)
+    val base = DeltaLog.latestVersion(tablePath)
     val meta = DeltaLog.tableMetaData(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"no metaData action in $tablePath"))
@@ -1653,7 +1622,7 @@ object DeltaWrite {
           "drop the constraint first")
     }
     val remaining = StructType(schema.fields.filterNot(_.name == name))
-    setConfiguration(meta, logDir, Map.empty,
+    setConfiguration(meta, logDir, base, Map.empty,
       newSchemaJson = Some(remaining.json),
       operation = "DROP COLUMNS",
       opParams = Map("column" -> name))
@@ -1679,7 +1648,7 @@ object DeltaWrite {
       s"constraint name must be an identifier: $name")
     val root = new File(tablePath)
     val logDir = new File(root, "_delta_log")
-    requireTable(logDir, tablePath)
+    val base = DeltaLog.latestVersion(tablePath)
     val meta = DeltaLog.tableMetaData(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"cannot add constraint: no metaData action in $tablePath"))
@@ -1698,7 +1667,7 @@ object DeltaWrite {
     val protoBump =
       if (mw >= 3) Seq.empty
       else Seq(s"""{"protocol":{"minReaderVersion":$mr,"minWriterVersion":3}}""")
-    setConfiguration(meta, logDir, Map(key -> exprSql),
+    setConfiguration(meta, logDir, base, Map(key -> exprSql),
       extraActions = protoBump)
   }
 
@@ -1706,7 +1675,7 @@ object DeltaWrite {
   def dropCheckConstraint(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, name: String): Long = {
     val logDir = new File(tablePath, "_delta_log")
-    requireTable(logDir, tablePath)
+    val base = DeltaLog.latestVersion(tablePath)
     val meta = DeltaLog.tableMetaData(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"cannot drop constraint: no metaData action in $tablePath"))
@@ -1716,7 +1685,7 @@ object DeltaWrite {
       .getOrElse(Map.empty)
     require(existing.contains(key),
       s"no such constraint on $tablePath: $name")
-    setConfiguration(meta, logDir, Map.empty, unset = Set(key))
+    setConfiguration(meta, logDir, base, Map.empty, unset = Set(key))
   }
 
   /** Writer-side CHECK enforcement: refuse `df` if any row violates a
@@ -1730,8 +1699,7 @@ object DeltaWrite {
       df: DataFrame, op: String): Unit = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     val logDir = new File(tablePath, "_delta_log")
-    if (commitFiles(logDir).isEmpty &&
-      DeltaLog.lastCheckpointVersion(logDir).isEmpty) return
+    if (DeltaLog.headVersion(logDir) < 0L) return
     val cons = DeltaLog.checkConstraints(spark, tablePath)
     cons.foreach { case (name, e) =>
       val bad = df.filter(not(coalesce(expr(e), lit(true))))
@@ -2106,7 +2074,7 @@ object DeltaWrite {
       sort_array, sum}
     val root = new File(tablePath)
     val logDir = new File(root, "_delta_log")
-    requireTable(logDir, tablePath)
+    val base = DeltaLog.latestVersion(tablePath)
     val adds = DeltaLog.liveAdds(spark, tablePath)
     // MAPPED tables MoR-delete first-class: the match scan decodes
     // logically with each row's PHYSICAL identity captured before the
@@ -2134,7 +2102,7 @@ object DeltaWrite {
     val touched = stageDvKills(spark, root, matched, byPath,
       maxDvCollectBytes)
     if (touched.isEmpty) // nothing matched: a no-op, not an empty commit
-      return DvDeleteStats(nextVersion(logDir) - 1, 0, 0, 0L)
+      return DvDeleteStats(base, 0, 0, 0L)
     val rowsDeleted = touched.map(_._2).sum
     val fullyDead = touched.count(_._4.isEmpty)
     val dvActions: Seq[String] = dvKillActions(touched)
@@ -2154,7 +2122,7 @@ object DeltaWrite {
             passthrough = Seq("_change_type"))._1
         stageCdc(staged, root)
       }
-    val version = nextVersion(logDir)
+    val version = base + 1
     publish(logDir, version,
       protoAction ++ dvActions ++ cdcActions :+
       """{"commitInfo":{"operation":"DELETE","operationParameters":{"mode":"merge-on-read"}}}""")
@@ -2180,7 +2148,7 @@ object DeltaWrite {
       tablePath: String): PurgeStats = {
     val root = new File(tablePath)
     val logDir = new File(root, "_delta_log")
-    requireTable(logDir, tablePath)
+    val base = DeltaLog.latestVersion(tablePath)
     val adds = DeltaLog.liveAdds(spark, tablePath)
     // mapped tables purge first-class: the DV filter is POSITIONAL
     // (file + row index — no column semantics), so survivors read back
@@ -2188,7 +2156,7 @@ object DeltaWrite {
     val rewriteSchema = mappedRewriteSchema(spark, tablePath, adds)
     val dvAdds = adds.filter(_.dv.isDefined)
     if (dvAdds.isEmpty)
-      return PurgeStats(nextVersion(logDir) - 1, 0, 0)
+      return PurgeStats(base, 0, 0)
     // PARTITION GROUPS: a partitioned table's rewrite runs one job per
     // TOUCHED partition tuple (only DV-carrying files are in play), and
     // each group's fresh files inherit that tuple in their add actions —
@@ -2200,7 +2168,7 @@ object DeltaWrite {
     val groups = dvAdds.groupBy(_.partitionValues).toSeq
     val partitioned = dvAdds.exists(_.partitionValues.nonEmpty)
     val newAdds = groups.flatMap { case (pv, groupAdds) =>
-      val base = rewriteSchema match {
+      val raw = rewriteSchema match {
         case Some(sch) =>
           spark.read.schema(sch).parquet(groupAdds.map(_.path): _*)
         case None if partitioned =>
@@ -2211,7 +2179,7 @@ object DeltaWrite {
           case None => spark.read.parquet(groupAdds.map(_.path): _*)
         }
       }
-      val liveRows = DeltaLog.applyDv(spark, base, groupAdds, root)
+      val liveRows = DeltaLog.applyDv(spark, raw, groupAdds, root)
       // stage first, then drop zero-row outputs from the FOOTER count:
       // the old liveRows.isEmpty probe was its own driver job per group
       // re-reading real data. (An externally-written full-file DV can
@@ -2223,7 +2191,7 @@ object DeltaWrite {
         if (rows == 0L) { f.delete(); false } else true
       }
       files.map { f =>
-        val stats = fileStats(f, base.schema)
+        val stats = fileStats(f, raw.schema)
         s"""{"add":{"path":"${jsonEscape(f.getName)}",""" +
           s""""partitionValues":${pvJson(pv)},""" +
           s""""size":${f.length},"modificationTime":${f.lastModified},""" +
@@ -2231,7 +2199,7 @@ object DeltaWrite {
           """"dataChange":false}}"""
       }
     }
-    val version = nextVersion(logDir)
+    val version = base + 1
     val removes = dvAdds.map(a =>
       s"""{"remove":{"path":"${jsonEscape(a.recordedPath)}","dataChange":false}}""")
     publish(logDir, version, removes ++ newAdds :+
@@ -2258,8 +2226,7 @@ object DeltaWrite {
       olderThanMs: Long = 7L * 24 * 3600 * 1000,
       dryRun: Boolean = false): Seq[String] = {
     val root = new File(tablePath)
-    val logDir = new File(root, "_delta_log")
-    requireTable(logDir, tablePath)
+    DeltaLog.latestVersion(tablePath) // refuses a non-table
     val liveAdds = DeltaLog.liveAdds(spark, tablePath)
     val live = liveAdds.map(a => new File(a.path).getName).toSet
     // a DV file referenced by any live add's descriptor is LIVE metadata:
@@ -2301,14 +2268,13 @@ object DeltaWrite {
     val logDir = new File(root, "_delta_log")
     logDir.mkdirs()
     val spark = df.sparkSession
+    val base = DeltaLog.headVersion(logDir)
     val prior =
-      if (commitFiles(logDir).isEmpty &&
-        DeltaLog.lastCheckpointVersion(logDir).isEmpty) Seq.empty
-      else DeltaLog.liveAdds(spark, tablePath)
+      if (base < 0L) Seq.empty else DeltaLog.liveAdds(spark, tablePath)
     requireSatisfiesConstraints(spark, tablePath, df, "overwrite")
     val (stage, physSchema) = physicalizeForStage(spark, tablePath, df)
     val files = stageDataFiles(stage, root)
-    val version = nextVersion(logDir)
+    val version = base + 1
     val header = if (version == 0L) headerActions(df) else Seq.empty
     // overwriting a PARTITIONED table lands unpartitioned adds, so the
     // same commit redeclares partitionColumns=[] (the overwriteSchema
@@ -2341,78 +2307,10 @@ object DeltaWrite {
     * (appId, epoch) was already committed.
     */
   def appendIdempotent(df: DataFrame, tablePath: String, appId: String,
-      epoch: Long, partitionCols: Seq[String] = Seq.empty): Option[Long] = {
-    val root = new File(tablePath)
-    val logDir = new File(root, "_delta_log")
-    logDir.mkdirs()
-    val committed = DeltaLog.latestTxnVersions(tablePath).get(appId)
-    if (committed.exists(_ >= epoch)) return None
-    val validatedAt = nextVersion(logDir) - 1
-    requireSatisfiesConstraints(df.sparkSession, tablePath, df,
-      "idempotent append")
-    requirePartitioningMatches(df.sparkSession, tablePath, partitionCols)
-    val revalidate = revalidateOnMetadataChange(logDir, tablePath, df,
-      "idempotent append", validatedAt)
-    val (stage, physSchema) = physicalizeForStage(df.sparkSession, tablePath, df)
-    // PARTITIONED sinks are the streaming norm (a date-partitioned
-    // events table fed by micro-batches): same hive staging as
-    // appendPartitioned, same txn-keyed exactly-once discipline
-    val (files, adds) =
-      if (partitionCols.isEmpty) {
-        val fs = stageDataFiles(stage, root)
-        (fs, fs.map(addWithStats(_, physSchema)))
-      } else {
-        val physParts = physPartitionCols(df.sparkSession, tablePath,
-          partitionCols)
-        val moved = stagePartitionedFiles(stage, root, physParts)
-        val dataSchema = org.apache.spark.sql.types.StructType(
-          physSchema.fields.filterNot(f => physParts.contains(f.name)))
-        (moved.map(_._1), moved.map { case (f, pv) =>
-          partitionedAddAction(root, f, pv, dataSchema, dataChange = true)
-        })
-      }
-    // retry the version claim like a blind append, but RE-CHECK the txn
-    // table each attempt: the commit we lost the race to may be another
-    // worker retrying THIS (appId, epoch) — appending anyway would double
-    // the batch. ORDER MATTERS for exactly-once: compute the target
-    // version FIRST, then scan txns — versions are dense, so every commit
-    // <= target-1 exists at scan time and is covered by the scan; a
-    // successful claim of `target` then proves no unvalidated commit
-    // slipped between the check and the claim (checking before choosing
-    // the target would leave a window where a competing same-epoch commit
-    // lands and our claim still succeeds one version later). On
-    // discovering the epoch landed, drop our staged files (invisible
-    // garbage otherwise) and report the no-op.
-    var left = 32
-    while (true) {
-      val version = nextVersion(logDir)
-      if (DeltaLog.latestTxnVersions(tablePath).get(appId)
-          .exists(_ >= epoch)) {
-        files.foreach(f => Files.deleteIfExists(f.toPath))
-        return None
-      }
-      // a lost race may have been a concurrent ALTER ADD CONSTRAINT /
-      // schema change — re-screen the batch against the new metadata
-      // before re-claiming (same conflict class real Delta fails
-      // appends on)
-      revalidate(version)
-      val header =
-        if (version == 0L) headerActions(df, partitionCols) else Seq.empty
-      try {
-        publish(logDir, version,
-          header ++
-            Seq(s"""{"txn":{"appId":"${jsonEscape(appId)}","version":$epoch}}""") ++
-            adds :+
-            """{"commitInfo":{"operation":"STREAMING UPDATE","operationParameters":{}}}""")
-        return Some(version)
-      } catch {
-        case e: ConcurrentCommitException =>
-          left -= 1
-          if (left <= 0) throw e
-      }
-    }
-    None // unreachable
-  }
+      epoch: Long, partitionCols: Seq[String] = Seq.empty): Option[Long] =
+    if (DeltaLog.latestTxnVersions(tablePath).get(appId).exists(_ >= epoch))
+      None
+    else appendCommit(df, tablePath, partitionCols, Some(appId -> epoch))
 
   /** Outcome of an [[optimize]] commit. */
   final case class OptimizeStats(version: Long, filesCompacted: Int,
@@ -2439,7 +2337,7 @@ object DeltaWrite {
     require(targetFiles >= 1, "targetFiles must be at least 1")
     val root = new File(tablePath)
     val logDir = new File(root, "_delta_log")
-    requireTable(logDir, tablePath)
+    val base = DeltaLog.latestVersion(tablePath)
     val adds = DeltaLog.liveAdds(spark, tablePath)
     // mapped tables compact first-class: live bytes are already physical
     // (names + ids), so the rewrite reads them back under the
@@ -2473,7 +2371,7 @@ object DeltaWrite {
       }
       .filter(_._2.nonEmpty)
     if (rewriteByPv.isEmpty)
-      return OptimizeStats(nextVersion(logDir) - 1, 0, 0)
+      return OptimizeStats(base, 0, 0)
     val actions = rewriteByPv.toSeq.map { case (pv, group) =>
       val raw = rewriteSchema
         .fold(spark.read)(sch => spark.read.schema(sch))
@@ -2499,7 +2397,7 @@ object DeltaWrite {
       }
       (group.size, files.size, removes ++ addsJson)
     }
-    val version = nextVersion(logDir)
+    val version = base + 1
     publish(logDir, version, actions.flatMap(_._3) :+
       """{"commitInfo":{"operation":"OPTIMIZE","operationParameters":{}}}""")
     OptimizeStats(version, actions.map(_._1).sum, actions.map(_._2).sum)
@@ -2536,7 +2434,7 @@ object DeltaWrite {
       "ZORDER BY needs at least 2 columns (1-D clustering is a plain sort)")
     val root = new File(tablePath)
     val logDir = new File(root, "_delta_log")
-    requireTable(logDir, tablePath)
+    val base = DeltaLog.latestVersion(tablePath)
     val adds = DeltaLog.liveAdds(spark, tablePath)
     require(adds.nonEmpty,
       s"optimize zorder on a table with no live files: $tablePath")
@@ -2729,7 +2627,7 @@ object DeltaWrite {
         scala.concurrent.Future.sequence(groupFutures),
         scala.concurrent.duration.Duration.Inf).flatten
       finally pool.shutdown()
-    val version = nextVersion(logDir)
+    val version = base + 1
     publish(logDir, version, actions :+
       (s"""{"commitInfo":{"operation":"OPTIMIZE","operationParameters":{""" +
         s""""zOrderBy":"${jsonEscape(zCols.mkString(","))}"}}}"""))
@@ -2771,41 +2669,7 @@ object DeltaWrite {
   def appendPartitioned(df: DataFrame, tablePath: String,
       partitionCols: Seq[String]): Long = {
     require(partitionCols.nonEmpty, "use append() for unpartitioned writes")
-    val root = new File(tablePath)
-    val logDir = new File(root, "_delta_log")
-    logDir.mkdirs()
-    val validatedAt = nextVersion(logDir) - 1
-    requireSatisfiesConstraints(df.sparkSession, tablePath, df,
-      "partitioned append")
-    requirePartitioningMatches(df.sparkSession, tablePath, partitionCols)
-    // COLUMN-MAPPED tables append first-class: the batch is authored
-    // against the LOGICAL schema, staged under PHYSICAL column names
-    // (id-stamped footers in id mode), and laid out in PHYSICAL hive
-    // dirs — the pv keys every mapped add records per the protocol
-    val (stagedDf, stagedSchema) =
-      physicalizeForStage(df.sparkSession, tablePath, df)
-    val physParts = physPartitionCols(df.sparkSession, tablePath,
-      partitionCols)
-    // shared partitioned staging: ONE distributed partitionBy write,
-    // hive tree walked for each file's tuple (NULL values round-trip
-    // from the __HIVE_DEFAULT_PARTITION__ sentinel as true JSON nulls)
-    val moved = stagePartitionedFiles(stagedDf, root, physParts)
-    require(moved.nonEmpty, s"no data files produced for $tablePath")
-    // the protocol records RELATIVE paths URL-ENCODED (the reader
-    // decodes once); stats cover the DATA columns from the fresh
-    // footers, so partitioned appends data-skip like flat ones
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      stagedSchema.fields.filterNot(f => physParts.contains(f.name)))
-    val adds = moved.map { case (f, pv) =>
-      partitionedAddAction(root, f, pv, dataSchema, dataChange = true)
-    }
-    publishWithRetry(logDir, version => {
-      val header =
-        if (version == 0L) headerActions(df, partitionCols) else Seq.empty
-      header ++ adds :+
-        """{"commitInfo":{"operation":"WRITE","operationParameters":{"mode":"Append"}}}"""
-    }, preClaim = revalidateOnMetadataChange(logDir, tablePath, df,
-      "partitioned append", validatedAt))
+    appendCommit(df, tablePath, partitionCols, None).get // no txn: no veto
   }
 
   private def relPath(root: File, p: String): String = {
@@ -2847,8 +2711,7 @@ object DeltaWrite {
     val root = new File(tablePath)
     require(root.isDirectory, s"not a directory: $tablePath")
     val logDir = new File(root, "_delta_log")
-    require(commitFiles(logDir).isEmpty &&
-        DeltaLog.lastCheckpointVersion(logDir).isEmpty,
+    require(DeltaLog.headVersion(logDir) < 0L,
       s"already a Delta table: $tablePath — CONVERT adopts plain parquet only")
     // schema BEFORE creating the log dir (an empty _delta_log would be
     // invisible to inference anyway, but keep the read pristine)
@@ -2960,11 +2823,11 @@ object DeltaWrite {
     0L
   }
 
-  /** [[publish]]'s STREAMING sibling for commits whose action list is
-    * too large to hold on the driver (CONVERT at 10⁷ files): header
+  /** [[publish]] in its STREAMING form, for commits whose action list
+    * is too large to hold on the driver (CONVERT at 10⁷ files): header
     * actions, then the lines of each staged manifest file (copied one
-    * buffered line at a time), then the tail — same atomic link(2)
-    * version claim.
+    * buffered line at a time), then the tail, staged to a tmp file and
+    * claimed as `version` in one atomic step.
     */
   private def publishStreamed(logDir: File, version: Long,
       header: Seq[String], lineFiles: Seq[File],
@@ -2993,6 +2856,10 @@ object DeltaWrite {
       tail.foreach(writeLine)
     } finally w.close()
     val target = new File(logDir, f"$version%020d.json")
+    // ATOMIC claim of the version: link(2) fails with EEXIST if the target
+    // exists — unlike rename(2), which POSIX makes silently REPLACE it (a
+    // plain ATOMIC_MOVE here would let two writers both "win" version N
+    // and one commit vanish; the spec pins this refusal)
     try Files.createLink(target.toPath, tmp.toPath)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
@@ -3039,8 +2906,7 @@ object DeltaWrite {
     require(srcRoot.getAbsolutePath != dstRoot.getAbsolutePath,
       "clone source and target are the same path")
     val dstLog = new File(dstRoot, "_delta_log")
-    require(commitFiles(dstLog).isEmpty &&
-        DeltaLog.lastCheckpointVersion(dstLog).isEmpty,
+    require(DeltaLog.headVersion(dstLog) < 0L,
       s"clone target is already a Delta table: $targetPath")
     val adds = DeltaLog.liveAdds(spark, sourcePath, versionAsOf)
     require(adds.nonEmpty, s"clone source has no live files: $sourcePath")
@@ -3238,7 +3104,7 @@ object DeltaWrite {
     * ([[DeltaLog.liveAdds]] refuses a travel target it cannot replay from
     * version 0 or seed from a checkpoint at/below the target), while
     * current-snapshot reads and future commits are unaffected —
-    * [[nextVersion]] counts from the checkpoint. Returns the deleted
+    * [[DeltaLog.headVersion]] counts from the checkpoint. Returns the deleted
     * commit file names.
     */
   def expireLog(tablePath: String): Seq[String] = {
@@ -3269,7 +3135,7 @@ object DeltaWrite {
       version: Long): RestoreStats = {
     val root = new File(tablePath)
     val logDir = new File(root, "_delta_log")
-    requireTable(logDir, tablePath)
+    val base = DeltaLog.latestVersion(tablePath)
     val target = DeltaLog.liveAdds(spark, tablePath, Some(version))
     val current = DeltaLog.liveAdds(spark, tablePath)
     // identity AND the emitted remove/add paths use the RECORDED form:
@@ -3299,7 +3165,7 @@ object DeltaWrite {
       if tj != serializeMetaAction(c)
     } yield tj).toSeq
     if (removes.isEmpty && readds.isEmpty && metaAction.isEmpty)
-      return RestoreStats(nextVersion(logDir) - 1, 0, 0)
+      return RestoreStats(base, 0, 0)
     readds.foreach { a =>
       require(new File(a.path).isFile,
         s"cannot restore to version $version: data file was vacuumed: ${a.path}")
@@ -3321,7 +3187,7 @@ object DeltaWrite {
         case (k, null) => s""""${jsonEscape(k)}":null"""
         case (k, v) => s""""${jsonEscape(k)}":"${jsonEscape(v)}""""
       }.mkString("{", ",", "}")
-    val v = nextVersion(logDir)
+    val v = base + 1
     publish(logDir, v,
       metaAction ++
       removes.map(a => removeAction(a)) ++

@@ -312,6 +312,22 @@ object IcebergLog {
       schemas: Seq[(Int, Seq[(Int, String, String)])] = Seq.empty,
       currentSchemaId: Int = 0)
 
+  /** The table's HEAD metadata version — the highest committed
+    * `v<N>.metadata.json` — or 0 for a fresh table (versions start at
+    * 1). The optimistic-concurrency base a writer captures BEFORE it
+    * reads the state it will commit against; see [[commitSnapshot]].
+    */
+  private[sources] def headVersion(tablePath: String): Long =
+    Option(new File(tablePath, "metadata").listFiles()).getOrElse(Array.empty)
+      .map(_.getName).collect { case MetadataName(v) => v.toLong }
+      .maxOption.getOrElse(0L)
+
+  private val MetadataName = """v(\d+)\.metadata\.json""".r
+
+  /** The metadata JSON of committed version `v`. */
+  private def metadataFile(tablePath: String, v: Long): File =
+    new File(new File(tablePath, "metadata"), s"v$v.metadata.json")
+
   /** Resolve the table's current metadata JSON: `version-hint.text` names
     * the version if present (the Hadoop-catalog convention), else the
     * highest-numbered `v*.metadata.json` wins.
@@ -331,25 +347,12 @@ object IcebergLog {
       if (!hint.isFile) None
       else scala.util.Try(new String(Files.readAllBytes(hint.toPath),
         StandardCharsets.UTF_8).trim.toLong).toOption
-    val candidates = Option(metaDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.matches("v\\d+\\.metadata\\.json"))
-      .map(f => f.getName.stripPrefix("v")
-        .stripSuffix(".metadata.json").toLong)
-    val known = (candidates ++ hintVersion).distinct
-    require(known.nonEmpty, s"no v*.metadata.json under $metaDir")
-    val v = known.max
-    val f = new File(metaDir, s"v$v.metadata.json")
+    val v = (headVersion(tablePath) +: hintVersion.toSeq).max
+    require(v > 0L, s"no v*.metadata.json under $metaDir")
+    val f = metadataFile(tablePath, v)
     require(f.isFile, s"resolved metadata version $v but ${f.getName} is absent")
     f
   }
-
-  /** The table's current metadata VERSION number (the committed chain's
-    * head) — the optimistic-concurrency base a writer captures before
-    * reading the state it will carry forward.
-    */
-  private[sources] def currentVersionOf(tablePath: String): Long =
-    currentMetadataFile(tablePath).getName
-      .stripPrefix("v").stripSuffix(".metadata.json").toLong
 
   private[sources] def parseMeta(f: File): TableMeta = {
     val root = MiniJson.parseObject(
@@ -689,17 +692,15 @@ object IcebergLog {
       s"ref type must be tag or branch, got $refType")
     require(name != "main", "main is reserved (it tracks the head)")
     val metaDir = new File(tablePath, "metadata")
-    val mf = currentMetadataFile(tablePath)
-    val meta = parseMeta(mf)
+    val base = headVersion(tablePath)
+    val meta = parseMeta(currentMetadataFile(tablePath))
     val sid = snapshotId.getOrElse(meta.currentSnapshotId)
     require(meta.snapshots.exists(_.snapshotId == sid),
       s"snapshot $sid not in table metadata (have " +
         s"${meta.snapshots.map(_.snapshotId).mkString(",")})")
     require(!meta.refs.contains(name),
       s"ref $name already exists (drop it first to move it)")
-    val version = mf.getName.stripPrefix("v")
-      .stripSuffix(".metadata.json").toLong + 1
-    writeMetadataVersion(metaDir, tablePath, version, meta.currentSnapshotId,
+    writeMetadataVersion(metaDir, tablePath, base + 1, meta.currentSnapshotId,
       meta.snapshots.map(snapshotJson), meta.specs, meta.defaultSpecId,
       meta.refs + (name -> ((sid, refType))), meta.schemas,
       meta.nameMapping, meta.currentSchemaId)
@@ -712,13 +713,11 @@ object IcebergLog {
   def dropRef(tablePath: String, name: String): Unit = {
     require(name != "main", "main is reserved (it tracks the head)")
     val metaDir = new File(tablePath, "metadata")
-    val mf = currentMetadataFile(tablePath)
-    val meta = parseMeta(mf)
+    val base = headVersion(tablePath)
+    val meta = parseMeta(currentMetadataFile(tablePath))
     require(meta.refs.contains(name), s"no such ref: $name (have " +
       s"${meta.refs.keys.toSeq.sorted.mkString(",")})")
-    val version = mf.getName.stripPrefix("v")
-      .stripSuffix(".metadata.json").toLong + 1
-    writeMetadataVersion(metaDir, tablePath, version, meta.currentSnapshotId,
+    writeMetadataVersion(metaDir, tablePath, base + 1, meta.currentSnapshotId,
       meta.snapshots.map(snapshotJson), meta.specs, meta.defaultSpecId,
       meta.refs - name, meta.schemas, meta.nameMapping,
       meta.currentSchemaId)
@@ -1517,7 +1516,7 @@ object IcebergLog {
       predicate: org.apache.spark.sql.Column): V2DeleteStats = {
     import org.apache.spark.sql.functions.col
     val root = new File(tablePath)
-    val base = currentVersionOf(tablePath)
+    val base = headVersion(tablePath)
     val (data, dels) = liveSplitEntries(tablePath)
     require(data.nonEmpty, s"not a live Iceberg table: $tablePath")
     val marked = liveWithMeta(spark, data, dels, unionSchemas =
@@ -1532,10 +1531,10 @@ object IcebergLog {
       return V2DeleteStats(
         parseMeta(currentMetadataFile(tablePath)).currentSnapshotId, 0L)
     }
-    val sid = commitSnapshot(tablePath,
+    val sid = commitSnapshot(tablePath, base,
       (data ++ dels).map(existingEntry) ++
         staged.map(f => FixtureEntry(1, f.getPath, n, content = 1)),
-      operation = "delete", expectedBaseVersion = Some(base))
+      operation = "delete")
     V2DeleteStats(sid, n)
   }
 
@@ -1550,7 +1549,7 @@ object IcebergLog {
   def deleteEqualityKeys(tablePath: String,
       keys: DataFrame, equalityFieldIds: Seq[Int]): Long = {
     val root = new File(tablePath)
-    val base = currentVersionOf(tablePath)
+    val base = headVersion(tablePath)
     val (data, dels) = liveSplitEntries(tablePath)
     require(data.nonEmpty, s"not a live Iceberg table: $tablePath")
     val staged = stageData(keys.distinct().coalesce(1), root)
@@ -1563,11 +1562,11 @@ object IcebergLog {
       staged.foreach(f => Files.deleteIfExists(f.toPath))
       return parseMeta(currentMetadataFile(tablePath)).currentSnapshotId
     }
-    commitSnapshot(tablePath,
+    commitSnapshot(tablePath, base,
       (data ++ dels).map(existingEntry) ++
         staged.map(f => FixtureEntry(1, f.getPath, n, content = 2,
           equalityIds = equalityFieldIds)),
-      operation = "delete", expectedBaseVersion = Some(base))
+      operation = "delete")
   }
 
   /** Carry a live entry forward into the next snapshot unchanged:
@@ -1820,7 +1819,7 @@ object IcebergLog {
       schemas: Seq[(Int, Seq[(Int, String, String)])] = Seq.empty,
       nameMapping: Map[Int, String] = Map.empty,
       currentSchemaId: Int = 0): Unit = {
-    val target = new File(metaDir, s"v$version.metadata.json")
+    val target = metadataFile(tablePath, version)
     // the FULL partition-spec history (identity/day/bucket/truncate
     // transforms; partition field-ids from 1000, unique ACROSS specs
     // per the v2 rule) — the metadata-level record that keeps every
@@ -1922,7 +1921,7 @@ object IcebergLog {
     val snapJsons = snapshots.map { case (sid, entries) =>
       snapshotJson(Snapshot(sid, writeSnapshot(metaDir, sid, entries)))
     }
-    new File(metaDir, s"v${snapshots.size}.metadata.json").delete()
+    metadataFile(tablePath, snapshots.size).delete()
     writeMetadataVersion(metaDir, tablePath, snapshots.size.toLong,
       snapshots.last._1, snapJsons)
     tablePath
@@ -1949,36 +1948,12 @@ object IcebergLog {
     */
   def append(df: DataFrame, tablePath: String,
       statsFields: Seq[(Int, String)]): Long = {
-    val root = new File(tablePath)
-    val metaDir = new File(root, "metadata")
-    metaDir.mkdirs()
-    val moved = stageData(df, root)
+    val moved = stageData(df, new File(tablePath))
     require(moved.nonEmpty, s"no data files produced for $tablePath")
-    // prior live files (data AND any v2 delete files — dropping a delete
-    // entry would resurrect its rows) keep their manifest identity,
-    // bounds, and sequence numbers as EXISTING entries; the new files are
-    // ADDED and sequenced at this snapshot, so pre-existing equality
-    // deletes (strictly-older rule) never touch them
+    // the new files are ADDED and sequenced at this snapshot, so
+    // pre-existing equality deletes (strictly-older rule) never touch them
     val fresh = moved.map(f => addedEntry(f, statsFields))
-    retryAppendCommit() {
-      val hasMetaNow = Option(metaDir.listFiles()).getOrElse(Array.empty)
-        .exists(_.getName.matches("v\\d+\\.metadata\\.json"))
-      // base captured BEFORE the state read: if anything commits after,
-      // the claim of base+1 fails and the retry rebases on fresh state.
-      // FRESH TABLE is encoded as base 0 (versions start at 1), never
-      // None: with None the base check is skipped, so a racing creator
-      // that commits v1 between this hasMetaNow read and commitSnapshot's
-      // internal re-read would let THIS commit claim v2 carrying only its
-      // own entries — silently dropping the winner's files. Some(0L)
-      // makes that stale-create commit fail the version!=base+1 check and
-      // rebase through the normal retry.
-      val base = Some(if (!hasMetaNow) 0L else currentVersionOf(tablePath))
-      val priorEntries =
-        if (!hasMetaNow) Seq.empty
-        else { val (d, x) = liveSplitEntries(tablePath); (d ++ x).map(existingEntry) }
-      commitSnapshot(tablePath, priorEntries ++ fresh,
-        expectedBaseVersion = base)
-    }
+    commitAppend(tablePath, fresh, Map.empty, Seq.empty)(_ => false).get
   }
 
   /** The `table$files` inspection surface: one row per live entry at the
@@ -2053,27 +2028,15 @@ object IcebergLog {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .sortBy(_.getName).toSeq
     require(files.nonEmpty, s"no parquet files to add under $dataDir")
-    val metaDir = new File(tablePath, "metadata")
-    metaDir.mkdirs()
     val fresh = files.map(f => addedEntry(f, statsFields))
-    retryAppendCommit() {
-      val hasMetaNow = Option(metaDir.listFiles()).getOrElse(Array.empty)
-        .exists(_.getName.matches("v\\d+\\.metadata\\.json"))
-      // Some(0L) on a fresh table — see append(): None would skip the
-      // lost-update check and a concurrent creator's files could drop
-      val base = Some(if (!hasMetaNow) 0L else currentVersionOf(tablePath))
-      val priorEntries =
-        if (!hasMetaNow) Seq.empty
-        else { val (d, x) = liveSplitEntries(tablePath); (d ++ x).map(existingEntry) }
-      val livePaths =
-        priorEntries.map(e => new File(e.filePath).getAbsolutePath).toSet
+    commitAppend(tablePath, fresh, Map.empty, Seq.empty) { prior =>
+      val livePaths = prior.map(e => new File(e.filePath).getAbsolutePath).toSet
       val dup = files.filter(f => livePaths.contains(f.getAbsolutePath))
       require(dup.isEmpty,
         s"file(s) already live in $tablePath — adding again would duplicate " +
           s"rows: ${dup.take(3).map(_.getName).mkString(",")}")
-      commitSnapshot(tablePath, priorEntries ++ fresh,
-        expectedBaseVersion = base)
-    }
+      false
+    }.get
   }
 
   /** PARTITIONED APPEND: write `df` partitioned by the identity
@@ -2112,26 +2075,12 @@ object IcebergLog {
     require(spec.nonEmpty, "appendPartitioned needs partition fields")
     spec.foreach(f => require(Transforms.isKnown(f.transform),
       s"unsupported partition transform: ${f.transform}"))
-    val root = new File(tablePath)
-    val metaDir = new File(root, "metadata")
-    metaDir.mkdirs()
-    val moved = stagePartitioned(df, root, spec)
+    val moved = stagePartitioned(df, new File(tablePath), spec)
     require(moved.nonEmpty, s"no data files produced for $tablePath")
     val fresh = moved.map { case (f, pv) =>
       addedEntry(f, statsFields).copy(partitionValues = pv)
     }
-    retryAppendCommit() {
-      val hasMetaNow = Option(metaDir.listFiles()).getOrElse(Array.empty)
-        .exists(_.getName.matches("v\\d+\\.metadata\\.json"))
-      // Some(0L) on a fresh table — see append(): None would skip the
-      // lost-update check and a concurrent creator's files could drop
-      val base = Some(if (!hasMetaNow) 0L else currentVersionOf(tablePath))
-      val priorEntries =
-        if (!hasMetaNow) Seq.empty
-        else { val (d, x) = liveSplitEntries(tablePath); (d ++ x).map(existingEntry) }
-      commitSnapshot(tablePath, priorEntries ++ fresh,
-        partitionSpec = spec, expectedBaseVersion = base)
-    }
+    commitAppend(tablePath, fresh, Map.empty, spec)(_ => false).get
   }
 
   /** MANIFEST-LEVEL PARTITION PRUNING: the live data files whose recorded
@@ -2395,72 +2344,73 @@ object IcebergLog {
     FixtureEntry(1, f.getPath, rows, lowerBounds = lo, upperBounds = hi)
   }
 
-  /** Commit retry for snapshots that never logically conflict — blind
-    * appends (new files only; the prior live set is carried as EXISTING
-    * whatever it currently is): on a lost metadata-version race, `body`
-    * re-runs, re-reading the table state so the retry rebases onto the
-    * winner's snapshot — real Iceberg's commit-retry loop. Row-changing
-    * commits (delete / rewrite) stay fail-fast: their read set may be
-    * stale and a silent rebase could resurrect or double-delete rows.
+  /** The append half of the commit protocol: blind appends (new files
+    * only) never logically conflict, so each attempt reads the head as
+    * its base, carries the live entries there (data AND v2 delete files
+    * — dropping a delete entry would resurrect its rows) forward as
+    * EXISTING next to `fresh`, and commits at that base. A lost claim
+    * re-runs on the winner's state through
+    * [[ConcurrentCommitException.retry]] — real Iceberg's commit-retry
+    * loop. On an existing table `veto` sees those prior entries first
+    * and may refuse (throw) or skip (true → None) the commit: an epoch
+    * already committed, an already-live file.
     */
-  private def retryAppendCommit(attempts: Int = 32)(body: => Long): Long = {
-    var left = attempts
-    while (true) {
-      try return body
-      catch {
-        case e: ConcurrentCommitException =>
-          left -= 1
-          if (left <= 0) throw e
-      }
+  private def commitAppend(tablePath: String, fresh: Seq[FixtureEntry],
+      summary: Map[String, String], partitionSpec: Seq[SpecField])(
+      veto: Seq[FixtureEntry] => Boolean): Option[Long] =
+    ConcurrentCommitException.retry {
+      val base = headVersion(tablePath)
+      val prior =
+        if (base == 0L) Seq.empty
+        else { val (d, x) = liveSplitEntries(tablePath); (d ++ x).map(existingEntry) }
+      if (base > 0L && veto(prior)) None
+      else Some(commitSnapshot(tablePath, base, prior ++ fresh,
+        summary = summary, partitionSpec = partitionSpec))
     }
-    -1L // unreachable
-  }
 
-  /** Publish `entries` as the next snapshot + metadata version (prior
-    * snapshots preserved, INCLUDING their summaries); returns the new
-    * snapshot id. `summary` becomes the new snapshot's key/value
+  /** Publish `entries` as the snapshot after metadata version `base`
+    * (prior snapshots preserved, INCLUDING their summaries); returns the
+    * new snapshot id. `summary` becomes the new snapshot's key/value
     * properties.
+    *
+    * THE COMMIT PROTOCOL of every Iceberg op: a commit claims the version
+    * after the one it read, or it fails. The writer captures `base` =
+    * [[headVersion]] (0 = fresh table) BEFORE it reads the state
+    * `entries` derive from; the commit builds on `v<base>` and claims
+    * `v<base+1>`. If the table advanced since, the carried EXISTING set
+    * is stale and committing it would SILENTLY DROP whatever the
+    * intervening commit added — so it throws the retryable
+    * [[ConcurrentCommitException]] instead (the version claim alone only
+    * guarantees the NUMBER is fresh, not the carried state). Appends
+    * rebase through [[commitAppend]]; row-changing ops surface the
+    * conflict to their caller.
     */
-  private[sources] def commitSnapshot(tablePath: String,
+  private[sources] def commitSnapshot(tablePath: String, base: Long,
       entries: Seq[FixtureEntry],
       summary: Map[String, String] = Map.empty,
       partitionSpec: Seq[SpecField] = Seq.empty,
       operation: String = "append",
-      expectedBaseVersion: Option[Long] = None,
       schemaFields: Seq[(Int, String, String)] = Seq.empty,
       nameMapping: Map[Int, String] = Map.empty): Long = {
     val metaDir = new File(tablePath, "metadata")
-    val hasMeta = Option(metaDir.listFiles()).getOrElse(Array.empty)
-      .exists(_.getName.matches("v\\d+\\.metadata\\.json"))
-    val (priorSnaps, version, priorSpecs, priorDefault, priorRefs,
+    if (headVersion(tablePath) != base)
+      throw new ConcurrentCommitException(
+        s"concurrent Iceberg commit: table advanced past version $base " +
+          s"in $tablePath — retry on fresh state")
+    metaDir.mkdirs()
+    val (priorSnaps, priorSpecs, priorDefault, priorRefs,
         priorSchema, priorMapping, priorCurrent) =
-      if (hasMeta) {
-        val mf = currentMetadataFile(tablePath)
-        val v = mf.getName.stripPrefix("v").stripSuffix(".metadata.json").toLong
-        val meta = parseMeta(mf)
-        (meta.snapshots, v + 1, meta.specs, meta.defaultSpecId, meta.refs,
+      if (base > 0L) {
+        val meta = parseMeta(metadataFile(tablePath, base))
+        (meta.snapshots, meta.specs, meta.defaultSpecId, meta.refs,
           (meta.schemas, meta.currentSchemaId), meta.nameMapping,
           Some(meta.currentSnapshotId).filter(_ > 0L))
-      } else (Seq.empty[Snapshot], 1L,
+      } else (Seq.empty[Snapshot],
         Seq.empty[(Int, Seq[SpecField])], 0,
         Map.empty[String, (Long, String)],
         (Seq.empty[(Int, Seq[(Int, String, String)])], 0),
         Map.empty[Int, String],
         None)
-    // OPTIMISTIC-CONCURRENCY BASE CHECK: `entries` was computed from the
-    // state at `expectedBaseVersion`; if the table advanced since, the
-    // carried EXISTING set is stale and committing it would SILENTLY DROP
-    // whatever the intervening commit added (the lost update the 4-writer
-    // stress caught). The version claim alone cannot catch this — it only
-    // guarantees the NUMBER is fresh, not that the carried state is.
-    // Throw the retryable signal instead; appenders rebase, mutations
-    // surface the conflict to their caller.
-    expectedBaseVersion.foreach { base =>
-      if (version != base + 1)
-        throw new ConcurrentCommitException(
-          s"concurrent Iceberg commit: table advanced past version $base " +
-            s"(head is now ${version - 1}) in $tablePath — retry on fresh state")
-    }
     // PARTITION SPEC EVOLUTION: a commit declaring a spec the table has
     // never seen APPENDS it under the next spec-id and makes it the
     // default; re-declaring a known spec just re-selects it; declaring
@@ -2529,7 +2479,7 @@ object IcebergLog {
     // spec's rule: main is the current snapshot's branch)
     // name mapping: sticky — declaring none carries the prior forward
     val mapping = if (nameMapping.isEmpty) priorMapping else nameMapping
-    writeMetadataVersion(metaDir, tablePath, version, sid,
+    writeMetadataVersion(metaDir, tablePath, base + 1, sid,
       priorJsons :+ snapJson, specs, defaultId,
       priorRefs + ("main" -> ((sid, "branch"))), schemasAll, mapping,
       curSchemaId)
@@ -2548,20 +2498,19 @@ object IcebergLog {
     * commit). Returns the new metadata version.
     */
   def rollbackTo(tablePath: String, snapshotId: Long): Long = {
-    val mf = currentMetadataFile(tablePath)
-    val meta = parseMeta(mf)
+    val base = headVersion(tablePath)
+    val meta = parseMeta(currentMetadataFile(tablePath))
     require(meta.snapshots.exists(_.snapshotId == snapshotId),
       s"unknown snapshot $snapshotId in $tablePath (known: " +
         s"${meta.snapshots.map(_.snapshotId).mkString(",")})")
     require(meta.currentSnapshotId != snapshotId,
       s"snapshot $snapshotId is already current in $tablePath")
-    val v = mf.getName.stripPrefix("v").stripSuffix(".metadata.json").toLong
     val metaDir = new File(tablePath, "metadata")
-    writeMetadataVersion(metaDir, tablePath, v + 1, snapshotId,
+    writeMetadataVersion(metaDir, tablePath, base + 1, snapshotId,
       meta.snapshots.map(snapshotJson), meta.specs, meta.defaultSpecId,
       meta.refs + ("main" -> ((snapshotId, "branch"))), meta.schemas,
       meta.nameMapping, meta.currentSchemaId)
-    v + 1
+    base + 1
   }
 
   /** EXPIRE SNAPSHOTS + ORPHAN CLEANUP — Iceberg's retention lifecycle
@@ -2583,8 +2532,8 @@ object IcebergLog {
     require(keep >= 1, "must keep at least the current snapshot")
     val root = new File(tablePath)
     val metaDir = new File(root, "metadata")
-    val mf = currentMetadataFile(tablePath)
-    val meta = parseMeta(mf)
+    val base = headVersion(tablePath)
+    val meta = parseMeta(currentMetadataFile(tablePath))
     // a snapshot NAMED BY A REF survives expiry regardless of age — the
     // spec's retention rule for tags/branches (drop the ref first to
     // reclaim it); `main` tracks the head, which survives anyway
@@ -2635,20 +2584,18 @@ object IcebergLog {
     val orphanCutoff = System.currentTimeMillis() - orphanAgeMs
     def reclaimable(f: File, everReferenced: Boolean): Boolean =
       everReferenced || f.lastModified() <= orphanCutoff
-    val priorVersion = mf.getName.stripPrefix("v")
-      .stripSuffix(".metadata.json").toLong
     val version =
-      if (survivors.size == meta.snapshots.size) priorVersion
+      if (survivors.size == meta.snapshots.size) base
       else {
         val survivorJsons = survivors.map(snapshotJson)
         // nameMapping must survive the rewrite: dropping it turns a
         // name-mode UniForm mirror unreadable (readers fall back to the
         // footer-field-id branch against files that carry no field ids)
-        writeMetadataVersion(metaDir, tablePath, priorVersion + 1,
+        writeMetadataVersion(metaDir, tablePath, base + 1,
           meta.currentSnapshotId, survivorJsons, meta.specs,
           meta.defaultSpecId, meta.refs, meta.schemas,
           meta.nameMapping, meta.currentSchemaId)
-        priorVersion + 1
+        base + 1
       }
     val orphanData = Option(new File(root, "data").listFiles())
       .getOrElse(Array.empty)
@@ -2690,44 +2637,20 @@ object IcebergLog {
     */
   def appendIdempotent(df: DataFrame, tablePath: String, appId: String,
       epoch: Long, statsFields: Seq[(Int, String)] = Seq.empty): Option[Long] = {
-    val metaDir = new File(tablePath, "metadata")
-    val root = new File(tablePath)
-    metaDir.mkdirs()
-    def hasMetaNow: Boolean = Option(metaDir.listFiles())
-      .getOrElse(Array.empty)
-      .exists(_.getName.matches("v\\d+\\.metadata\\.json"))
-    if (hasMetaNow && latestSinkEpochs(tablePath).get(appId).exists(_ >= epoch))
-      return None
-    val moved = stageData(df, root)
+    def committed: Boolean =
+      latestSinkEpochs(tablePath).get(appId).exists(_ >= epoch)
+    if (headVersion(tablePath) > 0L && committed) return None
+    val moved = stageData(df, new File(tablePath))
     require(moved.nonEmpty, s"no data files produced for $tablePath")
-    val fresh = moved.map(f => addedEntry(f, statsFields))
     // same exactly-once discipline as the Delta sink: base first, then
     // the epoch scan (which reads state >= base), then a claim of base+1
     // that fails if ANY commit landed after — so a racing same-epoch
     // worker can never double the batch
-    var left = 32
-    while (true) {
-      val meta = hasMetaNow
-      val base = if (!meta) None else Some(currentVersionOf(tablePath))
-      if (meta && latestSinkEpochs(tablePath).get(appId).exists(_ >= epoch)) {
-        moved.foreach(f => Files.deleteIfExists(f.toPath))
-        return None
-      }
-      val priorEntries =
-        if (!meta) Seq.empty
-        else { val (d, x) = liveSplitEntries(tablePath); (d ++ x).map(existingEntry) }
-      try {
-        return Some(commitSnapshot(tablePath, priorEntries ++ fresh,
-          summary = Map("graft.sink.app-id" -> appId,
-            "graft.sink.epoch" -> epoch.toString),
-          expectedBaseVersion = base))
-      } catch {
-        case e: ConcurrentCommitException =>
-          left -= 1
-          if (left <= 0) throw e
-      }
-    }
-    None // unreachable
+    val sid = commitAppend(tablePath, moved.map(f => addedEntry(f, statsFields)),
+      Map("graft.sink.app-id" -> appId, "graft.sink.epoch" -> epoch.toString),
+      Seq.empty)(_ => committed)
+    if (sid.isEmpty) moved.foreach(f => Files.deleteIfExists(f.toPath))
+    sid
   }
 
   /** Live entries keyed by the QUALIFIED URI a scan's
@@ -2795,10 +2718,7 @@ object IcebergLog {
       statsFields: Seq[(Int, String)] = Seq.empty): DeleteStats = {
     import org.apache.spark.sql.functions.col
     val root = new File(tablePath)
-    // fail-fast optimistic concurrency: base captured before the state
-    // read; a commit landing before ours makes the claim fail LOUDLY
-    // instead of silently dropping the intervening files
-    val base = currentVersionOf(tablePath)
+    val base = headVersion(tablePath)
     val entries = liveEntries(tablePath)
     require(entries.nonEmpty, s"not a live Iceberg table: $tablePath")
     val reader = schemaAwareReader(spark, tablePath)
@@ -2838,8 +2758,8 @@ object IcebergLog {
     } ++ staged.map { case (f, pv) =>
       addedEntry(f, statsFields).copy(partitionValues = pv)
     }
-    val sid = commitSnapshot(tablePath, nextEntries, operation = "delete",
-      expectedBaseVersion = Some(base))
+    val sid = commitSnapshot(tablePath, base, nextEntries,
+      operation = "delete")
     DeleteStats(sid, touchedPaths.size, staged.size, rowsDeleted)
   }
 
@@ -2885,7 +2805,7 @@ object IcebergLog {
       statsFields: Seq[(Int, String)] = Seq.empty): ReplaceStats = {
     import org.apache.spark.sql.functions.{coalesce, col, count, lit}
     val root = new File(tablePath)
-    val base = currentVersionOf(tablePath)
+    val base = headVersion(tablePath)
     val entries = liveEntries(tablePath)
     require(entries.nonEmpty, s"not a live Iceberg table: $tablePath")
     val reader = schemaAwareReader(spark, tablePath)
@@ -2938,8 +2858,8 @@ object IcebergLog {
     } ++ staged.map { case (f, pv) =>
       addedEntry(f, statsFields).copy(partitionValues = pv)
     }
-    val sid = commitSnapshot(tablePath, nextEntries,
-      operation = "overwrite", expectedBaseVersion = Some(base))
+    val sid = commitSnapshot(tablePath, base, nextEntries,
+      operation = "overwrite")
     ReplaceStats(sid, touchedPaths.size, staged.size, rowsDeleted,
       rowsInserted)
   }
@@ -3099,8 +3019,8 @@ object IcebergLog {
     *    that IS a partition column prunes candidate files to the
     *    batch's distinct tuple values (capped, strictly best-effort),
     *    answered from manifest tuples like the condition's conjuncts;
-    *  - the snapshot commits with the fail-fast expectedBaseVersion CAS
-    *    (a concurrent commit surfaces loudly, never a lost update), as
+    *  - the snapshot commits at the fail-fast base it read (a
+    *    concurrent commit surfaces loudly, never a lost update), as
     *    an `overwrite` the incremental scan refuses to cross.
     *
     * Refuses ambiguous sources (two source rows for one key) like the
@@ -3126,7 +3046,7 @@ object IcebergLog {
       : MergeStats = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit}
     val root = new File(tablePath)
-    val base = currentVersionOf(tablePath)
+    val base = headVersion(tablePath)
     val (data, dels) = liveSplitEntries(tablePath)
     require(data.nonEmpty, s"not a live Iceberg table: $tablePath")
     val meta = parseMeta(currentMetadataFile(tablePath))
@@ -3375,9 +3295,8 @@ object IcebergLog {
       staged.map { case (f, pv) =>
         addedEntry(f, statsFields).copy(partitionValues = pv)
       }
-    val sid = commitSnapshot(tablePath, nextEntries,
-      operation = "overwrite", expectedBaseVersion = Some(base),
-      schemaFields = evolvedSchema, nameMapping = evolvedMapping)
+    val sid = commitSnapshot(tablePath, base, nextEntries,
+      operation = "overwrite", schemaFields = evolvedSchema, nameMapping = evolvedMapping)
     MergeStats(sid, touched.size, staged.size, rowsUpdated, rowsInserted)
   }
 
@@ -3400,15 +3319,15 @@ object IcebergLog {
     * files, so the new rows are never self-killed. DUPLICATE-KEY
     * targets refuse loudly — kill-and-insert would collapse their
     * multiplicity where the CoW verb preserves it; schema evolution
-    * stays a CoW-merge feature. Commits as one `overwrite` snapshot
-    * under the fail-fast CAS.
+    * stays a CoW-merge feature. Commits as one `overwrite` snapshot at
+    * the base it read ([[commitSnapshot]]).
     */
   def mergeMoR(spark: SparkSession, tablePath: String, source: DataFrame,
       keys: Seq[String],
       statsFields: Seq[(Int, String)] = Seq.empty): MergeStats = {
     import org.apache.spark.sql.functions.{broadcast, col, count, count_distinct, lit}
     val root = new File(tablePath)
-    val base = currentVersionOf(tablePath)
+    val base = headVersion(tablePath)
     val (data, dels) = liveSplitEntries(tablePath)
     require(data.nonEmpty, s"not a live Iceberg table: $tablePath")
     val meta = parseMeta(currentMetadataFile(tablePath))
@@ -3492,12 +3411,12 @@ object IcebergLog {
         else stagePositionDelete(spark, root, data,
             matched.get.select(col("__graft_file"), col("__graft_pos")))
           .map(x => FixtureEntry(1, x.getPath, nMatched, content = 1))
-      val sid = commitSnapshot(tablePath,
+      val sid = commitSnapshot(tablePath, base,
         (data ++ dels).map(existingEntry) ++
           staged.map { case (f, pv) =>
             addedEntry(f, statsFields).copy(partitionValues = pv)
           } ++ delFile,
-        operation = "overwrite", expectedBaseVersion = Some(base))
+        operation = "overwrite")
       MergeStats(sid, 0, staged.size, nMatched, srcCount - nKeys)
     } finally matched.foreach { m => m.unpersist(); () }
   }
@@ -3533,7 +3452,7 @@ object IcebergLog {
       targetFiles: Int = 0): RewriteStats = {
     import org.apache.spark.sql.functions.col
     val root = new File(tablePath)
-    val base = currentVersionOf(tablePath)
+    val base = headVersion(tablePath)
     val (data, dels) = liveSplitEntries(tablePath)
     require(data.nonEmpty, s"not a live Iceberg table: $tablePath")
     if (dels.isEmpty && sortBy.isEmpty && targetFiles == 0)
@@ -3569,10 +3488,10 @@ object IcebergLog {
     }
     val tombstones = (data ++ dels).map(e =>
       existingEntry(e).copy(status = 2))
-    val sid = commitSnapshot(tablePath,
+    val sid = commitSnapshot(tablePath, base,
       tombstones ++ staged.map { case (f, pv) =>
         addedEntry(f, statsFields).copy(partitionValues = pv)
-      }, operation = "replace", expectedBaseVersion = Some(base))
+      }, operation = "replace")
     RewriteStats(sid, data.size, dels.size, staged.size)
   }
 }

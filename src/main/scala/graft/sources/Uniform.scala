@@ -75,14 +75,10 @@ object Uniform {
       filesAdded: Int, filesCarried: Int)
 
   /** The Delta version the mirror's head snapshot records, if any. */
-  def mirroredVersion(tablePath: String): Option[Long] = {
-    val metaDir = new File(tablePath, "metadata")
-    val hasMeta = Option(metaDir.listFiles()).getOrElse(Array.empty)
-      .exists(_.getName.matches("v\\d+\\.metadata\\.json"))
-    if (!hasMeta) None
+  def mirroredVersion(tablePath: String): Option[Long] =
+    if (IcebergLog.headVersion(tablePath) == 0L) None
     else IcebergLog.snapshots(tablePath).lastOption
       .flatMap(_.summary.get("delta-version")).map(_.toLong)
-  }
 
   /** Sync the Iceberg view to the Delta table's current snapshot. */
   def deltaToIceberg(spark: SparkSession, tablePath: String,
@@ -190,14 +186,9 @@ object Uniform {
         (specFields, f)
       }
 
-    val metaDir = new File(tablePath, "metadata")
-    metaDir.mkdirs()
-    val hasMeta = Option(metaDir.listFiles()).getOrElse(Array.empty)
-      .exists(_.getName.matches("v\\d+\\.metadata\\.json"))
-    // optimistic-concurrency base: a concurrent Iceberg-side commit
-    // between our state read and our claim refuses loudly instead of
-    // being silently dropped from the mirror's carried live set
-    val base = if (!hasMeta) None else Some(IcebergLog.currentVersionOf(tablePath))
+    // the commit base (0 = no mirror yet), captured before the state read
+    val base = IcebergLog.headVersion(tablePath)
+    val hasMeta = base > 0L
     val (priorData, priorDeletes) =
       if (!hasMeta) (Seq.empty[IcebergLog.LiveEntry], Seq.empty[IcebergLog.LiveEntry])
       else IcebergLog.liveSplitEntries(tablePath)
@@ -238,12 +229,12 @@ object Uniform {
     // incremental scan refuses to cross it rather than misreport)
     val op =
       if (priorData.size == carried.size) "append" else "overwrite"
-    val sid = IcebergLog.commitSnapshot(tablePath,
+    val sid = IcebergLog.commitSnapshot(tablePath, base,
       carried.map(IcebergLog.existingEntry) ++
         fresh.map(a => IcebergLog.addedEntry(new File(a.path), statsResolved)
           .copy(partitionValues = typedPv(a))),
       summary = Map("delta-version" -> deltaVersion.toString),
-      operation = op, expectedBaseVersion = base,
+      operation = op,
       partitionSpec = spec, schemaFields = schemaRecord,
       nameMapping = nameMapping)
     SyncStats(Some(sid), deltaVersion, fresh.size, carried.size)
@@ -286,6 +277,10 @@ object Uniform {
     */
   def icebergToDelta(spark: SparkSession, tablePath: String)
       : ReverseSyncStats = {
+    val logDir = new File(tablePath, "_delta_log")
+    // the Delta base (-1 = no log yet), captured before the sync reads
+    // the mirror's log: the commit claims base + 1 or fails
+    val base = DeltaLog.headVersion(logDir)
     val meta = IcebergLog.parseMeta(IcebergLog.currentMetadataFile(tablePath))
     val sid = meta.currentSnapshotId
     val mirrored = DeltaLog.latestTxnVersions(tablePath)
@@ -300,8 +295,6 @@ object Uniform {
         "OPTIMIZE)")
     val iceLive = data.map(e => new File(e.path).getAbsolutePath).toSet
 
-    val root = new File(tablePath)
-    val logDir = new File(root, "_delta_log")
     val firstSync = mirrored.isEmpty &&
       !logDir.isDirectory
     val deltaLive =
@@ -350,17 +343,15 @@ object Uniform {
       s"""{"remove":{"path":"${DeltaWrite.jsonEscape(a.recordedPath)}",""" +
         """"dataChange":true}}""")
     logDir.mkdirs()
-    val version = DeltaWrite.nextMirrorVersion(logDir)
     val header =
-      if (version == 0L) {
-        val schema = spark.read.parquet(data.map(_.path): _*).schema
-        DeltaWrite.mirrorHeader(schema)
-      } else Seq.empty
-    DeltaWrite.publish(logDir, version,
+      if (base >= 0L) Seq.empty
+      else DeltaWrite.mirrorHeader(
+        spark.read.parquet(data.map(_.path): _*).schema)
+    DeltaWrite.publish(logDir, base + 1,
       header ++ adds ++ removes ++ Seq(
         s"""{"txn":{"appId":"$IcebergMirrorApp","version":$sid}}""",
         s"""{"commitInfo":{"operation":"CONVERT","operationParameters":{""" +
           s""""sourceFormat":"iceberg","snapshotId":"$sid"}}}"""))
-    ReverseSyncStats(Some(version), sid, freshEntries.size, dropped.size)
+    ReverseSyncStats(Some(base + 1), sid, freshEntries.size, dropped.size)
   }
 }

@@ -306,9 +306,12 @@ class ScaleSpec extends SparkSpec {
     // while a tiny relation stays narrow — pinning every spread to the
     // full ceiling was r20's d02b/d06b 2x regression.
     import spark.implicits._
-    val n = spark.sessionState.conf.numShufflePartitions // 4 in this suite
-    // ~320 KB of plan-estimated bytes: >= n x 80 KB, so full width
-    val big = (1L to 20000L).toDF("doc_id").coalesce(1)
+    val n = spark.sessionState.conf.numShufflePartitions // the core count
+    // sized from the live ceiling: 16 plan-estimated bytes per row (8-byte
+    // long + row overhead), so n x 10240 rows is 2 x n x 80 KB — full
+    // width at any core count
+    val big = (1L to n * 10240L).toDF("doc_id").coalesce(1)
+    assert(big.queryExecution.optimizedPlan.stats.sizeInBytes >= n * 80L * 1024)
     assert(graft.operators.Spread.forCpu(big).rdd.getNumPartitions === n)
     assert(graft.operators.Spread.forCodec(big).rdd.getNumPartitions
       === math.max(2, n / 2))

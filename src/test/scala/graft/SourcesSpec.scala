@@ -678,8 +678,8 @@ class SourcesSpec extends SparkSpec {
     // The r20-advice lost-update window: two appenders race table
     // CREATION; the loser captured "no metadata yet" and must not commit
     // a v2 carrying only its own entries (dropping the winner's files).
-    // Fresh state is encoded as expectedBaseVersion Some(0L), so the
-    // stale-create commit fails the base check and rebases. Four writers
+    // Fresh state is encoded as base version 0, so the stale-create
+    // commit loses the claim of v1 and rebases. Four writers
     // on a fresh path, disjoint rows — every row must survive.
     import graft.sources.IcebergLog
     val s = spark
@@ -803,8 +803,9 @@ class SourcesSpec extends SparkSpec {
     IcebergLog.append((1L to 6L).map(i => (i, s"v$i")).toDF("id", "v"), tbl, stats)
     IcebergLog.append((7L to 9L).map(i => (i, s"v$i")).toDF("id", "v"), tbl, stats)
     // accumulate MoR deletes: the read plan grows one broadcast anti-join
-    // per equality-delete file (plus one for all position files and one
-    // for the seq map) — the unbounded-growth shape compaction must cap
+    // per equality-delete file (plus one for all position files; the
+    // file→seq attachment is a literal map lookup, not a join) — the
+    // unbounded-growth shape compaction must cap
     IcebergLog.deleteEqualityKeys(tbl, Seq(2L).toDF("id"), Seq(1))
     IcebergLog.deleteEqualityKeys(tbl, Seq(4L).toDF("id"), Seq(1))
     val sidPre = IcebergLog.deletePositionsWhere(spark, tbl,
@@ -816,7 +817,7 @@ class SourcesSpec extends SparkSpec {
       .optimizedPlan.collect { case j: Join => j }.size
     val idsBefore = ids()
     assert(idsBefore === Seq(1L, 3L, 5L, 6L, 8L, 9L))
-    assert(joins() === 4) // seq map + 1 position + 2 equality
+    assert(joins() === 3) // 1 position + 2 equality
     val rs = IcebergLog.rewriteDataFiles(spark, tbl,
       statsFields = stats, sortBy = Seq("id"), targetFiles = 3)
     assert(rs.filesRewritten >= 2 && rs.deleteFilesRemoved === 3 &&
@@ -3616,6 +3617,61 @@ class SourcesSpec extends SparkSpec {
       }.map(_.get(180, TimeUnit.SECONDS))
       assert(outcomes.count(_.isDefined) === 1, s"outcomes: $outcomes")
       assert(DeltaLog.read(spark, eTbl).count() === 2L)
+      // row-changing ops read a snapshot, so a lost race must FAIL, never
+      // rebase the stale read set onto the winner's commit. Each writer
+      // either commits or raises ConcurrentCommitException.
+      def race[T](n: Int)(op: Int => T): Seq[Option[T]] =
+        (0 until n).map { w =>
+          pool.submit(new java.util.concurrent.Callable[Option[T]] {
+            def call(): Option[T] =
+              try Some(op(w))
+              catch { case _: graft.sources.ConcurrentCommitException => None }
+          })
+        }.map(_.get(180, TimeUnit.SECONDS))
+      def oneFileTable(name: String): String = {
+        val t = s"$tmp/$name"
+        DeltaWrite.append((0L until 100L).map(i => (i, s"v$i")).toDF("id", "v")
+          .coalesce(1), t)
+        t
+      }
+      def rows(t: String): Seq[(Long, String)] =
+        DeltaLog.read(spark, t).collect()
+          .map(r => (r.getLong(0), r.getString(1))).toSeq
+      // 4 single-row deletes on a one-file table: every committed delete
+      // removed exactly its row; no row is resurrected or repeated
+      val delTbl = oneFileTable("conc_delete")
+      val deleted = race(4)(w =>
+        DeltaWrite.deleteWhere(spark, delTbl, col("id") === (w * 7L)))
+      assert(deleted.exists(_.isDefined), s"no delete committed: $deleted")
+      val gone = deleted.zipWithIndex.collect { case (Some(_), w) => w * 7L }.toSet
+      val afterDel = rows(delTbl).map(_._1)
+      assert(afterDel.size === 100 - gone.size &&
+        afterDel.distinct.size === afterDel.size,
+        s"${gone.size} deletes committed, table holds ${afterDel.size} rows")
+      assert(afterDel.toSet === (0L until 100L).filterNot(gone.contains).toSet)
+      // 4 single-key merges on a one-file table: committed keys carry the
+      // new value, every other key its original one, each key exactly once
+      val mTbl = oneFileTable("conc_merge")
+      val merged = race(4)(w => DeltaWrite.merge(mTbl,
+        Seq((w * 7L, s"m$w")).toDF("id", "v"), keys = Seq("id")))
+      assert(merged.exists(_.isDefined), s"no merge committed: $merged")
+      val updated = merged.zipWithIndex.collect {
+        case (Some(_), w) => (w * 7L) -> s"m$w"
+      }.toMap
+      val afterMerge = rows(mTbl)
+      assert(afterMerge.size === 100,
+        s"${updated.size} merges committed, table holds ${afterMerge.size} rows")
+      assert(afterMerge.sortBy(_._1) === (0L until 100L).map(i =>
+        (i, updated.getOrElse(i, s"v$i"))))
+      // Iceberg exactly-once on a FRESH path: 4 workers send the same
+      // (appId, epoch); exactly one commit lands
+      val iIdem = s"$tmp/conc_ice_idem"
+      val iceOutcomes = race(4)(_ => IcebergLog.appendIdempotent(
+        Seq((1L, "a"), (2L, "b")).toDF("id", "v"), iIdem, "app", 1L))
+      assert(iceOutcomes.flatten.count(_.isDefined) === 1,
+        s"outcomes: $iceOutcomes")
+      assert(IcebergLog.read(spark, iIdem).select("id").collect()
+        .map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L))
     } finally pool.shutdown()
   }
 
