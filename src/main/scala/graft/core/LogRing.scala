@@ -9,12 +9,17 @@ package graft.core
 object LogRing {
   private val cap = 500
   private val buf = new java.util.concurrent.ConcurrentLinkedDeque[String]()
+  // tracks buf's size: the deque's own `size` walks every node
+  private val count = new java.util.concurrent.atomic.AtomicInteger
   private val fmt = java.time.format.DateTimeFormatter
     .ofPattern("HH:mm:ss.SSS").withZone(java.time.ZoneOffset.UTC)
 
   def add(line: String): Unit = {
     buf.addLast(s"${fmt.format(java.time.Instant.now())} $line")
-    while (buf.size > cap) buf.pollFirst()
+    // each add past the cap evicts exactly one line, so once all adds
+    // return the ring holds min(adds, cap) lines
+    if (count.incrementAndGet() > cap && buf.pollFirst() != null)
+      count.decrementAndGet()
   }
 
   /** Oldest-first snapshot. */
@@ -24,6 +29,4 @@ object LogRing {
     while (it.hasNext) out += it.next()
     out.result()
   }
-
-  def clear(): Unit = buf.clear()
 }

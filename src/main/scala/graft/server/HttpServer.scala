@@ -52,7 +52,7 @@ class HttpServer(ctx: ExecutionContext,
   // concurrent request handling like the reference's axum server
   // (`router.rs:59-84` — tower layers over a multi-threaded runtime);
   // Spark's SQLConf is thread-safe per session, and the observability
-  // recorder synchronizes its appends
+  // recorder is lock-free
   private val pool = java.util.concurrent.Executors.newCachedThreadPool()
   server.setExecutor(pool)
   private val planCache = new PlanCache(ctx)
@@ -123,7 +123,7 @@ class HttpServer(ctx: ExecutionContext,
             // request's own observability record, so it reports completed
             // requests only
             contentType = "text/plain; version=0.0.4; charset=utf-8"
-            (200, PrometheusText.render(ctx.observability.records))
+            (200, PrometheusText.render(ctx.observability.counters))
           case ("POST", "/prepare") =>
             val raw = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
             val sql = extractSql(raw)

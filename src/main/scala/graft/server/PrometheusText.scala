@@ -1,25 +1,51 @@
 package graft.server
 
-import org.apache.spark.sql.Row
+import java.util.concurrent.ConcurrentSkipListMap
+import java.util.concurrent.atomic.LongAdder
 
-/** Prometheus text exposition (version 0.0.4) over the observability
-  * records. The reference runs a dedicated metrics server
+/** Prometheus text exposition (version 0.0.4) of the served requests. The
+  * reference runs a dedicated metrics server
   * (`src/server/mod.rs` `try_start_metrics_server`) with per-request
   * counters incremented in the FlightSQL service
   * (`src/server/flightsql/service.rs:159,256`); here the same signals —
   * request counts by path/status, a latency histogram, rows served — are
-  * derived from the observability table's rows, so `/metrics` needs no
-  * second bookkeeping path and no dependencies.
+  * running [[Counters]] that the observability recorder bumps on every
+  * request, so a scrape costs O(#paths) and needs no dependencies.
   */
 object PrometheusText {
 
-  private val latencyBucketsMs: Seq[Long] =
-    Seq(5L, 10L, 25L, 50L, 100L, 250L, 500L, 1000L, 2500L, 5000L)
+  private val latencyBucketsMs: Array[Long] =
+    Array(5L, 10L, 25L, 50L, 100L, 250L, 500L, 1000L, 2500L, 5000L)
 
-  /** Render the standard families from observability rows
-    * (request_id, path, sql, timestamp, duration_ms, rows, status).
+  /** Cumulative request counters, keyed by path in exposition order.
+    * `add` is O(1) and lock-free.
     */
-  def render(records: Seq[Row]): String = {
+  final class Counters {
+    private[PrometheusText] final class PathStats {
+      val byStatus = new ConcurrentSkipListMap[Int, LongAdder]()
+      // requests per latency bucket, not cumulative: index i counts
+      // durations in (bucket i-1, bucket i]; slower ones are only in count
+      val buckets: Array[LongAdder] = Array.fill(latencyBucketsMs.length)(new LongAdder)
+      val count, sumMs, rows = new LongAdder
+    }
+
+    private[PrometheusText] val paths = new ConcurrentSkipListMap[String, PathStats]()
+
+    def add(path: String, status: Int, durationMs: Long, rows: Option[Long]): Unit = {
+      val p = paths.computeIfAbsent(path, _ => new PathStats)
+      p.byStatus.computeIfAbsent(status, _ => new LongAdder).increment()
+      // count before bucket, and `render` reads them in the other order,
+      // so a concurrent scrape never shows a bucket above `+Inf`
+      p.count.increment()
+      val b = latencyBucketsMs.indexWhere(durationMs <= _)
+      if (b >= 0) p.buckets(b).increment()
+      p.sumMs.add(durationMs)
+      rows.foreach(p.rows.add)
+    }
+  }
+
+  /** Render the standard families from the running counters. */
+  def render(counters: Counters): String = {
     val sb = new StringBuilder
 
     def esc(s: String): String =
@@ -27,33 +53,30 @@ object PrometheusText {
 
     sb ++= "# HELP graft_requests_total Requests served, by path and status.\n"
     sb ++= "# TYPE graft_requests_total counter\n"
-    records.groupBy(r => (r.getString(1), r.getInt(6)))
-      .toSeq.sortBy { case ((p, s), _) => (p, s) }
-      .foreach { case ((path, status), rs) =>
-        sb ++= s"""graft_requests_total{path="${esc(path)}",status="$status"} ${rs.size}\n"""
+    counters.paths.forEach { (path, p) =>
+      p.byStatus.forEach { (status, n) =>
+        sb ++= s"""graft_requests_total{path="${esc(path)}",status="$status"} ${n.sum}\n"""
       }
+    }
 
     sb ++= "# HELP graft_request_duration_ms Request latency, by path.\n"
     sb ++= "# TYPE graft_request_duration_ms histogram\n"
-    records.groupBy(_.getString(1)).toSeq.sortBy(_._1).foreach {
-      case (path, rs) =>
-        val durations = rs.map(_.getLong(4))
-        var cumulative = 0L
-        latencyBucketsMs.foreach { le =>
-          cumulative = durations.count(_ <= le)
-          sb ++= s"""graft_request_duration_ms_bucket{path="${esc(path)}",le="$le"} $cumulative\n"""
-        }
-        sb ++= s"""graft_request_duration_ms_bucket{path="${esc(path)}",le="+Inf"} ${durations.size}\n"""
-        sb ++= s"""graft_request_duration_ms_sum{path="${esc(path)}"} ${durations.sum}\n"""
-        sb ++= s"""graft_request_duration_ms_count{path="${esc(path)}"} ${durations.size}\n"""
+    counters.paths.forEach { (path, p) =>
+      var cumulative = 0L
+      latencyBucketsMs.indices.foreach { i =>
+        cumulative += p.buckets(i).sum
+        sb ++= s"""graft_request_duration_ms_bucket{path="${esc(path)}",le="${latencyBucketsMs(i)}"} $cumulative\n"""
+      }
+      val count = p.count.sum
+      sb ++= s"""graft_request_duration_ms_bucket{path="${esc(path)}",le="+Inf"} $count\n"""
+      sb ++= s"""graft_request_duration_ms_sum{path="${esc(path)}"} ${p.sumMs.sum}\n"""
+      sb ++= s"""graft_request_duration_ms_count{path="${esc(path)}"} $count\n"""
     }
 
     sb ++= "# HELP graft_rows_served_total Result rows returned, by path.\n"
     sb ++= "# TYPE graft_rows_served_total counter\n"
-    records.groupBy(_.getString(1)).toSeq.sortBy(_._1).foreach {
-      case (path, rs) =>
-        val rows = rs.flatMap(r => Option(r.get(5)).map(_.asInstanceOf[Long])).sum
-        sb ++= s"""graft_rows_served_total{path="${esc(path)}"} $rows\n"""
+    counters.paths.forEach { (path, p) =>
+      sb ++= s"""graft_rows_served_total{path="${esc(path)}"} ${p.rows.sum}\n"""
     }
 
     sb.result()

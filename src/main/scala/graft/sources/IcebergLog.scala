@@ -1449,19 +1449,24 @@ object IcebergLog {
     * spec-compliant external reader matches on them verbatim), sort by
     * (file, pos) as the spec asks, write under `data/`. Shared by
     * [[deletePositionsWhere]] and [[mergeMoR]] so the file_path contract
-    * can never drift between the two delete writers.
+    * can never drift between the two delete writers. A marked row whose
+    * basename is not live fails the staged write: a null `file_path`
+    * would be a delete that matches no row.
     */
-  private def stagePositionDelete(spark: SparkSession, root: File,
+  private[sources] def stagePositionDelete(spark: SparkSession, root: File,
       data: Seq[LiveEntry],
       marked: DataFrame): Seq[File] = {
-    import org.apache.spark.sql.functions.{col, element_at, typedLit}
+    import org.apache.spark.sql.functions.{coalesce, col, element_at, format_string, raise_error, typedLit}
     // basename → full path as a MAP LITERAL (driver-known live set):
     // same no-broadcast-job rationale as liveWithMeta's seq attach
     val pathMap: Map[String, String] =
       data.map(e => new File(e.path).getName -> e.path).toMap
     val hits = marked
-      .select(element_at(typedLit(pathMap), col("__graft_file"))
-          .as("file_path"),
+      .select(
+        coalesce(element_at(typedLit(pathMap), col("__graft_file")),
+          raise_error(format_string(
+            "position delete names a data file that is not live: %s",
+            col("__graft_file")))).as("file_path"),
         col("__graft_pos").as("pos"))
       .orderBy(col("file_path"), col("pos"))
     stageData(hits.coalesce(1), root)

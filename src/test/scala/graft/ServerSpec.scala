@@ -77,6 +77,124 @@ class ServerSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  /** The exposition as it reads when derived from the rows themselves: the
+    * running counters must render exactly this for the same requests.
+    */
+  private def expositionOf(records: Seq[org.apache.spark.sql.Row]): String = {
+    val buckets = Seq(5L, 10L, 25L, 50L, 100L, 250L, 500L, 1000L, 2500L, 5000L)
+    def esc(s: String) =
+      s.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n")
+    val byPath = records.groupBy(_.getString(1)).toSeq.sortBy(_._1)
+    val sb = new StringBuilder
+    sb ++= "# HELP graft_requests_total Requests served, by path and status.\n"
+    sb ++= "# TYPE graft_requests_total counter\n"
+    records.groupBy(r => (r.getString(1), r.getInt(6))).toSeq.sortBy(_._1)
+      .foreach { case ((p, st), rs) =>
+        sb ++= s"""graft_requests_total{path="${esc(p)}",status="$st"} ${rs.size}\n"""
+      }
+    sb ++= "# HELP graft_request_duration_ms Request latency, by path.\n"
+    sb ++= "# TYPE graft_request_duration_ms histogram\n"
+    byPath.foreach { case (p, rs) =>
+      val d = rs.map(_.getLong(4))
+      buckets.foreach { le =>
+        sb ++= s"""graft_request_duration_ms_bucket{path="${esc(p)}",le="$le"} ${d.count(_ <= le)}\n"""
+      }
+      sb ++= s"""graft_request_duration_ms_bucket{path="${esc(p)}",le="+Inf"} ${d.size}\n"""
+      sb ++= s"""graft_request_duration_ms_sum{path="${esc(p)}"} ${d.sum}\n"""
+      sb ++= s"""graft_request_duration_ms_count{path="${esc(p)}"} ${d.size}\n"""
+    }
+    sb ++= "# HELP graft_rows_served_total Result rows returned, by path.\n"
+    sb ++= "# TYPE graft_rows_served_total counter\n"
+    byPath.foreach { case (p, rs) =>
+      val n = rs.flatMap(r => Option(r.get(5)).map(_.asInstanceOf[Long])).sum
+      sb ++= s"""graft_rows_served_total{path="${esc(p)}"} $n\n"""
+    }
+    sb.result()
+  }
+
+  private def recordN(obs: graft.tables.Observability, path: String, n: Int): Unit =
+    (0 until n).foreach(i => obs.record(Some(s"$path-$i"), path, Some("SELECT 1"),
+      new java.sql.Timestamp(0L), i.toLong, Some(1L), 200))
+
+  test("/metrics text from running counters equals the exposition of the rows") {
+    val obs = new ExecutionContext(spark).observability
+    val rnd = new scala.util.Random(7)
+    val paths = Seq("/sql", "/metrics", "/table/dft/public/t", "stream:q\"x\\y\nz")
+    (0 until 400).foreach { i =>
+      obs.record(None, paths(rnd.nextInt(paths.size)), None,
+        new java.sql.Timestamp(0L),
+        // every bucket edge, the gaps between them, past 5000, and -1 (a
+        // stream batch without a trigger time)
+        Seq(-1L, 0L, 5L, 6L, 10L, 99L, 100L, 2500L, 4999L, 5000L, 5001L, 70000L)(
+          rnd.nextInt(12)),
+        if (rnd.nextBoolean()) Some(rnd.nextInt(50).toLong) else None,
+        Seq(200, 400, 401, 404, 500)(rnd.nextInt(5)))
+    }
+    assert(graft.server.PrometheusText.render(obs.counters) ===
+      expositionOf(obs.records))
+  }
+
+  test("request log: 100000 records from 4 threads keep the newest Capacity rows") {
+    val ctx = new ExecutionContext(spark)
+    val obs = ctx.observability
+    val perThread = 25000
+    val threads = (0 until 4).map { t =>
+      new Thread(() => (0 until perThread).foreach { i =>
+        obs.record(Some(s"$t-$i"), "/load", None, new java.sql.Timestamp(0L),
+          1L, Some(1L), if (i % 10 == 0) 500 else 200)
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    val cap = graft.tables.Observability.Capacity
+    val recs = obs.records
+    assert(recs.size === cap)
+    assert(spark.sql("SELECT count(*) FROM observability_requests")
+      .head.getLong(0) === cap.toLong)
+    // oldest first: each thread's rows keep their order, and the last row
+    // is the final record of the thread that recorded last
+    val ids = recs.map(_.getString(0).split('-').map(_.toInt))
+    ids.groupBy(_(0)).values.foreach { rs =>
+      val is = rs.map(_(1))
+      assert(is === is.sorted)
+    }
+    assert(ids.last(1) === perThread - 1)
+    // the counters stay cumulative after the ring wraps
+    val server = new HttpServer(ctx)
+    server.start()
+    try {
+      val (st, body) = get(server.boundPort, "/metrics")
+      assert(st === 200)
+      val counts = body.linesIterator
+        .filter(_.startsWith("""graft_requests_total{path="/load","""))
+        .map(_.split(' ').last.toLong).toSeq
+      assert(counts.sum === 4L * perThread)
+    } finally server.stop()
+  }
+
+  test("request log: a DataFrame over the view sees records made after it was built") {
+    val obs = new ExecutionContext(spark).observability
+    recordN(obs, "/early", 1)
+    val viaView = spark.table("observability_requests").filter("path = '/late'")
+    val viaToDF = obs.toDF.filter("path = '/late'")
+    recordN(obs, "/late", 3)
+    assert(viaView.collect().length === 3)
+    assert(viaToDF.count() === 3L)
+  }
+
+  test("request log: the view follows the context that recorded last") {
+    val a = new ExecutionContext(spark).observability
+    val b = new ExecutionContext(spark).observability
+    def viewPaths() = spark.sql("SELECT path FROM observability_requests")
+      .collect().map(_.getString(0)).toSeq.sorted
+    recordN(a, "/a", 1)
+    assert(viewPaths() === Seq("/a"))
+    recordN(b, "/b", 2)
+    assert(viewPaths() === Seq("/b", "/b"))
+    recordN(a, "/a", 1)
+    assert(viewPaths() === Seq("/a", "/a"))
+  }
+
   test("serve-http subcommand wires config auth/limit onto a live server") {
     val f = java.nio.file.Files.createTempFile("graft-serve", ".toml")
     java.nio.file.Files.writeString(f,

@@ -189,4 +189,25 @@ class TuiSpec extends SparkSpec {
       .head.getLong(0)
     assert(obs >= 1L)
   }
+
+  test("log ring: racing adds keep exactly the newest 500 lines, oldest first") {
+    val perThread = 2500
+    val threads = (0 until 4).map { t =>
+      new Thread(() => (0 until perThread).foreach(i =>
+        graft.core.LogRing.add(s"ring-test $t $i")))
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    graft.core.LogRing.add("ring-test last")
+    val lines = graft.core.LogRing.lines
+    assert(lines.size === 500)
+    assert(lines.exists(_.endsWith(" ring-test last")))
+    // lines carry an `HH:mm:ss.SSS` prefix; each thread's survivors keep
+    // the order they were added in
+    lines.map(_.split(' ').drop(1)).collect {
+      case Array("ring-test", t, i) => (t, i.toInt)
+    }.groupBy(_._1).values.foreach { rs =>
+      assert(rs.map(_._2) === rs.map(_._2).sorted)
+    }
+  }
 }
