@@ -7,6 +7,8 @@ import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.SessionFactory
+import graft.exec.QueryProfile
 import graft.queries.Registry
 
 /** Driver-run benchmark: headline queries at SPARK_GRAFT_SF_DIR, one JSON
@@ -76,18 +78,9 @@ object Bench {
   // 10-49% faster, total 25.14→17.50 s) proved session-level floor swings
   // the artifact could not attribute. Each reported number now carries the
   // ambient load it was measured under plus this JVM's own procCpu / JIT /
-  // GC deltas, so a reader can split floor noise from regression in the
+  // GC deltas (QueryProfile's JVM counters: no listener rides the graded
+  // session), so a reader can split floor noise from regression in the
   // artifact itself.
-  private val osBean = java.lang.management.ManagementFactory
-    .getOperatingSystemMXBean.asInstanceOf[com.sun.management.OperatingSystemMXBean]
-  private def jitTotalMs(): Long = java.lang.management.ManagementFactory
-    .getCompilationMXBean.getTotalCompilationTime
-  private def gcTotalMs(): Long = {
-    var t = 0L
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .forEach(b => t += math.max(b.getCollectionTime, 0L))
-    t
-  }
 
   /** Machine-wide busy jiffies (USER_HZ = 100) from /proc/stat line 1 —
     * user+nice+system+irq+softirq+steal, excluding idle and iowait.
@@ -117,19 +110,13 @@ object Bench {
 
   private def measure[A](body: => A): (Double, RunForensics, A) = {
     val load0 = loadAvg()
-    val cpu0 = osBean.getProcessCpuTime
-    val jit0 = jitTotalMs()
-    val gc0 = gcTotalMs()
     val busy0 = busyJiffies()
-    val t0 = System.nanoTime()
-    val a = body
-    val secs = (System.nanoTime() - t0) / 1e9
+    val (p, a) = QueryProfile.jvm(body)
     val fcores =
       if (busy0 < 0) -1.0
-      else math.max(0.0, (busyJiffies() - busy0) / 100.0 -
-        (osBean.getProcessCpuTime - cpu0) / 1e9) / math.max(secs, 1e-9)
-    (secs, RunForensics(load0, (osBean.getProcessCpuTime - cpu0) / 1e9,
-      jitTotalMs() - jit0, gcTotalMs() - gc0, fcores), a)
+      else math.max(0.0, (busyJiffies() - busy0) / 100.0 - p.cpuSecs) /
+        math.max(p.secs, 1e-9)
+    (p.secs, RunForensics(load0, p.cpuSecs, p.jitMs, p.gcMs, fcores), a)
   }
 
   /** Ambient-load settle gate. The old gate was a single ≤2.0 snapshot —
@@ -196,28 +183,22 @@ object Bench {
   private def buildSession(cpus: String): SparkSession = {
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
     val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", aqe)
-      .config("spark.ui.enabled", "false")
     // forensic A/B knob: `SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"` applies
     // arbitrary session confs to a repro run (e.g. flipping
     // spark.sql.codegen.wholeStage to separate codegen-JIT cost from
     // engine throughput) without a code change per experiment
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";")
-      .filter(_.contains("=")).foreach { kv =>
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(";").filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
+        k.trim -> v.trim
       })
-    val spark = builder.getOrCreate()
     // ERROR, not WARN: runtime warnings land on stdout via the sbt fork
     // and count against the driver's bounded output capture — the bench
     // JSON must never compete with log chatter for the kept window
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
+    SessionFactory.plain(s"local[$cpus]", shufflePartitions,
+      Seq("spark.sql.adaptive.enabled" -> aqe,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> aqe) ++ extra,
+      logLevel = "ERROR")
   }
 
   /** Concurrent throughput: N parallel materializations of the same query

@@ -1,101 +1,57 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
+import graft.core.SessionFactory
+import graft.exec.QueryProfile
 import graft.queries.Registry
 
-/** Dev utility: time individual registry queries (noop-materialized, same
-  * session config as Bench) — `runMain graft.PerfProbe d02_ngram_jaccard
-  * [more...]`. Each query runs twice; both timings print (first includes
-  * plan/codegen warmup).
+/** Dev utility: profile individual registry queries (noop-materialized,
+  * same session config as Bench) — `runMain graft.PerfProbe
+  * d02_ngram_jaccard [more...]`. Each query runs twice (the first includes
+  * plan/codegen warmup). Per run it prints the wall/CPU/JIT/job line, the
+  * build/execute split, the eight slowest stages and the job list with the
+  * driver call site that started each job. `graft.PlanDump` writes plans.
   */
 object PerfProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // per-stage wall/task accounting so a slow run localizes on sight
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long, Long, Long, Int)]()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val wall = (for {s <- si.submissionTime; c <- si.completionTime} yield c - s).getOrElse(-1L)
-        // name's first line is the generic action callsite; the first
-        // graft frame in `details` localizes the operator that built it
-        val where = si.details.linesIterator
-          .find(l => l.contains("graft.") && !l.contains("PerfProbe"))
-          .map { l =>
-            val t = l.trim
-            // keep up to the first ')' when present; no spurious ')' otherwise
-            val i = t.indexOf(')')
-            if (i >= 0) t.substring(0, i + 1) else t
-          }.getOrElse("")
-        stages.put(si.stageId, (si.name.takeWhile(_ != '\n').take(40) +
-          " " + where.take(70), wall,
-          si.taskMetrics.executorRunTime, si.taskMetrics.jvmGCTime,
-          si.numTasks))
-      }
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        // job-level attribution (GRAFT_PROBE_JOBS): which driver action
-        // spawned each job — the counter alone can't localize a chain
-        if (sys.env.contains("GRAFT_PROBE_JOBS")) {
-          // the result stage's creation site + first graft frame localize
-          // which driver action spawned the job
-          val si = j.stageInfos.lastOption
-          val name = si.map(_.name.takeWhile(_ != '\n').take(44)).getOrElse("?")
-          val where = si.map(_.details).getOrElse("").linesIterator
-            .find(l => l.contains("graft.") && !l.contains("PerfProbe"))
-            .map(_.trim.take(90)).getOrElse("")
-          println(f"[probe]   job ${j.jobId}%3d stages=${j.stageIds.length}  $name  $where")
-        }
-        ()
-      }
-    })
+    val spark = SessionFactory.plain(s"local[$cpus]", cpus,
+      Seq("spark.sql.adaptive.enabled" -> "true"))
+    val profile = new QueryProfile(spark)
+    // a stack's first graft frame outside the measuring code localizes the
+    // operator that built a stage or started a job
+    def where(details: String): String =
+      details.linesIterator.find(l => l.contains("graft.") &&
+        !l.contains("PerfProbe") && !l.contains("QueryProfile"))
+        .map(_.trim).getOrElse("")
     args.foreach { name =>
       val fn = Registry.byName(name)
-      if (sys.env.contains("GRAFT_PROBE_PLAN"))
-        println(s"[probe] plan for $name:\n" +
-          fn.run(spark, sfDir).queryExecution.executedPlan.toString)
       (1 to 2).foreach { i =>
         spark.catalog.clearCache() // measure the full pipeline every run
         // also drop leaked localCheckpoint blocks (not catalog-tracked)
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        stages.clear()
-        jobs.set(0)
-        val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-          .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-        val cpu0 = osBean.getProcessCpuTime
-        val jit0 = java.lang.management.ManagementFactory.getCompilationMXBean
-          .getTotalCompilationTime
-        val t0 = System.nanoTime()
-        fn.run(spark, sfDir).write.mode("overwrite").format("noop").save()
-        val secs = (System.nanoTime() - t0) / 1e9
-        val cpuSecs = (osBean.getProcessCpuTime - cpu0) / 1e9
-        val jitMs = java.lang.management.ManagementFactory.getCompilationMXBean
-          .getTotalCompilationTime - jit0
-        println(f"[probe] $name run$i: $secs%.3f s  procCpu=$cpuSecs%.1f s  jit=${jitMs}ms  jobs=${jobs.get}  stages=${stages.size}")
-        if (sys.env.contains("GRAFT_PROBE_STAGES")) {
-          import scala.jdk.CollectionConverters._
-          stages.asScala.toSeq.sortBy(-_._2._2)
-            .take(sys.env.getOrElse("GRAFT_PROBE_STAGES", "8").toIntOption
-              .getOrElse(8)).foreach {
-            case (id, (nm, wall, run, gc, nt)) =>
-              println(f"[probe]   stage $id%4d wall=${wall}%6dms taskRun=${run}%7dms gc=${gc}%5dms tasks=$nt%3d  $nm")
-          }
+        val (build, df) = profile.phase(fn.run(spark, sfDir))
+        val (execute, _) = profile.phase(
+          df.write.mode("overwrite").format("noop").save())
+        val phases = Seq("build" -> build, "execute" -> execute)
+        val stages = phases.flatMap(_._2.stages)
+        val jobs = phases.flatMap(_._2.jobs)
+        println(f"[probe] $name run$i: ${build.secs + execute.secs}%.3f s  procCpu=${(build.cpuNanos + execute.cpuNanos) / 1e9}%.1f s  jit=${build.jitMs + execute.jitMs}ms  jobs=${jobs.size}  stages=${stages.size}")
+        phases.foreach { case (n, p) =>
+          println(f"[probe]   $n%-7s ${p.secs}%.3f s  jobs=${p.jobs.size}%3d  stages=${p.stages.size}%3d  tasks=${p.tasks}%5d  taskRun=${p.taskRunMs}%7dms  jit=${p.jitMs}%5dms  gc=${p.gcMs}%5dms")
+        }
+        stages.sortBy(-_.wallMs).take(8).foreach { s =>
+          // keep the call site up to the first ')' when present
+          val w = where(s.details)
+          val site = w.indexOf(')') match { case -1 => w; case c => w.substring(0, c + 1) }
+          println(f"[probe]   stage ${s.id}%4d wall=${s.wallMs}%6dms taskRun=${s.runMs}%7dms gc=${s.gcMs}%5dms tasks=${s.tasks}%3d  ${s.name.take(40)} ${site.take(70)}")
+        }
+        jobs.foreach { j =>
+          println(f"[probe]   job ${j.id}%3d stages=${j.stages}  ${j.name.take(44)}  ${where(j.details).take(90)}")
         }
       }
     }
+    profile.close()
     spark.stop()
   }
 }

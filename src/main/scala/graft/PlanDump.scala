@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.SessionFactory
 
 import graft.queries.Registry
 
@@ -19,15 +19,10 @@ object PlanDump {
       if (args.length > 2) args.drop(2).toSeq
       else Registry.all.filter(_.headline).map(_.name)
     new java.io.File(outDir).mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionFactory.plain(s"local[$cpus]", cpus,
+      Seq("spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "true"),
+      logLevel = "ERROR")
     names.foreach { name =>
       Registry.byName.get(name) match {
         case None => println(s"[plandump] unknown query: $name")

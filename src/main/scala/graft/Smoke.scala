@@ -2,13 +2,7 @@
 package graft
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.SessionFactory.plain("local[4]", "4")
     val df = SparkEntry.entry(spark)
     val rows = df.collect()
     println(s"SMOKE entry rows=${rows.length}")

@@ -116,14 +116,9 @@ object Soak {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("target/sf1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.SessionFactory.plain(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
     if (!new java.io.File(s"$out/documents.parquet").exists()) {
       println(s"[soak] generating sf1 corpus into $out ...")
@@ -380,14 +375,14 @@ object Soak {
       // they accumulate until the heap OOMs (observed on a back-to-back
       // soak re-run in one JVM) — the same leak a long-lived server hits
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      val t0 = System.nanoTime()
-      val status =
+      val (run, status) = exec.QueryProfile.jvm {
         try {
           SparkEntry.queries(name)(spark, out)
             .write.mode("overwrite").format("noop").save()
           "ok"
         } catch { case e: Throwable => s"failed: ${e.getMessage.take(120)}" }
-      val sec = (System.nanoTime() - t0) / 1e9
+      }
+      val sec = run.secs
       total += sec
       ran += 1
       val extrap = sf01Base.get(label).orElse(sf01Base.get(name)).map(_ * 10)

@@ -1,19 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.SessionFactory
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    if (args.length < 2) {
+      System.err.println(
+        "usage: graft.Verify <sf-dir> <out-dir> [query-prefix,...]")
+      sys.exit(2)
+    }
     val (sfDir, outDir) = (args(0), args(1))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionFactory.plain(s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
     // Optional local-iteration filter: GRAFT_VERIFY_ONLY=m01,m02 (or a
     // third CLI arg, usable from a warm sbt shell whose env is fixed)

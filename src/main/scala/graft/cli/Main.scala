@@ -44,7 +44,11 @@ object Main {
     case "-o" :: out :: rest => parseArgs(rest, acc.copy(output = Some(out)))
     case "--time" :: rest => parseArgs(rest, acc.copy(time = true))
     case "--bench" :: rest => parseArgs(rest, acc.copy(bench = true))
-    case "-n" :: n :: rest => parseArgs(rest, acc.copy(iterations = n.toInt))
+    case "-n" :: n :: rest =>
+      val iterations = n.toIntOption.filter(_ >= 1).getOrElse(
+        throw new IllegalArgumentException(
+          s"-n expects a positive iteration count, got: $n"))
+      parseArgs(rest, acc.copy(iterations = iterations))
     case "--concurrent" :: rest => parseArgs(rest, acc.copy(concurrent = true))
     case "--run-before" :: s :: rest => parseArgs(rest, acc.copy(runBefore = Some(s)))
     case "--save" :: f :: rest => parseArgs(rest, acc.copy(save = Some(f)))
@@ -166,7 +170,12 @@ object Main {
       Thread.currentThread.join() // serve until killed
       return
     }
-    val args = parseArgs(argv.toList)
+    val args =
+      try parseArgs(argv.toList)
+      catch { case e: IllegalArgumentException =>
+        System.err.println(s"error: ${e.getMessage}")
+        sys.exit(2)
+      }
     val conf = args.config.map(SessionFactory.parseConfig).getOrElse(Map.empty)
     val spark = SessionFactory.build(args.master, conf)
     val ctx = new ExecutionContext(spark)
@@ -263,9 +272,9 @@ object Main {
     }
   }
 
-  private def runStatement(ctx: ExecutionContext, sql: String, args: Args): Unit = {
+  private[graft] def runStatement(ctx: ExecutionContext, sql: String, args: Args): Unit = {
     if (args.bench) {
-      val res = BenchmarkRunner.run(ctx.spark, sql, args.iterations,
+      val res = BenchmarkRunner.run(ctx, sql, args.iterations,
         args.concurrent, args.runBefore)
       println(res.summary)
       args.save.foreach { f =>

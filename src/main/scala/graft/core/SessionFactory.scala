@@ -22,20 +22,13 @@ object SessionFactory {
   def build(master: String = "local[*]",
       conf: Map[String, String] = Map.empty,
       appName: String = "graft"): SparkSession = {
-    val builder = SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    conf.collect { case (k, v) if k.startsWith("execution.spark.") =>
-      k.stripPrefix("execution.spark.") -> v
-    }.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel(
-      conf.getOrElse("log.level", "WARN"))
+    val spark = plain(master,
+      Runtime.getRuntime.availableProcessors.toString,
+      ("spark.sql.adaptive.enabled" -> "true") +:
+        conf.toSeq.collect { case (k, v) if k.startsWith("execution.spark.") =>
+          k.stripPrefix("execution.spark.") -> v
+        },
+      Some(appName), conf.getOrElse("log.level", "WARN"))
     // extension hooks, mirroring the reference's session builder
     // (`extensions/builder.rs:96-213`): app tables, function families,
     // object-store config, config-declared UDFs
@@ -46,6 +39,25 @@ object SessionFactory {
     S3Config(spark, conf)
     graft.sources.HfStore(spark, conf)
     ConfigUdfLoader.load(spark, conf)
+    spark
+  }
+
+  /** A session without the extension hooks: UTC, `shufflePartitions`, no
+    * UI, then `conf` in order (a later entry overrides an earlier one).
+    * Without `appName` Spark names the application itself.
+    */
+  def plain(master: String, shufflePartitions: String,
+      conf: Seq[(String, String)] = Nil, appName: Option[String] = None,
+      logLevel: String = "WARN"): SparkSession = {
+    val builder = SparkSession.builder().master(master)
+    appName.foreach(builder.appName)
+    builder
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.ui.enabled", "false")
+    conf.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
     spark
   }
 

@@ -5,7 +5,7 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext => EC, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.SparkSession
+import graft.exec.QueryProfile.Phase
 
 /** `--bench` instrumentation (reference `local.rs:365-504`,
   * `local_benchmarks.rs:76-214`): N iterations (default 10), serial or
@@ -20,8 +20,11 @@ import org.apache.spark.sql.SparkSession
   */
 object BenchmarkRunner {
 
+  /** Duration stats of one phase in ms, plus the mean count of Spark jobs
+    * a run started in it (not part of the reference's CSV).
+    */
   final case class PhaseStats(min: Double, max: Double, mean: Double,
-      median: Double, percentOfTotal: Double) {
+      median: Double, percentOfTotal: Double, jobs: Double) {
     def csvFields: String = f"$min%.3f,$max%.3f,$mean%.3f,$median%.3f,$percentOfTotal%.1f"
   }
 
@@ -39,7 +42,7 @@ object BenchmarkRunner {
 
     def summary: String = {
       def line(n: String, p: PhaseStats) =
-        f"  $n%-18s min ${p.min}%9.3fms  max ${p.max}%9.3fms  mean ${p.mean}%9.3fms  median ${p.median}%9.3fms  ${p.percentOfTotal}%5.1f%%"
+        f"  $n%-18s min ${p.min}%9.3fms  max ${p.max}%9.3fms  mean ${p.mean}%9.3fms  median ${p.median}%9.3fms  ${p.percentOfTotal}%5.1f%%  jobs ${p.jobs}%.1f"
       s"""Benchmark Stats ($runs runs, $mode)
          |${line("logical planning", logical)}
          |${line("physical planning", physical)}
@@ -56,60 +59,63 @@ object BenchmarkRunner {
       .mkString(",") + ",concurrency_mode"
   }
 
-  private def stats(xs: Seq[Double], totalMean: Double): PhaseStats = {
-    val sorted = xs.sorted
-    val mean = xs.sum / xs.size
+  private def stats(runs: Seq[Seq[Phase]], totalMean: Double): PhaseStats = {
+    val sorted = runs.map(_.map(_.ms).sum).sorted
+    val mean = sorted.sum / sorted.size
     val median =
       if (sorted.size % 2 == 1) sorted(sorted.size / 2)
       else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2.0
     PhaseStats(sorted.head, sorted.last, mean, median,
-      if (totalMean == 0) 0 else mean / totalMean * 100.0)
+      if (totalMean == 0) 0 else mean / totalMean * 100.0,
+      runs.map(_.map(_.jobs.size).sum).sum.toDouble / runs.size)
   }
 
-  private def timeOnce(spark: SparkSession, sql: String): (Double, Double, Double, Long) = {
-    def ms(t0: Long) = (System.nanoTime() - t0) / 1e6
-    val t0 = System.nanoTime()
-    val df = spark.sql(sql) // parse + analyze
-    val qe = df.queryExecution
-    qe.optimizedPlan // optimize
-    val logical = ms(t0)
-    val t1 = System.nanoTime()
-    qe.executedPlan // physical planning
-    val physical = ms(t1)
-    val t2 = System.nanoTime()
+  /** One run as three phases of the capture; the statement goes through
+    * the context, so its rewrites (URL tables, `parquet_metadata`,
+    * lakehouse TVFs, `information_schema`) apply as in a plain `-c` run.
+    */
+  private def timeOnce(ctx: ExecutionContext, profile: QueryProfile,
+      sql: String): (Seq[Phase], Long) = {
+    val (logical, qe) = profile.phase {
+      val qe = ctx.sql(sql).queryExecution // parse + analyze
+      qe.optimizedPlan // optimize
+      qe
+    }
+    val (physical, _) = profile.phase(qe.executedPlan)
     // Full materialization: toRdd.count() executes the physical plan with
     // every output column computed (df.count() would let Catalyst prune the
     // projections and under-measure execution).
-    val rows = qe.toRdd.count()
-    val execution = ms(t2)
-    (logical, physical, execution, rows)
+    val (execution, rows) = profile.phase(qe.toRdd.count())
+    (Seq(logical, physical, execution), rows)
   }
 
   /** Run the benchmark. `runBefore` is the optional warm-up statement
     * (reference `--run-before`).
     */
-  def run(spark: SparkSession, sql: String, iterations: Int = 10,
+  def run(ctx: ExecutionContext, sql: String, iterations: Int = 10,
       concurrent: Boolean = false, runBefore: Option[String] = None): BenchResult = {
-    runBefore.foreach(s => spark.sql(s).queryExecution.toRdd.count())
+    runBefore.foreach(s => ctx.sql(s).queryExecution.toRdd.count())
+    val profile = new QueryProfile(ctx.spark)
     val results =
-      if (!concurrent) (1 to iterations).map(_ => timeOnce(spark, sql))
-      else {
-        val workers = math.min(iterations, Runtime.getRuntime.availableProcessors)
-        val pool = Executors.newFixedThreadPool(workers)
-        implicit val ec: EC = EC.fromExecutor(pool)
-        try Await.result(
-          Future.sequence((1 to iterations).map(_ => Future(timeOnce(spark, sql)))),
-          Duration.Inf)
-        finally pool.shutdown()
-      }
-    val (logical, physical, execution) =
-      (results.map(_._1), results.map(_._2), results.map(_._3))
-    val totals = results.map(r => r._1 + r._2 + r._3)
-    val totalMean = totals.sum / totals.size
+      try {
+        if (!concurrent) (1 to iterations).map(_ => timeOnce(ctx, profile, sql))
+        else {
+          val workers = math.min(iterations, Runtime.getRuntime.availableProcessors)
+          val pool = Executors.newFixedThreadPool(workers)
+          implicit val ec: EC = EC.fromExecutor(pool)
+          try Await.result(
+            Future.sequence((1 to iterations).map(_ =>
+              Future(timeOnce(ctx, profile, sql)))),
+            Duration.Inf)
+          finally pool.shutdown()
+        }
+      } finally profile.close()
+    val phases = results.map(_._1)
+    val totalMean = phases.map(_.map(_.ms).sum).sum / phases.size
+    def phase(i: Int) = stats(phases.map(p => Seq(p(i))), totalMean)
     BenchResult(sql.replace('\n', ' ').take(80), iterations,
       if (concurrent) "concurrent" else "serial",
-      stats(logical, totalMean), stats(physical, totalMean),
-      stats(execution, totalMean), stats(totals, totalMean),
-      results.map(_._4))
+      phase(0), phase(1), phase(2), stats(phases, totalMean),
+      results.map(_._2))
   }
 }

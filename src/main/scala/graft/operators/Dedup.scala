@@ -103,19 +103,17 @@ object Dedup {
     // the other way): localCheckpoint pins a corpus-sized relation in
     // executor storage non-fault-tolerantly, so an executor loss fails
     // the job. Here the materialization is load-bearing for correctness
-    // of cost (three consumers, measured 3x slower recomputed); a
-    // cluster deployment that must survive executor loss selects the
-    // replicated-disk strategy via graft.shingle.materialize=disk (below)
-    // instead of changing code.
+    // of cost (three consumers, measured 3x slower recomputed).
     // Deliberately NOT pre-partitioned on the join key: an A/B showed a
     // repartition(sk) before the materialization 3x slower end-to-end — it
     // forces an extra exchange and pins the layout, while AQE already
     // picks the cheaper join strategy (broadcast here; co-partitioned
     // shuffle at corpus scale) from runtime sizes.
     graft.functions.NativeFunctions.register(docs.sparkSession)
-    val sh = materializeShingles(Spread.byKey(docs, col("doc_id"))
+    val sh = Spread.byKey(docs, col("doc_id"))
       .select(col("doc_id"),
-        explode(call_function("shingle_hashes", col("text"), lit(n))).as("sk")))
+        explode(call_function("shingle_hashes", col("text"), lit(n))).as("sk"))
+      .localCheckpoint(true)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
     val joinable =
       if (maxDocFreq == Long.MaxValue) sh
@@ -156,9 +154,10 @@ object Dedup {
   def containmentPairs(docs: DataFrame, n: Int = 3,
       maxDocFreq: Long = Long.MaxValue): DataFrame = {
     graft.functions.NativeFunctions.register(docs.sparkSession)
-    val sh = materializeShingles(Spread.byKey(docs, col("doc_id"))
+    val sh = Spread.byKey(docs, col("doc_id"))
       .select(col("doc_id"),
-        explode(call_function("shingle_hashes", col("text"), lit(n))).as("sk")))
+        explode(call_function("shingle_hashes", col("text"), lit(n))).as("sk"))
+      .localCheckpoint(true)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
     val joinable =
       if (maxDocFreq == Long.MaxValue) sh
@@ -249,7 +248,14 @@ object Dedup {
     */
   def minhashLshPairs(docs: DataFrame, numHashes: Int = 16, bands: Int = 4): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide evenly into bands")
-    val sig = materializeSignatures(minhashSignatureMatrix(docs, numHashes))
+    // eager localCheckpoint: the md5 pass runs exactly once before any of
+    // the three consumers (band explode, both scoring joins) plans, and
+    // its blocks are ContextCleaner-reclaimed once the result is
+    // unreachable (a bare cache() entry lives until an explicit
+    // unpersist). A lazy cache measured wall-faster at bench scale only
+    // because the consumers race to recompute partitions on idle cores,
+    // at 2.5x the CPU.
+    val sig = minhashSignatureMatrix(docs, numHashes).localCheckpoint(true)
     // band b holds hash ids {b, b+bands, b+2*bands, ...} in ascending order
     def bandBucket(b: Int): Column =
       md5(concat_ws(",", (b until numHashes by bands).map(i => col(s"mh$i")): _*))
@@ -274,55 +280,6 @@ object Dedup {
       .select(col("a"), col("b"),
         (matches.cast("double") / lit(numHashes.toDouble)).as("est_jaccard"))
   }
-
-  /** Materialization strategy for the corpus-sized shingle relation
-    * (`graft.shingle.materialize` system property, falling back to the
-    * `GRAFT_SHINGLE_MAT` env): `checkpoint` (default — fastest single
-    * materialization, non-fault-tolerant executor storage), `disk`
-    * (replicated disk persist: survives a single executor loss, the
-    * cluster-deployment choice; eagerly materialized so consumers never
-    * race), or `none` (recompute per consumer). The default matches the
-    * bench-measured winner; the knob exists so a deployment picks its
-    * fault-tolerance trade without a code change.
-    */
-  private def materializeShingles(sh: DataFrame): DataFrame =
-    sys.props.get("graft.shingle.materialize")
-      .orElse(sys.env.get("GRAFT_SHINGLE_MAT")).getOrElse("checkpoint") match {
-      case "disk" =>
-        val p = sh.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY_2)
-        p.count() // eager: consumers read blocks, never race to compute
-        p
-      case "none" => sh
-      case _ => sh.localCheckpoint(true)
-    }
-
-  /** Materialization strategy for the minhash signature matrix (one narrow
-    * row per doc, consumed by the band/bucket explode and both scoring
-    * joins). Default = eager localCheckpoint: the md5 pass runs exactly
-    * once before any consumer plans, and its blocks are
-    * ContextCleaner-reclaimed once the result is unreachable (a bare
-    * cache() entry lives until an explicit unpersist).
-    *
-    * Measured (r8 reconciliation session, clean floor, INLINE at d03's
-    * full-headline-list position, min of 3): checkpoint 1.50 s at
-    * procCpu 1.9 s; lazy cache 1.07 s at procCpu 5.0 s; none 2.08 s.
-    * The lazy cache is wall-fastest at bench scale because the three
-    * consumers overlap with materialization — racing to recompute
-    * partitions, 2.5× the CPU, which idle local cores absorb. On a busy
-    * cluster that wasted CPU is the real cost, so checkpoint stays the
-    * default. `graft.minhash.materialize` (system property, falling back
-    * to the `GRAFT_MINHASH_MAT` env) ∈ {checkpoint, cache, none} is the
-    * A/B knob; OperatorsSpec pins all three strategies result-identical,
-    * so the knob can only move cost, never semantics.
-    */
-  private def materializeSignatures(sig: DataFrame): DataFrame =
-    sys.props.get("graft.minhash.materialize")
-      .orElse(sys.env.get("GRAFT_MINHASH_MAT")).getOrElse("checkpoint") match {
-      case "cache" => sig.cache() // deliberately LAZY: the A/B measures
-        // exactly the consumer-race behavior the checkpoint default avoids
-      case "none" => sig
-      case _ => sig.localCheckpoint(true)
-    }
 
   /** Connected components over an undirected edge list (a, b) by
     * iterative min-label propagation: every node starts labeled with its
@@ -672,8 +629,8 @@ object Dedup {
       minEstJaccard: Double = 0.5): (DataFrame, DataFrame) = {
     require(numHashes % bands == 0, "numHashes must divide evenly into bands")
     val sigCols = col("doc_id") +: (0 until numHashes).map(i => col(s"mh$i"))
-    val incSig = materializeSignatures(
-      minhashSignatureMatrix(incoming, numHashes))
+    val incSig = minhashSignatureMatrix(incoming, numHashes)
+      .localCheckpoint(true)
     val sig = acceptedSig.select(sigCols: _*).withColumn("is_new", lit(false))
       .unionByName(incSig.withColumn("is_new", lit(true)))
     def bandBucket(b: Int): Column =

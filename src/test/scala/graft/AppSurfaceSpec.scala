@@ -6,7 +6,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import graft.core.{CatalogBootstrap, UrlTableRewrite}
-import graft.exec.{AnalyzeRunner, BenchmarkRunner, DdlTranslate, ExecutionContext}
+import graft.exec.{AnalyzeRunner, BenchmarkRunner, DdlTranslate, ExecutionContext, QueryProfile}
 import graft.functions.ParquetMetadataTable
 import graft.tables.{MapTable, MetaTables}
 
@@ -134,13 +134,100 @@ class AppSurfaceSpec extends SparkSpec {
   }
 
   test("benchmark runner produces consistent stats and reference CSV shape") {
-    val res = BenchmarkRunner.run(spark, "SELECT 1 AS x", iterations = 3)
+    val ctx = new ExecutionContext(spark)
+    val res = BenchmarkRunner.run(ctx, "SELECT 1 AS x", iterations = 3)
     assert(res.runs === 3)
     assert(res.rowCountsConsistent)
     assert(res.total.min > 0)
+    // the reference's column shape (`src/cli/mod.rs:59-60`)
+    val phase = Seq("min", "max", "mean", "median", "percent_of_total")
+    assert(BenchmarkRunner.csvHeader === "query,runs," +
+      Seq("logical_planning", "physical_planning", "execution", "total")
+        .flatMap(p => phase.map(f => s"${p}_$f")).mkString(",") +
+      ",concurrency_mode")
+    assert(BenchmarkRunner.csvHeader === "query,runs,logical_planning_min," +
+      "logical_planning_max,logical_planning_mean,logical_planning_median," +
+      "logical_planning_percent_of_total,physical_planning_min," +
+      "physical_planning_max,physical_planning_mean,physical_planning_median," +
+      "physical_planning_percent_of_total,execution_min,execution_max," +
+      "execution_mean,execution_median,execution_percent_of_total,total_min," +
+      "total_max,total_mean,total_median,total_percent_of_total," +
+      "concurrency_mode")
     assert(BenchmarkRunner.csvHeader.split(',').length === res.csvRow.split(',').length)
-    val conc = BenchmarkRunner.run(spark, "SELECT 1 AS x", iterations = 3, concurrent = true)
+    val conc = BenchmarkRunner.run(ctx, "SELECT 1 AS x", iterations = 3, concurrent = true)
     assert(conc.mode === "concurrent")
+  }
+
+  test("--bench runs the statement through the context's rewrites") {
+    val ctx = new ExecutionContext(spark)
+    val sql = s"SELECT * FROM parquet_metadata('$sf0001/region.parquet')"
+    val rows = ctx.sql(sql).count()
+    val csv = Files.createTempFile("bench", ".csv")
+    val printed = new java.io.ByteArrayOutputStream
+    Console.withOut(printed) {
+      cli.Main.runStatement(ctx, sql, cli.Main.parseArgs(
+        List("--bench", "-n", "2", "--save", csv.toString)))
+    }
+    assert(printed.toString.contains("Benchmark Stats (2 runs, serial)"))
+    assert(printed.toString.contains(s"row counts: consistent ($rows)"))
+    val lines = Files.readAllLines(csv)
+    assert(lines.size === 2)
+    assert(lines.get(0) === BenchmarkRunner.csvHeader)
+    assert(lines.get(1).endsWith(",serial"))
+  }
+
+  test("-n below 1 is rejected when the arguments are parsed") {
+    assert(cli.Main.parseArgs(List("--bench", "-n", "1")).iterations === 1)
+    for (n <- Seq("0", "-3", "ten")) {
+      val e = intercept[IllegalArgumentException](
+        cli.Main.parseArgs(List("--bench", "-n", n)))
+      assert(e.getMessage === s"-n expects a positive iteration count, got: $n")
+    }
+  }
+
+  test("query profile: an eager build job counts in build, the action's jobs in execute") {
+    val profile = new QueryProfile(spark)
+    try {
+      val (lazyBuild, _) = profile.phase(spark.range(0, 100, 1, 4).toDF("id"))
+      assert(lazyBuild.jobs.isEmpty)
+      val (build, df) = profile.phase(
+        spark.range(0, 1000, 1, 4).toDF("id").localCheckpoint(true))
+      assert(build.jobs.nonEmpty, "the localCheckpoint job is not in build")
+      assert(build.tasks >= 4 && build.wallNanos > 0)
+      val (execute, n) = profile.phase(df.count())
+      assert(n === 1000L)
+      assert(execute.jobs.nonEmpty)
+      assert(execute.jobs.map(_.id).intersect(build.jobs.map(_.id)).isEmpty)
+      assert(execute.stages.nonEmpty && execute.tasks > 0)
+    } finally profile.close()
+  }
+
+  test("query profile: concurrent captures do not count each other's jobs") {
+    val sc = spark.sparkContext
+    val (a, b) = (new QueryProfile(spark), new QueryProfile(spark))
+    // one job per count(); each task sleeps so the two threads' jobs overlap
+    def jobs(profile: QueryProfile, n: Int, start: java.util.concurrent.CyclicBarrier) =
+      new java.util.concurrent.Callable[QueryProfile.Phase] {
+        def call(): QueryProfile.Phase = {
+          start.await()
+          profile.phase((1 to n).foreach(_ =>
+            sc.parallelize(1 to 4, 2).map { i => Thread.sleep(20); i }.count()))._1
+        }
+      }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val fa = pool.submit(jobs(a, 3, start))
+      val fb = pool.submit(jobs(b, 5, start))
+      val (pa, pb) = (fa.get(), fb.get())
+      assert(pa.jobs.size === 3)
+      assert(pb.jobs.size === 5)
+      assert(pa.jobs.map(_.id).intersect(pb.jobs.map(_.id)).isEmpty)
+      assert(pa.tasks === 6 && pb.tasks === 10)
+    } finally {
+      pool.shutdown()
+      a.close(); b.close()
+    }
   }
 
   test("analyze runner categorizes operators and computes selectivity") {

@@ -98,41 +98,35 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("shingle materialization strategies produce identical Jaccard pairs") {
+    // the one shipped strategy: the (doc_id, sk) relation is materialized
+    // by an eager localCheckpoint and every consumer scans the checkpoint
     val base = "the quick brown fox jumps over the lazy dog again and again"
     val d = docs(1L -> base, 2L -> (base + " extra"),
       3L -> "completely different text about something else entirely here")
-    def pairs(): Set[(Long, Long, Double)] =
-      Dedup.ngramJaccardPairs(d).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val viaCheckpoint = pairs()
-    assert(viaCheckpoint.nonEmpty)
-    // the fault-tolerant cluster strategy (replicated disk persist) and
-    // the recompute strategy must not change results, only cost
-    for (mode <- Seq("disk", "none")) {
-      sys.props("graft.shingle.materialize") = mode
-      try assert(pairs() === viaCheckpoint, s"mode $mode diverged")
-      finally sys.props.remove("graft.shingle.materialize")
-    }
+    val df = Dedup.ngramJaccardPairs(d)
+    // 10 word 3-grams in the base, one more with " extra"
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSet === Set((1L, 2L, 10.0 / 11)))
+    val p = df.queryExecution.executedPlan.toString
+    assert("""Scan ExistingRDD\[doc_id#\d+L,sk#\d+L\]""".r.findFirstIn(p).isDefined,
+      s"shingles are not a checkpointed (doc_id, sk) relation:\n$p")
   }
 
   test("minhash signature materialization strategies produce identical LSH pairs") {
-    // same pin as the shingle one: graft.minhash.materialize (the
-    // GRAFT_MINHASH_MAT A/B knob) may move cost only — checkpoint (default),
-    // lazy cache, and recompute must emit bit-identical candidate pairs
+    // the one shipped strategy: the signature matrix is materialized by an
+    // eager localCheckpoint that the band explode and both scoring joins scan
     val base = "the quick brown fox jumps over the lazy dog again and again"
     val d = docs(1L -> base, 2L -> (base + " extra"),
       3L -> "completely different text about something else entirely here",
       4L -> base)
-    def pairs(): Set[(Long, Long, Double)] =
-      Dedup.minhashLshPairs(d).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val viaCheckpoint = pairs()
-    assert(viaCheckpoint.nonEmpty)
-    for (mode <- Seq("cache", "none")) {
-      sys.props("graft.minhash.materialize") = mode
-      try assert(pairs() === viaCheckpoint, s"mode $mode diverged")
-      finally sys.props.remove("graft.minhash.materialize")
-    }
+    val df = Dedup.minhashLshPairs(d)
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSet === Set((1L, 4L, 1.0), (1L, 2L, 15.0 / 16), (2L, 4L, 15.0 / 16)))
+    val p = df.queryExecution.executedPlan.toString
+    val sig = ("doc_id#\\d+L" +: (0 until 16).map(i => s"mh$i#\\d+"))
+      .mkString("""Scan ExistingRDD\[""", ",", """\]""").r
+    assert(sig.findAllIn(p).size >= 3,
+      s"the consumers do not scan a checkpointed signature relation:\n$p")
   }
 
   test("media header parser: PNG/JPEG/WAV round-trip, truncated and unknown bytes") {

@@ -19,20 +19,10 @@ class ScaleSpec extends SparkSpec {
 
   /** Drain the SparkListener bus before reading a metrics counter: a
     * fixed sleep undercounts on a slow bus, which for a records-READ pin
-    * can only make the assertion pass spuriously. `listenerBus` is
-    * private[spark] (public in bytecode), so the drain goes through
-    * reflection; if the internal surface moves, fall back to a sleep.
+    * can only make the assertion pass spuriously.
     */
   private def drainListenerBus(): Unit =
-    try {
-      val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-        .invoke(spark.sparkContext)
-      try { bus.getClass.getMethod("waitUntilEmpty").invoke(bus); () }
-      catch { case _: NoSuchMethodException =>
-        bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-          .invoke(bus, Long.box(10000L)); ()
-      }
-    } catch { case _: Throwable => Thread.sleep(300) }
+    graft.exec.QueryProfile.drainListenerBus(spark)
 
   test("q06: filter and projection push down to the parquet scan") {
     val p = plan("q06_revenue_forecast")
