@@ -163,208 +163,145 @@ object DeltaLog {
     walk(st).asInstanceOf[StructType]
   }
 
-  /** ID-mode scan: request the logical schema annotated with parquet
-    * field ids and let Spark's footer-id resolution do the matching —
-    * the files' physical column NAMES (and their order) are irrelevant,
-    * which is the whole point of id mode (real Delta assigns ids at
-    * creation and never changes them across renames). DVs compose (the
-    * filter rides `_metadata`). The field-id read conf is enabled
-    * session-wide: it is inert for request schemas without id metadata,
-    * which is every non-ID-mapped scan.
+  /** The field-id read switch, set wherever a request schema carries
+    * `parquet.field.id` (it is inert for request schemas without ids, so
+    * it is set session-wide).
     */
-  private def scanIdMapped(spark: SparkSession, tablePath: String,
-      adds: Seq[LiveFile],
-      logical: org.apache.spark.sql.types.StructType): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val (partFields, dataFields, physOf) = mappedPartitionSplit(logical, adds,
-      tablePath)
+  private[sources] def enableFieldIdRead(spark: SparkSession): Unit =
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val request = fieldIdRequestSchema(
-      org.apache.spark.sql.types.StructType(dataFields), tablePath)
-    val base = applyDv(spark,
-      spark.read.schema(request).parquet(adds.map(_.path): _*),
-      adds, new File(tablePath))
-    val withPv = injectPvMapped(spark, adds, base, partFields, physOf)
-    // strip the mapping metadata from the result schema (the reader's
-    // output contract is the clean logical shape, same as name mode);
-    // partition columns cast from the log's strings to their declared
-    // types, in schema order
-    withPv.select(logical.fields.map { f =>
-      col(s"`${f.name}`").cast(logicalType(f.dataType)).as(f.name)
-    }.toSeq: _*)
-  }
 
-  /** Split a mapped table's logical schema into (partition fields, data
-    * fields, logical → physical partition-key map). A logical field is a
-    * partition field iff its PHYSICAL name keys every add's
-    * `partitionValues` — the protocol stores pv keyed by physical names
-    * under column mapping, while `metaData.partitionColumns` stays
-    * logical. Mixed layouts (adds disagreeing on pv keys) refuse, same
-    * as the unmapped injector.
+  /** Columns [[decode]] can keep from the raw scan: each row's physical
+    * identity (the scan's file URI and the row's index in that file).
     */
-  private def mappedPartitionSplit(
-      logical: org.apache.spark.sql.types.StructType, adds: Seq[LiveFile],
-      tablePath: String): (Seq[org.apache.spark.sql.types.StructField],
-        Seq[org.apache.spark.sql.types.StructField], Map[String, String]) = {
-    val pvKeys = adds.headOption.map(_.partitionValues.keySet)
-      .getOrElse(Set.empty)
-    require(adds.forall(_.partitionValues.keySet == pvKeys),
+  private[sources] val RowIdentity = Seq("__graft_dv_file", "__graft_dv_pos")
+
+  /** THE DECODE: how a set of Delta data files becomes the table's
+    * logical rows. Every reader picks its files and calls this, so a
+    * pruned read is [[read]] over fewer files by construction:
+    *
+    *  1. the request schema comes from the mapping mode (none, name, id)
+    *     and the metaData schema in force at `versionAsOf` (a log with no
+    *     metaData: one footer's schema, partition columns as strings);
+    *     the files' own partition keys decide which fields are left out
+    *     of it (partition data lives in the log, not the parquet);
+    *  2. ONE raw parquet scan with that explicit schema; deletion vectors
+    *     apply here, and `rowIdentity` / `changeType` keep the row's
+    *     physical identity ([[RowIdentity]]) or the cdc file's reserved
+    *     `_change_type` column from this scan;
+    *  3. physical names become logical names (name mode renames; id mode
+    *     resolved by footer field id and already answers logically);
+    *  4. partition values join in from the files' `partitionValues`:
+    *     literals when every file shares one tuple, otherwise ONE
+    *     broadcast (file -> tuple) join on `input_file_name()` — a
+    *     per-partition union would plan one branch per partition;
+    *  5. columns take their declared types, in schema order (kept raw
+    *     columns last).
+    */
+  private def decode(spark: SparkSession, tablePath: String,
+      adds: Seq[LiveFile], versionAsOf: Option[Long],
+      rowIdentity: Boolean = false, changeType: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col, input_file_name, lit}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    require(adds.nonEmpty, s"Delta table has no live files: $tablePath")
+    def q(c: String): String = s"`$c`"
+    val meta = tableMetaData(spark, tablePath, versionAsOf)
+    val mode = mappingMode(meta)
+    require(Set("none", "name", "id")(mode),
+      s"delta.columnMapping.mode '$mode' is not a Delta protocol mode in " +
+        s"$tablePath — name and id are decoded; anything else is refused " +
+        "rather than decoded wrong")
+    val declared = schemaOf(meta)
+    require(mode == "none" || declared.isDefined,
+      s"column-mapped table without a parseable schemaString: $tablePath")
+    // a mixed table (some files carry a column in their data, some in
+    // pv) cannot be reconciled: injection would shadow real data
+    val pvKeys = adds.head.partitionValues.keySet
+    val mixed = adds.flatMap(_.partitionValues.keys).distinct
+      .filterNot(k => adds.forall(_.partitionValues.contains(k)))
+    require(mixed.isEmpty,
       s"mixed partitioned/unpartitioned Delta table: add actions " +
-        s"disagree on partition keys in $tablePath — rewrite with one " +
-        "layout")
-    def phys(f: org.apache.spark.sql.types.StructField): String =
-      if (f.metadata.contains(PhysNameKey)) f.metadata.getString(PhysNameKey)
-      else f.name
-    val (part, data) = logical.fields.partition(f => pvKeys.contains(phys(f)))
-    val resolved = part.map(f => f.name -> phys(f)).toMap
-    require(resolved.values.toSet == pvKeys,
-      s"partition keys ${pvKeys -- resolved.values} have no schema field " +
-        s"whose physical name matches in $tablePath")
-    (part.toSeq, data.toSeq, resolved)
-  }
-
-  /** [[injectPv]]'s column-mapped sibling: pv keys are PHYSICAL names,
-    * output columns take the LOGICAL names (typed casts happen in the
-    * caller's final projection). No-op for unpartitioned adds.
-    */
-  private def injectPvMapped(spark: SparkSession, adds: Seq[LiveFile],
-      base: DataFrame,
-      partFields: Seq[org.apache.spark.sql.types.StructField],
-      physOf: Map[String, String]): DataFrame = {
-    if (partFields.isEmpty) base
-    else {
-      import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
-      import org.apache.spark.sql.types.{StringType, StructField, StructType}
-      val hadoopConf = spark.sessionState.newHadoopConf()
-      val fileKey = "__graft_delta_file"
-      val rows = adds.map { a =>
-        val p = new org.apache.hadoop.fs.Path(a.path)
-        val qualified = p.getFileSystem(hadoopConf).makeQualified(p)
-          .toUri.toString
-        org.apache.spark.sql.Row.fromSeq(qualified +:
-          partFields.map(f => a.partitionValues.get(physOf(f.name)).orNull))
-      }
-      val mapSchema = StructType(StructField(fileKey, StringType) +:
-        partFields.map(f => StructField(f.name, StringType)))
-      val fileToPv = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), mapSchema)
-      base.withColumn(fileKey, input_file_name())
-        .join(broadcast(fileToPv), Seq(fileKey))
-        .drop(col(fileKey))
+        s"disagree on partition column(s) ${mixed.mkString(",")} in " +
+        s"$tablePath — the files without partitionValues keep that column " +
+        "in their data, which log-side injection would shadow. Rewrite " +
+        "the table with one layout")
+    // pv keys are PHYSICAL names under column mapping
+    def key(f: StructField): String =
+      if (mode == "none") f.name else physName(f)
+    val reserved = if (changeType) Set(ChangeType) else Set.empty[String]
+    val schema = declared.getOrElse {
+      val footer = FooterSchema(spark, adds.head.path)
+      val clash = pvKeys.filter(footer.fieldNames.contains)
+      require(clash.isEmpty,
+        s"mixed partitioned/unpartitioned Delta table: column(s) " +
+          s"${clash.mkString(",")} present both in data files and in " +
+          "add-action partitionValues — rewrite the table with one layout")
+      StructType(footer.fields.filterNot(f => reserved(f.name)))
     }
-  }
-
-  /** Re-attach EXPLICIT per-path partition tuples to a scan of arbitrary
-    * parquet paths — the change-feed derivation's pv seam (the live-set
-    * injectors key off add actions; a feed replays DEAD epochs whose
-    * files left the live set long ago). Same broadcast
-    * (file -> tuple) join on `input_file_name()` as the snapshot
-    * readers; output columns take the LOGICAL partition field names,
-    * cast to their declared types.
-    */
-  private def injectPvByPath(spark: SparkSession, base: DataFrame,
-      pathPv: Seq[(String, Map[String, String])],
-      partFields: Seq[org.apache.spark.sql.types.StructField],
-      keyOf: String => String): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val fileKey = "__graft_delta_file"
-    val rows = pathPv.map { case (p, pv) =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val qualified = hp.getFileSystem(hadoopConf).makeQualified(hp)
-        .toUri.toString
-      org.apache.spark.sql.Row.fromSeq(qualified +:
-        partFields.map(f => pv.get(keyOf(f.name)).orNull))
-    }
-    val mapSchema = StructType(StructField(fileKey, StringType) +:
-      partFields.map(f => StructField(f.name, StringType)))
-    val fileToPv = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), mapSchema)
-    val joined = base.withColumn(fileKey, input_file_name())
-      .join(broadcast(fileToPv), Seq(fileKey))
-      .drop(col(fileKey))
-    partFields.foldLeft(joined)((d, f) =>
-      d.withColumn(f.name, col(s"`${f.name}`")
-        .cast(logicalType(f.dataType))))
-  }
-
-  /** Mapped decode of ARBITRARY parquet paths (no DV application, no
-    * live-set plumbing) — the change-feed derivation's seam: NAME mode
-    * reads the physicalized schema and renames positionally; ID mode
-    * resolves by footer field id. Because resolution keys on
-    * physicalName/id — which NEVER change — one logical schema decodes
-    * files written under ANY earlier logical names, which is what makes
-    * a feed across renames serve the range-end names transparently.
-    */
-  private[sources] def scanMappedPaths(spark: SparkSession,
-      tablePath: String,
-      mode: String, logical: org.apache.spark.sql.types.StructType,
-      paths: Seq[String], withChangeType: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    // cdc files carry the physicalized columns PLUS `_change_type`
-    // (never mapped — the protocol reserves it); with field-id reading
-    // enabled, fields lacking id metadata fall back to name matching,
-    // so one request schema serves both resolution rules
-    val ctField = StructField("_change_type", StringType)
-    val ctCols = if (withChangeType) Seq(col("`_change_type`")) else Seq.empty
-    mode match {
-      case "name" =>
-        val physical = physicalize(logical)
-          .asInstanceOf[StructType]
-        val request =
-          if (withChangeType) StructType(physical.fields :+ ctField)
-          else physical
-        spark.read.schema(request).parquet(paths: _*)
-          .select(logical.fields.zip(physical.fields).map { case (lf, pf) =>
-            col(s"`${pf.name}`").cast(logicalType(lf.dataType)).as(lf.name)
-          }.toSeq ++ ctCols: _*)
+    val uncovered =
+      pvKeys.toSeq.sorted.filterNot(schema.fields.map(key).contains)
+    val logical = StructType(schema.fields ++
+      uncovered.map(StructField(_, StringType)))
+    val (part, data) = logical.fields.toSeq.partition(f => pvKeys(key(f)))
+    // 1. request schema
+    val dataLogical = StructType(data)
+    val request = mode match {
+      case "name" => physicalize(dataLogical).asInstanceOf[StructType]
       case "id" =>
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        val idSchema = fieldIdRequestSchema(logical, tablePath)
-        val request =
-          if (withChangeType) StructType(idSchema.fields :+ ctField)
-          else idSchema
-        spark.read.schema(request).parquet(paths: _*)
-          .select(logical.fields.map { f =>
-            col(s"`${f.name}`").cast(logicalType(f.dataType)).as(f.name)
-          }.toSeq ++ ctCols: _*)
-      case other => throw new IllegalArgumentException(
-        s"unsupported delta.columnMapping.mode '$other' in $tablePath")
+        enableFieldIdRead(spark)
+        fieldIdRequestSchema(dataLogical, tablePath)
+      case _ => dataLogical
     }
+    // 2. the raw scan (`_change_type` is never mapped: with field-id
+    // reading on, a field without an id falls back to name matching)
+    val scanned = applyDv(spark,
+      spark.read.schema(StructType(request.fields ++
+        reserved.toSeq.map(StructField(_, StringType))))
+        .parquet(adds.map(_.path): _*),
+      adds, new File(tablePath))
+    val raw =
+      if (!rowIdentity) scanned
+      else scanned.withColumn(RowIdentity(0), col("_metadata.file_path"))
+        .withColumn(RowIdentity(1), col("_metadata.row_index"))
+    val kept = (if (rowIdentity) RowIdentity else Seq.empty) ++ reserved
+    // 3. logical names (input_file_name() still resolves after a
+    // projection: it reads the task's scan context, not a column)
+    val renamed = raw.select(data.zip(request.fields).map { case (lf, rf) =>
+      col(q(rf.name)).as(lf.name) } ++ kept.map(c => col(q(c))): _*)
+    // 4. partition values
+    val tuples = adds.map(a => part.map(f => a.partitionValues(key(f))))
+    val withPv =
+      if (part.isEmpty) renamed
+      else if (tuples.distinct.size == 1)
+        part.zip(tuples.head).foldLeft(renamed) { case (d, (f, v)) =>
+          d.withColumn(f.name, lit(v).cast(StringType)) }
+      else {
+        // map-side file keys must byte-match input_file_name(), which
+        // reports the qualified, URL-encoded URI of the split's file
+        val hadoopConf = spark.sessionState.newHadoopConf()
+        val fileKey = "__graft_delta_file"
+        val rows = adds.zip(tuples).map { case (a, t) =>
+          val p = new org.apache.hadoop.fs.Path(a.path)
+          org.apache.spark.sql.Row.fromSeq(
+            p.getFileSystem(hadoopConf).makeQualified(p).toUri.toString +: t)
+        }
+        val fileToPv = spark.createDataFrame(
+          spark.sparkContext.parallelize(rows, 1),
+          StructType(StructField(fileKey, StringType) +:
+            part.map(f => StructField(f.name, StringType))))
+        renamed.withColumn(fileKey, input_file_name())
+          .join(broadcast(fileToPv), Seq(fileKey))
+          .drop(col(fileKey))
+      }
+    // 5. declared types, schema order; mapped tables strip the mapping
+    // metadata (the output contract is the clean logical shape)
+    withPv.select(logical.fields.toSeq.map { f =>
+      if (mode == "none" && !pvKeys(f.name)) col(q(f.name))
+      else col(q(f.name)).cast(logicalType(f.dataType)).as(f.name)
+    } ++ kept.map(c => col(q(c))): _*)
   }
 
-  /** NAME-mode scan: physical-schema read + positional cast back to
-    * logical names at every nesting level. DVs compose (the filter rides
-    * `_metadata`, not column names).
-    */
-  private def scanNameMapped(spark: SparkSession, tablePath: String,
-      adds: Seq[LiveFile],
-      logical: org.apache.spark.sql.types.StructType): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val (partFields, dataFields, physOf) = mappedPartitionSplit(logical, adds,
-      tablePath)
-    val dataLogical = org.apache.spark.sql.types.StructType(dataFields)
-    val physical = physicalize(dataLogical)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val base0 = applyDv(spark,
-      spark.read.schema(physical).parquet(adds.map(_.path): _*),
-      adds, new File(tablePath))
-    // positional rename back to logical happens per data field; the
-    // partition columns join in from the log under their logical names
-    // and the final projection below casts and orders everything
-    // (input_file_name() still resolves after a projection — it reads
-    // the task's scan context, not a relation column)
-    val decoded = base0.select(
-      dataFields.zip(physical.fields).map { case (lf, pf) =>
-        col(s"`${pf.name}`").as(lf.name)
-      }: _*)
-    val withPv = injectPvMapped(spark, adds, decoded, partFields, physOf)
-    withPv.select(logical.fields.map { lf =>
-      col(s"`${lf.name}`").cast(logicalType(lf.dataType)).as(lf.name)
-    }.toSeq: _*)
-  }
+  /** The reserved change-type column of cdc files. */
+  private val ChangeType = "_change_type"
 
   /** Parse an add action's `deletionVector` descriptor (JSON-decoded map
     * form). Required fields per the protocol: storageType, pathOrInlineDv,
@@ -600,11 +537,7 @@ object DeltaLog {
     // (they come from the parquet footers) — translate the logical column
     // so data skipping works on mapped tables too; an unknown logical
     // name keeps the raw key (pruning may only shrink, never the answer)
-    val statsKey = requireMappingReadable(spark, tablePath, None) match {
-      case Some((_, logical)) =>
-        logical.fields.find(_.name == column).map(physName).getOrElse(column)
-      case None => column
-    }
+    val statsKey = physByLogical(spark, tablePath).getOrElse(column, column)
     val kept = adds.filter { f =>
       f.stats match {
         case Some(st) =>
@@ -624,34 +557,20 @@ object DeltaLog {
     (kept, adds.size)
   }
 
-  /** Range scan with data skipping: read ONLY the stat-admitted files,
-    * then apply the predicate (skipping bounds the scan; the filter still
-    * decides rows). Empty kept-set returns an empty frame with the
-    * table's schema.
+  /** Range scan with data skipping: [[read]] over ONLY the stat-admitted
+    * files, then the predicate (skipping bounds the scan; the filter still
+    * decides rows). Stats bounds may only WIDEN under a DV (they describe
+    * the physical file), so pruning stays sound and the decode drops the
+    * dead rows. Empty kept-set returns an empty frame with the table's
+    * schema.
     */
   def readRange(spark: SparkSession, tablePath: String, column: String,
       lo: Option[Any], hi: Option[Any]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val (kept, _) = pruneByStats(spark, tablePath, column, lo, hi)
     val base =
-      if (kept.nonEmpty)
-        requireMappingReadable(spark, tablePath, None) match {
-          case Some((mode, logical)) =>
-            // mapped modes: pruneByStats translated the logical column to
-            // its physical stats key, so data skipping applies; the
-            // logical-named scan then filters row-exactly
-            if (mode == "name") scanNameMapped(spark, tablePath, kept, logical)
-            else scanIdMapped(spark, tablePath, kept, logical)
-          case None =>
-            // stats bounds may only WIDEN under a DV (they describe the
-            // physical file) — pruning stays sound; the DV filter then
-            // drops the dead rows the kept files still physically hold
-            applyDv(spark, spark.read.parquet(kept.map(_.path): _*), kept,
-              new File(tablePath))
-        }
-      else { // schema from the full snapshot, zero rows
-        read(spark, tablePath).limit(0)
-      }
+      if (kept.nonEmpty) decode(spark, tablePath, kept, None)
+      else read(spark, tablePath).limit(0)
     val bounded = lo.fold(base)(l => base.filter(col(column) >= lit(l)))
     hi.fold(bounded)(h => bounded.filter(col(column) <= lit(h)))
   }
@@ -743,8 +662,12 @@ object DeltaLog {
   private[sources] def metaSchema(spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long] = None)
       : Option[org.apache.spark.sql.types.StructType] =
-    tableMetaData(spark, tablePath, versionAsOf)
-      .flatMap(_.get("schemaString"))
+    schemaOf(tableMetaData(spark, tablePath, versionAsOf))
+
+  /** A metaData action's parsed schemaString. */
+  private def schemaOf(meta: Option[Map[String, Any]])
+      : Option[org.apache.spark.sql.types.StructType] =
+    meta.flatMap(_.get("schemaString"))
       .collect { case s: String => s }
       .flatMap(s => scala.util.Try(
         org.apache.spark.sql.types.DataType.fromJson(s)
@@ -876,14 +799,9 @@ object DeltaLog {
     // change, so one logical schema resolves files written under any
     // earlier logical names — a rename mid-range is transparent and the
     // whole feed serves the range-end names (real Delta's CDF behavior
-    // under column mapping).
+    // under column mapping). Unmapped feeds decode each commit with ITS
+    // epoch's schema (evolution-faithful).
     val endMode = mappingMode(tableMetaData(spark, tablePath, Some(maxV)))
-    val endSchema: Option[org.apache.spark.sql.types.StructType] =
-      if (endMode == "none") None
-      else Some(metaSchema(spark, tablePath, Some(maxV)).getOrElse(
-        throw new IllegalArgumentException(
-          s"column-mapped table without a parseable schemaString: " +
-            tablePath)))
     // partition values resolve per file: from the action itself (adds
     // always carry them; every engine-written dataChange remove carries
     // them as extended metadata), or — for a FOREIGN writer's bare
@@ -958,81 +876,30 @@ object DeltaLog {
       else new File(root, URLDecoder.decode(rel, "UTF-8")).getPath
     val frames = perCommit.flatMap {
       case (v, mtime, cdcPaths, addPaths, addHasDv, removePaths) =>
-        // unmapped tables decode each commit with ITS epoch's schema
-        // (evolution-faithful); mapped tables with the range-end schema
-        // (rename-transparent, see above)
-        val schemaAt =
-          if (endMode == "none") metaSchema(spark, tablePath, Some(v))
-          else endSchema
-        // cdc files on a mapped table carry PHYSICALIZED columns plus
-        // the reserved `_change_type` (our mutations stage them through
-        // the mapped-append physicalization); decode resolves like the
-        // data files — by physical name or footer field id — and the
-        // change-type column by its reserved name
-        def scan(paths: Seq[String], withChangeType: Boolean): DataFrame = {
-          val abs = paths.map(resolve)
-          abs.foreach(p => require(new File(p).isFile,
-            s"change-feed file for version $v was vacuumed: $p"))
-          if (endMode != "none")
-            return scanMappedPaths(spark, tablePath, endMode,
-              endSchema.get, abs, withChangeType)
-          schemaAt match {
-            case Some(st) if !withChangeType =>
-              spark.read.schema(st).parquet(abs: _*)
-            case Some(st) =>
-              val withCt = org.apache.spark.sql.types.StructType(
-                st.fields :+ org.apache.spark.sql.types.StructField(
-                  "_change_type", org.apache.spark.sql.types.StringType))
-              spark.read.schema(withCt).parquet(abs: _*)
-            case None => spark.read.parquet(abs: _*)
+        val schemaVersion = Some(if (endMode == "none") v else maxV)
+        // cdc files carry the table columns (physicalized on a mapped
+        // table) plus the reserved `_change_type`, and no partition
+        // values; derived changes re-inject each file's tuple from the
+        // pv the action carried (or, for a foreign writer's bare remove,
+        // the hive segments of its path) — the files' OWN pv keys decide
+        // which fields inject, not the metaData's partitionColumns: an
+        // OVERWRITE redeclares partitionColumns=[] in the very commit
+        // whose removes still reference partitioned files
+        def scan(pathPv: Seq[(String, Map[String, String])],
+            changeType: Boolean = false): DataFrame = {
+          val files = pathPv.map { case (p, pv) =>
+            val abs = resolve(p)
+            require(new File(abs).isFile,
+              s"change-feed file for version $v was vacuumed: $abs")
+            LiveFile(abs, pv)
           }
-        }
-        // DERIVED changes (pure-insert appends, whole-file removes) on a
-        // PARTITIONED epoch: the data files physically lack the
-        // partition columns (they live in the log), so the derivation
-        // reads the data fields and re-injects each file's tuple —
-        // exactly the snapshot reader's broadcast (file -> pv) join,
-        // keyed on the pv maps the actions carried (or, for a foreign
-        // writer's bare remove, the hive segments of its path)
-        def scanDerived(pathPv: Seq[(String, Map[String, String])])
-            : DataFrame = {
-          import org.apache.spark.sql.functions.col
-          import org.apache.spark.sql.types.StructType
-          if (pathPv.forall(_._2.isEmpty))
-            return scan(pathPv.map(_._1), withChangeType = false)
-          val abs = pathPv.map { case (p, pv) => (resolve(p), pv) }
-          abs.foreach { case (p, _) => require(new File(p).isFile,
-            s"change-feed file for version $v was vacuumed: $p") }
-          val schemaFull = schemaAt.getOrElse(
-            throw new IllegalArgumentException(
-              s"partitioned change feed needs a parseable metaData " +
-                s"schema in $tablePath"))
-          def keyOf(logical: String): String = {
-            val f = schemaFull(logical)
-            if (endMode != "none" && f.metadata.contains(PhysNameKey))
-              f.metadata.getString(PhysNameKey)
-            else logical
-          }
-          // the files' OWN pv keys decide which schema fields inject —
-          // not the metaData's partitionColumns at this version: an
-          // OVERWRITE redeclares partitionColumns=[] in the very commit
-          // whose removes still reference partitioned files, and a
-          // declared-columns split would schema-read the tuple column
-          // (all-NULL) from files that physically lack it
-          val pvKeys = abs.flatMap(_._2.keys).toSet
-          val (partFields, dataFields) = schemaFull.fields
-            .partition(f => pvKeys.contains(keyOf(f.name)))
-          val base =
-            if (endMode == "none")
-              spark.read.schema(StructType(dataFields))
-                .parquet(abs.map(_._1): _*)
-            else scanMappedPaths(spark, tablePath, endMode,
-              StructType(dataFields), abs.map(_._1))
-          injectPvByPath(spark, base, abs, partFields.toSeq, keyOf)
-            .select(schemaFull.fields.map(f => col(s"`${f.name}`")).toSeq: _*)
+          decode(spark, tablePath, files, schemaVersion,
+            changeType = changeType)
         }
         val changed: Seq[DataFrame] =
-          if (cdcPaths.nonEmpty) Seq(scan(cdcPaths, withChangeType = true))
+          if (cdcPaths.nonEmpty)
+            Seq(scan(cdcPaths.map(_ -> Map.empty[String, String]),
+              changeType = true))
           else {
             require(!addHasDv,
               s"version $v of $tablePath re-adds a file with a deletion " +
@@ -1040,10 +907,10 @@ object DeltaLog {
                 "cannot be derived from add/remove (foreign writer " +
                 "without CDF); read the snapshots instead")
             val ins = if (addPaths.isEmpty) Seq.empty else Seq(
-              scanDerived(addPaths)
+              scan(addPaths)
                 .withColumn("_change_type", lit("insert")))
             val del = if (removePaths.isEmpty) Seq.empty else Seq(
-              scanDerived(removePaths)
+              scan(removePaths)
                 .withColumn("_change_type", lit("delete")))
             ins ++ del
           }
@@ -1118,22 +985,34 @@ object DeltaLog {
     * `partitionValues` match every (column -> value) in `filter` — zero
     * data files opened or listed, the first and cheapest pruning lever
     * on a 100 TB partitioned table (the scan that follows touches only
-    * the matching partitions' files). Files MISSING a filtered column
-    * in their pv are kept (unpartitioned adds in a mixed table must not
-    * be silently dropped — same may-only-shrink-the-scan rule as
-    * [[pruneByStats]]). Returns (kept, totalLive).
+    * the matching partitions' files). Filter keys are LOGICAL names;
+    * `partitionValues` is keyed by physical names on a column-mapped
+    * table, so each key translates through [[physByLogical]]. Files
+    * MISSING a filtered column in their pv are kept (unpartitioned adds
+    * in a mixed table must not be silently dropped — same
+    * may-only-shrink-the-scan rule as [[pruneByStats]]). Returns (kept,
+    * totalLive).
     */
   def livePartitionAdds(spark: SparkSession, tablePath: String,
       filter: Map[String, String]): (Seq[LiveFile], Int) = {
     val adds = liveAdds(spark, tablePath)
-    val kept = adds.filter(a => filter.forall { case (k, v) =>
+    val physical = physFilter(spark, tablePath, filter)
+    val kept = adds.filter(a => physical.forall { case (k, v) =>
       a.partitionValues.get(k).forall(_ == v)
     })
     (kept, adds.size)
   }
 
-  /** Scan ONE partition slice: log-pruned file list, partition columns
-    * re-injected from the kept adds' pv (they are not in the files).
+  /** `filter` re-keyed by physical column names ([[physByLogical]]). */
+  private def physFilter(spark: SparkSession, tablePath: String,
+      filter: Map[String, String]): Map[String, String] = {
+    val phys = physByLogical(spark, tablePath)
+    filter.map { case (k, v) => phys.getOrElse(k, k) -> v }
+  }
+
+  /** Scan ONE partition slice: [[read]] over the log-pruned files, then
+    * `filter` as a residual predicate on the typed partition columns (a
+    * null value selects the null partition).
     *
     * REFUSES a mixed table where a kept file lacks a filtered column in
     * its `partitionValues` (plain append + appendPartitioned on one
@@ -1146,31 +1025,22 @@ object DeltaLog {
     */
   def readPartition(spark: SparkSession, tablePath: String,
       filter: Map[String, String]): DataFrame = {
-    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.functions.{col, lit}
     val (kept, _) = livePartitionAdds(spark, tablePath, filter)
     require(kept.nonEmpty,
       s"no live files match partition filter $filter in $tablePath")
+    val physical = physFilter(spark, tablePath, filter)
     val unresolved = kept.filter(a =>
-      filter.keys.exists(k => !a.partitionValues.contains(k)))
+      physical.keys.exists(k => !a.partitionValues.contains(k)))
     require(unresolved.isEmpty,
       s"readPartition needs every kept file to record the filtered " +
         s"partition column(s) ${filter.keys.mkString(",")} in " +
         s"partitionValues; ${unresolved.size} live file(s) do not (mixed " +
         "partitioned/unpartitioned table) — their rows cannot be pruned " +
         "exactly from the log. Use read() with a residual filter instead")
-    val pvCols = kept.flatMap(_.partitionValues.keys).distinct.sorted
-    // distinct pv combinations among kept files; single-combination fast
-    // path injects literals (no join at all — the common point lookup)
-    val combos = kept.map(_.partitionValues).distinct
-    if (combos.size == 1) {
-      val base = applyDv(spark, spark.read.parquet(kept.map(_.path): _*),
-        kept, new File(tablePath))
-      pvCols.foldLeft(base)((df, c) =>
-        df.withColumn(c, lit(combos.head.getOrElse(c, null: String))))
-    } else {
-      // mixed combos: the same broadcast file→pv injection as read(),
-      // but over ONLY the kept files — pruning is preserved
-      scanWithPv(spark, kept, new File(tablePath))
+    filter.foldLeft(decode(spark, tablePath, kept, None)) {
+      case (d, (c, null)) => d.filter(col(s"`$c`").isNull)
+      case (d, (c, v)) => d.filter(col(s"`$c`") === lit(v))
     }
   }
 
@@ -1178,24 +1048,18 @@ object DeltaLog {
   def liveFiles(spark: SparkSession, tablePath: String): Seq[String] =
     liveAdds(spark, tablePath).map(_.path)
 
-  /** Read the table's current snapshot as a DataFrame. Partition columns
+  /** Read the table's snapshot at `versionAsOf` (current when None) as
+    * a DataFrame: [[decode]] over every live file. Partition columns
     * come from the log's `partitionValues` (Delta stores them nowhere
-    * else): ONE parquet scan over all live files, then a broadcast join of
-    * `input_file_name()` against the (file -> partitionValues) map the log
-    * replay produced. A per-partition union would build a plan with one
-    * scan branch per distinct partition — fine at 3, fatal at 10⁴ (the
-    * driver chokes planning the union long before execution); the single
-    * scan keeps split planning, pushdown and pruning intact at any
-    * partition count, and the map side is log metadata (bytes per file),
-    * always broadcastable. An empty table (all files removed) still needs
-    * a schema, which without a live file only the `metaData` action
-    * carries — out of scope for this reader, so it refuses rather than
-    * guessing.
+    * else) through ONE scan plus a broadcast (file -> pv) join, so split
+    * planning, pushdown and pruning stay intact at any partition count.
+    * An empty table (all files removed) refuses rather than guessing a
+    * schema.
     */
   def read(spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long] = None): DataFrame =
-    readAdds(spark, tablePath,
-      liveAdds(spark, tablePath, versionAsOf), versionAsOf)
+    decode(spark, tablePath, liveAdds(spark, tablePath, versionAsOf),
+      versionAsOf)
 
   /** Snapshot-decode a SUBSET of the current live set (by exact path) —
     * the copy-on-write writers' rewrite seam: a MERGE/DELETE reads ONLY
@@ -1212,182 +1076,22 @@ object DeltaLog {
     val adds = liveAdds(spark, tablePath).filter(a => want.contains(a.path))
     require(adds.size == want.size,
       s"${want.size - adds.size} path(s) not in the live set of $tablePath")
-    readAdds(spark, tablePath, adds, None)
+    decode(spark, tablePath, adds, None)
   }
 
-  private def readAdds(spark: SparkSession, tablePath: String,
-      adds: Seq[LiveFile], versionAsOf: Option[Long]): DataFrame = {
-    require(adds.nonEmpty, s"Delta table has no live files: $tablePath")
-    // SCHEMA EVOLUTION: an evolved table's pre-evolution files physically
-    // lack the new columns, and footer inference would answer with
-    // whichever file won — so unpartitioned tables decode through the
-    // metaData schema IN FORCE AT the read version (time travel across an
-    // evolution sees each epoch's own schema), NULL-filling columns a
-    // file predates. Partitioned tables keep inference: their partition
-    // columns live in the log, not the files, and are injected below.
-    val root = new File(tablePath)
-    requireMappingReadable(spark, tablePath, versionAsOf) match {
-      case Some(("name", logical)) =>
-        return scanNameMapped(spark, tablePath, adds, logical)
-      case Some((_, logical)) => // "id"
-        return scanIdMapped(spark, tablePath, adds, logical)
-      case None => ()
-    }
-    if (adds.forall(_.partitionValues.isEmpty))
-      metaSchema(spark, tablePath, versionAsOf) match {
-        case Some(st) =>
-          return applyDv(spark,
-            spark.read.schema(st).parquet(adds.map(_.path): _*), adds, root)
-        case None => () // no metaData recorded (external minimal log)
-      }
-    // with a metaData schema in force at the read version the
-    // partitioned scan mirrors the unpartitioned discipline: DATA
-    // columns decode through the declared schema (evolution-safe —
-    // footer inference would let whichever file won decide whether an
-    // evolved column exists), and the injected pv strings cast to
-    // their declared types — the mapped scans' contract, symmetric for
-    // unmapped tables
-    metaSchema(spark, tablePath, versionAsOf) match {
-      case Some(ms) =>
-        import org.apache.spark.sql.functions.col
-        import org.apache.spark.sql.types.StructType
-        val pvKeys = adds.flatMap(_.partitionValues.keys).distinct
-        val dataSchema = StructType(
-          ms.fields.filterNot(f => pvKeys.contains(f.name)))
-        pvKeys.filter(ms.fieldNames.contains).foldLeft(
-          scanWithPv(spark, adds, root, Some(dataSchema)))((d, c) =>
-          d.withColumn(c, col(s"`$c`").cast(logicalType(ms(c).dataType))))
-      case None => scanWithPv(spark, adds, root)
-    }
-  }
-
-  /** Mapping-mode gate shared by the scan paths: None for an unmapped
-    * table (scan normally), Some((mode, logical schema)) for NAME mode
-    * (physical-schema scan + rename) and ID mode (parquet footer
-    * field-id resolution); any other declared mode — or a mapped table
-    * without a parseable schema — refuses loudly rather than decoding
-    * wrong.
-    */
-  private def requireMappingReadable(spark: SparkSession, tablePath: String,
-      versionAsOf: Option[Long])
-      : Option[(String, org.apache.spark.sql.types.StructType)] =
-    mappingMode(tableMetaData(spark, tablePath, versionAsOf)) match {
-      case "none" => None
-      case m @ ("name" | "id") =>
-        Some(m -> metaSchema(spark, tablePath, versionAsOf).getOrElse(
-          throw new IllegalArgumentException(
-            s"column-mapped table without a parseable schemaString: " +
-              tablePath)))
-      case other =>
-        throw new IllegalArgumentException(
-          s"delta.columnMapping.mode '$other' is not a Delta protocol " +
-            s"mode in $tablePath — name and id are decoded; anything " +
-            "else is refused rather than decoded wrong")
-    }
-
-  /** ONE distributed parquet scan over `adds` with the log's partition
-    * values injected via a broadcast (file -> pv) map when any add
-    * carries them (partition column data lives in the log, not the
-    * parquet).
-    */
-  private def scanWithPv(spark: SparkSession,
-      adds: Seq[LiveFile], root: File,
-      dataSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame =
-    injectPv(spark, adds,
-      applyDv(spark,
-        dataSchema.fold(spark.read)(st => spark.read.schema(st))
-          .parquet(adds.map(_.path): _*), adds, root))
-
-  /** Snapshot read PLUS physical row-identity columns
-    * (`__graft_dv_file` = the scan's file path, `__graft_dv_pos` = the
-    * row index in its file), captured BEFORE the pv-injection join —
-    * `_metadata` is a scan-relation pseudo-column and does not survive
-    * the broadcast join that re-attaches partition columns. This is the
-    * MoR delete writers' match-scan seam: a DELETE predicate may
-    * reference BOTH partition and data columns, and the physical
-    * identity of every matching row still resolves. Mapped tables are
-    * the callers' concern (they refuse before calling).
+  /** Snapshot read PLUS physical row-identity columns ([[RowIdentity]]:
+    * the scan's file path and the row index in its file), captured from
+    * the raw scan — `_metadata` is a scan-relation pseudo-column and does
+    * not survive the partition join or the logical projection. This is
+    * the MoR delete writers' match-scan seam: a DELETE predicate is
+    * logical and may reference partition and data columns, while the
+    * positions it marks are physical.
     */
   private[sources] def readWithRowIdentity(spark: SparkSession,
       tablePath: String, onlyPaths: Option[Set[String]] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val adds0 = liveAdds(spark, tablePath)
     val adds = onlyPaths.fold(adds0)(ps => adds0.filter(a => ps(a.path)))
-    require(adds.nonEmpty, s"Delta table has no live files: $tablePath")
-    val root = new File(tablePath)
-    val mode = mappingMode(tableMetaData(spark, tablePath))
-    if (mode != "none") {
-      val logical = metaSchema(spark, tablePath).getOrElse(
-        throw new IllegalArgumentException(
-          s"column-mapped table without a parseable schemaString: " +
-            tablePath))
-      return readWithRowIdentityMapped(spark, tablePath, adds, mode, logical)
-    }
-    // same schema discipline as read(): decode DATA columns through the
-    // metaData schema when one exists (evolution-safe); partitioned
-    // tables exclude their pv keys from it (those columns live in the
-    // log and inject below)
-    val base0 = metaSchema(spark, tablePath, None) match {
-      case Some(st) =>
-        val pvKeys = adds.flatMap(_.partitionValues.keys).distinct.toSet
-        val dataSchema = org.apache.spark.sql.types.StructType(
-          st.fields.filterNot(f => pvKeys.contains(f.name)))
-        spark.read.schema(dataSchema).parquet(adds.map(_.path): _*)
-      case None => spark.read.parquet(adds.map(_.path): _*)
-    }
-    val withId = applyDv(spark, base0, adds, root)
-      .withColumn("__graft_dv_file", col("_metadata.file_path"))
-      .withColumn("__graft_dv_pos", col("_metadata.row_index"))
-    // typed pv, same contract as read(): a MoR/CoW predicate comparing a
-    // partition column compares it at its declared type
-    castPvToDeclared(spark, tablePath, injectPv(spark, adds, withId))
-  }
-
-  /** Mapped variant of [[readWithRowIdentity]]: the same logical decode
-    * as read(), with every row's PHYSICAL identity (file path + row
-    * index) captured from the raw scan BEFORE the logical projection —
-    * what a mapped MoR delete needs (positions are physical; the
-    * predicate is logical).
-    */
-  private def readWithRowIdentityMapped(spark: SparkSession,
-      tablePath: String, adds: Seq[LiveFile], mode: String,
-      logical: org.apache.spark.sql.types.StructType): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val (partFields, dataFields, physOf) = mappedPartitionSplit(logical, adds,
-      tablePath)
-    val dataLogical = org.apache.spark.sql.types.StructType(dataFields)
-    val idCols = Seq(col("__graft_dv_file"), col("__graft_dv_pos"))
-    val raw = mode match {
-      case "name" =>
-        spark.read.schema(physicalize(dataLogical)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .parquet(adds.map(_.path): _*)
-      case "id" =>
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        spark.read.schema(fieldIdRequestSchema(dataLogical, tablePath))
-          .parquet(adds.map(_.path): _*)
-      case other => throw new IllegalArgumentException(
-        s"unsupported delta.columnMapping.mode '$other' in $tablePath")
-    }
-    val withId = applyDv(spark, raw, adds, new File(tablePath))
-      .withColumn("__graft_dv_file", col("_metadata.file_path"))
-      .withColumn("__graft_dv_pos", col("_metadata.row_index"))
-    // name mode renames data fields back to logical; id mode's request
-    // schema already carries logical names (resolution was by field id)
-    val decoded = mode match {
-      case "name" =>
-        val physical = physicalize(dataLogical)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        withId.select(dataFields.zip(physical.fields).map {
-          case (lf, pf) => col(s"`${pf.name}`").as(lf.name)
-        } ++ idCols: _*)
-      case _ => withId
-    }
-    val withPv = injectPvMapped(spark, adds, decoded, partFields, physOf)
-    withPv.select(logical.fields.map { f =>
-      col(s"`${f.name}`").cast(logicalType(f.dataType)).as(f.name)
-    } ++ idCols: _*)
+    decode(spark, tablePath, adds, None, rowIdentity = true)
   }
 
   /** `metaData.partitionColumns` as recorded (LOGICAL names, in declared
@@ -1435,84 +1139,12 @@ object DeltaLog {
     * column mapping) from logical names.
     */
   private[sources] def physByLogical(spark: SparkSession,
-      tablePath: String): Map[String, String] =
-    (mappingMode(tableMetaData(spark, tablePath)),
-      metaSchema(spark, tablePath)) match {
+      tablePath: String): Map[String, String] = {
+    val meta = tableMetaData(spark, tablePath)
+    (mappingMode(meta), schemaOf(meta)) match {
       case (m, Some(ms)) if m != "none" =>
-        val phys = physicalize(ms)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        ms.fieldNames.zip(phys.fieldNames).toMap
+        ms.fields.map(f => f.name -> physName(f)).toMap
       case _ => Map.empty
-    }
-
-  /** Cast log-injected partition columns (strings — [[injectPv]]'s
-    * output type) to their metaData-declared types. The mapped scan
-    * paths already cast in their final projection; this is the UNMAPPED
-    * partitioned frames' equivalent, used by the copy-on-write writers
-    * so restaged rows and cdc files carry the declared types, not the
-    * log's string rendering. No-op without a parseable metaData schema.
-    */
-  private[sources] def castPvToDeclared(spark: SparkSession,
-      tablePath: String, df: DataFrame): DataFrame =
-    metaSchema(spark, tablePath) match {
-      case None => df
-      case Some(ms) =>
-        import org.apache.spark.sql.functions.col
-        recordedPartitionColumns(spark, tablePath)
-          .filter(c => df.columns.contains(c) && ms.fieldNames.contains(c))
-          .foldLeft(df)((d, c) =>
-            d.withColumn(c, col(s"`$c`").cast(logicalType(ms(c).dataType))))
-    }
-
-  /** Re-attach the log's partition values to `base` via a broadcast
-    * (file -> pv) map — no-op for unpartitioned adds. */
-  private def injectPv(spark: SparkSession, adds: Seq[LiveFile],
-      base: DataFrame): DataFrame = {
-    if (adds.forall(_.partitionValues.isEmpty)) base
-    else {
-      import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
-      import org.apache.spark.sql.types.{StringType, StructField, StructType}
-      val pvCols = adds.flatMap(_.partitionValues.keys).distinct.sorted
-      // a mixed table (some files carry the column IN THE DATA, some in
-      // pv) cannot be reconciled here: injection would either shadow real
-      // data or produce duplicate columns depending on which footer won
-      // schema inference — refuse loudly instead of decoding wrong. Two
-      // independent detectors: the log alone (an add missing a pv key
-      // another add carries — deterministic, no data touched) and the
-      // inferred data schema (an external writer that put the column in
-      // both places).
-      val mixedLog = pvCols.filter(k =>
-        adds.exists(a => !a.partitionValues.contains(k)))
-      require(mixedLog.isEmpty,
-        s"mixed partitioned/unpartitioned Delta table: add actions " +
-          s"disagree on partition column(s) ${mixedLog.mkString(",")} — " +
-          "the files without partitionValues keep that column in their " +
-          "data, which log-side injection would shadow. Rewrite the " +
-          "table with one layout")
-      val collisions = pvCols.filter(base.columns.contains)
-      require(collisions.isEmpty,
-        s"mixed partitioned/unpartitioned Delta table: column(s) " +
-          s"${collisions.mkString(",")} present both in data files and in " +
-          "add-action partitionValues — rewrite the table with one layout")
-      // map-side file keys must byte-match input_file_name(), which reports
-      // the qualified, URL-encoded URI of the split's file — qualify through
-      // the same Hadoop machinery the scan uses
-      val hadoopConf = spark.sessionState.newHadoopConf()
-      val fileKey = "__graft_delta_file"
-      val rows = adds.map { a =>
-        val p = new org.apache.hadoop.fs.Path(a.path)
-        val qualified = p.getFileSystem(hadoopConf).makeQualified(p)
-          .toUri.toString
-        org.apache.spark.sql.Row.fromSeq(
-          qualified +: pvCols.map(c => a.partitionValues.get(c).orNull))
-      }
-      val mapSchema = StructType(StructField(fileKey, StringType) +:
-        pvCols.map(StructField(_, StringType)))
-      val fileToPv = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), mapSchema)
-      base.withColumn(fileKey, input_file_name())
-        .join(broadcast(fileToPv), Seq(fileKey))
-        .drop(col(fileKey))
     }
   }
 

@@ -1810,7 +1810,7 @@ object DeltaWrite {
         }
       }
     if (mode == "id") {
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+      DeltaLog.enableFieldIdRead(spark)
       spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     }
     Some(StructType(fields))

@@ -1052,19 +1052,17 @@ object IcebergLog {
     (kept, partKept.size, total)
   }
 
-  /** Partition + range scan over ONLY the doubly-admitted files, with the
-    * partition filter and range predicate re-applied as residuals (the
-    * bounds decide files; the predicate still decides rows).
+  /** Partition + range scan: [[read]] over ONLY the doubly-admitted
+    * files, with the partition filter and range predicate re-applied as
+    * residuals (the bounds decide files; the predicate still decides
+    * rows).
     */
   def readPartitionRange(spark: SparkSession, tablePath: String,
       filter: Map[String, Any], column: String, fieldId: Int,
       lo: Option[Long], hi: Option[Long]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val (kept, _, _) = prunePartitionsAndBounds(tablePath, filter, fieldId, lo, hi)
-    val base =
-      if (kept.nonEmpty)
-        schemaAwareReader(spark, tablePath).parquet(kept.map(_.path): _*)
-      else read(spark, tablePath).limit(0)
+    val base = readEntries(spark, tablePath, kept)
     val partFiltered = filter.foldLeft(base) { case (d, (c, v)) =>
       if (v == null) d.filter(col(c).isNull) else d.filter(col(c) === lit(v))
     }
@@ -1072,18 +1070,15 @@ object IcebergLog {
     hi.fold(bounded)(h => bounded.filter(col(column) <= lit(h)))
   }
 
-  /** Range scan with manifest data skipping: read ONLY the bound-admitted
-    * files, then apply the predicate (skipping bounds the scan; the
-    * filter still decides rows).
+  /** Range scan with manifest data skipping: [[read]] over ONLY the
+    * bound-admitted files, then the predicate (skipping bounds the scan;
+    * the filter still decides rows).
     */
   def readRange(spark: SparkSession, tablePath: String, column: String,
       fieldId: Int, lo: Option[Long], hi: Option[Long]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val (kept, _) = pruneByLongBounds(tablePath, fieldId, lo, hi)
-    val base =
-      if (kept.nonEmpty)
-        schemaAwareReader(spark, tablePath).parquet(kept.map(_.path): _*)
-      else read(spark, tablePath).limit(0)
+    val base = readEntries(spark, tablePath, kept)
     val bounded = lo.fold(base)(l => base.filter(col(column) >= lit(l)))
     hi.fold(bounded)(h => bounded.filter(col(column) <= lit(h)))
   }
@@ -1100,23 +1095,48 @@ object IcebergLog {
     // resolves its OWN schema record — a pre-evolution snapshot reads in
     // its pre-evolution shape (no NULL-filled future columns), exactly
     // like the Delta log replay (x34)
-    val epochFields = schemaFieldsAt(tablePath, snapshotAsOf)
+    decode(spark, tablePath, data, dels,
+      schemaFieldsAt(tablePath, snapshotAsOf))
+  }
+
+  /** The pruned readers' decode: [[read]] of the current snapshot over
+    * `kept` data files (the planning that picked them refuses tables
+    * with live delete files). An empty kept-set is a zero-row frame with
+    * the table's schema.
+    */
+  private def readEntries(spark: SparkSession, tablePath: String,
+      kept: Seq[LiveEntry]): DataFrame =
+    if (kept.isEmpty) read(spark, tablePath).limit(0)
+    else decode(spark, tablePath, kept, Seq.empty,
+      currentSchemaFields(tablePath))
+
+  /** THE DECODE: how a set of Iceberg data files becomes the table's
+    * logical rows. The data files scan through the recorded schema
+    * ([[scanData]]), or — with live delete files — through the
+    * delete-applying relation ([[liveWithMeta]]); identity partition
+    * columns the files lack join in from the manifests
+    * ([[injectIdentityPartitions]]); a recorded schema then fixes the
+    * output column ORDER (partition columns join in last, so a
+    * mapped+partitioned mirror re-projects to the declared order).
+    * [[read]] and every pruned reader call this, so a pruned read is
+    * [[read]] over fewer files by construction.
+    */
+  private def decode(spark: SparkSession, tablePath: String,
+      data: Seq[LiveEntry], dels: Seq[LiveEntry],
+      fields: Option[Seq[(Int, String, String)]]): DataFrame = {
+    import org.apache.spark.sql.functions.col
     val base =
-      if (dels.isEmpty) scanData(spark, tablePath, data, epochFields)
+      if (dels.isEmpty) scanData(spark, tablePath, data, fields)
       else {
         val meta = Seq("__graft_file", "__graft_pos", "__graft_dseq")
         liveWithMeta(spark, data, dels, unionSchemas =
-          epochFields.isDefined).drop(meta: _*)
+          fields.isDefined).drop(meta: _*)
       }
     val injected = injectIdentityPartitions(spark, data, base,
       hiddenFieldNames(tablePath))
-    // a recorded schema fixes the output column ORDER too — partition
-    // columns join in last, so a mapped+partitioned mirror re-projects
-    // to the schema's declared order
-    epochFields match {
-      case Some(fields) if fields.map(_._2).forall(injected.columns.contains) =>
-        import org.apache.spark.sql.functions.col
-        injected.select(fields.map(f => col(s"`${f._2}`")): _*)
+    fields match {
+      case Some(fs) if fs.map(_._2).forall(injected.columns.contains) =>
+        injected.select(fs.map(f => col(s"`${f._2}`")): _*)
       case _ => injected
     }
   }
@@ -1185,8 +1205,8 @@ object IcebergLog {
         // read them directly — excluding would inject manifest-typed
         // stand-ins over real columns. The mapping cannot discriminate
         // the layouts (an upgraded Delta table's physical names are
-        // identity too): ONE footer probe of one data file decides —
-        // O(1) driver-side metadata, same class as the log listing.
+        // identity too): ONE driver-side footer read of one data file
+        // decides — no job, same class as the log listing.
         // HIDDEN (transformed) fields' source columns stay in the data
         // files in both layouts and are never excluded.
         val identityPartIds = meta0.specs.find(_._1 == meta0.defaultSpecId)
@@ -1198,20 +1218,10 @@ object IcebergLog {
             val physNames = allFields
               .filter(f => identityPartIds.contains(f._1))
               .map { case (id, n, _) => mapping.getOrElse(id, n) }
-            // memoized per (probed file, requested names): the layout
-            // answer is a property of how the table's files were staged,
-            // so repeated reads of the same snapshot pay ONE footer open
-            val key = (data.head.path, physNames)
-            val selfContained = Option(layoutProbeCache.get(key))
-              .map(_.booleanValue()).getOrElse {
-                val footerCols =
-                  spark.read.parquet(data.head.path).columns.toSet
-                val r = physNames.forall(footerCols.contains)
-                if (layoutProbeCache.size > 4096) layoutProbeCache.clear()
-                layoutProbeCache.put(key, java.lang.Boolean.valueOf(r))
-                r
-              }
-            if (selfContained) Set.empty[Int] else identityPartIds
+            val footerCols =
+              FooterSchema(spark, data.head.path).fieldNames.toSet
+            if (physNames.forall(footerCols.contains)) Set.empty[Int]
+            else identityPartIds
           }
         val fields = allFields.filterNot(f => partIds.contains(f._1))
         if (mapping.nonEmpty) {
@@ -1239,7 +1249,7 @@ object IcebergLog {
         // no recorded schema: one footer names it (single-schema table by
         // this writer's contract) — passing it skips the per-call
         // schema-inference job a bare read runs
-        spark.read.schema(footerSchema(spark, data.head.path))
+        spark.read.schema(FooterSchema(spark, data.head.path))
           .parquet(data.map(_.path): _*)
     }
 
@@ -1414,7 +1424,7 @@ object IcebergLog {
     // call, a driver round-trip the MoR chain paid on every read
     val reader =
       if (unionSchemas) spark.read.option("mergeSchema", "true")
-      else spark.read.schema(footerSchema(spark, data.head.path))
+      else spark.read.schema(FooterSchema(spark, data.head.path))
     var cur = reader.parquet(data.map(_.path): _*)
       .withColumn("__graft_file",
         element_at(split(col("_metadata.file_path"), "/"), -1))
@@ -1482,25 +1492,6 @@ object IcebergLog {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("pos",
         org.apache.spark.sql.types.LongType)))
-
-  /** Spark schema from ONE parquet footer, read driver-side: a bare
-    * `spark.read.parquet(paths)` runs a one-task schema-inference JOB
-    * per call — a driver round-trip the merge/compaction chains paid on
-    * every read (x58 carried seven). Files of a table with no recorded
-    * schema evolution share one physical schema by this writer's
-    * contract, so the first footer names it without a job.
-    */
-  private def footerSchema(spark: SparkSession,
-      path: String): org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader, ParquetToSparkSchemaConverter}
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val footer = ParquetFooterReader.readFooter(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
-      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
-    new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-      .convert(footer.getFileMetaData.getSchema)
-  }
 
   /** Outcome of a MoR delete commit. */
   final case class V2DeleteStats(snapshotId: Long, rowsDeleted: Long)
@@ -2114,8 +2105,8 @@ object IcebergLog {
     (kept, entries.size)
   }
 
-  /** Partition-pruned scan: read ONLY the manifest-admitted files, then
-    * apply `filter` as a residual predicate (free for our identity-
+  /** Partition-pruned scan: [[read]] over ONLY the manifest-admitted
+    * files, then `filter` as a residual predicate (free for our identity-
     * partitioned files — every row matches — but it makes files kept
     * for safety, e.g. pre-spec unpartitioned ones, row-exact too).
     */
@@ -2137,17 +2128,11 @@ object IcebergLog {
             "tuple for it — the derived value has no table column, so " +
             "row exactness cannot be restored by a residual filter"))
     }
-    val base =
-      if (kept.nonEmpty)
-        injectIdentityPartitions(spark, kept, scanData(spark, tablePath, kept,
-            currentSchemaFields(tablePath)),
-          hidden)
-      else read(spark, tablePath).limit(0)
-    filter.filterNot { case (c, _) => hidden(c) }.foldLeft(base) {
-      case (d, (c, v)) =>
-        if (v == null) d.filter(col(c).isNull)
-        else d.filter(col(c) === lit(v))
-    }
+    filter.filterNot { case (c, _) => hidden(c) }
+      .foldLeft(readEntries(spark, tablePath, kept)) {
+        case (d, (c, null)) => d.filter(col(c).isNull)
+        case (d, (c, v)) => d.filter(col(c) === lit(v))
+      }
   }
 
   /** Normalize a caller-built spec to the parse round-trip's structural
@@ -2164,13 +2149,6 @@ object IcebergLog {
     * WHOLE spec history — entries written under any old spec may still
     * carry them.
     */
-  /** [[scanData]]'s layout-probe memo: (data file path, identity
-    * partition physical names) -> files carry the columns. Bounded;
-    * cleared wholesale past 4096 entries (probe is cheap to redo).
-    */
-  private val layoutProbeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Seq[String]), java.lang.Boolean]()
-
   private def hiddenFieldNames(tablePath: String): Set[String] =
     parseMeta(currentMetadataFile(tablePath)).specs
       .flatMap(_._2).filterNot(_.isIdentity).map(_.name).toSet
@@ -2224,7 +2202,7 @@ object IcebergLog {
     (kept, entries.size)
   }
 
-  /** Range scan through hidden partitioning: read ONLY the
+  /** Range scan through hidden partitioning: [[read]] over ONLY the
     * transform-admitted files ([[prunePartitionsBySourceRange]]), then
     * re-apply the range as a residual row predicate — the tuples decide
     * FILES, the predicate still decides ROWS (a day-partition file
@@ -2235,12 +2213,7 @@ object IcebergLog {
       sourceCol: String, lo: Option[Any], hi: Option[Any]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val (kept, _) = prunePartitionsBySourceRange(tablePath, sourceCol, lo, hi)
-    val base =
-      if (kept.nonEmpty)
-        injectIdentityPartitions(spark, kept, scanData(spark, tablePath, kept,
-            currentSchemaFields(tablePath)),
-          hiddenFieldNames(tablePath))
-      else read(spark, tablePath).limit(0)
+    val base = readEntries(spark, tablePath, kept)
     val c = col(s"`$sourceCol`")
     val lowered = lo.fold(base)(l => base.filter(c >= lit(l)))
     hi.fold(lowered)(h => lowered.filter(c <= lit(h)))
@@ -3076,7 +3049,7 @@ object IcebergLog {
         meta.schemaFields.map { case (_, n, t) =>
           org.apache.spark.sql.types.StructField(n, icebergToSparkType(t))
         })
-      else footerSchema(spark, data.head.path)
+      else FooterSchema(spark, data.head.path)
     val cols = tableSchema.fieldNames.toSeq
     // SCHEMA EVOLUTION (`mergeSchema` — [[DeltaWrite.merge]]'s Delta
     // parity on the second protocol): source columns beyond the table
@@ -3355,7 +3328,7 @@ object IcebergLog {
         meta.schemaFields.map { case (_, n, t) =>
           org.apache.spark.sql.types.StructField(n, icebergToSparkType(t))
         })
-      else footerSchema(spark, data.head.path)
+      else FooterSchema(spark, data.head.path)
     val cols = tableSchema.fieldNames.toSeq
     require(cols.forall(source.columns.contains) &&
         source.columns.forall(cols.contains),

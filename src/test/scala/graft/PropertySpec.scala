@@ -917,4 +917,108 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("pruned readers equal read() plus the predicate over generated Delta tables and UniForm mirrors") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{DataType, StructType}
+    import graft.sources.{DeltaLog, DeltaWrite, IcebergLog, Uniform}
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-readers-prop")
+      .toFile.getAbsolutePath
+    // a pruned reader is read() over fewer files: same column names,
+    // order and types, and read()'s rows under the same predicate
+    def assertReadEquals(what: String, pruned: DataFrame, full: DataFrame,
+        pred: Column): Unit = {
+      val expected = full.filter(pred)
+      assert(pruned.schema.map(f => (f.name, f.dataType)) ===
+        expected.schema.map(f => (f.name, f.dataType)), what)
+      def rows(df: DataFrame) = df.collect()
+        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+      val want = rows(expected)
+      assert(want.nonEmpty, s"$what: the predicate selects no rows")
+      assert(rows(pruned) === want, what)
+    }
+    // (rows of (cat, v), range start, range width); ids are 1..n
+    val tableGen = for {
+      n <- Gen.choose(4, 10)
+      rows <- Gen.listOfN(n, Gen.zip(Gen.oneOf("a", "b", "c"),
+        Gen.choose(0L, 99L)))
+      lo <- Gen.choose(1L, n.toLong)
+      width <- Gen.choose(0L, 3L)
+    } yield (rows, lo, width)
+    val layouts = for {
+      partitioned <- Seq(false, true)
+      mode <- Seq("none", "name", "id")
+      evolved <- Seq(false, true)
+    } yield (partitioned, mode, evolved)
+    layouts.zipWithIndex.foreach { case ((partitioned, mode, evolved), i) =>
+      val (gen, lo, width) =
+        tableGen.pureApply(Gen.Parameters.default, Seed(i.toLong))
+      val hi = lo + width
+      val what = s"partitioned=$partitioned mode=$mode evolved=$evolved"
+      val tbl = s"$root/t$i"
+      val rows = gen.zipWithIndex.map { case ((c, v), j) => (j + 1L, c, v) }
+      val (first, second) = rows.splitAt(rows.size / 2)
+      val partCols = if (partitioned) Seq("cat") else Seq.empty
+      def land(batch: DataFrame): Unit =
+        if (partitioned) DeltaWrite.appendPartitioned(batch, tbl, partCols)
+        else DeltaWrite.append(batch, tbl)
+      if (mode == "id")
+        DeltaWrite.createIdMapped(first.toDF("id", "cat", "v"), tbl, partCols)
+      else land(first.toDF("id", "cat", "v"))
+      land(second.toDF("id", "cat", "v"))
+      // name mode renames a data column and, when partitioned, the
+      // partition column (its pv stay keyed by the physical name)
+      val catName = if (mode == "name" && partitioned) "category" else "cat"
+      val vName = if (mode == "name") "val" else "v"
+      if (mode == "name") {
+        DeltaWrite.enableColumnMapping(spark, tbl)
+        DeltaWrite.renameColumn(spark, tbl, "v", "val")
+        if (partitioned) DeltaWrite.renameColumn(spark, tbl, "cat", catName)
+      }
+      if (evolved)
+        DeltaWrite.merge(tbl,
+          Seq((1L, rows.head._2, 500L, "n1"), (100L, "a", 1L, "n100"))
+            .toDF("id", catName, vName, "note"),
+          Seq("id"), mergeSchema = true)
+      val range = col("id").between(lo, hi)
+      val cat = rows.head._2
+      assertReadEquals(s"Delta readRange, $what",
+        DeltaLog.readRange(spark, tbl, "id", Some(lo), Some(hi)),
+        DeltaLog.read(spark, tbl), range)
+      if (partitioned)
+        assertReadEquals(s"Delta readPartition, $what",
+          DeltaLog.readPartition(spark, tbl, Map(catName -> cat)),
+          DeltaLog.read(spark, tbl), col(catName) === cat)
+      if (mode == "name") {
+        val schema = DataType.fromJson(DeltaLog.tableMetaData(spark, tbl)
+          .get("schemaString").asInstanceOf[String]).asInstanceOf[StructType]
+        val idField =
+          schema("id").metadata.getLong("delta.columnMapping.id").toInt
+        assert(Uniform.deltaToIceberg(spark, tbl, Seq(idField -> "id"))
+          .snapshotId.isDefined, what)
+        def ice = IcebergLog.read(spark, tbl)
+        assertReadEquals(s"Iceberg readRange, $what",
+          IcebergLog.readRange(spark, tbl, "id", idField, Some(lo), Some(hi)),
+          ice, range)
+        assertReadEquals(s"Iceberg readSourceRange, $what",
+          IcebergLog.readSourceRange(spark, tbl, "id", Some(lo), Some(hi)),
+          ice, range)
+        if (partitioned) {
+          assertReadEquals(s"Iceberg readPartition, $what",
+            IcebergLog.readPartition(spark, tbl, Map(catName -> cat)),
+            ice, col(catName) === cat)
+          assertReadEquals(s"Iceberg readPartitionRange, $what",
+            IcebergLog.readPartitionRange(spark, tbl, Map(catName -> cat),
+              "id", idField, Some(1L), Some(rows.size.toLong)),
+            ice, col(catName) === cat && col("id").between(1L, rows.size))
+          assertReadEquals(s"Iceberg readSourceRange on the partition, $what",
+            IcebergLog.readSourceRange(spark, tbl, catName, Some(cat),
+              Some(cat)),
+            ice, col(catName) === cat)
+        }
+      }
+    }
+  }
 }
