@@ -7,9 +7,10 @@ import graft.queries.Registry
 /** Dev utility: profile individual registry queries (noop-materialized,
   * same session config as Bench) — `runMain graft.PerfProbe
   * d02_ngram_jaccard [more...]`. Each query runs twice (the first includes
-  * plan/codegen warmup). Per run it prints the wall/CPU/JIT/job line, the
-  * build/execute split, the eight slowest stages and the job list with the
-  * driver call site that started each job. `graft.PlanDump` writes plans.
+  * plan/codegen warmup). Per run it prints the wall/CPU/JIT/compiles/job
+  * line, the build/execute split, the eight slowest stages and the job list
+  * with the driver call site that started each job. `graft.PlanDump`
+  * writes plans.
   */
 object PerfProbe {
   def main(args: Array[String]): Unit = {
@@ -36,9 +37,9 @@ object PerfProbe {
         val phases = Seq("build" -> build, "execute" -> execute)
         val stages = phases.flatMap(_._2.stages)
         val jobs = phases.flatMap(_._2.jobs)
-        println(f"[probe] $name run$i: ${build.secs + execute.secs}%.3f s  procCpu=${(build.cpuNanos + execute.cpuNanos) / 1e9}%.1f s  jit=${build.jitMs + execute.jitMs}ms  jobs=${jobs.size}  stages=${stages.size}")
+        println(f"[probe] $name run$i: ${build.secs + execute.secs}%.3f s  procCpu=${(build.cpuNanos + execute.cpuNanos) / 1e9}%.1f s  jit=${build.jitMs + execute.jitMs}ms  compiles=${build.compiles + execute.compiles}  jobs=${jobs.size}  stages=${stages.size}")
         phases.foreach { case (n, p) =>
-          println(f"[probe]   $n%-7s ${p.secs}%.3f s  jobs=${p.jobs.size}%3d  stages=${p.stages.size}%3d  tasks=${p.tasks}%5d  taskRun=${p.taskRunMs}%7dms  jit=${p.jitMs}%5dms  gc=${p.gcMs}%5dms")
+          println(f"[probe]   $n%-7s ${p.secs}%.3f s  jobs=${p.jobs.size}%3d  stages=${p.stages.size}%3d  tasks=${p.tasks}%5d  taskRun=${p.taskRunMs}%7dms  jit=${p.jitMs}%5dms  gc=${p.gcMs}%5dms  compiles=${p.compiles}%3d")
         }
         stages.sortBy(-_.wallMs).take(8).foreach { s =>
           // keep the call site up to the first ')' when present

@@ -44,12 +44,16 @@ object SessionFactory {
 
   /** A session without the extension hooks: UTC, `shufflePartitions`, no
     * UI, then `conf` in order (a later entry overrides an earlier one).
-    * Without `appName` Spark names the application itself.
+    * Without `appName` Spark names the application itself. Every session
+    * hoists primitive literals out of generated code
+    * ([[graft.plans.HoistLiterals]]), so statements that differ only in
+    * constants reuse one compiled class.
     */
   def plain(master: String, shufflePartitions: String,
       conf: Seq[(String, String)] = Nil, appName: Option[String] = None,
       logLevel: String = "WARN"): SparkSession = {
     val builder = SparkSession.builder().master(master)
+      .withExtensions(_.injectColumnar(_ => graft.plans.HoistLiterals.columnarRule))
     appName.foreach(builder.appName)
     builder
       .config("spark.sql.session.timeZone", "UTC")

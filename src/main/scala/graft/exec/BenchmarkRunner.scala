@@ -20,11 +20,12 @@ import graft.exec.QueryProfile.Phase
   */
 object BenchmarkRunner {
 
-  /** Duration stats of one phase in ms, plus the mean count of Spark jobs
-    * a run started in it (not part of the reference's CSV).
+  /** Duration stats of one phase in ms, plus the mean count per run of
+    * Spark jobs started and of generated classes compiled in it (neither is
+    * part of the reference's CSV).
     */
   final case class PhaseStats(min: Double, max: Double, mean: Double,
-      median: Double, percentOfTotal: Double, jobs: Double) {
+      median: Double, percentOfTotal: Double, jobs: Double, compiles: Double) {
     def csvFields: String = f"$min%.3f,$max%.3f,$mean%.3f,$median%.3f,$percentOfTotal%.1f"
   }
 
@@ -42,7 +43,7 @@ object BenchmarkRunner {
 
     def summary: String = {
       def line(n: String, p: PhaseStats) =
-        f"  $n%-18s min ${p.min}%9.3fms  max ${p.max}%9.3fms  mean ${p.mean}%9.3fms  median ${p.median}%9.3fms  ${p.percentOfTotal}%5.1f%%  jobs ${p.jobs}%.1f"
+        f"  $n%-18s min ${p.min}%9.3fms  max ${p.max}%9.3fms  mean ${p.mean}%9.3fms  median ${p.median}%9.3fms  ${p.percentOfTotal}%5.1f%%  jobs ${p.jobs}%.1f  compiles ${p.compiles}%.1f"
       s"""Benchmark Stats ($runs runs, $mode)
          |${line("logical planning", logical)}
          |${line("physical planning", physical)}
@@ -67,7 +68,8 @@ object BenchmarkRunner {
       else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2.0
     PhaseStats(sorted.head, sorted.last, mean, median,
       if (totalMean == 0) 0 else mean / totalMean * 100.0,
-      runs.map(_.map(_.jobs.size).sum).sum.toDouble / runs.size)
+      runs.map(_.map(_.jobs.size).sum).sum.toDouble / runs.size,
+      runs.map(_.map(_.compiles).sum).sum.toDouble / runs.size)
   }
 
   /** One run as three phases of the capture; the statement goes through

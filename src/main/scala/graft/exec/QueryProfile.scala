@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -15,10 +16,11 @@ import org.apache.spark.sql.SparkSession
   * planning it, executing it — and report what that phase cost.
   *
   * [[QueryProfile.jvm]] reads only this JVM's counters (wall, process CPU,
-  * JIT, GC) and registers nothing with Spark, so a graded run measures
-  * exactly what it did before. A `QueryProfile` instance also listens on
-  * its session and attributes to the phase the Spark jobs it started,
-  * their completed stages, tasks and executor run time. A phase tags its
+  * JIT, GC, codegen compilations) and registers nothing with Spark, so a
+  * graded run measures exactly what it did before. A `QueryProfile`
+  * instance also listens on its session and attributes to the phase the
+  * Spark jobs it started, their completed stages, tasks and executor run
+  * time. A phase tags its
   * jobs with the local property [[QueryProfile.PhaseProperty]] on the
   * measuring thread, so phases measured concurrently on other threads
   * never count each other's jobs.
@@ -99,11 +101,14 @@ object QueryProfile {
   final case class Stage(id: Int, name: String, details: String,
       wallMs: Long, runMs: Long, gcMs: Long, tasks: Int)
 
-  /** What one phase cost. CPU is the whole process's; `jobs` and `stages`
-    * are empty when the phase was measured by JVM counters only.
+  /** What one phase cost. CPU is the whole process's, and so are
+    * `compiles`, the Janino compilations of generated code started while
+    * the phase ran (a statement whose class is already cached counts 0);
+    * `jobs` and `stages` are empty when the phase was measured by JVM
+    * counters only.
     */
   final case class Phase(wallNanos: Long, cpuNanos: Long, jitMs: Long,
-      gcMs: Long, jobs: Seq[Job] = Nil, stages: Seq[Stage] = Nil) {
+      gcMs: Long, compiles: Long, jobs: Seq[Job] = Nil, stages: Seq[Stage] = Nil) {
     def secs: Double = wallNanos / 1e9
     def ms: Double = wallNanos / 1e6
     def cpuSecs: Double = cpuNanos / 1e9
@@ -118,18 +123,24 @@ object QueryProfile {
   private def gcTotalMs(): Long = ManagementFactory.getGarbageCollectorMXBeans
     .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
 
-  /** Time `body` by this JVM's counters alone: wall, process CPU, JIT and
-    * GC. Registers nothing with Spark.
+  /** Janino compilations in this JVM so far: Spark's codegen metric,
+    * which counts every compile and no cache hit.
+    */
+  private def compilesTotal(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Time `body` by this JVM's counters alone: wall, process CPU, JIT, GC
+    * and codegen compilations. Registers nothing with Spark.
     */
   def jvm[A](body: => A): (Phase, A) = {
     val cpu0 = os.getProcessCpuTime
     val jit0 = jitTotalMs()
     val gc0 = gcTotalMs()
+    val compiles0 = compilesTotal()
     val t0 = System.nanoTime()
     val a = body
     val wall = System.nanoTime() - t0
     (Phase(wall, os.getProcessCpuTime - cpu0, jitTotalMs() - jit0,
-      gcTotalMs() - gc0), a)
+      gcTotalMs() - gc0, compilesTotal() - compiles0), a)
   }
 
   /** Block until the session's listener bus has delivered every event

@@ -1,7 +1,7 @@
 package graft.server
 
 import java.util.concurrent.ConcurrentSkipListMap
-import java.util.concurrent.atomic.LongAdder
+import java.util.concurrent.atomic.{AtomicInteger, LongAdder}
 
 /** Prometheus text exposition (version 0.0.4) of the served requests. The
   * reference runs a dedicated metrics server
@@ -17,8 +17,17 @@ object PrometheusText {
   private val latencyBucketsMs: Array[Long] =
     Array(5L, 10L, 25L, 50L, 100L, 250L, 500L, 1000L, 2500L, 5000L)
 
-  /** Cumulative request counters, keyed by path in exposition order.
-    * `add` is O(1) and lock-free.
+  /** Most distinct path labels the counters keep. Clients choose request
+    * paths (`/execute/<handle>`, 404s, Flight `/do_action/<name>`), so
+    * past this many every new path counts under [[OtherPath]]; the request
+    * log keeps the raw path.
+    */
+  val MaxPaths = 128
+  val OtherPath = "other"
+
+  /** Cumulative request counters, keyed by path in exposition order, with
+    * at most [[MaxPaths]] path labels plus [[OtherPath]]. `add` is O(1)
+    * and lock-free.
     */
   final class Counters {
     private[PrometheusText] final class PathStats {
@@ -30,9 +39,25 @@ object PrometheusText {
     }
 
     private[PrometheusText] val paths = new ConcurrentSkipListMap[String, PathStats]()
+    // path labels taken, reserved before a new one is inserted, so
+    // concurrent first requests never insert more than MaxPaths
+    private val labels = new AtomicInteger
+
+    private def statsOf(path: String): PathStats = {
+      val known = paths.get(path)
+      if (known != null) known
+      else if (labels.incrementAndGet() <= MaxPaths) {
+        val fresh = new PathStats
+        val raced = paths.putIfAbsent(path, fresh)
+        if (raced == null) fresh else { labels.decrementAndGet(); raced }
+      } else {
+        labels.decrementAndGet()
+        paths.computeIfAbsent(OtherPath, _ => new PathStats)
+      }
+    }
 
     def add(path: String, status: Int, durationMs: Long, rows: Option[Long]): Unit = {
-      val p = paths.computeIfAbsent(path, _ => new PathStats)
+      val p = statsOf(path)
       p.byStatus.computeIfAbsent(status, _ => new LongAdder).increment()
       // count before bucket, and `render` reads them in the other order,
       // so a concurrent scrape never shows a bucket above `+Inf`

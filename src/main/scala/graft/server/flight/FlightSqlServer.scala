@@ -115,7 +115,7 @@ class FlightSqlServer(ctx: ExecutionContext, port: Int = 0,
       .addMethod(Methods.getFlightInfo, ServerCalls.asyncUnaryCall(
         new ServerCalls.UnaryMethod[Array[Byte], Array[Byte]] {
           override def invoke(req: Array[Byte], resp: StreamObserver[Array[Byte]]): Unit =
-            guard(resp)(observed("/get_flight_info")(
+            guard(resp)(observed("/get_flight_info", sqlOf(cmdOfDescriptor(req)))(
               resp.onNext(getFlightInfo(req))))
         }))
       .addMethod(Methods.getSchema, ServerCalls.asyncUnaryCall(
@@ -136,8 +136,11 @@ class FlightSqlServer(ctx: ExecutionContext, port: Int = 0,
         new ServerCalls.ServerStreamingMethod[Array[Byte], Array[Byte]] {
           override def invoke(req: Array[Byte], resp: StreamObserver[Array[Byte]]): Unit =
             guard(resp) {
-              val name = Proto.stringAt(Proto.parse(req), 1).getOrElse("")
-              observed(s"/do_action/$name")(doAction(req, resp))
+              val fs = Proto.parse(req)
+              val name = Proto.stringAt(fs, 1).getOrElse("")
+              val sql = if (name != "CreatePreparedStatement") None
+                else sqlOf(Proto.unpackAny(Proto.bytesAt(fs, 2).get))
+              observed(s"/do_action/$name", sql)(doAction(req, resp))
             }
         }))
       // no pre-registered named flights exist (every flight is created by a
@@ -217,6 +220,18 @@ class FlightSqlServer(ctx: ExecutionContext, port: Int = 0,
       new java.sql.Timestamp(System.currentTimeMillis()),
       (System.nanoTime() - t0) / 1000000L, None, status)
   }
+
+  /** The SQL text of a statement command (`CommandStatementQuery`) or a
+    * prepare request (`ActionCreatePreparedStatementRequest`), for the
+    * request's observability row; None for any other command, or one that
+    * does not parse (its handler reports that).
+    */
+  private def sqlOf(cmd: => (String, Array[Byte])): Option[String] =
+    scala.util.Try(cmd match {
+      case ("CommandStatementQuery" | "ActionCreatePreparedStatementRequest", v) =>
+        Proto.stringAt(Proto.parse(v), 1)
+      case _ => None
+    }).toOption.flatten
 
   // ---- handlers ------------------------------------------------------
 

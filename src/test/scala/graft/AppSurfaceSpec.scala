@@ -202,6 +202,23 @@ class AppSurfaceSpec extends SparkSpec {
     } finally profile.close()
   }
 
+  test("query profile: a new query shape compiles generated code, a repeat compiles none") {
+    // a shape no other test plans: the column names are this test's own
+    val sql = "SELECT sum(id * 7) AS compiles_probe FROM range(0, 1000, 1, 2) " +
+      "WHERE id % 3 = 1"
+    val profile = new QueryProfile(spark)
+    try {
+      val (first, a) = profile.phase(spark.sql(sql).head().getLong(0))
+      assert(first.compiles >= 1L)
+      val (again, b) = profile.phase(spark.sql(sql).head().getLong(0))
+      assert(again.compiles === 0L)
+      assert(a === b)
+    } finally profile.close()
+    // the --bench summary reports the mean per phase
+    val res = BenchmarkRunner.run(new ExecutionContext(spark), sql, iterations = 2)
+    assert(res.summary.linesIterator.count(_.contains(" compiles ")) === 4)
+  }
+
   test("query profile: concurrent captures do not count each other's jobs") {
     val sc = spark.sparkContext
     val (a, b) = (new QueryProfile(spark), new QueryProfile(spark))

@@ -298,9 +298,19 @@ class FlightSpec extends SparkSpec {
       val info = unaryCall(ch, Methods.getFlightInfo,
         statementDescriptor("SELECT 1 AS one"))
       streamingCall(ch, Methods.doGet, ticketOfInfo(info)).toSeq
-      val paths = ctx.observability.records.map(_.getString(1))
-      assert(paths.contains("/get_flight_info"))
-      assert(paths.contains("/do_get"))
+      val prepare = Proto.writer().string(1, "CreatePreparedStatement")
+        .bytes(2, Proto.packAny(
+          Proto.SqlProtoPrefix + "ActionCreatePreparedStatementRequest",
+          Proto.writer().string(1, "SELECT 2 AS two").build()))
+        .build()
+      streamingCall(ch, Methods.doAction, prepare).toSeq
+      val sqlByPath = ctx.observability.records
+        .map(r => r.getString(1) -> Option(r.getString(2))).toMap
+      assert(sqlByPath.get("/get_flight_info") === Some(Some("SELECT 1 AS one")))
+      assert(sqlByPath.get("/do_action/CreatePreparedStatement") ===
+        Some(Some("SELECT 2 AS two")))
+      // a ticket names a planned statement, not its text
+      assert(sqlByPath.get("/do_get") === Some(None))
     } finally { ch.shutdownNow(); server.stop() }
   }
 

@@ -134,6 +134,26 @@ class ServerSpec extends SparkSpec {
       expositionOf(obs.records))
   }
 
+  test("/metrics keeps at most MaxPaths path labels and counts the rest as other") {
+    val obs = new ExecutionContext(spark).observability
+    val perThread = 2500
+    val threads = (0 until 4).map { t =>
+      new Thread(() => (0 until perThread).foreach { i =>
+        obs.record(None, s"/execute/$t-$i", None, new java.sql.Timestamp(0L), 1L, None, 200)
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    val totals = graft.server.PrometheusText.render(obs.counters).linesIterator
+      .filter(_.startsWith("graft_requests_total{")).toSeq
+    val labels = totals.map(l => l.substring(l.indexOf('"') + 1, l.indexOf("\",status=")))
+    assert(labels.distinct.size <= graft.server.PrometheusText.MaxPaths + 1)
+    assert(labels.contains(graft.server.PrometheusText.OtherPath))
+    assert(totals.map(_.split(' ').last.toLong).sum === 4L * perThread)
+    // the request log keeps every raw path
+    assert(obs.records.map(_.getString(1)).distinct.size === 4 * perThread)
+  }
+
   test("request log: 100000 records from 4 threads keep the newest Capacity rows") {
     val ctx = new ExecutionContext(spark)
     val obs = ctx.observability
