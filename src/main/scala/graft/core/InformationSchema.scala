@@ -7,12 +7,10 @@ import org.apache.spark.sql.types._
   * information_schema: `crates/datafusion-app/src/extensions/builder.rs:82,
   * 100-102`; FlightSQL catalog endpoints query it,
   * `src/server/flightsql/service.rs:251-485`). Spark has no native
-  * information_schema, so the three views the reference's surface depends on
-  * — tables, columns, schemata — are synthesized from the session catalog.
-  *
-  * SQL referencing `information_schema.<view>` is handled by [[rewrite]]:
-  * the views are refreshed (they are catalog snapshots) and the dotted names
-  * rewritten to the registered temp-view names.
+  * information_schema, so the views the reference's surface depends on —
+  * tables, columns, schemata, df_settings — are synthesized from the
+  * session catalog and conf. [[graft.plans.AppRelations]] resolves
+  * `information_schema.<view>` in SQL to a fresh snapshot of that one view.
   */
 object InformationSchema {
 
@@ -26,10 +24,8 @@ object InformationSchema {
     scala.collection.concurrent.TrieMap.empty[SparkSession, Seq[(String, String, String, String)]]
 
   def setOverlay(spark: SparkSession,
-      entries: Seq[(String, String, String, String)]): Unit = {
-    overlays.put(spark, entries)
-    refresh(spark)
-  }
+      entries: Seq[(String, String, String, String)]): Unit =
+    overlays.put(spark, entries): Unit
 
   val tablesSchema: StructType = StructType(Seq(
     StructField("table_catalog", StringType),
@@ -110,74 +106,8 @@ object InformationSchema {
         StructField("value", StringType, nullable = true))))
   }
 
-  /** (Re)build the snapshot views. */
-  def refresh(spark: SparkSession): Unit = {
-    tablesDF(spark).createOrReplaceTempView("information_schema_tables")
-    columnsDF(spark).createOrReplaceTempView("information_schema_columns")
-    schemataDF(spark).createOrReplaceTempView("information_schema_schemata")
-    dfSettingsDF(spark).createOrReplaceTempView("information_schema_df_settings")
-  }
-
-  private val DottedName = """(?i)\binformation_schema\.(tables|columns|schemata|df_settings)\b""".r
-  // reference catalog names (`catalog/mod.rs:47-68` dft.meta.versions;
-  // `observability/mod.rs:42-68` dft.observability.requests); our session
-  // catalog registers them flat
-  private val MetaVersions = """(?i)\bdft\.meta\.versions\b""".r
-  private val ObsRequests = """(?i)\bdft\.observability\.requests\b""".r
-
-  /** Apply `f` to the segments of `sql` that lie outside single-quoted
-    * string literals (doubled quotes are the SQL escape and do not close a
-    * literal), leaving literal contents byte-identical. Reuses the
-    * quote-tracking convention of `ExecutionContext.splitStatements` so a
-    * query like `SELECT 'information_schema.tables'` is not rewritten.
-    */
-  private def mapOutsideLiterals(sql: String)(f: String => String): String = {
-    val out = new StringBuilder
-    val seg = new StringBuilder
-    var inQuote = false
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (!inQuote) {
-        if (c == '\'') {
-          out.append(f(seg.result())); seg.clear()
-          out.append(c); inQuote = true
-        } else seg.append(c)
-      } else {
-        out.append(c)
-        if (c == '\'') {
-          if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') {
-            out.append('\''); i += 1 // escaped quote, literal continues
-          } else inQuote = false
-        }
-      }
-      i += 1
-    }
-    out.append(f(seg.result()))
-    out.result()
-  }
-
-  /** Pre-parse rewrite for SQL that references information_schema views or
-    * the reference-named `dft.meta.versions` table: refresh the snapshots
-    * (only when a real reference matched — matches inside string literals
-    * neither rewrite nor refresh), then rewrite dotted names to the temp
-    * views.
-    */
-  def rewrite(spark: SparkSession, sql: String): String = {
-    var matched = false
-    val out = mapOutsideLiterals(sql) { seg =>
-      val s1 =
-        if (DottedName.findFirstIn(seg).isEmpty) seg
-        else {
-          matched = true
-          DottedName.replaceAllIn(seg,
-            m => "information_schema_" + m.group(1).toLowerCase)
-        }
-      ObsRequests.replaceAllIn(
-        MetaVersions.replaceAllIn(s1, _ => "meta_versions"),
-        _ => "observability_requests")
-    }
-    if (matched) refresh(spark)
-    out
-  }
+  /** The views by name, each built on demand as a snapshot. */
+  val views: Map[String, SparkSession => DataFrame] = Map(
+    "tables" -> tablesDF, "columns" -> columnsDF,
+    "schemata" -> schemataDF, "df_settings" -> dfSettingsDF)
 }

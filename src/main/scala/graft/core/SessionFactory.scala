@@ -47,13 +47,18 @@ object SessionFactory {
     * Without `appName` Spark names the application itself. Every session
     * hoists primitive literals out of generated code
     * ([[graft.plans.HoistLiterals]]), so statements that differ only in
-    * constants reuse one compiled class.
+    * constants reuse one compiled class, and resolves the app's table
+    * functions, `information_schema` and `dft.*` names in its analyzer
+    * ([[graft.plans.AppRelations]]).
     */
   def plain(master: String, shufflePartitions: String,
       conf: Seq[(String, String)] = Nil, appName: Option[String] = None,
       logLevel: String = "WARN"): SparkSession = {
     val builder = SparkSession.builder().master(master)
-      .withExtensions(_.injectColumnar(_ => graft.plans.HoistLiterals.columnarRule))
+      .withExtensions { e =>
+        e.injectColumnar(_ => graft.plans.HoistLiterals.columnarRule)
+        e.injectHintResolutionRule(graft.plans.AppRelations(_))
+      }
     appName.foreach(builder.appName)
     builder
       .config("spark.sql.session.timeZone", "UTC")

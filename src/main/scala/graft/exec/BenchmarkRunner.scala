@@ -35,11 +35,16 @@ object BenchmarkRunner {
     def rowCountsConsistent: Boolean = rowCounts.distinct.size <= 1
 
     /** CSV row; header shape mirrors the reference
-      * (`src/cli/mod.rs:59-60`).
+      * (`src/cli/mod.rs:59-60`). The statement is quoted as RFC 4180 does
+      * when it holds a comma, a quote or a line break.
       */
-    def csvRow: String =
-      s"$query,$runs,${logical.csvFields},${physical.csvFields}," +
+    def csvRow: String = {
+      val q =
+        if (query.exists(",\"\r\n".contains(_))) "\"" + query.replace("\"", "\"\"") + "\""
+        else query
+      s"$q,$runs,${logical.csvFields},${physical.csvFields}," +
         s"${execution.csvFields},${total.csvFields},$mode"
+    }
 
     def summary: String = {
       def line(n: String, p: PhaseStats) =
@@ -73,8 +78,8 @@ object BenchmarkRunner {
   }
 
   /** One run as three phases of the capture; the statement goes through
-    * the context, so its rewrites (URL tables, `parquet_metadata`,
-    * lakehouse TVFs, `information_schema`) apply as in a plain `-c` run.
+    * the context, so its URL-table rewrite and result limit apply as in a
+    * plain `-c` run.
     */
   private def timeOnce(ctx: ExecutionContext, profile: QueryProfile,
       sql: String): (Seq[Phase], Long) = {

@@ -4,13 +4,12 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.{InformationSchema, UrlTableRewrite}
-import graft.functions.ParquetMetadataTable
+import graft.core.UrlTableRewrite
 import graft.tables.Observability
 
 /** Shared execution layer (reference `crates/datafusion-app/src/local.rs`:
-  * `ExecutionContext::execute_sql`): SQL in, DataFrame out, with url-table
-  * and parquet_metadata rewrites, optional app-level result limit (HTTP
+  * `ExecutionContext::execute_sql`): SQL in, DataFrame out, with the
+  * url-table rewrite, optional app-level result limit (HTTP
   * `result_limit`, reference `local.rs:557-569`), statement splitting for
   * DDL files, and per-request observability records.
   */
@@ -26,13 +25,13 @@ class ExecutionContext(val spark: SparkSession,
   def observeStreams(): org.apache.spark.sql.streaming.StreamingQueryListener =
     observability.attachStreaming()
 
-  /** Execute one statement with the app rewrites applied. */
+  /** Execute one statement. Table functions, `information_schema` and the
+    * `dft.*` names resolve in every session's analyzer
+    * ([[graft.plans.AppRelations]]); only url tables are rewritten here,
+    * because Spark's parser rejects a string literal in `FROM`.
+    */
   def sql(statement: String): DataFrame = {
-    val rewritten = InformationSchema.rewrite(spark,
-      ParquetMetadataTable.rewrite(spark,
-        graft.functions.LakehouseTvf.rewrite(spark,
-          UrlTableRewrite(statement))))
-    val df = spark.sql(rewritten)
+    val df = spark.sql(UrlTableRewrite(statement))
     resultLimit.map(df.limit).getOrElse(df)
   }
 

@@ -1,11 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 
-/** SQL table-valued functions over the lakehouse surfaces, as a pre-parse
-  * rewrite exactly like [[ParquetMetadataTable.rewrite]] (the reference's
-  * `parquet_metadata(...)` seam, `src/args.rs` → datafusion UDTF):
+import graft.sources.{DeltaLog, IcebergLog}
+
+/** The app's SQL table functions by name (the reference's
+  * `parquet_metadata(...)` is a DataFusion UDTF,
+  * `crates/datafusion-functions-parquet/src/lib.rs:143-291`).
+  * [[graft.plans.AppRelations]] resolves a call to the analyzed plan of
+  * the DataFrame its builder returns, so a call composes like any
+  * relation — joins, filters, aggregates, CTEs, subqueries:
   *
+  *  - `parquet_metadata('file')` — one row per row group x column chunk
+  *    ([[ParquetMetadataTable]]);
   *  - `table_changes('path', from [, to])` — the Databricks TVF name for
   *    the Delta CHANGE DATA FEED ([[graft.sources.DeltaLog.tableChanges]]);
   *  - `iceberg_snapshots('path')` — the `table$snapshots` inspection
@@ -22,83 +30,43 @@ import org.apache.spark.sql.SparkSession
   *  - `delta_files('path')` — the Delta live-file inspection surface:
   *    (file_path, size_bytes, record_count, partition,
   *    has_deletion_vector), log-only ([[graft.sources.DeltaLog.filesTable]]).
-  *
-  * Each call materializes as a temp view at rewrite time (metadata-scale
-  * for the inspection tables; the change feed plans lazily like any scan),
-  * so the surrounding SQL composes freely — joins, filters, aggregates.
   */
 object LakehouseTvf {
 
-  private val Changes =
-    """(?i)\btable_changes\s*\(\s*'([^']+)'\s*,\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)""".r
-  private val Snaps = """(?i)\biceberg_snapshots\s*\(\s*'([^']+)'\s*\)""".r
-  private val Refs = """(?i)\biceberg_refs\s*\(\s*'([^']+)'\s*\)""".r
-  private val History = """(?i)\bdelta_history\s*\(\s*'([^']+)'\s*\)""".r
-  private val Files = """(?i)\biceberg_files\s*\(\s*'([^']+)'\s*\)""".r
-  private val Parts = """(?i)\biceberg_partitions\s*\(\s*'([^']+)'\s*\)""".r
-  private val DFiles = """(?i)\bdelta_files\s*\(\s*'([^']+)'\s*\)""".r
+  /** A table function: its parameters (name, type), of which the first
+    * `required` must be given, and the builder. The builder receives the
+    * constant arguments evaluated at the parameter types: a `String` per
+    * STRING and a `Long` per BIGINT parameter.
+    */
+  final case class TableFunction(params: Seq[(String, DataType)],
+      required: Int, build: (SparkSession, Seq[Any]) => DataFrame)
 
-  def rewrite(spark: SparkSession, sql: String): String = {
-    val s1 = Changes.replaceAllIn(sql, m => {
-      val path = m.group(1)
-      val from = m.group(2).toLong
-      val to = Option(m.group(3)).map(_.toLong)
-      val view = "table_changes_" +
-        math.abs((path, from, to).hashCode).toString
-      graft.sources.DeltaLog.tableChanges(spark, path, from, to)
-        .createOrReplaceTempView(view)
-      scala.util.matching.Regex.quoteReplacement(view)
-    })
-    val s2 = Snaps.replaceAllIn(s1, m => {
-      val path = m.group(1)
-      val view = "iceberg_snapshots_" + math.abs(path.hashCode).toString
-      val se = spark
-      import se.implicits._
-      graft.sources.IcebergLog.snapshots(path)
-        .map(s => (s.snapshotId, s.summary.getOrElse("operation", null),
-          s.manifestList))
+  private val path = "path" -> StringType
+
+  private def ofPath(build: (SparkSession, String) => DataFrame) =
+    TableFunction(Seq(path), 1, (s, args) => build(s, args.head.toString))
+
+  val functions: Map[String, TableFunction] = Map(
+    "parquet_metadata" -> ofPath(ParquetMetadataTable(_, _)),
+    "table_changes" -> TableFunction(
+      Seq(path, "from_version" -> LongType, "to_version" -> LongType), 2,
+      (s, args) => DeltaLog.tableChanges(s, args(0).toString,
+        args(1).asInstanceOf[Long], args.lift(2).map(_.asInstanceOf[Long]))),
+    "iceberg_snapshots" -> ofPath { (s, p) =>
+      import s.implicits._
+      IcebergLog.snapshots(p)
+        .map(x => (x.snapshotId, x.summary.getOrElse("operation", null),
+          x.manifestList))
         .toDF("snapshot_id", "operation", "manifest_list")
-        .createOrReplaceTempView(view)
-      scala.util.matching.Regex.quoteReplacement(view)
-    })
-    val s3 = Refs.replaceAllIn(s2, m => {
-      val path = m.group(1)
-      val view = "iceberg_refs_" + math.abs(path.hashCode).toString
-      val se = spark
-      import se.implicits._
-      graft.sources.IcebergLog.refs(path).toSeq.sortBy(_._1)
+    },
+    "iceberg_refs" -> ofPath { (s, p) =>
+      import s.implicits._
+      IcebergLog.refs(p).toSeq.sortBy(_._1)
         .map { case (n, (sid, t)) => (n, sid, t) }
         .toDF("name", "snapshot_id", "type")
-        .createOrReplaceTempView(view)
-      scala.util.matching.Regex.quoteReplacement(view)
-    })
-    val s4 = History.replaceAllIn(s3, m => {
-      val path = m.group(1)
-      val view = "delta_history_" + math.abs(path.hashCode).toString
-      graft.sources.DeltaLog.history(spark, path)
-        .createOrReplaceTempView(view)
-      scala.util.matching.Regex.quoteReplacement(view)
-    })
-    val s5 = Files.replaceAllIn(s4, m => {
-      val path = m.group(1)
-      val view = "iceberg_files_" + math.abs(path.hashCode).toString
-      graft.sources.IcebergLog.filesTable(spark, path)
-        .createOrReplaceTempView(view)
-      scala.util.matching.Regex.quoteReplacement(view)
-    })
-    val s6 = Parts.replaceAllIn(s5, m => {
-      val path = m.group(1)
-      val view = "iceberg_partitions_" + math.abs(path.hashCode).toString
-      graft.sources.IcebergLog.partitionsTable(spark, path)
-        .createOrReplaceTempView(view)
-      scala.util.matching.Regex.quoteReplacement(view)
-    })
-    DFiles.replaceAllIn(s6, m => {
-      val path = m.group(1)
-      val view = "delta_files_" + math.abs(path.hashCode).toString
-      graft.sources.DeltaLog.filesTable(spark, path)
-        .createOrReplaceTempView(view)
-      scala.util.matching.Regex.quoteReplacement(view)
-    })
-  }
+    },
+    "delta_history" -> ofPath(DeltaLog.history),
+    "iceberg_files" -> ofPath(IcebergLog.filesTable),
+    "iceberg_partitions" -> ofPath(IcebergLog.partitionsTable),
+    "delta_files" -> ofPath(DeltaLog.filesTable))
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -12,12 +11,10 @@ import org.apache.spark.sql.types._
 /** `parquet_metadata('file.parquet')` table function (reference
   * `crates/datafusion-functions-parquet/src/lib.rs:143-291`): one row per
   * (row group x column chunk) with statistics, compression, encodings and
-  * page offsets — the reference's 24-column schema.
-  *
-  * Exposed two ways:
-  *   - programmatic: `ParquetMetadataTable(spark, path)` -> DataFrame
-  *   - SQL: [[rewrite]] pre-processes `FROM parquet_metadata('p')` into a
-  *     registered temp view (chosen over an injected parser per SURVEY §7.3).
+  * page offsets — the reference's 24-column schema. In SQL it is the
+  * `parquet_metadata` entry of [[LakehouseTvf.functions]]. The footer is
+  * read with the session's Hadoop conf, so object-store settings
+  * (`S3Config`, `HfStore`) reach it as they reach a scan.
   */
 object ParquetMetadataTable {
 
@@ -49,7 +46,7 @@ object ParquetMetadataTable {
 
   def apply(spark: SparkSession, path: String): DataFrame = {
     val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(path), new Configuration()))
+      HadoopInputFile.fromPath(new Path(path), spark.sessionState.newHadoopConf()))
     val rows: Seq[Row] = try {
       val footer = reader.getFooter
       footer.getBlocks.asScala.zipWithIndex.flatMap { case (block, rgId) =>
@@ -88,17 +85,4 @@ object ParquetMetadataTable {
     } finally reader.close()
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
-
-  private val CallPattern = """(?i)parquet_metadata\s*\(\s*'([^']+)'\s*\)""".r
-
-  /** Rewrite `... FROM parquet_metadata('f') ...` to a temp view scan,
-    * registering the view on the fly. Returns the rewritten SQL.
-    */
-  def rewrite(spark: SparkSession, sql: String): String =
-    CallPattern.replaceAllIn(sql, m => {
-      val path = m.group(1)
-      val view = "parquet_metadata_" + math.abs(path.hashCode).toString
-      apply(spark, path).createOrReplaceTempView(view)
-      scala.util.matching.Regex.quoteReplacement(view)
-    })
 }

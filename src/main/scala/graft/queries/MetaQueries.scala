@@ -87,8 +87,7 @@ object MetaQueries {
     // restricted to the testdata tables so the snapshot is deterministic.
     QueryDef("i01_information_schema", (s, d) => {
       Tables.registerAll(s, d)
-      InformationSchema.refresh(s)
-      s.table("information_schema_tables")
+      InformationSchema.tablesDF(s)
         .filter(col("table_name").isin(Tables.names: _*))
         .select(col("table_name"), col("table_type"))
         .orderBy(col("table_name"))
@@ -102,8 +101,7 @@ object MetaQueries {
     // pinned against the known documents schema as a literal oracle.
     QueryDef("i02_information_schema_columns", (s, d) => {
       Tables.registerAll(s, d)
-      InformationSchema.refresh(s)
-      s.table("information_schema_columns")
+      InformationSchema.columnsDF(s)
         .filter(col("table_name") === "documents")
         .select(col("table_name"), col("column_name"),
           col("ordinal_position"), col("data_type"), col("is_nullable"))

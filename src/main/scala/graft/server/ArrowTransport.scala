@@ -1,6 +1,7 @@
 package graft.server
 
-import java.io.ByteArrayOutputStream
+import java.io.{ByteArrayOutputStream, OutputStream}
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.channels.Channels
 
 import org.apache.arrow.memory.RootAllocator
@@ -99,11 +100,11 @@ object ArrowTransport {
   /** Lazily serialize the DataFrame as per-message Arrow IPC frames:
     * the FIRST element is the schema message (empty body), then one
     * (metadata flatbuffer, body bytes) pair per record batch — exactly the
-    * two parts a Flight `FlightData` frame carries, in the encapsulated-
-    * message encoding `FlightSqlServer.splitIpcStream` produces from a
-    * whole stream. Rows are pulled through `toLocalIterator` as the
-    * consumer advances, so driver memory is ONE batch (plus one buffered
-    * partition), never the serialized result — the reference's DoGet
+    * two parts a Flight `FlightData` frame carries ([[writeIpcFrame]]
+    * writes one back as an encapsulated message). Rows are pulled through
+    * `toLocalIterator` as the consumer advances, so driver memory is ONE
+    * batch (plus one buffered partition), never the serialized result —
+    * the reference's DoGet
     * streams the plan's batch stream the same way
     * (`src/server/flightsql/service.rs:87-125`). `onRows` fires per batch
     * with its row count (observability tallies without a second
@@ -203,19 +204,37 @@ object ArrowTransport {
     */
   def toArrowStream(df: DataFrame, batchSize: Int = 4096): (Array[Byte], Long) = {
     var total = 0L
-    val out = new ByteArrayOutputStream()
-    def intLE(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
     val frames = arrowStreamFrames(df, batchSize, total += _)
-    try frames.foreach { case (meta, body) =>
-      val pad = (8 - ((meta.length + 8) % 8)) % 8
-      intLE(-1); intLE(meta.length + pad)
-      out.write(meta); (0 until pad).foreach(_ => out.write(0))
-      out.write(body)
-    } finally frames.close()
-    intLE(-1); intLE(0) // EOS
-    (out.toByteArray, total)
+    val bytes = try ipcStream(frames) finally frames.close()
+    (bytes, total)
   }
+
+  /** (metadata, body) frames joined into one Arrow IPC stream readable by
+    * `ArrowStreamReader`, end-of-stream marker appended.
+    */
+  def ipcStream(frames: Iterator[(Array[Byte], Array[Byte])]): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    frames.foreach { case (meta, body) => writeIpcFrame(out, meta, body) }
+    writeIpcEos(out)
+    out.toByteArray
+  }
+
+  /** One encapsulated IPC message: the continuation marker, the metadata
+    * length padded so that the body starts 8-byte aligned, the metadata,
+    * zero padding and the body.
+    */
+  def writeIpcFrame(out: OutputStream, meta: Array[Byte], body: Array[Byte]): Unit = {
+    val pad = (8 - meta.length % 8) % 8
+    out.write(ipcPrefix(meta.length + pad))
+    out.write(meta)
+    out.write(new Array[Byte](pad))
+    out.write(body)
+  }
+
+  /** The end-of-stream marker: a continuation marker and a zero length. */
+  def writeIpcEos(out: OutputStream): Unit = out.write(ipcPrefix(0))
+
+  private def ipcPrefix(length: Int): Array[Byte] =
+    ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
+      .putInt(-1).putInt(length).array()
 }

@@ -2,7 +2,6 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.Base64
 
 import scala.util.control.NonFatal
 
@@ -63,18 +62,6 @@ class HttpServer(ctx: ExecutionContext,
   def start(): Unit = { server.createContext("/", handler _); server.start() }
   def stop(): Unit = { server.stop(0); pool.shutdown() }
 
-  private def authorized(ex: HttpExchange): Boolean = {
-    if (bearerToken.isEmpty && basicAuth.isEmpty) return true
-    val header = Option(ex.getRequestHeaders.getFirst("Authorization")).getOrElse("")
-    val bearerOk = bearerToken.exists(t =>
-      AuthCheck.sameSecret(s"Bearer $t", header))
-    val basicOk = basicAuth.exists { case (u, p) =>
-      AuthCheck.sameSecret("Basic " + Base64.getEncoder.encodeToString(
-        s"$u:$p".getBytes(StandardCharsets.UTF_8)), header)
-    }
-    bearerOk || basicOk
-  }
-
   private val ArrowMime = "application/vnd.apache.arrow.stream"
 
   private def handler(ex: HttpExchange): Unit = {
@@ -108,7 +95,8 @@ class HttpServer(ctx: ExecutionContext,
             (200, "")
           } else ok(df.limit(resultLimit))
         }
-        if (!authorized(ex)) (401, """{"error":"unauthorized"}""")
+        if (!AuthCheck.allows(ex.getRequestHeaders.getFirst("Authorization"),
+            bearerToken, basicAuth)) (401, """{"error":"unauthorized"}""")
         else (ex.getRequestMethod, path) match {
           case ("POST", "/sql") =>
             val raw = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)

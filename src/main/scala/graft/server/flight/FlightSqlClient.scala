@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector.ipc.ArrowStreamReader
 
+import graft.server.ArrowTransport
+
 /** Minimal FlightSQL client over the same relocated gRPC runtime the
   * server uses: GetFlightInfo(CommandStatementQuery) → DoGet(ticket) →
   * decode the FlightData frames into column names + stringified rows.
@@ -111,9 +113,9 @@ object FlightSqlClient {
   }
 
   /** Arrow IPC stream view over lazily-pulled FlightData frames: each
-    * (header, body) is re-framed with the same continuation/length/padding
-    * encoding as [[FlightSqlServer.joinIpcStream]], one frame at a time;
-    * EOS is appended when the iterator drains. Frames the reader never
+    * (header, body) is re-framed as an encapsulated IPC message
+    * ([[ArrowTransport.writeIpcFrame]]), one frame at a time; EOS is
+    * appended when the iterator drains. Frames the reader never
     * asks for are never pulled off the gRPC stream.
     */
   private final class IpcFrameInputStream(
@@ -122,33 +124,17 @@ object FlightSqlClient {
       new java.io.ByteArrayInputStream(Array.emptyByteArray)
     private var eosSent = false
 
-    private def encode(meta: Array[Byte], body: Array[Byte],
-        eos: Boolean): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      def intLE(v: Int): Unit = {
-        out.write(v & 0xff); out.write((v >> 8) & 0xff)
-        out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-      }
-      if (eos) { intLE(-1); intLE(0) }
-      else {
-        val pad = (8 - ((meta.length + 8) % 8)) % 8
-        intLE(-1); intLE(meta.length + pad)
-        out.write(meta); (0 until pad).foreach(_ => out.write(0))
-        out.write(body)
-      }
-      out.toByteArray
-    }
-
     private def advance(): Boolean = {
+      val out = new java.io.ByteArrayOutputStream()
       if (frames.hasNext) {
-        val (m, b) = frames.next()
-        cur = new java.io.ByteArrayInputStream(encode(m, b, eos = false))
-        true
+        val (meta, body) = frames.next()
+        ArrowTransport.writeIpcFrame(out, meta, body)
       } else if (!eosSent) {
         eosSent = true
-        cur = new java.io.ByteArrayInputStream(encode(null, null, eos = true))
-        true
-      } else false
+        ArrowTransport.writeIpcEos(out)
+      } else return false
+      cur = new java.io.ByteArrayInputStream(out.toByteArray)
+      true
     }
 
     override def read(): Int = {

@@ -4,8 +4,6 @@ import java.io.ByteArrayOutputStream
 import java.nio.channels.Channels
 import java.nio.charset.StandardCharsets.UTF_8
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.arrow.vector.ipc.WriteChannel
 import org.apache.arrow.vector.ipc.message.MessageSerializer
 import org.apache.spark.sql.DataFrame
@@ -68,31 +66,18 @@ class FlightSqlServer(ctx: ExecutionContext, port: Int = 0,
 
   // ---- auth (reference: basic/bearer on the flight channel) ----------
 
-  /** Accepts `Bearer <token>` (when a bearer token is configured) OR
-    * `Basic base64(user:password)` (when basic credentials are) — the
-    * reference's flight channel supports both schemes
-    * (`src/server/flightsql/mod.rs:58-106`). With neither configured the
-    * channel is open.
+  /** Starts a call whose `authorization` header [[graft.server.AuthCheck]]
+    * allows; any other call closes UNAUTHENTICATED.
     */
   private val authInterceptor = new ServerInterceptor {
     override def interceptCall[ReqT, RespT](call: ServerCall[ReqT, RespT],
         headers: Metadata, next: ServerCallHandler[ReqT, RespT]): ServerCall.Listener[ReqT] = {
-      if (bearerToken.isEmpty && basicAuth.isEmpty) next.startCall(call, headers)
+      if (graft.server.AuthCheck.allows(headers.get(AuthKey), bearerToken, basicAuth))
+        next.startCall(call, headers)
       else {
-        val auth = Option(headers.get(AuthKey)).getOrElse("")
-        val bearerOk = bearerToken.exists(tok =>
-          graft.server.AuthCheck.sameSecret(s"Bearer $tok", auth))
-        val basicOk = basicAuth.exists { case (user, pass) =>
-          val expected = java.util.Base64.getEncoder.encodeToString(
-            s"$user:$pass".getBytes(UTF_8))
-          graft.server.AuthCheck.sameSecret(s"Basic $expected", auth)
-        }
-        if (bearerOk || basicOk) next.startCall(call, headers)
-        else {
-          call.close(Status.UNAUTHENTICATED.withDescription("invalid credentials"),
-            new Metadata())
-          new ServerCall.Listener[ReqT] {}
-        }
+        call.close(Status.UNAUTHENTICATED.withDescription("invalid credentials"),
+          new Metadata())
+        new ServerCall.Listener[ReqT] {}
       }
     }
   }
@@ -407,50 +392,11 @@ object FlightSqlServer {
     out.toByteArray
   }
 
-  /** Split an Arrow IPC stream into its encapsulated messages:
-    * (metadata flatbuffer incl. padding, body bytes) per message, EOS
-    * dropped. FlightData carries exactly these two parts per frame.
-    */
-  def splitIpcStream(stream: Array[Byte]): Seq[(Array[Byte], Array[Byte])] = {
-    val bb = java.nio.ByteBuffer.wrap(stream)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val out = ArrayBuffer.empty[(Array[Byte], Array[Byte])]
-    while (bb.remaining() >= 8) {
-      val cont = bb.getInt()
-      require(cont == -1, s"expected IPC continuation marker, got $cont")
-      val metaLen = bb.getInt()
-      if (metaLen == 0) return out.toSeq // EOS
-      val meta = new Array[Byte](metaLen)
-      bb.get(meta)
-      val msg = org.apache.arrow.flatbuf.Message.getRootAsMessage(
-        java.nio.ByteBuffer.wrap(meta))
-      val bodyLen = msg.bodyLength().toInt
-      val body = new Array[Byte](bodyLen)
-      if (bodyLen > 0) bb.get(body)
-      out += ((meta, body))
-    }
-    out.toSeq
-  }
-
   /** Reassemble FlightData frames into one Arrow IPC stream readable by
-    * `ArrowStreamReader` — the client-side inverse of [[splitIpcStream]].
+    * `ArrowStreamReader`.
     */
-  def joinIpcStream(frames: Seq[(Array[Byte], Array[Byte])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    def intLE(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
-    frames.foreach { case (meta, body) =>
-      // re-pad the metadata so (4 + 4 + len) stays 8-byte aligned
-      val pad = (8 - ((meta.length + 8) % 8)) % 8
-      intLE(-1); intLE(meta.length + pad)
-      out.write(meta); (0 until pad).foreach(_ => out.write(0))
-      out.write(body)
-    }
-    intLE(-1); intLE(0) // EOS
-    out.toByteArray
-  }
+  def joinIpcStream(frames: Seq[(Array[Byte], Array[Byte])]): Array[Byte] =
+    ArrowTransport.ipcStream(frames.iterator)
 
   /** Plaintext channel to a local server — test-client convenience. */
   def channel(port: Int): ManagedChannel =

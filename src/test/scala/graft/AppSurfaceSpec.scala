@@ -99,6 +99,118 @@ class AppSurfaceSpec extends SparkSpec {
     assert(mixed.getLong(1) >= 0L)
   }
 
+  test("app relations: equal-hash paths in one statement each read their own table") {
+    val s = spark
+    import s.implicits._
+    val ctx = new ExecutionContext(spark)
+    val base = Files.createTempDirectory("graft-hash")
+    // "Aa" and "BB" have equal String.hashCode, so do the two paths
+    val (pa, pb) = (s"$base/Aa.parquet", s"$base/BB.parquet")
+    assert(pa.hashCode === pb.hashCode)
+    Files.copy(java.nio.file.Paths.get(s"$sf0001/region.parquet"),
+      java.nio.file.Paths.get(pa))
+    Files.copy(java.nio.file.Paths.get(s"$sf0001/nation.parquet"),
+      java.nio.file.Paths.get(pb))
+    val cols = ctx.sql(
+      s"""SELECT filename, path_in_schema FROM parquet_metadata('$pa')
+         |UNION ALL SELECT filename, path_in_schema FROM parquet_metadata('$pb')""".stripMargin)
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    def direct(p: String) = ParquetMetadataTable(spark, p)
+      .select("filename", "path_in_schema").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    assert(cols === direct(pa) ++ direct(pb))
+    assert(cols.map(_._1) === Set(pa, pb))
+    // two Delta tables of different history lengths
+    val (da, db) = (s"$base/Aa/t", s"$base/BB/t")
+    assert(da.hashCode === db.hashCode)
+    graft.sources.DeltaWrite.append(Seq((1L, "a")).toDF("id", "v"), da)
+    graft.sources.DeltaWrite.append(Seq((2L, "b")).toDF("id", "v"), db)
+    graft.sources.DeltaWrite.append(Seq((3L, "c")).toDF("id", "v"), db)
+    val versions = ctx.sql(
+      s"""SELECT 'a' AS t, version FROM delta_history('$da')
+         |UNION ALL SELECT 'b', version FROM delta_history('$db')""".stripMargin)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(versions === Set(("a", 0L), ("b", 0L), ("b", 1L)))
+  }
+
+  test("app relations: double-quoted literals naming app relations are untouched") {
+    val ctx = new ExecutionContext(spark)
+    for (text <- Seq("information_schema.tables", "see parquet_metadata('/x/y.parquet')"))
+      assert(ctx.sql(s"""SELECT "$text" AS s""").head.getString(0) === text)
+  }
+
+  test("app relations: table functions and information_schema leave no temp view behind") {
+    val s = spark
+    import s.implicits._
+    val ctx = new ExecutionContext(spark)
+    def views() = spark.catalog.listTables().collect().map(_.name).toSet
+    val base = Files.createTempDirectory("graft-noview").toString
+    val delta = s"$base/delta"
+    graft.sources.DeltaWrite.append(Seq((1L, "a")).toDF("id", "v"), delta)
+    graft.sources.DeltaWrite.enableChangeDataFeed(spark, delta)
+    graft.sources.DeltaWrite.append(Seq((2L, "b")).toDF("id", "v"), delta)
+    val ice = s"$base/ice"
+    graft.sources.IcebergLog.append(Seq((1L, "a")).toDF("id", "v"), ice)
+    val before = views()
+    ctx.sql(s"SELECT * FROM parquet_metadata('$sf0001/region.parquet')").collect()
+    ctx.sql(s"SELECT * FROM table_changes('$delta', 2)").collect()
+    ctx.sql(s"SELECT * FROM iceberg_snapshots('$ice')").collect()
+    for (v <- Seq("tables", "columns", "schemata", "df_settings"))
+      ctx.sql(s"SELECT count(*) FROM information_schema.$v").collect()
+    assert(views() === before)
+    val leaked = ctx.sql(
+      """SELECT table_name FROM information_schema.tables
+        |WHERE table_name LIKE 'parquet\\_metadata\\_%'
+        |   OR table_name LIKE 'table\\_changes\\_%'
+        |   OR table_name LIKE 'information\\_schema\\_%'""".stripMargin).collect()
+    assert(leaked.isEmpty, leaked.mkString(", "))
+  }
+
+  test("app relations: table functions resolve through plain spark.sql, in a CTE and in subqueries") {
+    val p = s"$sf0001/nation.parquet"
+    val n = ParquetMetadataTable(spark, p).count()
+    def count(sql: String) = spark.sql(sql).head.getLong(0)
+    assert(count(s"SELECT count(*) FROM parquet_metadata('$p')") === n)
+    assert(count(s"WITH m AS (SELECT * FROM parquet_metadata('$p')) " +
+      "SELECT count(*) FROM m") === n)
+    assert(count(s"SELECT (SELECT count(*) FROM parquet_metadata('$p')) AS n") === n)
+    assert(count(s"SELECT count(*) FROM range(10) WHERE id IN " +
+      s"(SELECT column_id FROM parquet_metadata('$p'))") === n)
+    assert(count("SELECT count(*) FROM information_schema.schemata") > 0L)
+    MetaTables.register(spark)
+    assert(spark.sql("SELECT spark FROM dft.meta.versions").head.getString(0) ===
+      spark.version)
+  }
+
+  test("app relations: a wrong arity or a non-constant argument fails naming the function") {
+    val p = s"$sf0001/nation.parquet"
+    for (sql <- Seq("SELECT * FROM parquet_metadata()",
+        s"SELECT * FROM parquet_metadata('$p', '$p')",
+        "SELECT * FROM table_changes('/t')",
+        "SELECT * FROM parquet_metadata(concat('/a', rand()))")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(sql))
+      assert(e.getMessage.contains("parquet_metadata") ||
+        e.getMessage.contains("table_changes"), e.getMessage)
+    }
+  }
+
+  test("parquet_metadata reads the footer with the session's Hadoop conf") {
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    hadoop.set("fs.graftsession.impl", classOf[SessionSchemeFs].getName)
+    hadoop.setBoolean("fs.graftsession.impl.disable.cache", true)
+    try {
+      val ctx = new ExecutionContext(spark)
+      val path = s"graftsession:$sf0001/region.parquet"
+      val cols = ctx.sql(s"SELECT path_in_schema FROM parquet_metadata('$path')")
+        .collect().map(_.getString(0)).toSet
+      assert(cols === ParquetMetadataTable(spark, s"$sf0001/region.parquet")
+        .collect().map(_.getAs[String]("path_in_schema")).toSet)
+    } finally {
+      hadoop.unset("fs.graftsession.impl")
+      hadoop.unset("fs.graftsession.impl.disable.cache")
+    }
+  }
+
   test("db-dir bootstrap registers catalog.schema.table with format detection") {
     val dir = Files.createTempDirectory("graft-db")
     val tdir = dir.resolve("tables/cat1/sch1/hi")
@@ -112,12 +224,12 @@ class AppSurfaceSpec extends SparkSpec {
     assert(spark.sql("SELECT count(*) FROM cat1_sch1_hi").head.getLong(0) === 5L)
     val info = spark.sql(
       """SELECT table_catalog, table_schema, table_name, table_type
-        |FROM information_schema_tables WHERE table_catalog = 'cat1'""".stripMargin)
+        |FROM information_schema.tables WHERE table_catalog = 'cat1'""".stripMargin)
       .collect()
     assert(info.toSeq === Seq(Row("cat1", "sch1", "hi", "BASE TABLE")))
     // the flattened session-catalog duplicates stay out of the listing
     val dupes = spark.sql(
-      """SELECT * FROM information_schema_tables
+      """SELECT * FROM information_schema.tables
         |WHERE table_name IN ('cat1_sch1_hi') OR table_schema = 'cat1_sch1'""".stripMargin)
       .collect()
     assert(dupes.isEmpty)
@@ -174,6 +286,22 @@ class AppSurfaceSpec extends SparkSpec {
     assert(lines.size === 2)
     assert(lines.get(0) === BenchmarkRunner.csvHeader)
     assert(lines.get(1).endsWith(",serial"))
+  }
+
+  test("--bench --save quotes a statement with commas as RFC 4180 does") {
+    val ctx = new ExecutionContext(spark)
+    val sql = "SELECT count(*) AS n FROM range(0, 1000, 1, 2)"
+    val csv = Files.createTempFile("bench", ".csv")
+    Console.withOut(new java.io.ByteArrayOutputStream) {
+      cli.Main.runStatement(ctx, sql, cli.Main.parseArgs(
+        List("--bench", "-n", "1", "--save", csv.toString)))
+    }
+    val row = Files.readAllLines(csv).get(1)
+    val fields = AppSurfaceSpec.splitCsv(row)
+    assert(fields.length === BenchmarkRunner.csvHeader.split(',').length)
+    assert(fields.length === 23)
+    assert(fields.head === sql)
+    assert(AppSurfaceSpec.splitCsv("\"a \"\"b\"\", c\",1") === Seq("a \"b\", c", "1"))
   }
 
   test("-n below 1 is rejected when the arguments are parsed") {
@@ -712,4 +840,40 @@ class AppSurfaceSpec extends SparkSpec {
     // every declared query is either oracled or documented rows-only
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
+}
+
+object AppSurfaceSpec {
+  /** RFC 4180 field split of one record: a quoted field may hold commas,
+    * and a doubled quote inside it is one quote.
+    */
+  def splitCsv(record: String): Seq[String] = {
+    val fields = Seq.newBuilder[String]
+    val cur = new StringBuilder
+    var quoted = false
+    var i = 0
+    while (i < record.length) {
+      val c = record.charAt(i)
+      if (quoted) {
+        if (c != '"') cur.append(c)
+        else if (i + 1 < record.length && record.charAt(i + 1) == '"') {
+          cur.append('"'); i += 1
+        } else quoted = false
+      } else c match {
+        case '"' => quoted = true
+        case ',' => fields += cur.result(); cur.clear()
+        case _ => cur.append(c)
+      }
+      i += 1
+    }
+    fields += cur.result()
+    fields.result()
+  }
+}
+
+/** A local file system under its own scheme, `graftsession:`. A test
+  * registers it only in the session's Hadoop conf, so only a reader that
+  * uses that conf can open its paths.
+  */
+class SessionSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftsession:///")
 }
