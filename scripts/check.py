@@ -6,9 +6,16 @@ Usage: python3 scripts/check.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name>/ parquet result (written by graft.Verify),
 runs the matching oracle_sql.json statement in DuckDB against the sfDir
 parquet tables, sorts columns by name, and compares values.
+
+DuckDB runs under a memory limit of half the memory this process may use
+(the cgroup's memory.max when set, else physical memory), spilling into a
+temporary directory removed at exit: a statement that runs out of memory
+prints its own FAIL line and the statements after it still run.
 """
 import json
+import os
 import sys
+import tempfile
 from pathlib import Path
 
 import duckdb
@@ -25,11 +32,28 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = df[c].astype(str)
     return df.reset_index(drop=True)
 
+def allowed_memory_bytes() -> int:
+    """The cgroup v2 memory limit when one is set, else physical memory."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        limit = Path("/sys/fs/cgroup/memory.max").read_text().strip()
+    except OSError:
+        return phys
+    return min(int(limit), phys) if limit.isdigit() else phys
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    out = Path(out_dir)
+    with tempfile.TemporaryDirectory(prefix="check-duckdb-") as spill:
+        n_fail = check(sf_dir, Path(out_dir), spill)
+    sys.exit(1 if n_fail else 0)
+
+def check(sf_dir: str, out: Path, spill: str) -> int:
+    """Compare every statement; print one PASS/FAIL line each and return
+    the number of failures."""
     oracle = json.loads((out / "oracle_sql.json").read_text())
     con = duckdb.connect()
+    con.execute(f"SET memory_limit='{allowed_memory_bytes() // 2 // 2**20}MB'")
+    con.execute(f"SET temp_directory='{spill}'")
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
@@ -69,8 +93,9 @@ def main():
                 i = bad.idxmax()
                 print(f"  first diff row {i}:\n   spark: {g.loc[i].to_dict()}\n   duck : {w.loc[i].to_dict()}")
             n_fail += 1
+    con.close()
     print(f"\n{n_pass} pass, {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    return n_fail
 
 if __name__ == "__main__":
     main()

@@ -24,11 +24,6 @@ class Pagination(df: DataFrame, val pageSize: Int = 100) {
     buffered.slice(i * pageSize, (i + 1) * pageSize).toSeq
   }
 
-  /** Pages seen so far (grows as pages are requested; exact once
-    * exhausted — the reference's total is also only known at stream end).
-    */
-  def bufferedRows: Int = buffered.size
-
   def hasMore: Boolean = it.hasNext
 
   /** Total row count, exhausting the stream (reference's "last page"). */

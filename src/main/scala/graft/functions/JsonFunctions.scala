@@ -16,9 +16,6 @@ object JsonFunctions {
   def jsonGet(c: Column, key: String): Column =
     get_json_object(c, s"$$.$key")
 
-  def jsonContains(c: Column, key: String): Column =
-    get_json_object(c, s"$$.$key").isNotNull
-
   /** Register SQL-callable forms (expression-backed, no UDF serialization:
     * the bodies expand to native Catalyst expressions via expr()).
     */

@@ -226,16 +226,6 @@ object Dedup {
     sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
   }
 
-  /** Long-format view of [[minhashSignatureMatrix]]: (doc_id, h, mh). */
-  def minhashSignatures(docs: DataFrame, numHashes: Int = 16): DataFrame = {
-    val m = minhashSignatureMatrix(docs, numHashes)
-    val stackArgs = (0 until numHashes)
-      .map(i => s"$i, mh$i").mkString(", ")
-    m.select(col("doc_id"),
-      expr(s"stack($numHashes, $stackArgs)").as(Seq("h", "mh")))
-      .select(col("doc_id"), col("h").cast("long").as("h"), col("mh"))
-  }
-
   /** LSH candidate pairs: band signatures (h mod bands), bucket by the
     * md5 of the band's concatenated minhashes (ordered by h), join docs
     * sharing a bucket, then estimate Jaccard as the fraction of matching

@@ -354,16 +354,6 @@ object Multimodal {
       }).toDF("doc_id", "blob")
   }
 
-  /** DOCUMENTED STUB — compressed audio/video codecs (mp3/aac/h264/vp9)
-    * do not ship in this environment. A real deployment plugs a JNI or
-    * Pandas-UDF codec into this seam; the surrounding plan (binary column
-    * in, per-partition batched decode, typed rows out) is identical to
-    * the real image path above. Returns container-header metadata (real,
-    * byte-parsed) with pixel/sample stats zeroed.
-    */
-  def stubAvDecode(docId: Long, bytes: Array[Byte]): MediaHeader =
-    parseHeader(docId, bytes) // header metadata real; sample decode needs a codec
-
   // ---- deterministic image fixtures (builder side; the decoder above
   // never sees these formulas — it reads pixels the codec decompresses) --
 

@@ -1036,95 +1036,19 @@ object DeltaWrite {
       filesAdded: Int, rowsDeleted: Long)
 
   /** DELETE WHERE: remove the rows matching `predicate` in one atomic
-    * commit, copy-on-write at FILE granularity like [[merge]]: only files
-    * containing at least one matching row are rewritten (as their
-    * surviving rows); files with no match keep their physical identity.
-    * Partitioned tables prune the MATCH SCAN first: top-level AND
-    * conjuncts referencing only partition columns are answered from log
-    * metadata ([[prunePartitionConjuncts]]) before any data file opens —
-    * the partition-predicate DELETE a 100 TB table sees daily touches
-    * exactly its partitions. Live deletion vectors compose: the match
-    * scan and the rewrite both read through the snapshot (DVs applied),
-    * and a rewritten file's fresh add carries no descriptor — the
-    * rewrite is the DV's natural retirement point. A fully-deleted file
-    * is removed without a replacement; a predicate matching nothing is a
+    * commit — [[replaceWhere]] with no batch, through the one
+    * copy-on-write body [[rewriteWhere]]. Only files containing at least
+    * one matching row are rewritten (as their surviving rows); files
+    * with no match keep their physical identity. A fully-deleted file is
+    * removed without a replacement; a predicate matching nothing is a
     * no-op (no empty commit).
     */
   def deleteWhere(spark: org.apache.spark.sql.SparkSession,
       tablePath: String,
       predicate: org.apache.spark.sql.Column): DeleteStats = {
-    import org.apache.spark.sql.functions.col
-    val root = new File(tablePath)
-    val logDir = new File(root, "_delta_log")
-    val base = DeltaLog.latestVersion(tablePath)
-    val adds = DeltaLog.liveAdds(spark, tablePath)
-    val mapMode = DeltaLog.mappingMode(DeltaLog.tableMetaData(spark, tablePath))
-    val partCols = DeltaLog.recordedPartitionColumns(spark, tablePath)
-    // partition-only conjuncts shrink the candidate set from the log
-    // alone; the full predicate still applies row-by-row below
-    val candidateAdds = prunePartitionConjuncts(spark, tablePath, adds,
-      predicate)
-    if (candidateAdds.isEmpty)
-      return DeleteStats(base, 0, 0, 0L)
-    // match scan: snapshot read (existing DVs applied, typed partition
-    // columns injected from the log so the predicate may reference
-    // them), with physical row identity captured BEFORE the pv join
-    // resolution keys on the QUALIFIED URI — basenames collide across
-    // partition dirs on CONVERT-adopted tables
-    val byPath = DeltaLog.byQualifiedPath(spark, adds)
-    val touchedAdds = DeltaLog.readWithRowIdentity(spark, tablePath,
-        Some(candidateAdds.map(_.path).toSet))
-      .filter(predicate)
-      .select(col("__graft_dv_file")).distinct()
-      .collect().map(_.getString(0)).toSeq
-      .map(uri => byPath.getOrElse(DeltaLog.canonicalScanPath(uri),
-        throw new IllegalStateException(
-          s"matched file not in live set: $uri")))
-    if (touchedAdds.isEmpty)
-      return DeleteStats(base, 0, 0, 0L)
-    // decode touched files through the snapshot reader (mapping
-    // resolved, DVs applied, typed pv injected)
-    val touchedRows =
-      DeltaLog.readLivePaths(spark, tablePath, touchedAdds.map(_.path))
-    val rowsDeleted = touchedRows.filter(predicate).count()
-    // SQL DELETE semantics: rows where the predicate is NULL are NOT
-    // deleted — `!predicate` alone would silently drop them (NULL is
-    // neither true nor false)
-    val survivors = touchedRows.filter(
-      !org.apache.spark.sql.functions.coalesce(predicate,
-        org.apache.spark.sql.functions.lit(false)))
-    // a touched file may lose ALL its rows; only write files if any
-    // survive; mapped survivors restage physical-named (id-stamped),
-    // partitioned survivors restage hive-laid-out with their tuples
-    val (survivorsStaged, statsSchema) =
-      if (mapMode == "none") (survivors, touchedRows.schema)
-      else physicalizeForStage(spark, tablePath, survivors)
-    val (files, addActions) =
-      if (survivors.isEmpty) (Seq.empty[File], Seq.empty[String])
-      else stageAdds(spark, tablePath, root, survivorsStaged, statsSchema,
-        partCols)
-    // CDF: survivors re-add under new uuids, so add/remove derivation
-    // would wrongly report them deleted+inserted — publish the exact
-    // deleted rows instead (O(deleted), not O(touched files)); mapped
-    // tables physicalize the change rows first; partition columns ride
-    // as typed DATA columns in the cdc file
-    val cdcActions =
-      if (!cdfEnabled(spark, tablePath)) Seq.empty
-      else {
-        val change = touchedRows.filter(predicate).withColumn(
-          "_change_type", org.apache.spark.sql.functions.lit("delete"))
-        val staged =
-          if (mapMode == "none") change
-          else physicalizeForStage(spark, tablePath, change,
-            passthrough = Seq("_change_type"))._1
-        stageCdc(staged, root)
-      }
-    val version = base + 1
-    val removes = touchedAdds.map(removeAction(_))
-    publish(logDir, version,
-      removes ++ addActions ++ cdcActions :+
-        """{"commitInfo":{"operation":"DELETE","operationParameters":{}}}""")
-    DeleteStats(version, touchedAdds.size, files.size, rowsDeleted)
+    val st = rewriteWhere(spark, tablePath, predicate, None,
+      """{"commitInfo":{"operation":"DELETE","operationParameters":{}}}""")
+    DeleteStats(st.version, st.filesRewritten, st.filesAdded, st.rowsDeleted)
   }
 
   /** Outcome of a [[replaceWhere]] commit. */
@@ -1136,27 +1060,44 @@ object DeltaWrite {
     * row matching `predicate` and insert `df` — the backfill verb a
     * partitioned 100 TB corpus lives on (recompute one date/source
     * partition and swap it without touching the rest, and without the
-    * delete-then-append window where readers see neither). Semantics
-    * match real Delta's:
-    *
-    *  - every batch row must itself satisfy the predicate (otherwise
-    *    the "replace" would smuggle rows into untouched ranges) —
-    *    refused loudly up front;
-    *  - the match scan prunes by the predicate's partition conjuncts
-    *    from log metadata ([[prunePartitionConjuncts]]) — a
-    *    one-partition backfill opens one partition's files;
-    *  - copy-on-write at file granularity: touched files' SURVIVING
-    *    rows (predicate false-or-null — SQL DELETE semantics) restage
-    *    with the batch; untouched files keep their physical identity;
-    *  - live deletion vectors, column mapping, and partitioned layouts
-    *    all compose exactly like [[deleteWhere]]/[[merge]] (the reads
-    *    go through the snapshot; rewritten adds drop descriptors);
-    *  - the change data feed sees the exact delete rows plus the batch
-    *    as inserts — O(changed rows), never derived from add/removes.
+    * delete-then-append window where readers see neither). Every batch
+    * row must itself satisfy the predicate (otherwise the "replace"
+    * would smuggle rows into untouched ranges) — refused loudly up
+    * front. The rewrite itself is [[rewriteWhere]], shared with
+    * [[deleteWhere]].
     */
   def replaceWhere(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, predicate: org.apache.spark.sql.Column,
-      df: DataFrame): ReplaceStats = {
+      df: DataFrame): ReplaceStats =
+    rewriteWhere(spark, tablePath, predicate, Some(df),
+      """{"commitInfo":{"operation":"WRITE","operationParameters":{"mode":"Overwrite","predicate":"replaceWhere"}}}""")
+
+  /** The one copy-on-write rewrite behind [[deleteWhere]] (no batch) and
+    * [[replaceWhere]], committed with `commitInfo`:
+    *
+    *  - a batch aligns to the table's logical schema and exact types,
+    *    and must lie inside the range; a delete skips both checks;
+    *  - the match scan prunes by the predicate's partition conjuncts
+    *    from log metadata ([[prunePartitionConjuncts]]) before any data
+    *    file opens — a one-partition delete or backfill opens one
+    *    partition's files;
+    *  - copy-on-write at file granularity: touched files' SURVIVING
+    *    rows (predicate false-or-null — SQL DELETE semantics) restage
+    *    with the batch; untouched files keep their physical identity;
+    *  - live deletion vectors compose: the match scan and the rewrite
+    *    both read through the snapshot (DVs applied), and a rewritten
+    *    file's fresh add carries no descriptor — the rewrite is the DV's
+    *    natural retirement point; column mapping and partitioned layouts
+    *    restage like [[merge]];
+    *  - the change data feed sees the exact deleted rows plus the batch
+    *    as inserts — O(changed rows), never derived from add/removes
+    *    (survivors re-add under new uuids).
+    *
+    * Nothing matched and nothing to insert is a no-op: no commit.
+    */
+  private def rewriteWhere(spark: org.apache.spark.sql.SparkSession,
+      tablePath: String, predicate: org.apache.spark.sql.Column,
+      df: Option[DataFrame], commitInfo: String): ReplaceStats = {
     import org.apache.spark.sql.functions.{coalesce, col, count, lit}
     val root = new File(tablePath)
     val logDir = new File(root, "_delta_log")
@@ -1164,80 +1105,82 @@ object DeltaWrite {
     val adds = DeltaLog.liveAdds(spark, tablePath)
     val mapMode = DeltaLog.mappingMode(DeltaLog.tableMetaData(spark, tablePath))
     val partCols = DeltaLog.recordedPartitionColumns(spark, tablePath)
-    requireSatisfiesConstraints(spark, tablePath, df, "replaceWhere")
-    // align the batch to the table's logical schema and exact types
-    val target0 = DeltaLog.readLivePaths(spark, tablePath,
-      adds.map(_.path))
-    val cols = target0.columns.toSeq
-    require(cols.forall(df.columns.contains) &&
-        df.columns.forall(cols.contains),
-      s"replaceWhere batch columns ${df.columns.mkString(",")} must " +
-        s"match table columns ${cols.mkString(",")}")
-    val batch = df.select(cols.map(c =>
-      col(s"`$c`").cast(target0.schema(c).dataType).as(c)): _*)
-    // the batch must live INSIDE the replaced range — a row outside it
-    // would land in a region the commit claims not to touch. Evaluated
-    // on the CASTED batch so the check sees the predicate under the
-    // same column types the match scan and the written rows use (a
-    // string-typed partition key in the raw batch could pass under one
-    // implicit coercion yet land under different semantics after the
-    // cast).
-    val strays = batch.filter(!coalesce(predicate, lit(false)))
-      .agg(count(lit(1))).head.getLong(0)
-    require(strays == 0L,
-      s"replaceWhere: $strays batch row(s) do not satisfy the " +
-        "predicate — the batch may only replace rows inside the range")
-    // match scan: partition conjuncts prune from the log, the full
-    // predicate decides row membership through the snapshot (DVs
-    // applied, typed pv injected)
+    val batch = df.map { d =>
+      requireSatisfiesConstraints(spark, tablePath, d, "replaceWhere")
+      val target = DeltaLog.readLivePaths(spark, tablePath, adds.map(_.path))
+      val cols = target.columns.toSeq
+      require(cols.forall(d.columns.contains) &&
+          d.columns.forall(cols.contains),
+        s"replaceWhere batch columns ${d.columns.mkString(",")} must " +
+          s"match table columns ${cols.mkString(",")}")
+      val aligned = d.select(cols.map(c =>
+        col(s"`$c`").cast(target.schema(c).dataType).as(c)): _*)
+      // evaluated on the CASTED batch so the check sees the predicate
+      // under the same column types the match scan and the written rows
+      // use (a string-typed partition key in the raw batch could pass
+      // under one implicit coercion yet land under different semantics
+      // after the cast)
+      val strays = aligned.filter(!coalesce(predicate, lit(false)))
+        .agg(count(lit(1))).head.getLong(0)
+      require(strays == 0L,
+        s"replaceWhere: $strays batch row(s) do not satisfy the " +
+          "predicate — the batch may only replace rows inside the range")
+      aligned
+    }
+    // match scan: snapshot read (existing DVs applied, typed partition
+    // columns injected from the log so the predicate may reference
+    // them), with physical row identity captured BEFORE the pv join;
+    // resolution keys on the QUALIFIED URI — basenames collide across
+    // partition dirs on CONVERT-adopted tables
     val candidateAdds = prunePartitionConjuncts(spark, tablePath, adds,
       predicate)
-    val byPath = DeltaLog.byQualifiedPath(spark, adds)
     val touchedAdds: Seq[DeltaLog.LiveFile] =
       if (candidateAdds.isEmpty) Seq.empty
-      else DeltaLog.readWithRowIdentity(spark, tablePath,
-          Some(candidateAdds.map(_.path).toSet))
-        .filter(predicate)
-        .select(col("__graft_dv_file")).distinct()
-        .collect().map(_.getString(0)).toSeq
-        .map(uri => byPath.getOrElse(DeltaLog.canonicalScanPath(uri),
-          throw new IllegalStateException(
-            s"matched file not in live set: $uri")))
+      else {
+        val byPath = DeltaLog.byQualifiedPath(spark, adds)
+        DeltaLog.readWithRowIdentity(spark, tablePath,
+            Some(candidateAdds.map(_.path).toSet))
+          .filter(predicate)
+          .select(col("__graft_dv_file")).distinct()
+          .collect().map(_.getString(0)).toSeq
+          .map(uri => byPath.getOrElse(DeltaLog.canonicalScanPath(uri),
+            throw new IllegalStateException(
+              s"matched file not in live set: $uri")))
+      }
+    val rowsInserted = batch.fold(0L)(_.count())
+    if (touchedAdds.isEmpty && rowsInserted == 0L)
+      return ReplaceStats(base, 0, 0, 0L, 0L)
+    // decode touched files through the snapshot reader (mapping
+    // resolved, DVs applied, typed pv injected)
     val touchedRows =
       if (touchedAdds.isEmpty) None
       else Some(DeltaLog.readLivePaths(spark, tablePath,
         touchedAdds.map(_.path)))
     val rowsDeleted = touchedRows.fold(0L)(_.filter(predicate).count())
-    val rowsInserted = batch.count()
-    if (touchedAdds.isEmpty && rowsInserted == 0L)
-      return ReplaceStats(base, 0, 0, 0L, 0L)
+    // `!predicate` alone would silently drop NULL-predicate rows
     val survivors = touchedRows.map(_.filter(
       !coalesce(predicate, lit(false))))
-    val out = survivors.fold(batch)(_.unionByName(batch))
-    val cdcActions =
-      if (!cdfEnabled(spark, tablePath)) Seq.empty
-      else {
-        val dels = touchedRows.fold(batch.limit(0))(_.filter(predicate))
-          .withColumn("_change_type", lit("delete"))
-        val ins = batch.withColumn("_change_type", lit("insert"))
-        val change = dels.unionByName(ins)
-        val staged =
-          if (mapMode == "none") change
-          else physicalizeForStage(spark, tablePath, change,
-            passthrough = Seq("_change_type"))._1
-        stageCdc(staged, root)
-      }
-    val (outStaged, outStatsSchema) =
+    val out = (survivors ++ batch).reduce(_.unionByName(_))
+    // mapped rows restage physical-named (id-stamped), partitioned rows
+    // hive-laid-out with their tuples; a delete may leave no row at all
+    val (outStaged, statsSchema) =
       if (mapMode == "none") (out, out.schema)
       else physicalizeForStage(spark, tablePath, out)
     val (files, addActions) =
       if (out.isEmpty) (Seq.empty[File], Seq.empty[String])
-      else stageAdds(spark, tablePath, root, outStaged, outStatsSchema,
+      else stageAdds(spark, tablePath, root, outStaged, statsSchema,
         partCols)
+    val cdcActions =
+      if (!cdfEnabled(spark, tablePath)) Seq.empty
+      else stageCdc(spark, tablePath, root, mapMode,
+        (touchedRows.map(_.filter(predicate)
+            .withColumn("_change_type", lit("delete"))) ++
+          batch.map(_.withColumn("_change_type", lit("insert"))))
+          .reduce(_.unionByName(_)))
     val version = base + 1
     publish(logDir, version,
       touchedAdds.map(removeAction(_)) ++ addActions ++ cdcActions :+
-        s"""{"commitInfo":{"operation":"WRITE","operationParameters":{"mode":"Overwrite","predicate":"replaceWhere"}}}""")
+        commitInfo)
     ReplaceStats(version, touchedAdds.size, files.size, rowsDeleted,
       rowsInserted)
   }
@@ -1710,11 +1653,6 @@ object DeltaWrite {
     }
   }
 
-  /** Stage `changes` (table columns + `_change_type`) as parquet under
-    * `_change_data/` and return the cdc actions referencing them. The
-    * feed costs O(changed rows), written once, in the same atomic commit
-    * as the data change itself.
-    */
   /** Shared merge CDF staging for the CoW [[merge]] and the DV-writing
     * [[mergeDv]]: the update_preimage/update_postimage/insert union,
     * mapped physicalization, and cdc file stage in ONE code path — the
@@ -1732,19 +1670,30 @@ object DeltaWrite {
         .unionByName(post.withColumn("_change_type",
           lit("update_postimage")))
         .unionByName(ins.withColumn("_change_type", lit("insert")))
-    val staged =
-      if (mapMode == "none") change
-      else physicalizeForStage(spark, tablePath, change,
-        passthrough = Seq("_change_type"),
-        logicalOverride = evolvedLogical)._1
-    stageCdc(staged, root)
+    stageCdc(spark, tablePath, root, mapMode, change, evolvedLogical)
   }
 
-  private def stageCdc(changes: DataFrame, root: File): Seq[String] = {
+  /** Stage `changes` (table columns + `_change_type`) as parquet under
+    * `_change_data/` and return the cdc actions referencing them. The
+    * feed costs O(changed rows), written once, in the same atomic commit
+    * as the data change itself. Mapped tables physicalize the rows
+    * first, `_change_type` riding through (the feed decodes cdc files
+    * like data files); `logicalOverride` is a schema-evolving commit's
+    * about-to-publish schema.
+    */
+  private def stageCdc(spark: org.apache.spark.sql.SparkSession,
+      tablePath: String, root: File, mapMode: String, changes: DataFrame,
+      logicalOverride: Option[org.apache.spark.sql.types.StructType] = None)
+      : Seq[String] = {
+    val staged =
+      if (mapMode == "none") changes
+      else physicalizeForStage(spark, tablePath, changes,
+        passthrough = Seq("_change_type"),
+        logicalOverride = logicalOverride)._1
     val dir = new File(root, "_change_data")
     dir.mkdirs()
     val staging = new File(root, s".graft-stage-${java.util.UUID.randomUUID}")
-    changes.write.parquet(staging.getPath)
+    staged.write.parquet(staging.getPath)
     val parts = Option(staging.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.endsWith(".parquet") && f.length > 0)
     val moved = parts.map { f =>
@@ -2083,8 +2032,8 @@ object DeltaWrite {
     // rows stage through the mapped-append physicalization with the
     // reserved `_change_type` riding through, and the feed decodes cdc
     // files like data files (by physical name / footer field id).
-    val deleteMapped =
-      DeltaLog.mappingMode(DeltaLog.tableMetaData(spark, tablePath)) != "none"
+    val mapMode =
+      DeltaLog.mappingMode(DeltaLog.tableMetaData(spark, tablePath))
     // match scan: snapshot read (existing DVs applied, partition columns
     // injected from the log so the predicate may reference them), with
     // physical row identity captured BEFORE the pv join
@@ -2106,7 +2055,7 @@ object DeltaWrite {
     val rowsDeleted = touched.map(_._2).sum
     val fullyDead = touched.count(_._4.isEmpty)
     val dvActions: Seq[String] = dvKillActions(touched)
-    val protoAction = dvProtocolAction(tablePath, deleteMapped)
+    val protoAction = dvProtocolAction(tablePath, mapMode != "none")
     // CDF: a DV commit re-adds the same path (add/remove derivation is
     // meaningless) — publish the exact deleted rows from the pre-commit
     // snapshot, O(matched rows); mapped tables physicalize the change
@@ -2114,13 +2063,9 @@ object DeltaWrite {
     val cdcActions =
       if (!cdfEnabled(spark, tablePath)) Seq.empty
       else {
-        val change = matchedRows.withColumn("_change_type",
-          org.apache.spark.sql.functions.lit("delete"))
-        val staged =
-          if (!deleteMapped) change
-          else physicalizeForStage(spark, tablePath, change,
-            passthrough = Seq("_change_type"))._1
-        stageCdc(staged, root)
+        stageCdc(spark, tablePath, root, mapMode,
+          matchedRows.withColumn("_change_type",
+            org.apache.spark.sql.functions.lit("delete")))
       }
     val version = base + 1
     publish(logDir, version,

@@ -12,6 +12,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.server.MiniJson
+import graft.sources.DeltaWrite.jsonEscape
 
 /** Minimal read-only Apache Iceberg table support — the second lakehouse
   * format next to [[DeltaLog]] (the reference ships Delta only; Iceberg
@@ -480,13 +481,6 @@ object IcebergLog {
     }
     TableMeta(fv, current, snaps, spec, specs, defaultId, refs, schemaFields,
       nameMapping, schemas, currentSchemaId)
-  }
-
-  private def jsonEscape(x: String): String = x.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
   }
 
   private def snapshotJson(s: Snapshot): String = {
@@ -2680,88 +2674,23 @@ object IcebergLog {
       filesAdded: Int, rowsDeleted: Long)
 
   /** DELETE WHERE for the Iceberg write path — the v1 copy-on-write
-    * shape (no delete files): ONE new snapshot whose manifest marks
-    * every file containing a matching row DELETED, re-adds its surviving
-    * rows as new files, and carries every untouched file as EXISTING
-    * with its bounds intact — file-granular CoW exactly like
-    * [[DeltaWrite.deleteWhere]], so a delete against a clustered layout
-    * rewrites the overlapping files, not the table. Prior snapshots stay
-    * time-travelable (the rows remain visible at older snapshot ids). A
-    * fully-deleted file is dropped with no replacement; a predicate
-    * matching nothing is a no-op (no empty snapshot). `statsFields`
-    * rebuilds manifest bounds for the rewritten files.
+    * shape (no delete files): [[replaceWhere]] with no batch, through
+    * the one body [[rewriteWhere]], committed as a `delete` snapshot.
+    * File-granular CoW exactly like [[DeltaWrite.deleteWhere]], so a
+    * delete against a clustered layout rewrites the overlapping files,
+    * not the table. Prior snapshots stay time-travelable (the rows
+    * remain visible at older snapshot ids). A fully-deleted file is
+    * dropped with no replacement; a predicate matching nothing is a
+    * no-op (no empty snapshot). `statsFields` rebuilds manifest bounds
+    * for the rewritten files.
     */
   def deleteWhere(spark: SparkSession, tablePath: String,
       predicate: org.apache.spark.sql.Column,
       statsFields: Seq[(Int, String)] = Seq.empty): DeleteStats = {
-    import org.apache.spark.sql.functions.col
-    val root = new File(tablePath)
-    val base = headVersion(tablePath)
-    val entries = liveEntries(tablePath)
-    require(entries.nonEmpty, s"not a live Iceberg table: $tablePath")
-    val reader = schemaAwareReader(spark, tablePath)
-    val target = reader.parquet(entries.map(_.path): _*)
-    val meta = parseMeta(currentMetadataFile(tablePath))
-    // the predicate's identity-partition conjuncts prune the MATCH SCAN
-    // from manifest tuples before any data file opens (the conditional
-    // merge's lever) — "delete last month's partition" opens only that
-    // partition's files; a pruned file can contain no matching row
-    val touched =
-      prunedTouchedUris(spark, reader, meta, entries, target.schema,
-        predicate)
-    if (touched.isEmpty)
-      return DeleteStats(meta.currentSnapshotId, 0, 0, 0L)
-    // resolve scan URIs on the FULL qualified path — basenames collide
-    // across directories on addFiles-adopted hive layouts
-    val touchedPaths = resolveTouchedPaths(spark, entries, touched)
-    val touchedRows = reader.parquet(
-      entries.map(_.path).filter(touchedPaths): _*)
-    val rowsDeleted = touchedRows.filter(predicate).count()
-    // SQL DELETE semantics: NULL-predicate rows survive (same guard as
-    // the Delta path)
-    val survivors = touchedRows.filter(
-      !org.apache.spark.sql.functions.coalesce(predicate,
-        org.apache.spark.sql.functions.lit(false)))
-    // survivors restage WITH their partition tuples (the merge/compaction
-    // discipline): a delete must not degrade future manifest pruning, and
-    // untouched entries carry their full manifest record forward
-    val staged: Seq[(File, Map[String, Any])] =
-      if (survivors.isEmpty) Seq.empty
-      else if (meta.specFields.isEmpty)
-        stageData(survivors, root).map(_ -> Map.empty[String, Any])
-      else stagePartitioned(survivors, root, meta.specFields)
-    val nextEntries = entries.map { e =>
-      if (touchedPaths(e.path)) existingEntry(e).copy(status = 2)
-      else existingEntry(e)
-    } ++ staged.map { case (f, pv) =>
-      addedEntry(f, statsFields).copy(partitionValues = pv)
-    }
-    val sid = commitSnapshot(tablePath, base, nextEntries,
+    val st = rewriteWhere(spark, tablePath, predicate, None, statsFields,
       operation = "delete")
-    DeleteStats(sid, touchedPaths.size, staged.size, rowsDeleted)
-  }
-
-  /** Shared pruned match scan for the CoW verbs ([[deleteWhere]],
-    * [[replaceWhere]]): identity-conjunct manifest pruning, then the
-    * touched-file scan URIs from ONE distributed pass over the
-    * candidates — one code path so a pruning-contract change cannot
-    * reach one verb and miss the other.
-    */
-  private def prunedTouchedUris(spark: SparkSession,
-      reader: org.apache.spark.sql.DataFrameReader, meta: TableMeta,
-      entries: Seq[LiveEntry],
-      schema: org.apache.spark.sql.types.StructType,
-      predicate: org.apache.spark.sql.Column): Seq[String] = {
-    import org.apache.spark.sql.functions.col
-    val specCols = meta.specFields.filter(_.isIdentity).map(_.name)
-    val candidates =
-      pruneEntriesByConjuncts(spark, schema, entries, predicate, specCols)
-    if (candidates.isEmpty) Seq.empty
-    else reader.parquet(candidates.map(_.path): _*)
-      .withColumn("__graft_file", col("_metadata.file_path"))
-      .filter(predicate)
-      .select(col("__graft_file")).distinct()
-      .collect().map(_.getString(0)).toSeq
+    DeleteStats(st.snapshotId, st.filesRewritten, st.filesAdded,
+      st.rowsDeleted)
   }
 
   /** Outcome of a [[replaceWhere]] snapshot. */
@@ -2771,16 +2700,30 @@ object IcebergLog {
   /** REPLACE WHERE — [[graft.sources.DeltaWrite.replaceWhere]]'s
     * second-format twin: ONE snapshot deletes every row matching
     * `predicate` and lands `df` as its replacement — the atomic backfill
-    * verb, copy-on-write at file granularity (untouched files keep their
-    * physical identity; touched files' surviving rows restage with the
-    * batch). Batch rows outside the range refuse loudly; live v2 delete
-    * files refuse like every delete-blind path (compact first); the
-    * snapshot commits as an `overwrite`, so the incremental scan
-    * correctly refuses to cross it.
+    * verb, through the body [[rewriteWhere]] shared with [[deleteWhere]].
+    * Batch rows outside the range refuse loudly; the snapshot commits as
+    * an `overwrite`, so the incremental scan correctly refuses to cross
+    * it.
     */
   def replaceWhere(spark: SparkSession, tablePath: String,
       predicate: org.apache.spark.sql.Column, df: DataFrame,
-      statsFields: Seq[(Int, String)] = Seq.empty): ReplaceStats = {
+      statsFields: Seq[(Int, String)] = Seq.empty): ReplaceStats =
+    rewriteWhere(spark, tablePath, predicate, Some(df), statsFields,
+      operation = "overwrite")
+
+  /** The one copy-on-write rewrite behind [[deleteWhere]] (no batch) and
+    * [[replaceWhere]]: ONE new snapshot whose manifest marks every file
+    * containing a matching row DELETED, re-adds its surviving rows
+    * (predicate false-or-null — SQL DELETE semantics) with the batch as
+    * new files, and carries every untouched file as EXISTING with its
+    * bounds intact. A batch aligns to the table's columns and types and
+    * must lie inside the range. Live v2 delete files refuse like every
+    * delete-blind path (compact first). Nothing matched and nothing to
+    * insert is a no-op: no snapshot.
+    */
+  private def rewriteWhere(spark: SparkSession, tablePath: String,
+      predicate: org.apache.spark.sql.Column, df: Option[DataFrame],
+      statsFields: Seq[(Int, String)], operation: String): ReplaceStats = {
     import org.apache.spark.sql.functions.{coalesce, col, count, lit}
     val root = new File(tablePath)
     val base = headVersion(tablePath)
@@ -2788,31 +2731,42 @@ object IcebergLog {
     require(entries.nonEmpty, s"not a live Iceberg table: $tablePath")
     val reader = schemaAwareReader(spark, tablePath)
     val target = reader.parquet(entries.map(_.path): _*)
-    val cols = target.columns.toSeq
-    require(cols.forall(df.columns.contains) &&
-        df.columns.forall(cols.contains),
-      s"replaceWhere batch columns ${df.columns.mkString(",")} must " +
-        s"match table columns ${cols.mkString(",")}")
-    val batch = df.select(cols.map(c =>
-      col(s"`$c`").cast(target.schema(c).dataType).as(c)): _*)
-    // stray check on the CASTED batch — same column types as the match
-    // scan and the written rows (mirrors [[DeltaWrite.replaceWhere]])
-    val strays = batch.filter(!coalesce(predicate, lit(false)))
-      .agg(count(lit(1))).head.getLong(0)
-    require(strays == 0L,
-      s"replaceWhere: $strays batch row(s) do not satisfy the " +
-        "predicate — the batch may only replace rows inside the range")
+    val batch = df.map { d =>
+      val cols = target.columns.toSeq
+      require(cols.forall(d.columns.contains) &&
+          d.columns.forall(cols.contains),
+        s"replaceWhere batch columns ${d.columns.mkString(",")} must " +
+          s"match table columns ${cols.mkString(",")}")
+      val aligned = d.select(cols.map(c =>
+        col(s"`$c`").cast(target.schema(c).dataType).as(c)): _*)
+      // stray check on the CASTED batch — same column types as the
+      // match scan and the written rows
+      val strays = aligned.filter(!coalesce(predicate, lit(false)))
+        .agg(count(lit(1))).head.getLong(0)
+      require(strays == 0L,
+        s"replaceWhere: $strays batch row(s) do not satisfy the " +
+          "predicate — the batch may only replace rows inside the range")
+      aligned
+    }
     val meta = parseMeta(currentMetadataFile(tablePath))
-    // identity-conjunct pruning of the match scan from manifest tuples,
-    // same lever as deleteWhere — the backfill's range predicate is the
-    // canonical partition conjunct
+    // the predicate's identity-partition conjuncts prune the MATCH SCAN
+    // from manifest tuples before any data file opens — "delete last
+    // month's partition" opens only that partition's files; a pruned
+    // file can contain no matching row. The touched-file URIs then come
+    // from ONE distributed pass over the candidates.
+    val candidates = pruneEntriesByConjuncts(spark, target.schema, entries,
+      predicate, meta.specFields.filter(_.isIdentity).map(_.name))
     val touched =
-      prunedTouchedUris(spark, reader, meta, entries, target.schema,
-        predicate)
+      if (candidates.isEmpty) Seq.empty
+      else reader.parquet(candidates.map(_.path): _*)
+        .withColumn("__graft_file", col("_metadata.file_path"))
+        .filter(predicate)
+        .select(col("__graft_file")).distinct()
+        .collect().map(_.getString(0)).toSeq
     // resolve scan URIs on the FULL qualified path — basenames collide
     // across directories on addFiles-adopted hive layouts
     val touchedPaths = resolveTouchedPaths(spark, entries, touched)
-    val rowsInserted = batch.count()
+    val rowsInserted = batch.fold(0L)(_.count())
     if (touchedPaths.isEmpty && rowsInserted == 0L)
       return ReplaceStats(meta.currentSnapshotId, 0, 0, 0L, 0L)
     val touchedRows =
@@ -2822,9 +2776,11 @@ object IcebergLog {
     val rowsDeleted = touchedRows.fold(0L)(_.filter(predicate).count())
     val survivors = touchedRows.map(_.filter(
       !coalesce(predicate, lit(false))))
-    val out = survivors.fold(batch)(_.unionByName(batch))
-    // survivors + batch restage WITH their partition tuples; untouched
-    // entries carry their full manifest record forward
+    val out = (survivors ++ batch).reduce(_.unionByName(_))
+    // survivors + batch restage WITH their partition tuples (the
+    // merge/compaction discipline): a rewrite must not degrade future
+    // manifest pruning, and untouched entries carry their full manifest
+    // record forward
     val staged: Seq[(File, Map[String, Any])] =
       if (out.isEmpty) Seq.empty
       else if (meta.specFields.isEmpty)
@@ -2837,7 +2793,7 @@ object IcebergLog {
       addedEntry(f, statsFields).copy(partitionValues = pv)
     }
     val sid = commitSnapshot(tablePath, base, nextEntries,
-      operation = "overwrite")
+      operation = operation)
     ReplaceStats(sid, touchedPaths.size, staged.size, rowsDeleted,
       rowsInserted)
   }

@@ -331,6 +331,35 @@ class PropertySpec extends SparkSpec {
     icebergLifecycleFuzz(dayPartitioned = true, samples = 4)
   }
 
+  /** An optional REPLACE WHERE step for the lifecycle fuzzers: a key
+    * range `[lo, hi]` and a batch of distinct keys inside it (empty about
+    * one time in four — a pure range delete), `None` about two times in
+    * three.
+    */
+  private def replaceWhereGen[Op](mk: (Long, Long, Seq[(Long, Long)]) => Op)
+      : Gen[Option[Op]] = {
+    val step = for {
+      lo <- Gen.choose(0L, 9L)
+      hi <- Gen.choose(lo, math.min(lo + 4L, 9L))
+      keys <- Gen.frequency(1 -> Gen.const(Nil),
+        3 -> Gen.nonEmptyListOf(Gen.choose(lo, hi)))
+      tag <- Gen.choose(0L, 1000L)
+    } yield mk(lo, hi, keys.distinct.map(k => k -> (k * 1000 + tag)))
+    Gen.frequency(2 -> Gen.const(None), 1 -> step.map(Some(_)))
+  }
+
+  /** The fuzzers' steps: each generated op with its batch and delete key,
+    * followed by its optional [[replaceWhereGen]] step. The replace steps
+    * are drawn after the other lists, which therefore draw exactly as
+    * they did before REPLACE WHERE joined the fuzz.
+    */
+  private def withReplaceSteps[Op](ops: Seq[Op], batches: Seq[Seq[(Long, Long)]],
+      delKeys: Seq[Long], replaces: Seq[Option[Op]])
+      : Seq[((Op, Seq[(Long, Long)]), Long)] =
+    ops.zip(batches).zip(delKeys).zip(replaces).flatMap {
+      case (((op, b), k), r) => ((op, b), k) +: r.toSeq.map(rw => ((rw, b), k))
+    }
+
   /** The Delta fuzz's mirror for the second format: append / merge /
     * deleteWhere / MoR deletes / rewrite / expireSnapshots
     * interleavings, model-checked after every step, with history replay
@@ -353,6 +382,8 @@ class PropertySpec extends SparkSpec {
     case object EqDelete extends Op
     case object Rewrite extends Op
     case object Expire extends Op
+    final case class ReplaceWhere(lo: Long, hi: Long,
+        batch: Seq[(Long, Long)]) extends Op
     val opGen: Gen[Op] = Gen.frequency(4 -> Gen.const(Append),
       3 -> Gen.const(Merge),
       2 -> Gen.const(Delete), 2 -> Gen.const(PosDelete),
@@ -364,8 +395,11 @@ class PropertySpec extends SparkSpec {
       tag <- Gen.choose(0L, 1000L)
     } yield keys.distinct.map(k => k -> (k * 1000 + tag))
     forSamples(Gen.zip(Gen.listOfN(8, opGen), Gen.listOfN(8, batchGen),
-        Gen.listOfN(8, Gen.choose(0L, 9L))), n = samples) {
-      case (ops, batches, delKeys) =>
+        Gen.listOfN(8, Gen.choose(0L, 9L)),
+        Gen.listOfN(8, replaceWhereGen(ReplaceWhere))), n = samples) {
+      case (ops0, batches0, delKeys0, replaces) =>
+        val steps = withReplaceSteps(ops0, batches0, delKeys0, replaces)
+        val ops = steps.map(_._1._1)
         val tbl = java.nio.file.Files
           .createTempDirectory("graft-ice-fuzz").toString + "/t"
         var model = Map.empty[Long, Long]
@@ -444,7 +478,7 @@ class PropertySpec extends SparkSpec {
               assert(h === m, s"snapshot $sid mismatch after ops $ops")
             }
         }
-        ops.zip(batches).zip(delKeys).foreach { case ((op, batch), delKey) =>
+        steps.foreach { case ((op, batch), delKey) =>
           op match {
             case Append =>
               val fresh = batch.filterNot { case (k, _) => model.contains(k) }
@@ -519,6 +553,28 @@ class PropertySpec extends SparkSpec {
               assert(IcebergLog.liveSplitEntries(tbl)._2.isEmpty,
                 s"delete files survived rewrite after ops $ops")
               if (rs.filesAdded > 0) history :+= ((rs.snapshotId, model))
+            case ReplaceWhere(lo, hi, rows) if exists && model.nonEmpty =>
+              // CoW range swap: delete-then-insert in ONE snapshot; a
+              // delete-blind path like Delete, so it refuses while v2
+              // delete files are live
+              val range = col("id").between(lo, hi)
+              if (IcebergLog.liveSplitEntries(tbl)._2.nonEmpty) {
+                intercept[IllegalArgumentException] {
+                  IcebergLog.replaceWhere(spark, tbl, range, df(rows),
+                    Seq(1 -> "id"))
+                }
+              } else {
+                val st = IcebergLog.replaceWhere(spark, tbl, range,
+                  df(rows), Seq(1 -> "id"))
+                val hit = model.keySet.filter(k => k >= lo && k <= hi)
+                assert(st.rowsDeleted === hit.size.toLong &&
+                  st.rowsInserted === rows.size.toLong,
+                  s"replaceWhere stats mismatch after ops $ops: $st")
+                if (hit.nonEmpty || rows.nonEmpty) {
+                  model = model -- hit ++ rows.toMap
+                  history :+= ((st.snapshotId, model))
+                }
+              }
             case Expire if exists && history.nonEmpty =>
               val keep = 1 + (delKey % 2).toInt // keep 1 or 2 newest
               IcebergLog.expireSnapshots(tbl, keep)
@@ -571,6 +627,8 @@ class PropertySpec extends SparkSpec {
     case object Restore extends Op
     case object EnableMapping extends Op
     case object Rename extends Op
+    final case class ReplaceWhere(lo: Long, hi: Long,
+        batch: Seq[(Long, Long)]) extends Op
     val opGen: Gen[Op] = Gen.frequency(4 -> Gen.const(Append),
       1 -> Gen.const(Overwrite), 2 -> Gen.const(Merge),
       2 -> Gen.const(DvMerge),
@@ -585,8 +643,11 @@ class PropertySpec extends SparkSpec {
       tag <- Gen.choose(0L, 1000L)
     } yield keys.distinct.map(k => k -> (k * 1000 + tag))
     forSamples(Gen.zip(Gen.listOfN(10, opGen), Gen.listOfN(10, batchGen),
-        Gen.listOfN(10, Gen.choose(0L, 9L))), n = 6) {
-      case (ops, batches, delKeys) =>
+        Gen.listOfN(10, Gen.choose(0L, 9L)),
+        Gen.listOfN(10, replaceWhereGen(ReplaceWhere))), n = 6) {
+      case (ops0, batches0, delKeys0, replaces) =>
+        val steps = withReplaceSteps(ops0, batches0, delKeys0, replaces)
+        val ops = steps.map(_._1._1)
         val tbl = java.nio.file.Files
           .createTempDirectory("graft-delta-fuzz").toString + "/t"
         var model = Map.empty[Long, Long] // id -> payload (merge keyed on id)
@@ -621,7 +682,7 @@ class PropertySpec extends SparkSpec {
               assert(h === m, s"history v$v mismatch after ops $ops")
             }
         }
-        ops.zip(batches).zip(delKeys).foreach { case ((op, batch), delKey) =>
+        steps.foreach { case ((op, batch), delKey) =>
           val exists = new java.io.File(s"$tbl/_delta_log").isDirectory
           op match {
             case Append =>
@@ -660,6 +721,20 @@ class PropertySpec extends SparkSpec {
               hasDv = DeltaLog.liveAdds(spark, tbl).exists(_.dv.isDefined)
               if (model.contains(delKey)) {
                 model -= delKey
+                history :+= ((st.version, model, payloadCol))
+              }
+            case ReplaceWhere(lo, hi, rows) if exists && model.nonEmpty =>
+              // CoW range swap: delete-then-insert in ONE commit, reading
+              // through live DVs and retiring the rewritten files' ones
+              val st = DeltaWrite.replaceWhere(spark, tbl,
+                col("id").between(lo, hi), df(rows))
+              val hit = model.keySet.filter(k => k >= lo && k <= hi)
+              assert(st.rowsDeleted === hit.size.toLong &&
+                st.rowsInserted === rows.size.toLong,
+                s"replaceWhere stats mismatch after ops $ops: $st")
+              hasDv = DeltaLog.liveAdds(spark, tbl).exists(_.dv.isDefined)
+              if (hit.nonEmpty || rows.nonEmpty) {
+                model = model -- hit ++ rows.toMap
                 history :+= ((st.version, model, payloadCol))
               }
             case DvDelete if exists && model.nonEmpty =>

@@ -2324,6 +2324,36 @@ class SourcesSpec extends SparkSpec {
     ()
   }
 
+  test("deleteWhere runs a pinned number of Spark jobs on each format") {
+    // a delete shares its copy-on-write body with replaceWhere; the
+    // batch-only work (constraint check, schema-aligning read, stray
+    // check, batch count) must never run for it
+    import graft.exec.QueryProfile
+    import graft.sources.{DeltaWrite, IcebergLog}
+    val s = spark
+    import s.implicits._
+    val delta = s"$tmp/delta_delete_jobs"
+    val ice = s"$tmp/ice_delete_jobs"
+    Seq(Seq((1L, "a"), (2L, "b")), Seq((10L, "x"), (11L, "y"))).foreach { rows =>
+      DeltaWrite.append(rows.toDF("id", "v").repartition(1), delta)
+      IcebergLog.append(rows.toDF("id", "v").repartition(1), ice,
+        Seq(1 -> "id"))
+    }
+    val profile = new QueryProfile(spark)
+    try {
+      val (dp, dst) = profile.phase(
+        DeltaWrite.deleteWhere(spark, delta, col("id") === 1L))
+      val (ip, ist) = profile.phase(
+        IcebergLog.deleteWhere(spark, ice, col("id") === 1L, Seq(1 -> "id")))
+      assert(dst.rowsDeleted === 1L && dst.filesRewritten === 1)
+      assert(ist.rowsDeleted === 1L && ist.filesRewritten === 1)
+      // the counts a delete ran while it was its own body (Iceberg's
+      // extra jobs are the parquet schema inference of its three reads)
+      assert(dp.jobs.size === 6, dp.jobs.map(_.name).mkString(" | "))
+      assert(ip.jobs.size === 9, ip.jobs.map(_.name).mkString(" | "))
+    } finally profile.close()
+  }
+
   test("Delta CoW over live DVs: merge/deleteWhere/optimize compose, rewrites retire descriptors") {
     import graft.sources.{DeltaLog, DeltaWrite}
     val s = spark
