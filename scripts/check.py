@@ -8,9 +8,13 @@ runs the matching oracle_sql.json statement in DuckDB against the sfDir
 parquet tables, sorts columns by name, and compares values.
 
 DuckDB runs under a memory limit of half the memory this process may use
-(the cgroup's memory.max when set, else physical memory), spilling into a
-temporary directory removed at exit: a statement that runs out of memory
-prints its own FAIL line and the statements after it still run.
+(the cgroup's memory.max when set, else physical memory) and on half the
+cores, spilling into a temporary directory removed at exit: a statement
+that runs out of memory prints its own FAIL line and the statements after
+it still run. DuckDB's memory use outside its buffer pool grows past the
+limit, so the limit leaves the other half as headroom; per-thread operator
+state counts against the limit, so fewer threads let the largest joins
+(a16_triangle_count on a 15 GB host) finish inside it.
 """
 import json
 import os
@@ -53,6 +57,7 @@ def check(sf_dir: str, out: Path, spill: str) -> int:
     oracle = json.loads((out / "oracle_sql.json").read_text())
     con = duckdb.connect()
     con.execute(f"SET memory_limit='{allowed_memory_bytes() // 2 // 2**20}MB'")
+    con.execute(f"SET threads={max(1, len(os.sched_getaffinity(0)) // 2)}")
     con.execute(f"SET temp_directory='{spill}'")
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
