@@ -109,15 +109,34 @@ object DeltaLog {
     if (f.metadata.contains(PhysNameKey)) f.metadata.getString(PhysNameKey)
     else f.name
 
-  /** Rename every nesting level to physical names (the on-disk shape). */
-  private[sources] def physicalize(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType = {
+  /** Rename every nesting level to physical names (the on-disk shape).
+    * `fieldIds` also stamps each field's `delta.columnMapping.id` as
+    * `parquet.field.id` (the ID-mode request: Spark's reader resolves
+    * every column by footer field id); a field without one cannot be
+    * resolved and refuses.
+    */
+  private[sources] def physicalize(dt: org.apache.spark.sql.types.DataType,
+      fieldIds: Boolean = false): org.apache.spark.sql.types.DataType = {
     import org.apache.spark.sql.types._
     dt match {
-      case st: StructType => StructType(st.fields.map(f =>
-        StructField(physName(f), physicalize(f.dataType), f.nullable)))
-      case ArrayType(et, n) => ArrayType(physicalize(et), n)
-      case MapType(k, v, n) => MapType(physicalize(k), physicalize(v), n)
+      case st: StructType => StructType(st.fields.map { f =>
+        val md =
+          if (!fieldIds) Metadata.empty
+          else {
+            require(f.metadata.contains(FieldIdKey),
+              s"ID-mode column-mapped field '${f.name}' lacks $FieldIdKey " +
+                "in the metaData schemaString — cannot resolve it against " +
+                "parquet footers")
+            new MetadataBuilder()
+              .putLong(ParquetFieldIdKey, f.metadata.getLong(FieldIdKey))
+              .build()
+          }
+        StructField(physName(f), physicalize(f.dataType, fieldIds),
+          f.nullable, md)
+      })
+      case ArrayType(et, n) => ArrayType(physicalize(et, fieldIds), n)
+      case MapType(k, v, n) =>
+        MapType(physicalize(k, fieldIds), physicalize(v, fieldIds), n)
       case other => other
     }
   }
@@ -135,34 +154,6 @@ object DeltaLog {
     }
   }
 
-  /** The ID-mode request schema: LOGICAL names with `parquet.field.id`
-    * metadata copied from each field's `delta.columnMapping.id` — Spark's
-    * reader then resolves every column by footer field id and answers
-    * with the logical name directly (no rename pass needed). Every
-    * nesting level must carry an id; a field without one cannot be
-    * resolved and refuses.
-    */
-  private def fieldIdRequestSchema(
-      st: org.apache.spark.sql.types.StructType, tablePath: String)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    def walk(dt: DataType): DataType = dt match {
-      case s: StructType => StructType(s.fields.map { f =>
-        require(f.metadata.contains(FieldIdKey),
-          s"ID-mode column-mapped table $tablePath: field '${f.name}' " +
-            s"lacks $FieldIdKey in the metaData schemaString — cannot " +
-            "resolve it against parquet footers")
-        val md = new MetadataBuilder().withMetadata(f.metadata)
-          .putLong(ParquetFieldIdKey, f.metadata.getLong(FieldIdKey)).build()
-        StructField(f.name, walk(f.dataType), f.nullable, md)
-      })
-      case ArrayType(et, n) => ArrayType(walk(et), n)
-      case MapType(k, v, n) => MapType(walk(k), walk(v), n)
-      case other => other
-    }
-    walk(st).asInstanceOf[StructType]
-  }
-
   /** The field-id read switch, set wherever a request schema carries
     * `parquet.field.id` (it is inert for request schemas without ids, so
     * it is set session-wide).
@@ -175,35 +166,38 @@ object DeltaLog {
     */
   private[sources] val RowIdentity = Seq("__graft_dv_file", "__graft_dv_pos")
 
-  /** THE DECODE: how a set of Delta data files becomes the table's
-    * logical rows. Every reader picks its files and calls this, so a
-    * pruned read is [[read]] over fewer files by construction:
-    *
-    *  1. the request schema comes from the mapping mode (none, name, id)
-    *     and the metaData schema in force at `versionAsOf` (a log with no
-    *     metaData: one footer's schema, partition columns as strings);
-    *     the files' own partition keys decide which fields are left out
-    *     of it (partition data lives in the log, not the parquet);
-    *  2. ONE raw parquet scan with that explicit schema; deletion vectors
-    *     apply here, and `rowIdentity` / `changeType` keep the row's
-    *     physical identity ([[RowIdentity]]) or the cdc file's reserved
-    *     `_change_type` column from this scan;
-    *  3. physical names become logical names (name mode renames; id mode
-    *     resolved by footer field id and already answers logically);
-    *  4. partition values join in from the files' `partitionValues`:
-    *     literals when every file shares one tuple, otherwise ONE
-    *     broadcast (file -> tuple) join on `input_file_name()` — a
-    *     per-partition union would plan one branch per partition;
-    *  5. columns take their declared types, in schema order (kept raw
-    *     columns last).
+  /** A Delta file set's scan schema: the table's `logical` fields
+    * (partition keys the schema does not cover join as strings), split
+    * by the files' own partition keys into `part` (data lives in the
+    * log) and `data`, and the `request` schema of the data fields as
+    * the files store them.
     */
-  private def decode(spark: SparkSession, tablePath: String,
+  private[sources] final case class ScanSchema(mode: String,
+      logical: org.apache.spark.sql.types.StructType,
+      part: Seq[org.apache.spark.sql.types.StructField],
+      data: Seq[org.apache.spark.sql.types.StructField],
+      request: org.apache.spark.sql.types.StructType)
+
+  /** A field's partitionValues key: its physical name under mapping. */
+  private def pvKey(mode: String,
+      f: org.apache.spark.sql.types.StructField): String =
+    if (mode == "none") f.name else physName(f)
+
+  /** THE SCAN SCHEMA of `adds`, step 1 of [[decode]] and the schema of
+    * every rewrite scan ([[DeltaWrite]]'s OPTIMIZE, ZORDER and DV purge):
+    * from the mapping mode (none, name, id) and the metaData schema in
+    * force at `versionAsOf` — physical names under name mode, physical
+    * names stamped with `parquet.field.id` under id mode, the declared
+    * fields otherwise; a log with no metaData names it from one footer.
+    * A file lacking a declared column reads it as NULL. Driver-side: no
+    * job runs. `reserved` columns (the cdc `_change_type`) stay out of a
+    * footer-named schema.
+    */
+  private[sources] def scanSchema(spark: SparkSession, tablePath: String,
       adds: Seq[LiveFile], versionAsOf: Option[Long],
-      rowIdentity: Boolean = false, changeType: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, input_file_name, lit}
+      reserved: Set[String] = Set.empty): ScanSchema = {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     require(adds.nonEmpty, s"Delta table has no live files: $tablePath")
-    def q(c: String): String = s"`$c`"
     val meta = tableMetaData(spark, tablePath, versionAsOf)
     val mode = mappingMode(meta)
     require(Set("none", "name", "id")(mode),
@@ -224,10 +218,6 @@ object DeltaLog {
         s"$tablePath — the files without partitionValues keep that column " +
         "in their data, which log-side injection would shadow. Rewrite " +
         "the table with one layout")
-    // pv keys are PHYSICAL names under column mapping
-    def key(f: StructField): String =
-      if (mode == "none") f.name else physName(f)
-    val reserved = if (changeType) Set(ChangeType) else Set.empty[String]
     val schema = declared.getOrElse {
       val footer = FooterSchema(spark, adds.head.path)
       val clash = pvKeys.filter(footer.fieldNames.contains)
@@ -237,20 +227,48 @@ object DeltaLog {
           "add-action partitionValues — rewrite the table with one layout")
       StructType(footer.fields.filterNot(f => reserved(f.name)))
     }
-    val uncovered =
-      pvKeys.toSeq.sorted.filterNot(schema.fields.map(key).contains)
+    val uncovered = pvKeys.toSeq.sorted
+      .filterNot(schema.fields.map(pvKey(mode, _)).contains)
     val logical = StructType(schema.fields ++
       uncovered.map(StructField(_, StringType)))
-    val (part, data) = logical.fields.toSeq.partition(f => pvKeys(key(f)))
+    val (part, data) =
+      logical.fields.toSeq.partition(f => pvKeys(pvKey(mode, f)))
+    if (mode == "id") enableFieldIdRead(spark)
+    val request =
+      if (mode == "none") StructType(data)
+      else physicalize(StructType(data), fieldIds = mode == "id")
+        .asInstanceOf[StructType]
+    ScanSchema(mode, logical, part, data, request)
+  }
+
+  /** THE DECODE: how a set of Delta data files becomes the table's
+    * logical rows. Every reader picks its files and calls this, so a
+    * pruned read is [[read]] over fewer files by construction:
+    *
+    *  1. the request schema is [[scanSchema]]'s;
+    *  2. ONE raw parquet scan with that explicit schema; deletion vectors
+    *     apply here, and `rowIdentity` / `changeType` keep the row's
+    *     physical identity ([[RowIdentity]]) or the cdc file's reserved
+    *     `_change_type` column from this scan;
+    *  3. physical names become logical names (id mode resolved the
+    *     columns by footer field id, name mode by physical name);
+    *  4. partition values join in from the files' `partitionValues`:
+    *     literals when every file shares one tuple, otherwise ONE
+    *     broadcast (file -> tuple) join on `input_file_name()` — a
+    *     per-partition union would plan one branch per partition;
+    *  5. columns take their declared types, in schema order (kept raw
+    *     columns last).
+    */
+  private def decode(spark: SparkSession, tablePath: String,
+      adds: Seq[LiveFile], versionAsOf: Option[Long],
+      rowIdentity: Boolean = false, changeType: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col, input_file_name, lit}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    def q(c: String): String = s"`$c`"
+    val reserved = if (changeType) Set(ChangeType) else Set.empty[String]
     // 1. request schema
-    val dataLogical = StructType(data)
-    val request = mode match {
-      case "name" => physicalize(dataLogical).asInstanceOf[StructType]
-      case "id" =>
-        enableFieldIdRead(spark)
-        fieldIdRequestSchema(dataLogical, tablePath)
-      case _ => dataLogical
-    }
+    val ScanSchema(mode, logical, part, data, request) =
+      scanSchema(spark, tablePath, adds, versionAsOf, reserved)
     // 2. the raw scan (`_change_type` is never mapped: with field-id
     // reading on, a field without an id falls back to name matching)
     val scanned = applyDv(spark,
@@ -268,7 +286,8 @@ object DeltaLog {
     val renamed = raw.select(data.zip(request.fields).map { case (lf, rf) =>
       col(q(rf.name)).as(lf.name) } ++ kept.map(c => col(q(c))): _*)
     // 4. partition values
-    val tuples = adds.map(a => part.map(f => a.partitionValues(key(f))))
+    val tuples =
+      adds.map(a => part.map(f => a.partitionValues(pvKey(mode, f))))
     val withPv =
       if (part.isEmpty) renamed
       else if (tuples.distinct.size == 1)
@@ -295,7 +314,7 @@ object DeltaLog {
     // 5. declared types, schema order; mapped tables strip the mapping
     // metadata (the output contract is the clean logical shape)
     withPv.select(logical.fields.toSeq.map { f =>
-      if (mode == "none" && !pvKeys(f.name)) col(q(f.name))
+      if (mode == "none" && !part.contains(f)) col(q(f.name))
       else col(q(f.name)).cast(logicalType(f.dataType)).as(f.name)
     } ++ kept.map(c => col(q(c))): _*)
   }

@@ -1709,61 +1709,42 @@ object DeltaWrite {
         s""""partitionValues":{},"size":${f.length},"dataChange":false}}""")
   }
 
-  /** Physicalized DATA schema (partition columns excluded) for reading a
-    * MAPPED table's live files raw and re-staging them byte-compatible:
-    * name mode resolves and rewrites by physical column name; id mode
-    * carries `parquet.field.id` on every field so footers resolve by id
-    * on read and the ids re-stamp on write (both fieldId confs enabled
-    * here). None for unmapped tables. Layout rewrites that neither
-    * decode to logical nor change values (OPTIMIZE, ZORDER) read and
-    * write through this — physical bytes in, physical bytes out, the
-    * mapping untouched, so a 100 TB mapped corpus keeps its maintenance
-    * verbs without ever paying a decode.
+  /** The rewrite scans' schema (OPTIMIZE, ZORDER, the DV purge): the
+    * live set's [[DeltaLog.scanSchema]]. Files restage as they are
+    * stored — physical bytes in, physical bytes out, the mapping
+    * untouched, so a 100 TB mapped corpus keeps its maintenance verbs
+    * without ever paying a decode — and a column an older file lacks
+    * restages as NULL rather than dropping out. Id mode also re-stamps
+    * the field ids on write; its nested columns refuse.
     */
-  private def mappedRewriteSchema(
-      spark: org.apache.spark.sql.SparkSession, tablePath: String,
-      adds: Seq[DeltaLog.LiveFile])
-      : Option[org.apache.spark.sql.types.StructType] = {
+  private def rewriteSchema(spark: org.apache.spark.sql.SparkSession,
+      tablePath: String, adds: Seq[DeltaLog.LiveFile]): DeltaLog.ScanSchema = {
     import org.apache.spark.sql.types._
-    val mode = DeltaLog.mappingMode(DeltaLog.tableMetaData(spark, tablePath))
-    if (mode == "none") return None
-    val logical = DeltaLog.metaSchema(spark, tablePath).getOrElse(
-      throw new IllegalArgumentException(
-        s"column-mapped table without a parseable schemaString: $tablePath"))
-    val pvKeys = adds.flatMap(_.partitionValues.keySet).toSet
-    val physAll = DeltaLog.physicalize(logical).asInstanceOf[StructType]
-    def nested(dt: DataType): Boolean = dt match {
-      case _: StructType => true
-      case ArrayType(et, _) => nested(et)
-      case MapType(k, v, _) => nested(k) || nested(v)
-      case _ => false
-    }
-    val fields = logical.fields.zip(physAll.fields)
-      .filterNot { case (_, pf) => pvKeys.contains(pf.name) }
-      .map { case (lf, pf) =>
-        mode match {
-          case "name" => StructField(pf.name, pf.dataType, pf.nullable)
-          case "id" =>
-            require(!nested(lf.dataType),
-              s"id-mode rewrite of $tablePath: nested column '${lf.name}' " +
-                "is not supported (nested parquet field ids cannot be " +
-                "re-stamped at stage time)")
-            require(lf.metadata.contains(DeltaLog.FieldIdKey),
-              s"id-mode table $tablePath: column '${lf.name}' lacks " +
-                s"${DeltaLog.FieldIdKey}")
-            StructField(pf.name, pf.dataType, pf.nullable,
-              new MetadataBuilder().putLong(DeltaLog.ParquetFieldIdKey,
-                lf.metadata.getLong(DeltaLog.FieldIdKey)).build())
-          case other => throw new IllegalArgumentException(
-            s"unsupported delta.columnMapping.mode '$other' in $tablePath")
-        }
+    val scan = DeltaLog.scanSchema(spark, tablePath, adds, None)
+    if (scan.mode == "id") {
+      def nested(dt: DataType): Boolean = dt match {
+        case _: StructType => true
+        case ArrayType(et, _) => nested(et)
+        case MapType(k, v, _) => nested(k) || nested(v)
+        case _ => false
       }
-    if (mode == "id") {
-      DeltaLog.enableFieldIdRead(spark)
+      scan.data.foreach(f => require(!nested(f.dataType),
+        s"id-mode rewrite of $tablePath: nested column '${f.name}' " +
+          "is not supported (nested parquet field ids cannot be " +
+          "re-stamped at stage time)"))
       spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     }
-    Some(StructType(fields))
+    scan
   }
+
+  /** One rewrite scan: the live rows (deletion vectors applied) of
+    * `files` through `request`, a [[rewriteSchema]].
+    */
+  private def rewriteScan(spark: org.apache.spark.sql.SparkSession,
+      root: File, request: org.apache.spark.sql.types.StructType,
+      files: Seq[DeltaLog.LiveFile]): DataFrame =
+    DeltaLog.applyDv(spark,
+      spark.read.schema(request).parquet(files.map(_.path): _*), files, root)
 
   /** Render a partitionValues map as protocol JSON (null values are the
     * null partition, rendered as JSON null).
@@ -2095,13 +2076,13 @@ object DeltaWrite {
     val logDir = new File(root, "_delta_log")
     val base = DeltaLog.latestVersion(tablePath)
     val adds = DeltaLog.liveAdds(spark, tablePath)
-    // mapped tables purge first-class: the DV filter is POSITIONAL
-    // (file + row index — no column semantics), so survivors read back
-    // under the physicalized data schema and restage byte-compatible
-    val rewriteSchema = mappedRewriteSchema(spark, tablePath, adds)
     val dvAdds = adds.filter(_.dv.isDefined)
     if (dvAdds.isEmpty)
       return PurgeStats(base, 0, 0)
+    // the DV filter is POSITIONAL (file + row index — no column
+    // semantics), so survivors read back as stored and restage
+    // byte-compatible, mapped or not
+    val request = rewriteSchema(spark, tablePath, adds).request
     // PARTITION GROUPS: a partitioned table's rewrite runs one job per
     // TOUCHED partition tuple (only DV-carrying files are in play), and
     // each group's fresh files inherit that tuple in their add actions —
@@ -2111,20 +2092,8 @@ object DeltaWrite {
     // loop is bounded by touched-partition count, the same class as
     // real OPTIMIZE's per-partition planning.
     val groups = dvAdds.groupBy(_.partitionValues).toSeq
-    val partitioned = dvAdds.exists(_.partitionValues.nonEmpty)
     val newAdds = groups.flatMap { case (pv, groupAdds) =>
-      val raw = rewriteSchema match {
-        case Some(sch) =>
-          spark.read.schema(sch).parquet(groupAdds.map(_.path): _*)
-        case None if partitioned =>
-          spark.read.parquet(groupAdds.map(_.path): _*)
-        case None => DeltaLog.metaSchema(spark, tablePath) match {
-          case Some(st) =>
-            spark.read.schema(st).parquet(groupAdds.map(_.path): _*)
-          case None => spark.read.parquet(groupAdds.map(_.path): _*)
-        }
-      }
-      val liveRows = DeltaLog.applyDv(spark, raw, groupAdds, root)
+      val liveRows = rewriteScan(spark, root, request, groupAdds)
       // stage first, then drop zero-row outputs from the FOOTER count:
       // the old liveRows.isEmpty probe was its own driver job per group
       // re-reading real data. (An externally-written full-file DV can
@@ -2136,7 +2105,7 @@ object DeltaWrite {
         if (rows == 0L) { f.delete(); false } else true
       }
       files.map { f =>
-        val stats = fileStats(f, raw.schema)
+        val stats = fileStats(f, request)
         s"""{"add":{"path":"${jsonEscape(f.getName)}",""" +
           s""""partitionValues":${pvJson(pv)},""" +
           s""""size":${f.length},"modificationTime":${f.lastModified},""" +
@@ -2284,11 +2253,6 @@ object DeltaWrite {
     val logDir = new File(root, "_delta_log")
     val base = DeltaLog.latestVersion(tablePath)
     val adds = DeltaLog.liveAdds(spark, tablePath)
-    // mapped tables compact first-class: live bytes are already physical
-    // (names + ids), so the rewrite reads them back under the
-    // physicalized data schema and restages byte-compatible files —
-    // never a logical decode/re-encode
-    val rewriteSchema = mappedRewriteSchema(spark, tablePath, adds)
     // bin-packing NEVER crosses partition boundaries (real OPTIMIZE's
     // rule: a file belongs to exactly one partition tuple): small files
     // group by their tuple, each group compacts independently, and the
@@ -2317,11 +2281,11 @@ object DeltaWrite {
       .filter(_._2.nonEmpty)
     if (rewriteByPv.isEmpty)
       return OptimizeStats(base, 0, 0)
+    // live bytes restage as stored (mapped names and ids included) —
+    // never a logical decode/re-encode
+    val request = rewriteSchema(spark, tablePath, adds).request
     val actions = rewriteByPv.toSeq.map { case (pv, group) =>
-      val raw = rewriteSchema
-        .fold(spark.read)(sch => spark.read.schema(sch))
-        .parquet(group.map(_.path): _*)
-      val packed = DeltaLog.applyDv(spark, raw, group, root)
+      val packed = rewriteScan(spark, root, request, group)
         .coalesce(targetFiles)
       val files = stageDataFiles(packed, root)
       val removes = group.map { a =>
@@ -2388,22 +2352,15 @@ object DeltaWrite {
     // and the fresh adds carry no descriptor — a full-table re-cluster
     // is a purge point exactly like optimize (x28b); linear-rank mode
     // gets its min/max from the filtered frame too
-    // mapped tables re-cluster first-class: the scan reads physical
-    // bytes under the physicalized data schema and the rewrite restages
-    // byte-compatible files; callers name z columns LOGICALLY and the
-    // translation below keys every scan/rank on the physical name
-    val rewriteSchema = mappedRewriteSchema(spark, tablePath, adds)
+    // mapped tables re-cluster first-class: the scans read physical
+    // bytes and the rewrite restages byte-compatible files; callers name
+    // z columns LOGICALLY and the translation below keys every scan/rank
+    // on the physical name
+    val scanSchema = rewriteSchema(spark, tablePath, adds)
     val zPhysByLogical: Map[String, String] =
-      if (rewriteSchema.isEmpty) Map.empty
-      else {
-        val logical = DeltaLog.metaSchema(spark, tablePath).getOrElse(
-          throw new IllegalArgumentException(
-            s"column-mapped table without a parseable schemaString: " +
-              tablePath))
-        val phys = DeltaLog.physicalize(logical)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        logical.fieldNames.zip(phys.fieldNames).toMap
-      }
+      scanSchema.logical.fieldNames.zip(DeltaLog.physicalize(
+        scanSchema.logical).asInstanceOf[org.apache.spark.sql.types.StructType]
+        .fieldNames).toMap
     def physOfZ(c: String): String = zPhysByLogical.getOrElse(c, c)
     // PARTITIONED tables Z-order PER PARTITION (real OPTIMIZE ZORDER's
     // rule: clustering never crosses partition boundaries, and the
@@ -2456,9 +2413,7 @@ object DeltaWrite {
         val sess = spark
         import sess.implicits._
         val keyDf = keyRows.toDF("__fname", "__pvkey")
-        val scan = DeltaLog.applyDv(spark,
-          rewriteSchema.fold(spark.read)(s => spark.read.schema(s))
-            .parquet(adds.map(_.path): _*), adds, root)
+        val scan = rewriteScan(spark, root, scanSchema.request, adds)
         zCols.foreach(c => require(scan.columns.contains(physOfZ(c)),
           s"ZORDER column not in table: $c"))
         val aggs = zCols.zipWithIndex.map { case (c, i) =>
@@ -2534,9 +2489,7 @@ object DeltaWrite {
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val groupFutures = groups.map { case (pv, groupAdds) =>
       scala.concurrent.Future {
-        val df = DeltaLog.applyDv(spark,
-          rewriteSchema.fold(spark.read)(s => spark.read.schema(s))
-            .parquet(groupAdds.map(_.path): _*), groupAdds, root)
+        val df = rewriteScan(spark, root, scanSchema.request, groupAdds)
         zCols.foreach(c => require(df.columns.contains(physOfZ(c)),
           s"ZORDER column not in table: $c"))
         val z = graft.operators.Compaction

@@ -311,7 +311,11 @@ object IcebergLog {
       schemaFields: Seq[(Int, String, String)] = Seq.empty,
       nameMapping: Map[Int, String] = Map.empty,
       schemas: Seq[(Int, Seq[(Int, String, String)])] = Seq.empty,
-      currentSchemaId: Int = 0)
+      currentSchemaId: Int = 0) {
+    /** The current schema record, None when the table records none. */
+    def recordedFields: Option[Seq[(Int, String, String)]] =
+      Some(schemaFields).filter(_.nonEmpty)
+  }
 
   /** The table's HEAD metadata version — the highest committed
     * `v<N>.metadata.json` — or 0 for a fresh table (versions start at
@@ -559,6 +563,18 @@ object IcebergLog {
       throw new IllegalArgumentException(
         s"snapshot $wantedId not in table metadata (have " +
           s"${meta.snapshots.map(_.snapshotId).mkString(",")})"))
+    // status: 0 EXISTING, 1 ADDED, 2 DELETED
+    manifestEntries(tablePath, meta, snap).collect {
+      case (status, e) if status != 2 => e
+    }.partition(_.content == 0)
+  }
+
+  /** Every manifest entry of `snap` as (status, entry) — status 0
+    * EXISTING, 1 ADDED, 2 DELETED. Relative `file_path`s resolve against
+    * the table root.
+    */
+  private def manifestEntries(tablePath: String, meta: TableMeta,
+      snap: Snapshot): Seq[(Int, LiveEntry)] = {
     def resolve(p: String): String =
       if (new File(p).isAbsolute) p else new File(tablePath, p).getPath
     def boundsOf(df: GenericRecord, field: String): Map[Int, Array[Byte]] =
@@ -586,8 +602,8 @@ object IcebergLog {
         }
         (r.get("manifest_path").toString, mseq)
       }
-    val entries = manifests.flatMap { case (mp, mseq) =>
-      readAvro(new File(resolve(mp))).flatMap { entry =>
+    manifests.flatMap { case (mp, mseq) =>
+      readAvro(new File(resolve(mp))).map { entry =>
         val status = entry.get("status").asInstanceOf[Int]
         val df = entry.get("data_file").asInstanceOf[GenericRecord]
         val content = df.get("content").asInstanceOf[Int]
@@ -629,15 +645,12 @@ object IcebergLog {
             }.toMap[String, Any]
           case _ => Map.empty[String, Any]
         }
-        // status: 0 EXISTING, 1 ADDED, 2 DELETED
-        if (status == 2) None
-        else Some(LiveEntry(resolve(path),
+        status -> LiveEntry(resolve(path),
           boundsOf(df, "lower_bounds"), boundsOf(df, "upper_bounds"),
           content, seq, eqIds,
-          df.get("record_count").asInstanceOf[Long], pv))
+          df.get("record_count").asInstanceOf[Long], pv)
       }
     }
-    entries.partition(_.content == 0)
   }
 
   /** The table's snapshots (id, manifest list, summary), oldest first —
@@ -736,28 +749,17 @@ object IcebergLog {
   /** One snapshot's ADDED data files (status 1, content 0) — the files
     * the commit itself created, straight from its manifests.
     */
-  private def addedDataFiles(tablePath: String,
-      snap: Snapshot): Seq[String] = {
-    def resolve(p: String): String =
-      if (new File(p).isAbsolute) p else new File(tablePath, p).getPath
-    readAvro(new File(resolve(snap.manifestList)))
-      .map(_.get("manifest_path").toString)
-      .flatMap { mp =>
-        readAvro(new File(resolve(mp))).flatMap { entry =>
-          val status = entry.get("status").asInstanceOf[Int]
-          val df = entry.get("data_file").asInstanceOf[GenericRecord]
-          val content = df.get("content").asInstanceOf[Int]
-          if (status == 1 && content == 0)
-            Some(resolve(df.get("file_path").toString))
-          else None
-        }
-      }
-  }
+  private def addedDataFiles(tablePath: String, meta: TableMeta,
+      snap: Snapshot): Seq[LiveEntry] =
+    manifestEntries(tablePath, meta, snap).collect {
+      case (1, e) if e.content == 0 => e
+    }
 
   /** INCREMENTAL APPEND SCAN — Iceberg's changes-between read (the
     * [[DeltaLog.tableChanges]] twin): every record appended in snapshots
     * `(fromSnapshotId, toSnapshotId]` (from exclusive — 0 = table
-    * creation; to None = current), as the table columns plus
+    * creation; to None = current), as `read(to)`'s columns — every
+    * range file decodes through the `to` snapshot's schema — plus
     * `_snapshot_id`. Dispatch is on each snapshot's spec-required
     * `operation` summary: `append` snapshots contribute their ADDED data
     * files (appended files are immutable, so this reads O(appended
@@ -784,12 +786,15 @@ object IcebergLog {
       s"empty range: from $fromSnapshotId > to $toId")
     val range = meta.snapshots.sortBy(_.snapshotId)
       .filter(s => s.snapshotId > fromSnapshotId && s.snapshotId <= toId)
+    // one schema for the whole range, the one read(to) decodes with: a
+    // rename inside the range must not split a column in two
+    val fields = schemaFieldsAt(tablePath, toSnapshotId)
     val frames = range.flatMap { s =>
       s.summary.get("operation") match {
         case Some("append") =>
-          val files = addedDataFiles(tablePath, s)
+          val files = addedDataFiles(tablePath, meta, s)
           if (files.isEmpty) None
-          else Some(spark.read.parquet(files: _*)
+          else Some(decode(spark, tablePath, files, Seq.empty, fields)
             .withColumn("_snapshot_id", lit(s.snapshotId)))
         case Some("replace") => None // compaction: rows unchanged
         case other =>
@@ -801,7 +806,8 @@ object IcebergLog {
       }
     }
     if (frames.isEmpty)
-      read(spark, tablePath).withColumn("_snapshot_id", lit(0L)).limit(0)
+      read(spark, tablePath, toSnapshotId)
+        .withColumn("_snapshot_id", lit(0L)).limit(0)
     else frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
@@ -902,10 +908,11 @@ object IcebergLog {
     // VISIBLE rows of a file set = the rows its position/equality
     // deletes (at their sequence numbers) leave alive — MoR delete
     // snapshots diff to exactly the newly-dead rows.
+    // Both sides decode through the `to` snapshot's schema, as
+    // appendsBetween does, so a carried-over row cancels exactly.
+    val fields = schemaFieldsAt(tablePath, toSnapshotId)
     def visible(entries: Seq[LiveEntry], dels: Seq[LiveEntry]) =
-      liveWithMeta(spark, entries, dels,
-          unionSchemas = meta.schemaFields.nonEmpty)
-        .drop("__graft_file", "__graft_pos", "__graft_dseq")
+      decode(spark, tablePath, entries, dels, fields)
     var (prevData, prevDels) = walk
       .map(s => liveSplitEntries(tablePath, Some(s.snapshotId)))
       .getOrElse((Seq.empty[LiveEntry], Seq.empty[LiveEntry]))
@@ -948,7 +955,8 @@ object IcebergLog {
         // delete addresses rows by file, so the touched set is bounded)
         val namedByDels: Set[String] =
           if (addedDels.isEmpty) Set.empty
-          else spark.read.parquet(addedDels.map(_.path): _*)
+          else spark.read.schema(posDeleteSchema)
+            .parquet(addedDels.map(_.path): _*)
             .select(org.apache.spark.sql.functions.element_at(
               org.apache.spark.sql.functions.split(col("file_path"), "/"),
               -1).as("__n"))
@@ -963,7 +971,7 @@ object IcebergLog {
         else if (affectedPrev.isEmpty && addedDels.isEmpty)
           // pure append: no carry-overs, and no same-snapshot delete
           // file can address the fresh rows
-          Some(spark.read.parquet(affectedCur.map(_.path): _*)
+          Some(visible(affectedCur, Seq.empty)
             .withColumn("_change_type", lit("insert"))
             .withColumn("_snapshot_id", lit(s.snapshotId)))
         else {
@@ -978,9 +986,8 @@ object IcebergLog {
             (if (affectedPrev.isEmpty) Seq.empty
              else Seq(visible(affectedPrev, pDels)
                .withColumn("__graft_w", lit(-1))))
-          // allowMissingColumns: a schema-EVOLVING snapshot's old side
-          // lacks the new column; NULL-filling it is exactly how the
-          // merged-schema read sees those rows
+          // allowMissingColumns: with no schema record each side is
+          // named by its own first footer
           val all = sides.reduce(_.unionByName(_, allowMissingColumns = true))
           val dataCols = all.columns.filterNot(_ == "__graft_w").toSeq
           val net = all.groupBy(dataCols.map(c => col(s"`$c`")): _*)
@@ -998,7 +1005,7 @@ object IcebergLog {
       }
     }
     if (frames.isEmpty)
-      read(spark, tablePath)
+      read(spark, tablePath, toSnapshotId)
         .withColumn("_change_type", lit("insert"))
         .withColumn("_snapshot_id", lit(0L)).limit(0)
     else frames.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -1105,15 +1112,15 @@ object IcebergLog {
       currentSchemaFields(tablePath))
 
   /** THE DECODE: how a set of Iceberg data files becomes the table's
-    * logical rows. The data files scan through the recorded schema
-    * ([[scanData]]), or — with live delete files — through the
-    * delete-applying relation ([[liveWithMeta]]); identity partition
-    * columns the files lack join in from the manifests
-    * ([[injectIdentityPartitions]]); a recorded schema then fixes the
-    * output column ORDER (partition columns join in last, so a
-    * mapped+partitioned mirror re-projects to the declared order).
-    * [[read]] and every pruned reader call this, so a pruned read is
-    * [[read]] over fewer files by construction.
+    * logical rows. The data files scan through [[scanData]], or — with
+    * live delete files — through the delete-applying relation over it
+    * ([[liveWithMeta]]); identity partition columns the files lack join
+    * in from the manifests ([[injectIdentityPartitions]]); a recorded
+    * schema then fixes the output column ORDER (partition columns join
+    * in last, so a mapped+partitioned mirror re-projects to the
+    * declared order). [[read]], every pruned reader and the incremental
+    * reads call this, so a pruned read is [[read]] over fewer files by
+    * construction.
     */
   private def decode(spark: SparkSession, tablePath: String,
       data: Seq[LiveEntry], dels: Seq[LiveEntry],
@@ -1121,11 +1128,8 @@ object IcebergLog {
     import org.apache.spark.sql.functions.col
     val base =
       if (dels.isEmpty) scanData(spark, tablePath, data, fields)
-      else {
-        val meta = Seq("__graft_file", "__graft_pos", "__graft_dseq")
-        liveWithMeta(spark, data, dels, unionSchemas =
-          fields.isDefined).drop(meta: _*)
-      }
+      else liveWithMeta(spark, tablePath, data, dels, fields)
+        .drop(ProvenanceCols: _*)
     val injected = injectIdentityPartitions(spark, data, base,
       hiddenFieldNames(tablePath))
     fields match {
@@ -1172,19 +1176,33 @@ object IcebergLog {
               meta.nameMapping.get(id).forall(_ == n) }
           if (meta.snapshots.exists(_.schemaId.isDefined) && identityMapped)
             None
-          else Some(meta.schemaFields).filter(_.nonEmpty)
+          else meta.recordedFields
       }
   }
 
-  /** The distributed data-file scan behind [[read]]: plain footer-schema
-    * inference normally; field-id resolution (logical names + ids from
-    * the table metadata's schema) when this table RECORDS a schema —
-    * the UniForm-mirror case, where files carry physical Delta names
-    * and only the footer field ids are stable.
+  /** THE SCAN SCHEMA: the one place a set of data files gets its
+    * schema. A table that RECORDS a schema (`fieldsOverride`, the
+    * record the read decodes with) scans through it —
+    * by physical name under a name mapping, renamed back to logical,
+    * else by footer field id (the UniForm-mirror case, where files carry
+    * physical Delta names) — so a file lacking a recorded column reads
+    * it as NULL. Otherwise one driver-side footer names it (single-schema
+    * table by this writer's contract). No schema-inference job runs.
+    * `provenance` attaches `__graft_file` (the file's URI) and
+    * `__graft_pos` (the row's index in it) to the raw file relation,
+    * before the rename, which would hide the `_metadata` column.
     */
   private def scanData(spark: SparkSession, tablePath: String,
       data: Seq[LiveEntry],
-      fieldsOverride: Option[Seq[(Int, String, String)]]): DataFrame =
+      fieldsOverride: Option[Seq[(Int, String, String)]],
+      provenance: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    def scan(schema: org.apache.spark.sql.types.StructType): DataFrame = {
+      val raw = spark.read.schema(schema).parquet(data.map(_.path): _*)
+      if (!provenance) raw
+      else raw.withColumn("__graft_file", col("_metadata.file_path"))
+        .withColumn("__graft_pos", col("_metadata.row_index"))
+    }
     fieldsOverride match {
       case Some(allFields) =>
         val meta0 = parseMeta(currentMetadataFile(tablePath))
@@ -1222,7 +1240,6 @@ object IcebergLog {
           // NAME MAPPING (`schema.name-mapping.default`): files carry
           // physical names and NO footer field ids — scan the typed
           // physical schema, rename positionally back to logical
-          import org.apache.spark.sql.functions.col
           import org.apache.spark.sql.types.{StructField, StructType}
           val physical = StructType(fields.map { case (id, n, t) =>
             StructField(mapping.getOrElse(id,
@@ -1230,22 +1247,19 @@ object IcebergLog {
                 s"name mapping lacks field id $id ($n) in $tablePath")),
               icebergToSparkType(t), nullable = true)
           })
-          spark.read.schema(physical).parquet(data.map(_.path): _*)
-            .select(fields.zip(physical.fields).map { case ((_, n, _), pf) =>
-              col(s"`${pf.name}`").as(n)
-            }: _*)
+          val kept =
+            if (provenance) Seq(col("__graft_file"), col("__graft_pos"))
+            else Seq.empty
+          scan(physical).select(fields.zip(physical.fields).map {
+            case ((_, n, _), pf) => col(s"`${pf.name}`").as(n)
+          } ++ kept: _*)
         } else {
           spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-          spark.read.schema(fieldIdRequestSchema(fields))
-            .parquet(data.map(_.path): _*)
+          scan(fieldIdRequestSchema(fields))
         }
-      case None =>
-        // no recorded schema: one footer names it (single-schema table by
-        // this writer's contract) — passing it skips the per-call
-        // schema-inference job a bare read runs
-        spark.read.schema(FooterSchema(spark, data.head.path))
-          .parquet(data.map(_.path): _*)
+      case None => scan(FooterSchema(spark, data.head.path))
     }
+  }
 
   /** The metadata-recorded schema's (id, name, iceberg type) triples,
     * None when the table relies on footer inference (every table this
@@ -1253,10 +1267,8 @@ object IcebergLog {
     * Delta record one).
     */
   private[sources] def currentSchemaFields(tablePath: String)
-      : Option[Seq[(Int, String, String)]] = {
-    val fs = parseMeta(currentMetadataFile(tablePath)).schemaFields
-    if (fs.isEmpty) None else Some(fs)
-  }
+      : Option[Seq[(Int, String, String)]] =
+    parseMeta(currentMetadataFile(tablePath)).recordedFields
 
   /** Iceberg primitive type string → Spark type (the subset this writer
     * round-trips; anything else refuses loudly rather than mis-typing).
@@ -1378,8 +1390,9 @@ object IcebergLog {
     * columns still attached (`__graft_file` data-file NAME, `__graft_pos`
     * row index in its file, `__graft_dseq` the file's sequence number) —
     * [[read]] drops them; the MoR delete writers reuse them to address
-    * rows. ONE distributed scan over the data files; every delete
-    * relation is incremental-batch sized and broadcast:
+    * rows. ONE distributed scan over the data files through
+    * [[scanData]] with `fields`; every delete relation is
+    * incremental-batch sized and broadcast:
     *
     *  - POSITION deletes (`content=1`) anti-join on (file, pos) where the
     *    delete's sequence number ≥ the data file's (a position delete
@@ -1387,12 +1400,13 @@ object IcebergLog {
     *  - EQUALITY deletes (`content=2`) anti-join NULL-SAFELY on the
     *    delete file's own columns where the delete's sequence number is
     *    STRICTLY greater — rows appended later survive, per spec. Column
-    *    resolution uses the delete parquet's column names (this writer
-    *    records names = table names; `equality_ids` is carried in the
-    *    manifest for spec fidelity).
+    *    resolution uses the delete parquet's column names, read from its
+    *    footer (this writer records names = table names; `equality_ids`
+    *    is carried in the manifest for spec fidelity).
     */
-  private def liveWithMeta(spark: SparkSession, data: Seq[LiveEntry],
-      dels: Seq[LiveEntry], unionSchemas: Boolean = false): DataFrame = {
+  private def liveWithMeta(spark: SparkSession, tablePath: String,
+      data: Seq[LiveEntry], dels: Seq[LiveEntry],
+      fields: Option[Seq[(Int, String, String)]]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, element_at, lit, split, typedLit}
     // file NAME → sequence number. Our writer's names are uuids (unique by
     // construction), but an externally-written table may repeat a basename
@@ -1410,19 +1424,9 @@ object IcebergLog {
     // MoR hot path (r21 directive 4)
     val seqMap: Map[String, Long] =
       data.map(e => new File(e.path).getName -> e.seq).toMap
-    // unionSchemas: a SCHEMA-EVOLVED table mixes old-schema files with
-    // merged-schema ones; the footer-union read NULL-fills the old
-    // files so the evolved columns survive a subsequent merge's scan.
-    // The single-schema path passes ONE footer's schema explicitly —
-    // bare spark.read.parquet runs a one-task schema-inference job per
-    // call, a driver round-trip the MoR chain paid on every read
-    val reader =
-      if (unionSchemas) spark.read.option("mergeSchema", "true")
-      else spark.read.schema(FooterSchema(spark, data.head.path))
-    var cur = reader.parquet(data.map(_.path): _*)
+    var cur = scanData(spark, tablePath, data, fields, provenance = true)
       .withColumn("__graft_file",
-        element_at(split(col("_metadata.file_path"), "/"), -1))
-      .withColumn("__graft_pos", col("_metadata.row_index"))
+        element_at(split(col("__graft_file"), "/"), -1))
       .withColumn("__graft_dseq",
         element_at(typedLit(seqMap), col("__graft_file")))
     val posDels = dels.filter(_.content == 1)
@@ -1439,13 +1443,17 @@ object IcebergLog {
         "left_anti")
     }
     dels.filter(_.content == 2).foreach { e =>
-      val ed = spark.read.parquet(e.path)
+      val ed = spark.read.schema(FooterSchema(spark, e.path)).parquet(e.path)
       val cond = ed.columns.map(c => cur(c) <=> ed(c)).reduce(_ && _) &&
         lit(e.seq) > cur("__graft_dseq")
       cur = cur.join(broadcast(ed), cond, "left_anti")
     }
     cur
   }
+
+  /** The provenance columns [[liveWithMeta]] attaches. */
+  private val ProvenanceCols =
+    Seq("__graft_file", "__graft_pos", "__graft_dseq")
 
   /** Stage ONE position-delete parquet for `marked` rows (columns
     * `__graft_file` basename + `__graft_pos`): resolve the names to the
@@ -1509,13 +1517,13 @@ object IcebergLog {
     val base = headVersion(tablePath)
     val (data, dels) = liveSplitEntries(tablePath)
     require(data.nonEmpty, s"not a live Iceberg table: $tablePath")
-    val marked = liveWithMeta(spark, data, dels, unionSchemas =
-        currentSchemaFields(tablePath).isDefined)
+    val marked = liveWithMeta(spark, tablePath, data, dels,
+        currentSchemaFields(tablePath))
       .filter(predicate)
       .select(col("__graft_file"), col("__graft_pos"))
     val staged = stagePositionDelete(spark, root, data, marked)
-    val n = staged.headOption.map(f =>
-      spark.read.parquet(f.getPath).count()).getOrElse(0L)
+    val n = graft.operators.Compaction.footerRowCount(spark,
+      staged.map(_.getPath))
     if (n == 0L) {
       staged.foreach(f => Files.deleteIfExists(f.toPath))
       return V2DeleteStats(
@@ -1546,8 +1554,8 @@ object IcebergLog {
     require(staged.nonEmpty, "no delete key file produced")
     // record_count is the manifest's row count for the delete file itself
     // (spec-required; external planners budget delete application by it)
-    val n = staged.headOption.map(f =>
-      keys.sparkSession.read.parquet(f.getPath).count()).getOrElse(0L)
+    val n = graft.operators.Compaction.footerRowCount(keys.sparkSession,
+      staged.map(_.getPath))
     if (n == 0L) { // empty key batch: a no-op, not an empty delete file
       staged.foreach(f => Files.deleteIfExists(f.toPath))
       return parseMeta(currentMetadataFile(tablePath)).currentSnapshotId
@@ -2656,18 +2664,33 @@ object IcebergLog {
         s"touched file not in live set: $u")).path).toSet
   }
 
-  /** Footer-union reader for tables that RECORD a schema (an evolving
-    * merge leaves mixed old/new-schema files behind): the plain
-    * single-footer read samples an ARBITRARY file's schema, and a CoW
-    * verb restaging survivors from it could silently drop an evolved
-    * column — permanent value loss on the rewritten rows. Plain tables
-    * keep the plain reader (no extra footer pass).
+  /** The table's schema without a read: the recorded `fields` when
+    * there are any, else one driver-side footer of `data` — the names
+    * and types [[scanData]] answers.
     */
-  private def schemaAwareReader(spark: SparkSession, tablePath: String)
-      : org.apache.spark.sql.DataFrameReader =
-    if (currentSchemaFields(tablePath).isDefined)
-      spark.read.option("mergeSchema", "true")
-    else spark.read
+  private[sources] def tableSchema(spark: SparkSession,
+      fields: Option[Seq[(Int, String, String)]], data: Seq[LiveEntry])
+      : org.apache.spark.sql.types.StructType = fields match {
+    case Some(fs) => org.apache.spark.sql.types.StructType(fs.map {
+      case (_, n, t) =>
+        org.apache.spark.sql.types.StructField(n, icebergToSparkType(t))
+    })
+    case None => FooterSchema(spark, data.head.path)
+  }
+
+  /** The rewriting verbs refuse a PHYSICALLY name-mapped table: it is a
+    * UniForm mirror of a column-mapped Delta table, derived read-only
+    * state whose files carry physical names — restaging the logical
+    * rows the scans answer would corrupt it. Our own evolution records
+    * identity mappings (physical == logical), which pass.
+    */
+  private def requireNotMirror(meta: TableMeta, tablePath: String,
+      verb: String): Unit =
+    require(meta.nameMapping.isEmpty ||
+        meta.schemaFields.forall { case (id, n, _) =>
+          meta.nameMapping.get(id).forall(_ == n) },
+      s"$verb on a physically name-mapped Iceberg table: $tablePath is " +
+        "a derived UniForm mirror — write through the Delta side")
 
   /** Outcome of a [[deleteWhere]] snapshot. */
   final case class DeleteStats(snapshotId: Long, filesRewritten: Int,
@@ -2729,16 +2752,19 @@ object IcebergLog {
     val base = headVersion(tablePath)
     val entries = liveEntries(tablePath)
     require(entries.nonEmpty, s"not a live Iceberg table: $tablePath")
-    val reader = schemaAwareReader(spark, tablePath)
-    val target = reader.parquet(entries.map(_.path): _*)
+    val meta = parseMeta(currentMetadataFile(tablePath))
+    requireNotMirror(meta, tablePath,
+      if (df.isEmpty) "deleteWhere" else "replaceWhere")
+    val fields = meta.recordedFields
+    val schema = tableSchema(spark, fields, entries)
     val batch = df.map { d =>
-      val cols = target.columns.toSeq
+      val cols = schema.fieldNames.toSeq
       require(cols.forall(d.columns.contains) &&
           d.columns.forall(cols.contains),
         s"replaceWhere batch columns ${d.columns.mkString(",")} must " +
           s"match table columns ${cols.mkString(",")}")
       val aligned = d.select(cols.map(c =>
-        col(s"`$c`").cast(target.schema(c).dataType).as(c)): _*)
+        col(s"`$c`").cast(schema(c).dataType).as(c)): _*)
       // stray check on the CASTED batch — same column types as the
       // match scan and the written rows
       val strays = aligned.filter(!coalesce(predicate, lit(false)))
@@ -2748,18 +2774,16 @@ object IcebergLog {
           "predicate — the batch may only replace rows inside the range")
       aligned
     }
-    val meta = parseMeta(currentMetadataFile(tablePath))
     // the predicate's identity-partition conjuncts prune the MATCH SCAN
     // from manifest tuples before any data file opens — "delete last
     // month's partition" opens only that partition's files; a pruned
     // file can contain no matching row. The touched-file URIs then come
     // from ONE distributed pass over the candidates.
-    val candidates = pruneEntriesByConjuncts(spark, target.schema, entries,
+    val candidates = pruneEntriesByConjuncts(spark, schema, entries,
       predicate, meta.specFields.filter(_.isIdentity).map(_.name))
     val touched =
       if (candidates.isEmpty) Seq.empty
-      else reader.parquet(candidates.map(_.path): _*)
-        .withColumn("__graft_file", col("_metadata.file_path"))
+      else scanData(spark, tablePath, candidates, fields, provenance = true)
         .filter(predicate)
         .select(col("__graft_file")).distinct()
         .collect().map(_.getString(0)).toSeq
@@ -2771,8 +2795,8 @@ object IcebergLog {
       return ReplaceStats(meta.currentSnapshotId, 0, 0, 0L, 0L)
     val touchedRows =
       if (touchedPaths.isEmpty) None
-      else Some(reader.parquet(
-        entries.map(_.path).filter(touchedPaths): _*))
+      else Some(scanData(spark, tablePath,
+        entries.filter(e => touchedPaths(e.path)), fields))
     val rowsDeleted = touchedRows.fold(0L)(_.filter(predicate).count())
     val survivors = touchedRows.map(_.filter(
       !coalesce(predicate, lit(false))))
@@ -2984,29 +3008,12 @@ object IcebergLog {
     val (data, dels) = liveSplitEntries(tablePath)
     require(data.nonEmpty, s"not a live Iceberg table: $tablePath")
     val meta = parseMeta(currentMetadataFile(tablePath))
-    // merge on a PHYSICALLY-mapped table (a UniForm mirror of mapped
-    // Delta) refuses: the mirror is derived, read-only state. Our own
-    // evolution records identity mappings (physical == logical), which
-    // pass this guard.
-    require(meta.nameMapping.isEmpty ||
-        meta.schemaFields.forall { case (id, n, _) =>
-          meta.nameMapping.get(id).forall(_ == n) },
-      s"merge on a physically name-mapped Iceberg table: $tablePath is " +
-        "a derived UniForm mirror — write through the Delta side")
-    // an EVOLVED table mixes old-schema files with merged-schema ones:
-    // the footer-union read NULL-fills old files so every recorded
-    // column is present in the match scan
-    val evolved = meta.schemaFields.nonEmpty
-    // the table schema WITHOUT a read: the recorded fields for evolved
-    // tables, one footer (driver-side, no inference job) otherwise --
-    // the old mergeSchema scan here existed only for its schema
-    val tableSchema: org.apache.spark.sql.types.StructType =
-      if (evolved) org.apache.spark.sql.types.StructType(
-        meta.schemaFields.map { case (_, n, t) =>
-          org.apache.spark.sql.types.StructField(n, icebergToSparkType(t))
-        })
-      else FooterSchema(spark, data.head.path)
-    val cols = tableSchema.fieldNames.toSeq
+    requireNotMirror(meta, tablePath, "merge")
+    // an EVOLVED table mixes old-schema files with merged-schema ones;
+    // the scans read through the recorded schema, NULL-filling old files
+    val fields = meta.recordedFields
+    val schema = tableSchema(spark, fields, data)
+    val cols = schema.fieldNames.toSeq
     // SCHEMA EVOLUTION (`mergeSchema` — [[DeltaWrite.merge]]'s Delta
     // parity on the second protocol): source columns beyond the table
     // widen it in the SAME commit — fresh field ids past the max in the
@@ -3084,7 +3091,7 @@ object IcebergLog {
                 used += next
                 next
               })
-              (id, c, sparkToIcebergType(tableSchema(c).dataType))
+              (id, c, sparkToIcebergType(schema(c).dataType))
             }
           }
         val maxId = prior.map(_._1).max
@@ -3108,7 +3115,7 @@ object IcebergLog {
     val src = source.select(allCols.map(c =>
       col(s"`$c`").cast(
         if (newCols.contains(c)) source.schema(c).dataType
-        else tableSchema(c).dataType).as(c)): _*).localCheckpoint(true)
+        else schema(c).dataType).as(c)): _*).localCheckpoint(true)
     // ONE validation pass over the batch: total rows and the max per-key
     // multiplicity from a single aggregate (was: a duplicate-detection
     // job plus a separate count job — two full passes)
@@ -3122,7 +3129,6 @@ object IcebergLog {
     if (srcCount == 0L) // empty batch: a no-op, not an empty snapshot
       return MergeStats(meta.currentSnapshotId, 0, 0, 0L, 0L)
     val srcKeys = src.select(keys.map(c => col(s"`$c`")): _*)
-    val metaCols = Seq("__graft_file", "__graft_pos", "__graft_dseq")
     // touched-file resolution is by basename over the FULL live set, so
     // uniqueness must hold over the FULL live set — a pruned match scan
     // would let liveWithMeta's own require see only the candidates, and
@@ -3141,13 +3147,12 @@ object IcebergLog {
     val condT = matchCondition.map(c => coalesce(c, lit(false)))
     val specCols = meta.specFields.filter(_.isIdentity).map(_.name)
     val condPruned = matchCondition.fold(data)(c =>
-      pruneEntriesByConjuncts(spark, tableSchema, data, c, specCols))
+      pruneEntriesByConjuncts(spark, schema, data, c, specCols))
     val candidates = pruneEntriesByBatchKeys(src, keys, meta.specFields,
       condPruned)
     val scan =
       if (candidates.isEmpty) None
-      else Some(liveWithMeta(spark, candidates, dels,
-        unionSchemas = evolved))
+      else Some(liveWithMeta(spark, tablePath, candidates, dels, fields))
     // only condition-true rows make a file touched — a file whose key
     // hits are all condition-false keeps its physical identity. ONE
     // aggregation over the matched scan returns the touched-file set
@@ -3188,7 +3193,7 @@ object IcebergLog {
               broadcast(srcKeys.withColumn("__graft_m", lit(1))),
               keys, "left_outer")
             .filter(col("__graft_m").isNull || !ct).drop("__graft_m")
-        }).drop(metaCols: _*)
+        }).drop(ProvenanceCols: _*)
         // an evolving merge NULL-fills the new columns on restaged
         // survivors — untouched files stay physically old and read
         // through the merged schema record instead
@@ -3265,27 +3270,16 @@ object IcebergLog {
     val (data, dels) = liveSplitEntries(tablePath)
     require(data.nonEmpty, s"not a live Iceberg table: $tablePath")
     val meta = parseMeta(currentMetadataFile(tablePath))
-    // physically name-mapped mirrors stay refused (derived, read-only
-    // state — the CoW merge's rule); EVOLVED tables (identity-mapped
-    // schema record) MoR-merge first-class: the match scan reads
-    // footer-union so old files NULL-fill the evolved columns, the
-    // positional kills are schema-blind, and the batch appends in the
-    // CURRENT shape — old files stay physically old
-    require(meta.nameMapping.isEmpty ||
-        meta.schemaFields.forall { case (id, n, _) =>
-          meta.nameMapping.get(id).forall(_ == n) },
-      s"MoR merge on a physically name-mapped Iceberg table: $tablePath " +
-        "is a derived UniForm mirror — write through the Delta side")
-    val evolved = meta.schemaFields.nonEmpty
-    // table schema without a read -- recorded fields or one footer (see
-    // the CoW merge's tableSchema note)
-    val tableSchema: org.apache.spark.sql.types.StructType =
-      if (evolved) org.apache.spark.sql.types.StructType(
-        meta.schemaFields.map { case (_, n, t) =>
-          org.apache.spark.sql.types.StructField(n, icebergToSparkType(t))
-        })
-      else FooterSchema(spark, data.head.path)
-    val cols = tableSchema.fieldNames.toSeq
+    // physically name-mapped mirrors stay refused (the CoW merge's
+    // rule); EVOLVED tables (identity-mapped schema record) MoR-merge
+    // first-class: the match scan reads through the recorded schema so
+    // old files NULL-fill the evolved columns, the positional kills are
+    // schema-blind, and the batch appends in the CURRENT shape — old
+    // files stay physically old
+    requireNotMirror(meta, tablePath, "MoR merge")
+    val fields = meta.recordedFields
+    val schema = tableSchema(spark, fields, data)
+    val cols = schema.fieldNames.toSeq
     require(cols.forall(source.columns.contains) &&
         source.columns.forall(cols.contains),
       s"merge source columns ${source.columns.mkString(",")} must " +
@@ -3294,7 +3288,7 @@ object IcebergLog {
     // per-key counts) — the same two-jobs-to-one and replay-once levers
     // as the CoW [[merge]]
     val src = source.select(cols.map(c =>
-      col(s"`$c`").cast(tableSchema(c).dataType).as(c)): _*)
+      col(s"`$c`").cast(schema(c).dataType).as(c)): _*)
       .localCheckpoint(true)
     val kstats = src.groupBy(keys.map(c => col(s"`$c`")): _*)
       .agg(count(lit(1)).as("__n"))
@@ -3318,7 +3312,7 @@ object IcebergLog {
     // incremental-batch sized (bounded by the match count)
     val matched =
       if (candidates.isEmpty) None
-      else Some(liveWithMeta(spark, candidates, dels, unionSchemas = evolved)
+      else Some(liveWithMeta(spark, tablePath, candidates, dels, fields)
         .join(broadcast(srcKeys), keys, "leftsemi")
         .select((Seq(col("__graft_file"), col("__graft_pos")) ++
           keys.map(c => col(s"`$c`"))): _*)
@@ -3389,12 +3383,12 @@ object IcebergLog {
     val base = headVersion(tablePath)
     val (data, dels) = liveSplitEntries(tablePath)
     require(data.nonEmpty, s"not a live Iceberg table: $tablePath")
+    val meta = parseMeta(currentMetadataFile(tablePath))
+    requireNotMirror(meta, tablePath, "rewriteDataFiles")
     if (dels.isEmpty && sortBy.isEmpty && targetFiles == 0)
-      return RewriteStats(
-        parseMeta(currentMetadataFile(tablePath)).currentSnapshotId, 0, 0, 0)
-    val metaCols = Seq("__graft_file", "__graft_pos", "__graft_dseq")
-    val live0 = liveWithMeta(spark, data, dels, unionSchemas =
-      currentSchemaFields(tablePath).isDefined).drop(metaCols: _*)
+      return RewriteStats(meta.currentSnapshotId, 0, 0, 0)
+    val live0 = liveWithMeta(spark, tablePath, data, dels,
+      meta.recordedFields).drop(ProvenanceCols: _*)
     val live =
       if (sortBy.nonEmpty) {
         val n = if (targetFiles > 0) targetFiles else data.size
@@ -3405,7 +3399,7 @@ object IcebergLog {
     // a partitioned table compacts PER PARTITION: the rewrite re-stages
     // through the partitioned writer so every fresh file keeps a
     // partition tuple and prunePartitions stays exact after compaction
-    val spec = parseMeta(currentMetadataFile(tablePath)).specFields
+    val spec = meta.specFields
     val staged: Seq[(File, Map[String, Any])] =
       if (spec.isEmpty) stageData(live, root).map(_ -> Map.empty[String, Any])
       else stagePartitioned(live, root, spec)

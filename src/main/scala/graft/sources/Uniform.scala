@@ -346,7 +346,7 @@ object Uniform {
     val header =
       if (base >= 0L) Seq.empty
       else DeltaWrite.mirrorHeader(
-        spark.read.parquet(data.map(_.path): _*).schema)
+        IcebergLog.tableSchema(spark, meta.recordedFields, data))
     DeltaWrite.publish(logDir, base + 1,
       header ++ adds ++ removes ++ Seq(
         s"""{"txn":{"appId":"$IcebergMirrorApp","version":$sid}}""",
