@@ -584,24 +584,14 @@ object DeltaWrite {
       keys: Seq[String], mergeSchema: Boolean = false,
       matchCondition: Option[org.apache.spark.sql.Column] = None)
       : MergeStats = {
-    import org.apache.spark.sql.functions.{broadcast, col, count, lit}
+    import org.apache.spark.sql.functions.{broadcast, col, lit}
     import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
     val spark = source.sparkSession
     val root = new File(tablePath)
     val logDir = new File(root, "_delta_log")
-    val base = DeltaLog.latestVersion(tablePath)
-    val adds = DeltaLog.liveAdds(spark, tablePath)
-    val meta = DeltaLog.tableMetaData(spark, tablePath)
-    val mapMode = DeltaLog.mappingMode(meta)
-    val partCols = DeltaLog.recordedPartitionColumns(spark, tablePath)
-    requireSatisfiesConstraints(spark, tablePath, source, "merge")
-    // the logical snapshot shape (typed partition columns included):
-    // decoded exactly like the snapshot reader — metaData schema,
-    // mapping resolution, DVs applied — so post-evolution file mixes and
-    // MoR deletes both merge correctly. Schema-only here (no job).
-    val target0 = DeltaLog.readLivePaths(spark, tablePath,
-      adds.map(_.path))
-    val cols = target0.columns.toSeq
+    val t = mergeTarget(spark, tablePath, source)
+    val (meta, mapMode, partCols) = (t.meta, t.mapMode, t.partCols)
+    val cols = t.schema.fieldNames.toSeq
     // SCHEMA EVOLUTION (`mergeSchema`, real Delta's autoMerge): source
     // columns beyond the table's schema widen it — the commit carries a
     // new metaData action with the merged schema (partitioning and table
@@ -619,8 +609,6 @@ object DeltaWrite {
     require(cols.forall(source.columns.contains),
       s"source columns ${source.columns.mkString(",")} must cover table " +
         s"columns ${cols.mkString(",")}")
-    val target = newCols.foldLeft(target0)((t, c) =>
-      t.withColumn(c, lit(null).cast(source.schema(c).dataType)))
     val allCols = cols ++ newCols
     // fresh mapping entries for an evolving MAPPED merge: ids continue
     // past the recorded maxColumnId, physical names follow the col-<id>
@@ -650,84 +638,22 @@ object DeltaWrite {
         }
         Some(StructType(oldLogical.fields ++ fresh))
       }
-    // cast the batch to the TABLE's exact types (real Delta's implicit
-    // whenMatched cast): without it a wider-typed batch would rewrite
-    // touched files in a different physical type than the untouched
-    // files keep, and the next snapshot read would fail on the mix
-    // Materialized ONCE (eager local checkpoint): the batch feeds the
-    // validation aggregate, the key broadcast of the match scan, the
-    // partition-key prune collect, the batch landing, and the CDF
-    // stages — each would otherwise replay the caller's source plan
-    // from scratch (an arbitrary computation at 100 TB, not a cheap
-    // scan). Incremental-batch sized by contract.
-    val src = source.select(allCols.map(c =>
-      col(s"`$c`").cast(target.schema(c).dataType).as(c)): _*)
-      .localCheckpoint(true)
-    // ONE validation pass over the batch: total rows and the max
-    // per-key multiplicity from a single aggregate (was: a duplicate-
-    // detection job plus a separate count job — two full passes)
-    val kstats = src.groupBy(keys.map(c => col(s"`$c`")): _*)
-      .agg(count(lit(1)).as("__n"))
-      .agg(org.apache.spark.sql.functions.sum(col("__n")),
-        org.apache.spark.sql.functions.max(col("__n"))).head
-    val srcCount = if (kstats.isNullAt(0)) 0L else kstats.getLong(0)
-    require(srcCount == 0L || kstats.getLong(1) <= 1L,
-      "merge source has multiple rows for the same key (ambiguous match)")
-    if (srcCount == 0L) // empty batch: a no-op, not an empty commit
-      return MergeStats(base, 0, 0, 0L, 0L)
-    val srcKeys = src.select(keys.map(c => col(s"`$c`")): _*)
-    // the extra match condition with SQL join NULL semantics (a NULL
-    // evaluation is a non-match, never an update)
-    val condT = matchCondition.map(c =>
-      org.apache.spark.sql.functions.coalesce(c, lit(false)))
-    // the match condition's own partition conjuncts prune first — a
-    // file whose tuple fails them can contain no matched row at all
-    // (sound: prunePartitionConjuncts only drops files whose every row
-    // falsifies a partition-only conjunct of the predicate)
-    val condPruned = matchCondition.fold(adds)(c =>
-      prunePartitionConjuncts(spark, tablePath, adds, c))
-    // PARTITION PRUNING of the match scan by the batch's key values —
-    // typed evaluation, capped collect, truncation never prunes (the
-    // full contract lives on [[pruneAddsByBatchKeys]])
-    val candidateAdds =
-      pruneAddsByBatchKeys(spark, tablePath, condPruned, src, keys, partCols)
-    // touched files: bounded by live-file count (same driver-state class
-    // as the log listing itself). The identity scan decodes logically
-    // with each row's PHYSICAL file captured before any projection/join,
-    // applies live DVs (a MoR-deleted row must not count as a match),
-    // and injects typed partition columns so keys may include them.
-    // Resolution back to the log keys on the QUALIFIED URI — basenames
-    // collide across partition dirs on CONVERT-adopted tables.
-    val byPath = DeltaLog.byQualifiedPath(spark, adds)
-    // only rows satisfying the extra match condition can make a file
-    // touched — a file whose key hits are all condition-false keeps its
-    // physical identity. ONE aggregation over the matched identity scan
-    // returns the touched-file set (bounded by live-file count), the
-    // matched-row count, AND the distinct-key count — previously the
-    // touched collect and the duplicate-target stats were two separate
-    // jobs, the second re-reading every touched file end to end.
-    val matchAgg: Option[org.apache.spark.sql.Row] =
-      if (candidateAdds.isEmpty) None
-      else {
-        val identityScan = DeltaLog.readWithRowIdentity(spark, tablePath,
-            Some(candidateAdds.map(_.path).toSet))
-          .withColumnRenamed("__graft_dv_file", "__graft_file")
-          .drop("__graft_dv_pos")
-        val kc = keys.map(c => col(s"`$c`"))
-        Some(condT.fold(identityScan)(identityScan.filter(_))
-          .join(broadcast(srcKeys), keys, "leftsemi")
-          .agg(org.apache.spark.sql.functions
-              .collect_set(col("__graft_file")),
-            count(lit(1)),
-            org.apache.spark.sql.functions.count_distinct(kc.head,
-              kc.tail: _*)).head)
-      }
+    val batch = MergeBatch(source, t.schema, keys) match {
+      case Some(b) => b
+      case None => return MergeStats(t.base, 0, 0, 0L, 0L)
+    }
+    val (src, srcKeys) = (batch.rows, batch.keys)
+    val m = matchScan(spark, tablePath, t, batch, keys, matchCondition)
+    val condT = m.flatMap(_.condition)
+    // only condition-true matches make a file touched — a file whose key
+    // hits are all condition-false keeps its physical identity
+    val st = MergeBatch.stats(m.map(_.rows), "__graft_dv_file", keys)
+    // resolution back to the log keys on the QUALIFIED URI — basenames
+    // collide across partition dirs on CONVERT-adopted tables
+    val byPath = DeltaLog.byQualifiedPath(spark, t.adds)
     val touchedAdds: Seq[DeltaLog.LiveFile] =
-      matchAgg.fold(Seq.empty[DeltaLog.LiveFile])(
-        _.getSeq[String](0)
-          .map(uri => byPath.getOrElse(DeltaLog.canonicalScanPath(uri),
-            throw new IllegalStateException(
-              s"touched file not in live set: $uri"))))
+      st.files.map(uri => byPath.getOrElse(DeltaLog.canonicalScanPath(uri),
+        throw new IllegalStateException(s"touched file not in live set: $uri")))
     // decode touched files through the snapshot reader (DVs applied,
     // typed pv injected) and NULL-fill evolving columns so
     // pre-evolution survivors rewrite under the merged schema
@@ -735,7 +661,7 @@ object DeltaWrite {
       if (touchedAdds.isEmpty) None
       else Some(newCols.foldLeft(
         DeltaLog.readLivePaths(spark, tablePath, touchedAdds.map(_.path)))(
-        (t, c) => t.withColumn(c, lit(null).cast(source.schema(c).dataType))))
+        (d, c) => d.withColumn(c, lit(null).cast(source.schema(c).dataType))))
     val (survivors, matchedRows) = touchedRows match {
       case None => (None, None)
       case Some(tr) =>
@@ -755,15 +681,9 @@ object DeltaWrite {
           .join(broadcast(srcKeys), keys, "leftsemi")
         (Some(surv), Some(matched))
     }
-    // target-row count and distinct-key count rode along in the
-    // touched-file aggregate above — duplicate-key targets (two appends
-    // of the same key; nothing forbids them) are detected without any
-    // further scan of the touched files
-    val (rowsUpdated, matchedKeyCount) = matchAgg
-      .map(r => (r.getLong(1), r.getLong(2))).getOrElse((0L, 0L))
-    val dupTargets = rowsUpdated != matchedKeyCount
-    val matchedKeys = matchedRows.map(
-      _.select(keys.map(c => col(s"`$c`")): _*).distinct())
+    // duplicate-key targets (two appends of the same key; nothing
+    // forbids them) show in the match aggregate: more rows than keys
+    val dupTargets = st.rows != st.keys
     // real MERGE updates EVERY matched target row. When every matched
     // key has exactly one target row (the common case), the batch
     // itself IS updated-rows ∪ inserts and unions in directly — no
@@ -778,35 +698,12 @@ object DeltaWrite {
         m.select(keys.map(c => col(s"`$c`")): _*)
           .join(broadcast(src), keys, "inner")
           .select(allCols.map(c => col(s"`$c`")): _*))
-    val batchLanding = updatedRows match {
-      case None => src
-      case Some(upd) => upd.unionByName(
-        src.join(broadcast(matchedKeys.get), keys, "leftanti"))
-    }
-    val rowsInserted = srcCount - matchedKeyCount
+    val batchLanding = updatedRows.fold(src)(_.unionByName(src.join(
+      broadcast(matchedRows.get.select(keys.map(c => col(s"`$c`")): _*)
+        .distinct()), keys, "leftanti")))
     val out = survivors.fold(batchLanding)(_.unionByName(batchLanding))
-    // CHANGE DATA FEED: a merge's in-place updates are invisible to
-    // add/remove derivation (survivors would masquerade as
-    // delete+insert), so the commit publishes the exact change rows —
-    // matched old rows as update_preimage, their replacements as
-    // update_postimage, unmatched source rows as insert. All three are
-    // bounded by the batch, one O(batch) write. Partition columns ride
-    // as DATA columns in the cdc file (typed by the cast above), so the
-    // feed decode needs no pv re-injection for cdc rows.
-    val cdcActions =
-      if (!cdfEnabled(spark, tablePath)) Seq.empty
-      else {
-        // preimage/postimage pair up PER MATCHED TARGET ROW (real
-        // Delta's CDF shape) — a duplicate-key target emits one pair
-        // per row; inserts are the source rows that matched nothing
-        val pre = matchedRows.getOrElse(src.limit(0))
-        val mk = matchedKeys.getOrElse(srcKeys.limit(0))
-        val post = updatedRows.getOrElse(
-          src.join(broadcast(mk), keys, "leftsemi"))
-        val ins = src.join(broadcast(mk), keys, "leftanti")
-        stageMergeCdc(spark, tablePath, root, mapMode, pre, post, ins,
-          evolvedLogical)
-      }
+    val cdcActions = stageMergeCdc(spark, tablePath, root, mapMode, src,
+      keys, matchedRows, updatedRows, evolvedLogical)
     // mapped rewrites stage physical-named (id-stamped) files, exactly
     // like a mapped append; stats key on the physical schema.
     // PARTITIONED rewrites stage hive-laid-out via ONE distributed
@@ -819,7 +716,7 @@ object DeltaWrite {
         logicalOverride = evolvedLogical)
     val (files, addActions) =
       stageAdds(spark, tablePath, root, outStaged, outStatsSchema, partCols)
-    val version = base + 1
+    val version = t.base + 1
     val removes = touchedAdds.map(removeAction(_))
     // an evolving merge commits a NEW metaData action with the merged
     // schema — table id, partitioning, and configuration all carry
@@ -854,8 +751,8 @@ object DeltaWrite {
     publish(logDir, version,
       metaAction ++ removes ++ addActions ++ cdcActions :+
       """{"commitInfo":{"operation":"MERGE","operationParameters":{}}}""")
-    MergeStats(version, touchedAdds.size, files.size, rowsUpdated,
-      rowsInserted)
+    MergeStats(version, touchedAdds.size, files.size, st.rows,
+      batch.count - st.keys)
   }
 
   /** MERGE-ON-READ MERGE (deletion-vector write mode) — the Delta twin
@@ -869,12 +766,11 @@ object DeltaWrite {
     * bitmaps like any MoR delete; [[purgeDeletionVectors]] folds the
     * debt back into clean files.
     *
-    * Candidate files for the match scan prune exactly like the CoW verb
-    * (the match condition's partition conjuncts, then the batch's key
-    * values — [[pruneAddsByBatchKeys]]); the scan applies EXISTING DVs
-    * first, so a MoR-dead row re-inserts, never resurrects, and a second
-    * DV merge on the same file UNIONs bitmaps. DUPLICATE-KEY targets
-    * refuse loudly — kill-and-insert would collapse their multiplicity
+    * The batch check, candidate pruning and match scan are the CoW
+    * verb's ([[MergeBatch]], [[matchScan]]); the scan applies EXISTING
+    * DVs first, so a MoR-dead row re-inserts, never resurrects, and a
+    * second DV merge on the same file UNIONs bitmaps. DUPLICATE-KEY
+    * targets refuse loudly — kill-and-insert would collapse their multiplicity
     * where the CoW verb preserves it; schema evolution (`mergeSchema`)
     * stays a CoW-merge feature, matching the Iceberg twin. CDF publishes
     * the SAME update_preimage/update_postimage/insert rows as the CoW
@@ -886,148 +782,125 @@ object DeltaWrite {
       source: DataFrame, keys: Seq[String],
       matchCondition: Option[org.apache.spark.sql.Column] = None,
       maxDvCollectBytes: Long = 256L << 20): MergeStats = {
-    import org.apache.spark.sql.functions.{broadcast, col, count,
-      count_distinct, lit}
+    import org.apache.spark.sql.functions.col
     val root = new File(tablePath)
     val logDir = new File(root, "_delta_log")
-    val base = DeltaLog.latestVersion(tablePath)
-    val adds = DeltaLog.liveAdds(spark, tablePath)
-    val meta = DeltaLog.tableMetaData(spark, tablePath)
-    val mapMode = DeltaLog.mappingMode(meta)
-    val partCols = DeltaLog.recordedPartitionColumns(spark, tablePath)
-    requireSatisfiesConstraints(spark, tablePath, source, "merge")
-    // logical snapshot shape, schema-only (no job) — same discipline as
-    // the CoW merge
-    val target0 = DeltaLog.readLivePaths(spark, tablePath,
-      adds.map(_.path))
-    val cols = target0.columns.toSeq
+    val t = mergeTarget(spark, tablePath, source)
+    val cols = t.schema.fieldNames.toSeq
     require(cols.forall(source.columns.contains) &&
         source.columns.forall(cols.contains),
       s"merge source columns ${source.columns.mkString(",")} must match " +
         s"table columns ${cols.mkString(",")} — schema evolution " +
         "(mergeSchema) is a CoW-merge feature")
-    // batch materialized once + ONE validation pass (sum/max over the
-    // per-key counts) — the same two-jobs-to-one and replay-once levers
-    // as the CoW [[merge]]
-    val src = source.select(cols.map(c =>
-      col(s"`$c`").cast(target0.schema(c).dataType).as(c)): _*)
-      .localCheckpoint(true)
-    val kstats = src.groupBy(keys.map(c => col(s"`$c`")): _*)
-      .agg(count(lit(1)).as("__n"))
-      .agg(org.apache.spark.sql.functions.sum(col("__n")),
-        org.apache.spark.sql.functions.max(col("__n"))).head
-    val srcCount = if (kstats.isNullAt(0)) 0L else kstats.getLong(0)
-    require(srcCount == 0L || kstats.getLong(1) <= 1L,
-      "merge source has multiple rows for the same key (ambiguous match)")
-    if (srcCount == 0L) // empty batch: a no-op, not an empty commit
-      return MergeStats(base, 0, 0, 0L, 0L)
-    val srcKeys = src.select(keys.map(c => col(s"`$c`")): _*)
-    val condT = matchCondition.map(c =>
-      org.apache.spark.sql.functions.coalesce(c, lit(false)))
-    val condPruned = matchCondition.fold(adds)(c =>
-      prunePartitionConjuncts(spark, tablePath, adds, c))
-    val candidateAdds =
-      pruneAddsByBatchKeys(spark, tablePath, condPruned, src, keys, partCols)
-    val byPath = DeltaLog.byQualifiedPath(spark, adds)
-    // matched rows, persisted ONCE and reused for the count aggregate,
-    // the position kill stage, and the CDF preimages — incremental-batch
+    val batch = MergeBatch(source, t.schema, keys) match {
+      case Some(b) => b
+      case None => return MergeStats(t.base, 0, 0, 0L, 0L)
+    }
+    // matched rows, persisted ONCE and reused for the match aggregate,
+    // the DV kill stage, and the CDF preimages — incremental-batch
     // sized (bounded by the match count), never re-reading the candidate
     // parquet three times
-    val matchedAll =
-      if (candidateAdds.isEmpty) None
-      else {
-        val withId = DeltaLog.readWithRowIdentity(spark, tablePath,
-          Some(candidateAdds.map(_.path).toSet))
-        Some(condT.fold(withId)(withId.filter(_))
-          .join(broadcast(srcKeys), keys, "leftsemi").persist())
-      }
+    val matched = matchScan(spark, tablePath, t, batch, keys, matchCondition)
+      .map(_.rows.persist())
     try {
-      val (nMatched, nKeys) = matchedAll.map { m =>
-        val st = m.agg(count(lit(1)),
-          count_distinct(col(s"`${keys.head}`"),
-            keys.tail.map(c => col(s"`$c`")): _*)).head
-        (st.getLong(0), st.getLong(1))
-      }.getOrElse((0L, 0L))
-      require(nMatched == nKeys,
-        s"DV merge matched $nMatched target rows over $nKeys keys — " +
+      val st = MergeBatch.stats(matched, "__graft_dv_file", keys)
+      require(st.rows == st.keys,
+        s"DV merge matched ${st.rows} target rows over ${st.keys} keys — " +
           "duplicate-key targets would lose multiplicity under " +
           "kill-and-insert; use the CoW merge (it preserves them)")
-      val touched = matchedAll.fold(
+      val touched = matched.fold(
         Seq.empty[(DeltaLog.LiveFile, Long, Long, Option[DeltaDv.Descriptor])])(
         m => stageDvKills(spark, root,
           m.select(col("__graft_dv_file").as("__f"),
             col("__graft_dv_pos").as("__i")),
-          byPath, maxDvCollectBytes))
+          DeltaLog.byQualifiedPath(spark, t.adds), maxDvCollectBytes))
       // the WHOLE batch lands as fresh files (updates + inserts — no
       // duplicate-key targets, so the batch IS updated-rows ∪ inserts)
       val (outStaged, outStatsSchema) =
-        if (mapMode == "none") (src, src.schema)
-        else physicalizeForStage(spark, tablePath, src)
-      val (files, addActions) =
-        stageAdds(spark, tablePath, root, outStaged, outStatsSchema, partCols)
-      // CDF: identical shape to the CoW merge — matched old rows as
-      // update_preimage, their batch replacements as update_postimage,
-      // unmatched source rows as insert; all O(batch)
-      val cdcActions =
-        if (!cdfEnabled(spark, tablePath)) Seq.empty
-        else {
-          val pre = matchedAll.map(
-            _.drop("__graft_dv_file", "__graft_dv_pos"))
-            .getOrElse(src.limit(0))
-          val mk = matchedAll.map(
-            _.select(keys.map(c => col(s"`$c`")): _*).distinct())
-            .getOrElse(srcKeys.limit(0))
-          val post = src.join(broadcast(mk), keys, "leftsemi")
-          val ins = src.join(broadcast(mk), keys, "leftanti")
-          stageMergeCdc(spark, tablePath, root, mapMode, pre, post, ins)
-        }
+        if (t.mapMode == "none") (batch.rows, batch.rows.schema)
+        else physicalizeForStage(spark, tablePath, batch.rows)
+      val (files, addActions) = stageAdds(spark, tablePath, root, outStaged,
+        outStatsSchema, t.partCols)
+      val cdcActions = stageMergeCdc(spark, tablePath, root, t.mapMode,
+        batch.rows, keys,
+        matched.map(_.drop("__graft_dv_file", "__graft_dv_pos")), None)
       val protoAction =
         if (touched.isEmpty) Seq.empty
-        else dvProtocolAction(tablePath, mapMode != "none")
-      val version = base + 1
+        else dvProtocolAction(tablePath, t.mapMode != "none")
+      val version = t.base + 1
       publish(logDir, version,
         protoAction ++ dvKillActions(touched) ++ addActions ++ cdcActions :+
         """{"commitInfo":{"operation":"MERGE","operationParameters":{"mode":"merge-on-read"}}}""")
-      MergeStats(version, 0, files.size, nMatched, srcCount - nKeys)
-    } finally matchedAll.foreach { m => m.unpersist(); () }
+      MergeStats(version, 0, files.size, st.rows, batch.count - st.keys)
+    } finally matched.foreach { m => m.unpersist(); () }
   }
 
-  /** Partition-key batch-value candidate pruning shared by the CoW
-    * [[merge]] and the DV-writing [[mergeDv]]: when a join key IS a
-    * partition column, only files whose tuple value appears among the
-    * batch's distinct values for it can contain a match. The comparison
-    * goes through the same TYPED evaluation as a DELETE's partition
-    * conjunct — the log's string rendering of a tuple ("05", "5.0")
-    * must never be string-compared against the batch's rendering. Null
-    * batch values drop (an equi-join key never matches null), and a key
-    * with NO non-null batch values matches no file at all. Inserts are
-    * unaffected (they stage from the batch, not the match scan). The
-    * distinct collect is CAPPED: pruning is strictly best-effort, and an
-    * unbounded batch on a high-cardinality partition key must not blow
-    * the driver (or the analyzer's literal-list limits) for a prune that
-    * could only be marginal — over the cap, that key prunes nothing. A
-    * truncated value list must never prune (it would drop files holding
-    * real matches), so the cap checks the PRE-null-filter row count.
+  /** What a merge reads of the table before it touches the batch: the
+    * version it read (the commit claims the next one), the live files,
+    * the metaData action and its mapping mode and partition columns, and
+    * the logical snapshot schema — decoded exactly like the snapshot
+    * reader (metaData schema, mapping resolved), schema-only: no job.
     */
-  private def pruneAddsByBatchKeys(
-      spark: org.apache.spark.sql.SparkSession, tablePath: String,
-      start: Seq[DeltaLog.LiveFile], src: DataFrame, keys: Seq[String],
-      partCols: Seq[String]): Seq[DeltaLog.LiveFile] = {
-    import org.apache.spark.sql.functions.col
-    val maxKeyPruneValues = 10000
-    keys.filter(partCols.contains).foldLeft(start) { (as, k) =>
-      if (as.isEmpty) as
-      else {
-        val raw = src.select(col(s"`$k`")).distinct()
-          .limit(maxKeyPruneValues + 1).collect()
-        if (raw.length > maxKeyPruneValues) as
-        else {
-          val vals = raw.map(_.get(0)).filter(_ != null).toSeq
-          if (vals.isEmpty) Seq.empty
-          else prunePartitionConjuncts(spark, tablePath, as,
+  private final case class MergeTarget(base: Long,
+      adds: Seq[DeltaLog.LiveFile], meta: Option[Map[String, Any]],
+      mapMode: String, partCols: Seq[String],
+      schema: org.apache.spark.sql.types.StructType)
+
+  /** Both merge verbs' read of the table; the batch must satisfy the
+    * table's CHECK constraints before anything is staged.
+    */
+  private def mergeTarget(spark: org.apache.spark.sql.SparkSession,
+      tablePath: String, source: DataFrame): MergeTarget = {
+    val base = DeltaLog.latestVersion(tablePath)
+    val adds = DeltaLog.liveAdds(spark, tablePath)
+    val meta = DeltaLog.tableMetaData(spark, tablePath)
+    val partCols = DeltaLog.recordedPartitionColumns(spark, tablePath)
+    requireSatisfiesConstraints(spark, tablePath, source, "merge")
+    MergeTarget(base, adds, meta, DeltaLog.mappingMode(meta), partCols,
+      DeltaLog.readLivePaths(spark, tablePath, adds.map(_.path)).schema)
+  }
+
+  /** The match step both merge verbs share. Candidate files prune from
+    * log metadata before any data file opens: first by the match
+    * condition's partition conjuncts ([[prunePartitionConjuncts]]; a file
+    * whose tuple fails them holds no matched row — "merge today's batch
+    * into the last 7 days' partitions" opens only those partitions), then
+    * by the batch's values of every join key that is a partition column
+    * ([[MergeBatch.keyValues]], compared through the same TYPED
+    * evaluation: the log's string rendering of a tuple, "05" or "5.0",
+    * is never string-compared against the batch's). The candidates then
+    * read through the snapshot decoder with each row's PHYSICAL file and
+    * position (`__graft_dv_file`, `__graft_dv_pos`) captured before any
+    * projection or join — live DVs applied, so a MoR-deleted row is no
+    * match and re-inserts instead of resurrecting; typed partition
+    * columns injected, so keys and the condition may name them — and
+    * semi-join against the batch keys under the condition. No
+    * candidates, no scan.
+    */
+  private def matchScan(spark: org.apache.spark.sql.SparkSession,
+      tablePath: String, t: MergeTarget, batch: MergeBatch.Batch,
+      keys: Seq[String], matchCondition: Option[org.apache.spark.sql.Column])
+      : Option[MergeBatch.Matched] = {
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
+    val condPruned = matchCondition.fold(t.adds)(c =>
+      prunePartitionConjuncts(spark, tablePath, t.adds, c))
+    val candidates = keys.filter(t.partCols.contains)
+      .foldLeft(condPruned) { (as, k) =>
+        if (as.isEmpty) as
+        else MergeBatch.keyValues(batch, k) match {
+          case None => as
+          case Some(vals) if vals.isEmpty => Seq.empty
+          case Some(vals) => prunePartitionConjuncts(spark, tablePath, as,
             col(s"`$k`").isin(vals: _*))
         }
       }
+    if (candidates.isEmpty) None
+    else {
+      val cond = matchCondition.map(coalesce(_, lit(false)))
+      val scan = DeltaLog.readWithRowIdentity(spark, tablePath,
+        Some(candidates.map(_.path).toSet))
+      Some(MergeBatch.Matched(cond.fold(scan)(scan.filter(_))
+        .join(broadcast(batch.keys), keys, "leftsemi"), cond))
     }
   }
 
@@ -1653,25 +1526,41 @@ object DeltaWrite {
     }
   }
 
-  /** Shared merge CDF staging for the CoW [[merge]] and the DV-writing
-    * [[mergeDv]]: the update_preimage/update_postimage/insert union,
-    * mapped physicalization, and cdc file stage in ONE code path — the
-    * feed cannot tell the write modes apart BY CONSTRUCTION, not by two
-    * copies kept in sync.
+  /** The change feed of both merge verbs, in ONE code path — the feed
+    * cannot tell the write modes apart BY CONSTRUCTION, not by two
+    * copies kept in sync. A merge's in-place updates are invisible to
+    * add/remove derivation (survivors would masquerade as
+    * delete+insert), so the commit publishes the exact change rows: the
+    * `matched` target rows as update_preimage — one per matched target
+    * row, real Delta's CDF shape — their replacements as
+    * update_postimage (`updated` when duplicate-key targets were
+    * expanded, else the batch rows of matched keys), and the batch rows
+    * that matched nothing as insert. All O(batch), one write; partition
+    * columns ride as DATA columns (typed by the batch cast), so the feed
+    * decode needs no pv re-injection for cdc rows. Nothing when the
+    * table has no change data feed.
     */
   private def stageMergeCdc(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, root: File, mapMode: String,
-      pre: DataFrame, post: DataFrame, ins: DataFrame,
+      tablePath: String, root: File, mapMode: String, batch: DataFrame,
+      keys: Seq[String], matched: Option[DataFrame],
+      updated: Option[DataFrame],
       evolvedLogical: Option[org.apache.spark.sql.types.StructType] = None)
-      : Seq[String] = {
-    import org.apache.spark.sql.functions.lit
-    val change =
-      pre.withColumn("_change_type", lit("update_preimage"))
-        .unionByName(post.withColumn("_change_type",
-          lit("update_postimage")))
-        .unionByName(ins.withColumn("_change_type", lit("insert")))
-    stageCdc(spark, tablePath, root, mapMode, change, evolvedLogical)
-  }
+      : Seq[String] =
+    if (!cdfEnabled(spark, tablePath)) Seq.empty
+    else {
+      import org.apache.spark.sql.functions.{broadcast, col, lit}
+      val kc = keys.map(c => col(s"`$c`"))
+      val mk = matched.fold(batch.select(kc: _*).limit(0))(
+        _.select(kc: _*).distinct())
+      val change = matched.getOrElse(batch.limit(0))
+        .withColumn("_change_type", lit("update_preimage"))
+        .unionByName(updated.getOrElse(
+            batch.join(broadcast(mk), keys, "leftsemi"))
+          .withColumn("_change_type", lit("update_postimage")))
+        .unionByName(batch.join(broadcast(mk), keys, "leftanti")
+          .withColumn("_change_type", lit("insert")))
+      stageCdc(spark, tablePath, root, mapMode, change, evolvedLogical)
+    }
 
   /** Stage `changes` (table columns + `_change_type`) as parquet under
     * `_change_data/` and return the cdc actions referencing them. The

@@ -1408,15 +1408,7 @@ object IcebergLog {
       data: Seq[LiveEntry], dels: Seq[LiveEntry],
       fields: Option[Seq[(Int, String, String)]]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, element_at, lit, split, typedLit}
-    // file NAME → sequence number. Our writer's names are uuids (unique by
-    // construction), but an externally-written table may repeat a basename
-    // across directories — basename matching would then silently misapply
-    // position deletes, so duplicate names refuse up front.
-    val allNames = data.map(e => new File(e.path).getName)
-    require(allNames.distinct.size == allNames.size,
-      "duplicate data-file basenames in the live set: position-delete " +
-        "matching is by file name and would be ambiguous — " +
-        allNames.diff(allNames.distinct).distinct.mkString(","))
+    requireUniqueBasenames(data)
     // seq attaches via a MAP LITERAL lookup, not a broadcast join: the
     // map is driver-known (the live-set listing), a literal rides the
     // stage's existing task-binary broadcast, and every broadcast
@@ -1449,6 +1441,20 @@ object IcebergLog {
       cur = cur.join(broadcast(ed), cond, "left_anti")
     }
     cur
+  }
+
+  /** Position deletes and a match scan's touched files address data files
+    * by NAME (`__graft_file`). Our writer's names are uuids (unique by
+    * construction), but an externally-written table may repeat a basename
+    * across directories — name matching would then silently misapply a
+    * delete or tombstone the wrong file, so duplicate names refuse.
+    */
+  private def requireUniqueBasenames(data: Seq[LiveEntry]): Unit = {
+    val names = data.map(e => new File(e.path).getName)
+    require(names.distinct.size == names.size,
+      "duplicate data-file basenames in the live set: position deletes " +
+        "and touched files match by file name and would be ambiguous — " +
+        names.diff(names.distinct).distinct.mkString(","))
   }
 
   /** The provenance columns [[liveWithMeta]] attaches. */
@@ -2804,12 +2810,20 @@ object IcebergLog {
     // survivors + batch restage WITH their partition tuples (the
     // merge/compaction discipline): a rewrite must not degrade future
     // manifest pruning, and untouched entries carry their full manifest
-    // record forward
-    val staged: Seq[(File, Map[String, Any])] =
-      if (out.isEmpty) Seq.empty
-      else if (meta.specFields.isEmpty)
+    // record forward. A delete may leave no row: the staged footers say
+    // so (an empty frame still stages a schema-only file), and then
+    // only the tombstones commit
+    val staged0: Seq[(File, Map[String, Any])] =
+      if (meta.specFields.isEmpty)
         stageData(out, root).map(_ -> Map.empty[String, Any])
       else stagePartitioned(out, root, meta.specFields)
+    val staged =
+      if (graft.operators.Compaction.footerRowCount(spark,
+          staged0.map(_._1.getPath)) > 0L) staged0
+      else {
+        staged0.foreach(f => Files.deleteIfExists(f._1.toPath))
+        Seq.empty
+      }
     val nextEntries = entries.map { e =>
       if (touchedPaths(e.path)) existingEntry(e).copy(status = 2)
       else existingEntry(e)
@@ -2901,20 +2915,16 @@ object IcebergLog {
     * transform (`k = v ⇒ t(k) = t(v)`), so identity, `day`, `bucket`
     * and `truncate` fields all prune (the bucket case is the classic
     * upsert layout: `bucket(N, id)` spreads writes, and a batch of M
-    * keys touches at most M of N buckets). The distinct collect is
-    * CAPPED at 10k values with the cap checked on the PRE-null-filter
-    * count — pruning is strictly best-effort and a truncated list must
-    * never prune. Null batch values drop (an equi-join key never
-    * matches null); a key with NO non-null values matches no file at
-    * all; tuple values compare TYPED (Long/String) and any cross-class
-    * compare keeps the file. Files without the tuple (older spec) keep.
-    * Inserts are unaffected — they stage from the batch.
+    * keys touches at most M of N buckets). The values are
+    * [[MergeBatch.keyValues]] (capped; over the cap nothing prunes; no
+    * non-null value matches no file); tuple values compare TYPED
+    * (Long/String) and any cross-class compare keeps the file. Files
+    * without the tuple (older spec) keep. Inserts are unaffected — they
+    * stage from the batch.
     */
-  private def pruneEntriesByBatchKeys(src: DataFrame, keys: Seq[String],
-      specFields: Seq[SpecField],
+  private def pruneEntriesByBatchKeys(batch: MergeBatch.Batch,
+      keys: Seq[String], specFields: Seq[SpecField],
       entries: Seq[LiveEntry]): Seq[LiveEntry] = {
-    import org.apache.spark.sql.functions.col
-    val maxKeyPruneValues = 10000
     def norm(v: Any): Any = v match {
       case i: Int => i.toLong
       case other => other
@@ -2922,34 +2932,28 @@ object IcebergLog {
     specFields.filter(f => keys.contains(f.sourceName) &&
         Transforms.isKnown(f.transform)).foldLeft(entries) { (es, f) =>
       if (es.isEmpty) es
-      else {
-        val raw = src.select(col(s"`${f.sourceName}`")).distinct()
-          .limit(maxKeyPruneValues + 1).collect()
-        if (raw.length > maxKeyPruneValues) es
-        else {
-          val vals = raw.map(_.get(0)).filter(_ != null).toSeq
-          if (vals.isEmpty) Seq.empty
-          else {
-            val tvals: Option[Set[Any]] =
-              try Some(vals.map(v => norm(Transforms(f.transform, v))).toSet)
-              catch { case scala.util.control.NonFatal(_) => None }
-            tvals match {
-              case None => es // untransformable batch type: keep all
-              case Some(tv) => es.filter(e =>
-                e.partitionValues.get(f.name) match {
-                  case None => true // file predates this spec field
-                  case Some(null) => false // all-null source: no equi-match
-                  case Some(pv) => norm(pv) match {
-                    case p: Long if tv.forall(_.isInstanceOf[Long]) =>
-                      tv.contains(p)
-                    case p: String if tv.forall(_.isInstanceOf[String]) =>
-                      tv.contains(p)
-                    case _ => true // cross-class compare: keep
-                  }
-                })
-            }
+      else MergeBatch.keyValues(batch, f.sourceName) match {
+        case None => es
+        case Some(vals) if vals.isEmpty => Seq.empty
+        case Some(vals) =>
+          val tvals: Option[Set[Any]] =
+            try Some(vals.map(v => norm(Transforms(f.transform, v))).toSet)
+            catch { case scala.util.control.NonFatal(_) => None }
+          tvals match {
+            case None => es // untransformable batch type: keep all
+            case Some(tv) => es.filter(e =>
+              e.partitionValues.get(f.name) match {
+                case None => true // file predates this spec field
+                case Some(null) => false // all-null source: no equi-match
+                case Some(pv) => norm(pv) match {
+                  case p: Long if tv.forall(_.isInstanceOf[Long]) =>
+                    tv.contains(p)
+                  case p: String if tv.forall(_.isInstanceOf[String]) =>
+                    tv.contains(p)
+                  case _ => true // cross-class compare: keep
+                }
+              })
           }
-        }
       }
     }
   }
@@ -2983,10 +2987,10 @@ object IcebergLog {
     *
     * Refuses ambiguous sources (two source rows for one key) like the
     * Delta verb. Source must carry exactly the table's columns (any
-    * order); schema evolution stays a Delta-side feature. Resolution of
-    * touched files is by basename, which [[liveWithMeta]] has already
-    * REQUIRED to be unique across the live set (adopted layouts with
-    * colliding basenames refuse loudly there).
+    * order) unless `mergeSchema` evolves it. Resolution of touched
+    * files is by basename, which [[matchScan]] REQUIRES to be unique
+    * across the live set (adopted layouts with colliding basenames
+    * refuse loudly there).
     *
     * `matchCondition` is the Delta verb's extra ON predicate on the
     * SECOND protocol (`ON keys AND pred`): a predicate over TARGET
@@ -3002,17 +3006,11 @@ object IcebergLog {
       matchCondition: Option[org.apache.spark.sql.Column] = None,
       mergeSchema: Boolean = false)
       : MergeStats = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit}
+    import org.apache.spark.sql.functions.{broadcast, col, lit}
     val root = new File(tablePath)
-    val base = headVersion(tablePath)
-    val (data, dels) = liveSplitEntries(tablePath)
-    require(data.nonEmpty, s"not a live Iceberg table: $tablePath")
-    val meta = parseMeta(currentMetadataFile(tablePath))
+    val t = mergeTarget(spark, tablePath)
+    val (data, meta, schema) = (t.data, t.meta, t.schema)
     requireNotMirror(meta, tablePath, "merge")
-    // an EVOLVED table mixes old-schema files with merged-schema ones;
-    // the scans read through the recorded schema, NULL-filling old files
-    val fields = meta.recordedFields
-    val schema = tableSchema(spark, fields, data)
     val cols = schema.fieldNames.toSeq
     // SCHEMA EVOLUTION (`mergeSchema` — [[DeltaWrite.merge]]'s Delta
     // parity on the second protocol): source columns beyond the table
@@ -3101,87 +3099,24 @@ object IcebergLog {
       }
     val evolvedMapping: Map[Int, String] =
       if (newCols.isEmpty) Map.empty
-      else evolvedSchema.map(t => t._1 -> t._2).toMap
-    // cast the batch to the table's exact types — a wider-typed batch
-    // must not restage touched files under a different physical type
-    // than the untouched files keep (new columns keep the source type).
-    // Materialized ONCE (eager local checkpoint): the batch feeds the
-    // validation aggregate, the key broadcast of the match scan, the
-    // partition-key prune collect, and the batch-landing union of the
-    // restage — each would otherwise replay the caller's source plan
-    // from scratch (an arbitrary computation at 100 TB, not a cheap
-    // scan). Incremental-batch sized by contract, same executor-storage
-    // trade as [[Dedup]]'s signature materialization.
-    val src = source.select(allCols.map(c =>
-      col(s"`$c`").cast(
-        if (newCols.contains(c)) source.schema(c).dataType
-        else schema(c).dataType).as(c)): _*).localCheckpoint(true)
-    // ONE validation pass over the batch: total rows and the max per-key
-    // multiplicity from a single aggregate (was: a duplicate-detection
-    // job plus a separate count job — two full passes)
-    val kstats = src.groupBy(keys.map(c => col(s"`$c`")): _*)
-      .agg(count(lit(1)).as("__n"))
-      .agg(org.apache.spark.sql.functions.sum(col("__n")),
-        org.apache.spark.sql.functions.max(col("__n"))).head
-    val srcCount = if (kstats.isNullAt(0)) 0L else kstats.getLong(0)
-    require(srcCount == 0L || kstats.getLong(1) <= 1L,
-      "merge source has multiple rows for the same key (ambiguous match)")
-    if (srcCount == 0L) // empty batch: a no-op, not an empty snapshot
-      return MergeStats(meta.currentSnapshotId, 0, 0, 0L, 0L)
-    val srcKeys = src.select(keys.map(c => col(s"`$c`")): _*)
-    // touched-file resolution is by basename over the FULL live set, so
-    // uniqueness must hold over the FULL live set — a pruned match scan
-    // would let liveWithMeta's own require see only the candidates, and
-    // a collision with a pruned file would silently tombstone the wrong
-    // one (rows lost). Refuse up front, pruned or not.
-    val allNames = data.map(e => new File(e.path).getName)
-    require(allNames.distinct.size == allNames.size,
-      "duplicate data-file basenames in the live set: touched-file " +
-        "resolution is by file name and would be ambiguous — " +
-        allNames.diff(allNames.distinct).distinct.mkString(","))
-    // the extra match condition with SQL join NULL semantics; its
-    // partition conjuncts prune candidate files from the MANIFEST
-    // tuples first — a pruned file can contain no condition-true row
-    // (conjunct SQL replay is identity-fields-only; transformed fields
-    // prune through the typed key lever below)
-    val condT = matchCondition.map(c => coalesce(c, lit(false)))
-    val specCols = meta.specFields.filter(_.isIdentity).map(_.name)
-    val condPruned = matchCondition.fold(data)(c =>
-      pruneEntriesByConjuncts(spark, schema, data, c, specCols))
-    val candidates = pruneEntriesByBatchKeys(src, keys, meta.specFields,
-      condPruned)
-    val scan =
-      if (candidates.isEmpty) None
-      else Some(liveWithMeta(spark, tablePath, candidates, dels, fields))
-    // only condition-true rows make a file touched — a file whose key
-    // hits are all condition-false keeps its physical identity. ONE
-    // aggregation over the matched scan returns the touched-file set
-    // (bounded by live-file count, the same driver-state class as the
-    // log listing), the target-row count, AND the distinct-key count —
-    // previously the touched collect and the duplicate-target stats were
-    // two separate jobs, each reading every candidate file end to end.
-    val kc = keys.map(c => col(s"`$c`"))
-    val matchAgg = scan.map(sc =>
-      condT.fold(sc)(sc.filter(_))
-        .join(broadcast(srcKeys), keys, "leftsemi")
-        .agg(org.apache.spark.sql.functions
-            .collect_set(col("__graft_file")),
-          count(lit(1)),
-          org.apache.spark.sql.functions.count_distinct(kc.head,
-            kc.tail: _*)).head)
-    val touchedNames = matchAgg.fold(Set.empty[String])(
-      _.getSeq[String](0).toSet)
+      else evolvedSchema.map(f => f._1 -> f._2).toMap
+    val batch = MergeBatch(source, schema, keys) match {
+      case Some(b) => b
+      case None => return MergeStats(meta.currentSnapshotId, 0, 0, 0L, 0L)
+    }
+    val (src, srcKeys) = (batch.rows, batch.keys)
+    val m = matchScan(spark, tablePath, t, batch, keys, matchCondition)
+    val st = MergeBatch.stats(m.map(_.rows), "__graft_file", keys)
     val byName = data.map(e => new File(e.path).getName -> e).toMap
-    val touched = touchedNames.toSeq.sorted.map(n => byName.getOrElse(n,
+    val touched = st.files.sorted.map(n => byName.getOrElse(n,
       throw new IllegalStateException(s"touched file not in live set: $n")))
-    val (out, rowsUpdated, rowsInserted) =
-      if (touched.isEmpty) (src, 0L, srcCount)
+    val out =
+      if (touched.isEmpty) src
       else {
         // live rows of touched files only (deletes still applied)
-        val tr = scan.get.filter(
-          col("__graft_file").isin(touchedNames.toSeq: _*))
-        val (nUpdated, nKeys) =
-          (matchAgg.get.getLong(1), matchAgg.get.getLong(2))
+        val tr = liveWithMeta(spark, tablePath, touched, t.dels,
+          meta.recordedFields)
+        val condT = m.get.condition
         // condition-false rows survive AS-IS even under a matching key;
         // only condition-true matches are replaced by the batch. ONE
         // pass over the touched files: a left-outer match marker plus
@@ -3207,7 +3142,7 @@ object IcebergLog {
         // joined from the (unique-keyed) source, never a collapse to
         // one row with the rest silently lost.
         val batchLanding =
-          if (nUpdated == nKeys) src
+          if (st.rows == st.keys) src
           else {
             val matched = condT.fold(tr)(tr.filter(_))
               .join(broadcast(srcKeys), keys, "leftsemi")
@@ -3219,7 +3154,7 @@ object IcebergLog {
             updated.unionByName(
               src.join(broadcast(matchedKeys), keys, "leftanti"))
           }
-        (survivors.unionByName(batchLanding), nUpdated, srcCount - nKeys)
+        survivors.unionByName(batchLanding)
       }
     val spec = meta.specFields
     val staged: Seq[(File, Map[String, Any])] =
@@ -3230,13 +3165,13 @@ object IcebergLog {
       data.map(e =>
         if (touchedSet(e.path)) existingEntry(e).copy(status = 2)
         else existingEntry(e)) ++
-      dels.map(existingEntry) ++ // untouched old files still need them
+      t.dels.map(existingEntry) ++ // untouched old files still need them
       staged.map { case (f, pv) =>
         addedEntry(f, statsFields).copy(partitionValues = pv)
       }
-    val sid = commitSnapshot(tablePath, base, nextEntries,
+    val sid = commitSnapshot(tablePath, t.base, nextEntries,
       operation = "overwrite", schemaFields = evolvedSchema, nameMapping = evolvedMapping)
-    MergeStats(sid, touched.size, staged.size, rowsUpdated, rowsInserted)
+    MergeStats(sid, touched.size, staged.size, st.rows, batch.count - st.keys)
   }
 
   /** MERGE-ON-READ MERGE — the production shape for frequent small
@@ -3250,103 +3185,125 @@ object IcebergLog {
     * identity; reads apply the delete at its sequence number; a later
     * [[rewriteDataFiles]] folds the debt back into plain files.
     *
-    * Candidate files for the match scan prune exactly like the CoW
-    * verb (batch key values through any partition transform); the scan
-    * reads THROUGH live v2 delete files so MoR-dead rows re-insert,
-    * never resurrect. The fresh batch files are ADDED at this
-    * snapshot's sequence number and the delete file only NAMES old
-    * files, so the new rows are never self-killed. DUPLICATE-KEY
-    * targets refuse loudly — kill-and-insert would collapse their
-    * multiplicity where the CoW verb preserves it; schema evolution
-    * stays a CoW-merge feature. Commits as one `overwrite` snapshot at
-    * the base it read ([[commitSnapshot]]).
+    * The batch check, candidate pruning (batch key values through any
+    * partition transform) and match scan are the CoW verb's
+    * ([[MergeBatch]], [[matchScan]]); the scan reads THROUGH live v2
+    * delete files so MoR-dead rows re-insert, never resurrect. The
+    * fresh batch files are ADDED at this snapshot's sequence number and
+    * the delete file only NAMES old files, so the new rows are never
+    * self-killed. DUPLICATE-KEY targets refuse loudly — kill-and-insert
+    * would collapse their multiplicity where the CoW verb preserves it;
+    * schema evolution stays a CoW-merge feature. Commits as one
+    * `overwrite` snapshot at the base it read ([[commitSnapshot]]).
     */
   def mergeMoR(spark: SparkSession, tablePath: String, source: DataFrame,
       keys: Seq[String],
       statsFields: Seq[(Int, String)] = Seq.empty): MergeStats = {
-    import org.apache.spark.sql.functions.{broadcast, col, count, count_distinct, lit}
+    import org.apache.spark.sql.functions.col
     val root = new File(tablePath)
-    val base = headVersion(tablePath)
-    val (data, dels) = liveSplitEntries(tablePath)
-    require(data.nonEmpty, s"not a live Iceberg table: $tablePath")
-    val meta = parseMeta(currentMetadataFile(tablePath))
+    val t = mergeTarget(spark, tablePath)
     // physically name-mapped mirrors stay refused (the CoW merge's
     // rule); EVOLVED tables (identity-mapped schema record) MoR-merge
     // first-class: the match scan reads through the recorded schema so
     // old files NULL-fill the evolved columns, the positional kills are
     // schema-blind, and the batch appends in the CURRENT shape — old
     // files stay physically old
-    requireNotMirror(meta, tablePath, "MoR merge")
-    val fields = meta.recordedFields
-    val schema = tableSchema(spark, fields, data)
-    val cols = schema.fieldNames.toSeq
+    requireNotMirror(t.meta, tablePath, "MoR merge")
+    val cols = t.schema.fieldNames.toSeq
     require(cols.forall(source.columns.contains) &&
         source.columns.forall(cols.contains),
       s"merge source columns ${source.columns.mkString(",")} must " +
         s"match table columns ${cols.mkString(",")}")
-    // batch materialized once + ONE validation pass (sum/max over the
-    // per-key counts) — the same two-jobs-to-one and replay-once levers
-    // as the CoW [[merge]]
-    val src = source.select(cols.map(c =>
-      col(s"`$c`").cast(schema(c).dataType).as(c)): _*)
-      .localCheckpoint(true)
-    val kstats = src.groupBy(keys.map(c => col(s"`$c`")): _*)
-      .agg(count(lit(1)).as("__n"))
-      .agg(org.apache.spark.sql.functions.sum(col("__n")),
-        org.apache.spark.sql.functions.max(col("__n"))).head
-    val srcCount = if (kstats.isNullAt(0)) 0L else kstats.getLong(0)
-    require(srcCount == 0L || kstats.getLong(1) <= 1L,
-      "merge source has multiple rows for the same key (ambiguous match)")
-    if (srcCount == 0L) // empty batch: a no-op, not an empty snapshot
-      return MergeStats(meta.currentSnapshotId, 0, 0, 0L, 0L)
-    val srcKeys = src.select(keys.map(c => col(s"`$c`")): _*)
-    // position deletes address rows by file NAME on the read side —
-    // uniqueness must hold over the FULL live set (same guard as CoW)
-    val allNames = data.map(e => new File(e.path).getName)
-    require(allNames.distinct.size == allNames.size,
-      "duplicate data-file basenames in the live set: position-delete " +
-        "matching is by file name and would be ambiguous — " +
-        allNames.diff(allNames.distinct).distinct.mkString(","))
-    val candidates = pruneEntriesByBatchKeys(src, keys, meta.specFields, data)
-    // matched rows: (file, pos) pairs + their keys, persisted once —
-    // incremental-batch sized (bounded by the match count)
-    val matched =
-      if (candidates.isEmpty) None
-      else Some(liveWithMeta(spark, tablePath, candidates, dels, fields)
-        .join(broadcast(srcKeys), keys, "leftsemi")
-        .select((Seq(col("__graft_file"), col("__graft_pos")) ++
-          keys.map(c => col(s"`$c`"))): _*)
-        .persist())
+    val batch = MergeBatch(source, t.schema, keys) match {
+      case Some(b) => b
+      case None => return MergeStats(t.meta.currentSnapshotId, 0, 0, 0L, 0L)
+    }
+    // matched rows: (file, pos) pairs + their keys, persisted once for
+    // the match aggregate and the kill stage — incremental-batch sized
+    // (bounded by the match count)
+    val matched = matchScan(spark, tablePath, t, batch, keys, None)
+      .map(_.rows.select((Seq(col("__graft_file"), col("__graft_pos")) ++
+        keys.map(c => col(s"`$c`"))): _*).persist())
     try {
-      val (nMatched, nKeys) = matched.map { m =>
-        val st = m.agg(count(lit(1)),
-          count_distinct(col(s"`${keys.head}`"),
-            keys.tail.map(c => col(s"`$c`")): _*)).head
-        (st.getLong(0), st.getLong(1))
-      }.getOrElse((0L, 0L))
-      require(nMatched == nKeys,
-        s"MoR merge matched $nMatched target rows over $nKeys keys — " +
+      val st = MergeBatch.stats(matched, "__graft_file", keys)
+      require(st.rows == st.keys,
+        s"MoR merge matched ${st.rows} target rows over ${st.keys} keys — " +
           "duplicate-key targets would lose multiplicity under " +
           "kill-and-insert; use the CoW merge (it preserves them)")
       // the delete file records FULL paths as the manifests name them
       val staged: Seq[(File, Map[String, Any])] =
-        if (meta.specFields.isEmpty)
-          stageData(src, root).map(_ -> Map.empty[String, Any])
-        else stagePartitioned(src, root, meta.specFields)
+        if (t.meta.specFields.isEmpty)
+          stageData(batch.rows, root).map(_ -> Map.empty[String, Any])
+        else stagePartitioned(batch.rows, root, t.meta.specFields)
       require(staged.nonEmpty, s"no data files produced for $tablePath")
       val delFile: Seq[FixtureEntry] =
-        if (nMatched == 0L) Seq.empty
-        else stagePositionDelete(spark, root, data,
+        if (st.rows == 0L) Seq.empty
+        else stagePositionDelete(spark, root, t.data,
             matched.get.select(col("__graft_file"), col("__graft_pos")))
-          .map(x => FixtureEntry(1, x.getPath, nMatched, content = 1))
-      val sid = commitSnapshot(tablePath, base,
-        (data ++ dels).map(existingEntry) ++
+          .map(x => FixtureEntry(1, x.getPath, st.rows, content = 1))
+      val sid = commitSnapshot(tablePath, t.base,
+        (t.data ++ t.dels).map(existingEntry) ++
           staged.map { case (f, pv) =>
             addedEntry(f, statsFields).copy(partitionValues = pv)
           } ++ delFile,
         operation = "overwrite")
-      MergeStats(sid, 0, staged.size, nMatched, srcCount - nKeys)
+      MergeStats(sid, 0, staged.size, st.rows, batch.count - st.keys)
     } finally matched.foreach { m => m.unpersist(); () }
+  }
+
+  /** What a merge reads of the table before it touches the batch: the
+    * snapshot it read (the commit's fail-fast base), the live data and
+    * delete entries, the metadata, and the table schema — the recorded
+    * one, so an EVOLVED table's scans NULL-fill old files.
+    */
+  private final case class MergeTarget(base: Long, data: Seq[LiveEntry],
+      dels: Seq[LiveEntry], meta: TableMeta,
+      schema: org.apache.spark.sql.types.StructType)
+
+  /** Both merge verbs' read of the table. */
+  private def mergeTarget(spark: SparkSession,
+      tablePath: String): MergeTarget = {
+    val base = headVersion(tablePath)
+    val (data, dels) = liveSplitEntries(tablePath)
+    require(data.nonEmpty, s"not a live Iceberg table: $tablePath")
+    val meta = parseMeta(currentMetadataFile(tablePath))
+    MergeTarget(base, data, dels, meta,
+      tableSchema(spark, meta.recordedFields, data))
+  }
+
+  /** The match step both merge verbs share. Touched files and position
+    * deletes resolve by basename over the FULL live set, so uniqueness
+    * must hold over the full set — checked here, before pruning, since a
+    * pruned scan's own check would see only the candidates and a
+    * collision with a pruned file would tombstone or kill the wrong one.
+    * Candidates prune from MANIFEST tuples before any data file opens:
+    * by the match condition's identity-partition conjuncts
+    * ([[pruneEntriesByConjuncts]]), then by the batch's key values
+    * through any partition transform ([[pruneEntriesByBatchKeys]]). The
+    * candidates read THROUGH live v2 delete files ([[liveWithMeta]]: a
+    * MoR-dead row is no match, so it re-inserts rather than resurrects)
+    * and semi-join against the batch keys under the condition. No
+    * candidates, no scan.
+    */
+  private def matchScan(spark: SparkSession, tablePath: String,
+      t: MergeTarget, batch: MergeBatch.Batch, keys: Seq[String],
+      matchCondition: Option[org.apache.spark.sql.Column])
+      : Option[MergeBatch.Matched] = {
+    import org.apache.spark.sql.functions.{broadcast, coalesce, lit}
+    requireUniqueBasenames(t.data)
+    val condPruned = matchCondition.fold(t.data)(c =>
+      pruneEntriesByConjuncts(spark, t.schema, t.data, c,
+        t.meta.specFields.filter(_.isIdentity).map(_.name)))
+    val candidates = pruneEntriesByBatchKeys(batch, keys, t.meta.specFields,
+      condPruned)
+    if (candidates.isEmpty) None
+    else {
+      val cond = matchCondition.map(coalesce(_, lit(false)))
+      val scan = liveWithMeta(spark, tablePath, candidates, t.dels,
+        t.meta.recordedFields)
+      Some(MergeBatch.Matched(cond.fold(scan)(scan.filter(_))
+        .join(broadcast(batch.keys), keys, "leftsemi"), cond))
+    }
   }
 
   /** Outcome of a [[rewriteDataFiles]] compaction. */

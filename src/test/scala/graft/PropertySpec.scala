@@ -349,19 +349,22 @@ class PropertySpec extends SparkSpec {
   }
 
   /** The fuzzers' steps: each generated op with its batch and delete key,
-    * followed by its optional [[replaceWhereGen]] step. The replace steps
-    * are drawn after the other lists, which therefore draw exactly as
-    * they did before REPLACE WHERE joined the fuzz.
+    * followed by its optional step from each of `extras` (REPLACE WHERE
+    * from [[replaceWhereGen]], the merge-on-read merge), which reuse that
+    * batch and key. The extra lists are drawn after the other lists,
+    * which therefore draw exactly as they did before those steps joined
+    * the fuzz.
     */
-  private def withReplaceSteps[Op](ops: Seq[Op], batches: Seq[Seq[(Long, Long)]],
-      delKeys: Seq[Long], replaces: Seq[Option[Op]])
+  private def withExtraSteps[Op](ops: Seq[Op], batches: Seq[Seq[(Long, Long)]],
+      delKeys: Seq[Long], extras: Seq[Option[Op]]*)
       : Seq[((Op, Seq[(Long, Long)]), Long)] =
-    ops.zip(batches).zip(delKeys).zip(replaces).flatMap {
-      case (((op, b), k), r) => ((op, b), k) +: r.toSeq.map(rw => ((rw, b), k))
+    ops.indices.flatMap { i =>
+      ((ops(i), batches(i)), delKeys(i)) +:
+        extras.flatMap(_(i)).map(x => ((x, batches(i)), delKeys(i)))
     }
 
   /** The Delta fuzz's mirror for the second format: append / merge /
-    * deleteWhere / MoR deletes / rewrite / expireSnapshots
+    * MoR merge / deleteWhere / MoR deletes / rewrite / expireSnapshots
     * interleavings, model-checked after every step, with history replay
     * for snapshots the expiry hasn't dropped. `dayPartitioned` runs the
     * whole mix over a days(ts)-partitioned table (ts derived from the
@@ -382,6 +385,7 @@ class PropertySpec extends SparkSpec {
     case object EqDelete extends Op
     case object Rewrite extends Op
     case object Expire extends Op
+    case object MergeMoR extends Op
     final case class ReplaceWhere(lo: Long, hi: Long,
         batch: Seq[(Long, Long)]) extends Op
     val opGen: Gen[Op] = Gen.frequency(4 -> Gen.const(Append),
@@ -394,11 +398,15 @@ class PropertySpec extends SparkSpec {
       keys <- Gen.listOfN(n, Gen.choose(0L, 9L))
       tag <- Gen.choose(0L, 1000L)
     } yield keys.distinct.map(k => k -> (k * 1000 + tag))
+    // a merge-on-read merge after about one op in three
+    val morGen: Gen[Option[Op]] =
+      Gen.frequency(2 -> Gen.const(None), 1 -> Gen.const(Some(MergeMoR)))
     forSamples(Gen.zip(Gen.listOfN(8, opGen), Gen.listOfN(8, batchGen),
         Gen.listOfN(8, Gen.choose(0L, 9L)),
-        Gen.listOfN(8, replaceWhereGen(ReplaceWhere))), n = samples) {
-      case (ops0, batches0, delKeys0, replaces) =>
-        val steps = withReplaceSteps(ops0, batches0, delKeys0, replaces)
+        Gen.listOfN(8, replaceWhereGen(ReplaceWhere)),
+        Gen.listOfN(8, morGen)), n = samples) {
+      case (ops0, batches0, delKeys0, replaces, mors) =>
+        val steps = withExtraSteps(ops0, batches0, delKeys0, replaces, mors)
         val ops = steps.map(_._1._1)
         val tbl = java.nio.file.Files
           .createTempDirectory("graft-ice-fuzz").toString + "/t"
@@ -503,6 +511,21 @@ class PropertySpec extends SparkSpec {
                 st.rowsInserted ===
                   batch.count { case (k, _) => !model.contains(k) }.toLong,
                 s"merge stats mismatch after ops $ops: $st")
+              model = model ++ batch.toMap
+              history :+= ((st.snapshotId, model))
+            case MergeMoR if exists && model.nonEmpty =>
+              // kill-and-insert upsert: matched rows die in one position-
+              // delete file, the batch appends — the CoW merge's model
+              // (the model never holds duplicate ids, so the dup-target
+              // refusal cannot fire)
+              val st = IcebergLog.mergeMoR(spark, tbl, df(batch), Seq("id"),
+                Seq(1 -> "id"))
+              assert(st.rowsUpdated ===
+                  batch.count { case (k, _) => model.contains(k) }.toLong &&
+                st.rowsInserted ===
+                  batch.count { case (k, _) => !model.contains(k) }.toLong &&
+                st.filesRewritten === 0,
+                s"MoR merge stats mismatch after ops $ops: $st")
               model = model ++ batch.toMap
               history :+= ((st.snapshotId, model))
             case Delete if exists && model.nonEmpty =>
@@ -646,7 +669,7 @@ class PropertySpec extends SparkSpec {
         Gen.listOfN(10, Gen.choose(0L, 9L)),
         Gen.listOfN(10, replaceWhereGen(ReplaceWhere))), n = 6) {
       case (ops0, batches0, delKeys0, replaces) =>
-        val steps = withReplaceSteps(ops0, batches0, delKeys0, replaces)
+        val steps = withExtraSteps(ops0, batches0, delKeys0, replaces)
         val ops = steps.map(_._1._1)
         val tbl = java.nio.file.Files
           .createTempDirectory("graft-delta-fuzz").toString + "/t"

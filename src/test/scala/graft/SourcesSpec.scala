@@ -2348,9 +2348,70 @@ class SourcesSpec extends SparkSpec {
       assert(dst.rowsDeleted === 1L && dst.filesRewritten === 1)
       assert(ist.rowsDeleted === 1L && ist.filesRewritten === 1)
       // the counts a delete ran while it was its own body; Iceberg's
-      // three reads name their schema from the table (no inference job)
+      // three reads name their schema from the table (no inference job),
+      // and its restage learns from the staged footers that rows are
+      // left (no emptiness job)
       assert(dp.jobs.size === 6, dp.jobs.map(_.name).mkString(" | "))
-      assert(ip.jobs.size === 6, ip.jobs.map(_.name).mkString(" | "))
+      assert(ip.jobs.size === 5, ip.jobs.map(_.name).mkString(" | "))
+    } finally profile.close()
+  }
+
+  test("merge verbs run a pinned number of Spark jobs on each format") {
+    // both write modes of a format share the batch check, the candidate
+    // pruning and the match scan; each verb adds only the jobs of how
+    // its matched rows die (restage, DV bitmaps, position-delete file)
+    import graft.exec.QueryProfile
+    import graft.sources.{DeltaWrite, IcebergLog}
+    val s = spark
+    import s.implicits._
+    val files = Seq(Seq((1L, "a"), (2L, "b")), Seq((10L, "x"), (11L, "y")))
+    def delta(name: String): String = {
+      val t = s"$tmp/delta_merge_jobs_$name"
+      files.foreach(r => DeltaWrite.append(r.toDF("id", "v").repartition(1), t))
+      t
+    }
+    def ice(name: String): String = {
+      val t = s"$tmp/ice_merge_jobs_$name"
+      files.foreach(r => IcebergLog.append(r.toDF("id", "v").repartition(1), t,
+        Seq(1 -> "id")))
+      t
+    }
+    // x16b's shape: a partitioned table, the update moving its row
+    val part = s"$tmp/delta_merge_jobs_part"
+    files.zip(Seq("p", "q")).foreach { case (r, p) =>
+      DeltaWrite.appendPartitioned(r.toDF("id", "v")
+        .withColumn("part", lit(p)).repartition(1), part, Seq("part"))
+    }
+    val (deltaCow, deltaDv, iceCow, iceMor) =
+      (delta("cow"), delta("dv"), ice("cow"), ice("mor"))
+    // one update (id 1) and one insert (id 20)
+    val batch = Seq((1L, "u"), (20L, "n")).toDF("id", "v")
+    val profile = new QueryProfile(spark)
+    try {
+      val (dc, dcs) = profile.phase(DeltaWrite.merge(deltaCow, batch, Seq("id")))
+      val (dd, dds) = profile.phase(
+        DeltaWrite.mergeDv(spark, deltaDv, batch, Seq("id")))
+      val (ic, ics) = profile.phase(
+        IcebergLog.merge(spark, iceCow, batch, Seq("id"), Seq(1 -> "id")))
+      val (im, ims) = profile.phase(
+        IcebergLog.mergeMoR(spark, iceMor, batch, Seq("id"), Seq(1 -> "id")))
+      val (dp, dps) = profile.phase(DeltaWrite.merge(part,
+        batch.withColumn("part", lit("r")), Seq("id")))
+      Seq(dcs.rowsUpdated -> dcs.rowsInserted, dds.rowsUpdated -> dds.rowsInserted,
+        ics.rowsUpdated -> ics.rowsInserted, ims.rowsUpdated -> ims.rowsInserted,
+        dps.rowsUpdated -> dps.rowsInserted).foreach(st => assert(st === (1L -> 1L)))
+      def names(p: QueryProfile.Phase) = p.jobs.map(_.name).mkString(" | ")
+      // a changed count means a verb gained or lost a driver round trip
+      Seq("Delta merge" -> dc, "Delta mergeDv" -> dd, "Iceberg merge" -> ic,
+          "Iceberg mergeMoR" -> im, "Delta partitioned merge" -> dp)
+        .foreach { case (n, p) =>
+          info(s"$n: ${p.jobs.size} jobs, ${p.stages.size} stages, ${p.tasks} tasks")
+        }
+      assert(dc.jobs.size === 10, names(dc))
+      assert(dd.jobs.size === 14, names(dd))
+      assert(ic.jobs.size === 10, names(ic))
+      assert(im.jobs.size === 10, names(im))
+      assert(dp.jobs.size === 11, names(dp))
     } finally profile.close()
   }
 
