@@ -233,7 +233,7 @@ object Bench {
   private def stageMultiSplit(spark: SparkSession, sfDir: String,
       parts: Int): String = {
     val dst = java.nio.file.Files.createTempDirectory("graft-multirg").toString
-    spark.read.parquet(s"$sfDir/lineitem.parquet").repartition(parts)
+    graft.core.Tables.read(spark, s"$sfDir/lineitem.parquet").repartition(parts)
       .write.parquet(s"$dst/lineitem.parquet")
     info(s"staged $parts-split lineitem at $dst")
     dst

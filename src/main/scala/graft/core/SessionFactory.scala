@@ -43,7 +43,9 @@ object SessionFactory {
   }
 
   /** A session without the extension hooks: UTC, `shufflePartitions`, no
-    * UI, then `conf` in order (a later entry overrides an earlier one).
+    * UI, parquet TIMESTAMP(NANOS) read as raw INT64 nanos (the events
+    * table's encoding; see `Tables.normalizeEventTs`), then `conf` in order
+    * (a later entry overrides an earlier one).
     * Without `appName` Spark names the application itself. Every session
     * hoists primitive literals out of generated code
     * ([[graft.plans.HoistLiterals]]), so statements that differ only in
@@ -64,6 +66,7 @@ object SessionFactory {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     conf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)

@@ -27,7 +27,7 @@ object TpchGen {
     val written = tpchTables.filter(t =>
       new java.io.File(Tables.path(sfDir, t)).exists())
     written.foreach { t =>
-      spark.read.parquet(Tables.path(sfDir, t))
+      Tables.read(spark, Tables.path(sfDir, t))
         .write.mode("overwrite")
         .parquet(s"$dbDir/tables/$catalog/tpch/$t")
     }

@@ -2,19 +2,19 @@ package graft.functions
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+
+import graft.core.Tables
 
 /** `parquet_metadata('file.parquet')` table function (reference
   * `crates/datafusion-functions-parquet/src/lib.rs:143-291`): one row per
   * (row group x column chunk) with statistics, compression, encodings and
   * page offsets — the reference's 24-column schema. In SQL it is the
   * `parquet_metadata` entry of [[LakehouseTvf.functions]]. The footer is
-  * read with the session's Hadoop conf, so object-store settings
-  * (`S3Config`, `HfStore`) reach it as they reach a scan.
+  * read by `Tables.footer` with the session's Hadoop conf, so
+  * object-store settings (`S3Config`, `HfStore`) reach it as they reach
+  * a scan.
   */
 object ParquetMetadataTable {
 
@@ -45,10 +45,7 @@ object ParquetMetadataTable {
     StructField("total_uncompressed_size", LongType)))
 
   def apply(spark: SparkSession, path: String): DataFrame = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(path), spark.sessionState.newHadoopConf()))
-    val rows: Seq[Row] = try {
-      val footer = reader.getFooter
+    val rows: Seq[Row] = Tables.footer(spark.sessionState.newHadoopConf(), path) { footer =>
       footer.getBlocks.asScala.zipWithIndex.flatMap { case (block, rgId) =>
         val cols = block.getColumns.asScala.toSeq
         cols.zipWithIndex.map { case (c, colId) =>
@@ -82,7 +79,7 @@ object ParquetMetadataTable {
             c.getTotalUncompressedSize)
         }
       }.toSeq
-    } finally reader.close()
+    }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
 }

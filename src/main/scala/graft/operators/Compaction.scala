@@ -1,6 +1,11 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.core.Tables
 
 /** Small-file compaction: rewrite a directory of many undersized parquet
   * files into target-sized ones. The 100 TB maintenance operation every
@@ -23,19 +28,12 @@ object Compaction {
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(suffix))
 
-  private def parquetFooterRows(path: String): Long = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path),
-        new org.apache.hadoop.conf.Configuration()))
-    try reader.getRecordCount finally reader.close()
-  }
+  private def parquetFooterRows(conf: Configuration, path: String): Long =
+    Tables.footer(conf, path)(_.getBlocks.asScala.map(_.getRowCount).sum)
 
-  private def orcFooterRows(path: String): Long = {
+  private def orcFooterRows(conf: Configuration, path: String): Long = {
     val reader = org.apache.orc.OrcFile.createReader(
-      new org.apache.hadoop.fs.Path(path),
-      org.apache.orc.OrcFile.readerOptions(
-        new org.apache.hadoop.conf.Configuration()))
+      new org.apache.hadoop.fs.Path(path), org.apache.orc.OrcFile.readerOptions(conf))
     try reader.getNumberOfRows finally reader.close()
   }
 
@@ -45,17 +43,23 @@ object Compaction {
     * Re-scanning both sides to count rows would double the I/O of a
     * 100 TB maintenance pass; footers make verification proportional to
     * file COUNT. Small file sets read on the driver (same cost as the
-    * listing); large ones fan out as tasks.
+    * listing); large ones fan out as tasks (`Tables.perFile`).
     */
   private[graft] def footerRowCount(spark: SparkSession,
-      files: Seq[String], format: String = "parquet"): Long = {
-    val oneFooter: String => Long =
-      if (format == "orc") orcFooterRows else parquetFooterRows
-    if (files.isEmpty) 0L
-    else if (files.length <= 64) files.map(oneFooter).sum
-    else spark.sparkContext
-      .parallelize(files, math.min(files.length / 16 + 1, 256))
-      .map(oneFooter).sum().toLong
+      files: Seq[String], format: String = "parquet"): Long =
+    Tables.perFile(spark, files)(
+      if (format == "orc") orcFooterRows else parquetFooterRows).sum
+
+  /** A compaction's input: its data files and their read (parquet
+    * through `Tables.read`, whose schema comes from a footer).
+    */
+  private def input(spark: SparkSession, inDir: String, format: String)
+      : (Array[java.io.File], DataFrame) = {
+    require(format == "parquet" || format == "orc",
+      s"unsupported compaction format: $format")
+    (dataFiles(inDir, s".$format"),
+      if (format == "parquet") Tables.read(spark, inDir)
+      else spark.read.format(format).load(inDir))
   }
 
   /** Compact `inDir`'s data files into `outDir` targeting `targetBytes`
@@ -67,15 +71,11 @@ object Compaction {
   def compact(spark: SparkSession, inDir: String, outDir: String,
       targetBytes: Long = 128L * 1024 * 1024,
       format: String = "parquet"): Result = {
-    require(format == "parquet" || format == "orc",
-      s"unsupported compaction format: $format")
-    val suffix = s".$format"
-    val before = dataFiles(inDir, suffix)
-    val df = spark.read.format(format).load(inDir)
+    val (before, df) = input(spark, inDir, format)
     withAdvisorySize(spark, targetBytes) {
       df.hint("rebalance").write.mode("overwrite").format(format).save(outDir)
     }
-    val after = dataFiles(outDir, suffix)
+    val after = dataFiles(outDir, s".$format")
     val inRows = footerRowCount(spark, before.map(_.getPath).toSeq, format)
     val rows = footerRowCount(spark, after.map(_.getPath).toSeq, format)
     require(rows == inRows, s"compaction changed row count: $inRows -> $rows")
@@ -103,20 +103,16 @@ object Compaction {
       clusterCols: Seq[String], targetBytes: Long = 128L * 1024 * 1024,
       format: String = "parquet",
       writeOptions: Map[String, String] = Map.empty): Result = {
-    require(format == "parquet" || format == "orc",
-      s"unsupported compaction format: $format")
     require(clusterCols.nonEmpty, "compactClustered needs cluster columns")
     import org.apache.spark.sql.functions.col
-    val suffix = s".$format"
-    val before = dataFiles(inDir, suffix)
-    val df = spark.read.format(format).load(inDir)
+    val (before, df) = input(spark, inDir, format)
     withAdvisorySize(spark, targetBytes) {
       df.repartitionByRange(clusterCols.map(col): _*)
         .sortWithinPartitions(clusterCols.map(col): _*)
         .write.mode("overwrite").options(writeOptions).format(format)
         .save(outDir)
     }
-    val after = dataFiles(outDir, suffix)
+    val after = dataFiles(outDir, s".$format")
     val inRows = footerRowCount(spark, before.map(_.getPath).toSeq, format)
     val rows = footerRowCount(spark, after.map(_.getPath).toSeq, format)
     require(rows == inRows, s"compaction changed row count: $inRows -> $rows")
@@ -166,14 +162,10 @@ object Compaction {
       targetBytes: Long = 128L * 1024 * 1024,
       format: String = "parquet",
       writeOptions: Map[String, String] = Map.empty): Result = {
-    require(format == "parquet" || format == "orc",
-      s"unsupported compaction format: $format")
     require(zCols.size >= 2, "z-order needs at least 2 columns (use " +
       "compactClustered for 1)")
     import org.apache.spark.sql.functions._
-    val suffix = s".$format"
-    val before = dataFiles(inDir, suffix)
-    val df = spark.read.format(format).load(inDir)
+    val (before, df) = input(spark, inDir, format)
     val statCols = zCols.flatMap(c => Seq(
       min(col(c)).cast("double").as(s"mn_$c"),
       max(col(c)).cast("double").as(s"mx_$c")))
@@ -196,7 +188,7 @@ object Compaction {
         .write.mode("overwrite").options(writeOptions).format(format)
         .save(outDir)
     }
-    val after = dataFiles(outDir, suffix)
+    val after = dataFiles(outDir, s".$format")
     val inRows = footerRowCount(spark, before.map(_.getPath).toSeq, format)
     val rows = footerRowCount(spark, after.map(_.getPath).toSeq, format)
     require(rows == inRows, s"compaction changed row count: $inRows -> $rows")
@@ -232,21 +224,16 @@ object Compaction {
   }
 
   /** True iff every row group in `path` carries a bloom filter for
-    * `column` (footer check — bloom offsets are recorded per chunk).
+    * `column` (footer check — bloom offsets are recorded per chunk),
+    * read with the active session's Hadoop conf.
     */
-  def hasBloomFilter(path: String, column: String): Boolean = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path),
-        new org.apache.hadoop.conf.Configuration()))
-    try {
-      import scala.jdk.CollectionConverters._
-      val blocks = reader.getFooter.getBlocks.asScala
+  def hasBloomFilter(path: String, column: String): Boolean =
+    Tables.footer(SparkSession.active.sessionState.newHadoopConf(), path) { footer =>
+      val blocks = footer.getBlocks.asScala
       blocks.nonEmpty && blocks.forall(_.getColumns.asScala
         .filter(_.getPath.toDotString == column)
         .forall(_.getBloomFilterOffset >= 0))
-    } finally reader.close()
-  }
+    }
 
   private def withAdvisorySize[A](spark: SparkSession, bytes: Long)(f: => A): A = {
     val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"

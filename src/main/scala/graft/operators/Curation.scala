@@ -115,7 +115,7 @@ object Curation {
     * `localCheckpoint(eager)` — right for a single
     * job, but executor-pinned blocks are NOT fault-tolerant, so a real
     * 100 TB deployment passes a durable hook
-    * (`df => { df.write.parquet(p); spark.read.parquet(p) }`): stage
+    * (`df => { df.write.parquet(p); Tables.read(spark, p) }`): stage
     * outputs land in the lake, a lost executor re-reads instead of
     * failing the job, and each stage restarts from the last boundary.
     */

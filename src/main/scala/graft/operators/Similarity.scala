@@ -309,7 +309,7 @@ object Similarity {
   def ivfTopKFromIndex(emb: DataFrame, indexDir: String, isQuery: Column,
       k: Int = 10, nProbe: Int = 2,
       candidateFilter: Column = lit(true)): DataFrame =
-    ivfTopKWithCentroids(emb, emb.sparkSession.read.parquet(indexDir),
+    ivfTopKWithCentroids(emb, graft.core.Tables.read(emb.sparkSession, indexDir),
       isQuery, k, nProbe, candidateFilter)
 
   /** The search half of [[ivfTopK]], against any (label, centroid)

@@ -2,6 +2,7 @@ package graft.plans
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Literal}
@@ -12,6 +13,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.core.Tables
 
 /** Metadata-only `MIN`/`MAX` (+`COUNT(*)`): the companion of
   * [[FooterCountRule]] for the other aggregates parquet footers can answer
@@ -118,7 +121,8 @@ object FooterStats {
     case _ => false
   }
 
-  /** Per-file footer fold: for each requested column, Some((min, max)) as
+  /** One file's footer fold (open it with `Tables.footer`): the row count
+    * and, for each requested column, Some((min, max)) as
     * plain serializable values (None, None) when every row group is
     * all-null — or None for the whole file when any chunk's stats are
     * missing/untrusted. Strings travel as Array[Byte].
@@ -133,77 +137,71 @@ object FooterStats {
     * encoding, whose stats parquet-mr doesn't write anyway) bails the whole
     * file so the rule keeps the scan rather than fold a wrong unit.
     */
-  private[graft] def readOne(path: String, cols: Seq[String])
+  private[graft] def readOne(footer: ParquetMetadata, cols: Seq[String])
       : Option[(Long, Seq[(Option[Any], Option[Any])])] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path),
-        new org.apache.hadoop.conf.Configuration()))
-    try {
-      val schema = reader.getFooter.getFileMetaData.getSchema
-      // raw-stat → plain-value converter per requested column; an
-      // encoding we cannot convert exactly disables the whole file
-      // (→ no fold).
-      val convs: Seq[Any => Any] = cols.map { name =>
-        val desc = schema.getColumns.asScala
-          .find(_.getPath.mkString(".") == name).getOrElse(return None)
-        val pt = desc.getPrimitiveType
-        if (pt.getPrimitiveTypeName == PrimitiveTypeName.INT96) return None
-        pt.getLogicalTypeAnnotation match {
-          case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            ts.getUnit match {
-              // raw INT64 in the file's unit → Catalyst micros
-              case LogicalTypeAnnotation.TimeUnit.MICROS => identity[Any] _
-              case LogicalTypeAnnotation.TimeUnit.MILLIS =>
-                (v: Any) => Math.multiplyExact(
-                  v.asInstanceOf[java.lang.Long].longValue(), 1000L)
-              case _ => return None // NANOS / future units: never fold
-            }
-          case dec: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-            // parquet stores decimals as an unscaled INT32/INT64 or a
-            // big-endian two's-complement binary (FLBA/BINARY); either
-            // way the stat converts exactly to a BigDecimal at the
-            // column's declared scale
-            (v: Any) => v match {
-              case i: java.lang.Integer =>
-                java.math.BigDecimal.valueOf(i.longValue(), dec.getScale)
-              case l: java.lang.Long =>
-                java.math.BigDecimal.valueOf(l.longValue(), dec.getScale)
-              case b: org.apache.parquet.io.api.Binary =>
-                new java.math.BigDecimal(
-                  new java.math.BigInteger(b.getBytes), dec.getScale)
-              case other => other
-            }
-          case _ => identity[Any] _
-        }
-      }
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      val per = cols.zip(convs).map { case (name, conv) =>
-        var lo: Option[Any] = None
-        var hi: Option[Any] = None
-        for (b <- blocks) {
-          val cc = b.getColumns.asScala.find(_.getPath.toDotString == name)
-            .getOrElse(return None)
-          val st = cc.getStatistics
-          if (st == null || st.isEmpty) {
-            // no stats at all for a chunk with values → untrusted
-            if (cc.getValueCount > 0) return None
-          } else if (st.hasNonNullValue) {
-            val mn = toPlain(st.genericGetMin, conv)
-            val mx = toPlain(st.genericGetMax, conv)
-            lo = Some(lo.fold(mn)(v => if (plainLt(mn, v)) mn else v))
-            hi = Some(hi.fold(mx)(v => if (plainLt(v, mx)) mx else v))
-          } else if (!st.isNumNullsSet || st.getNumNulls != cc.getValueCount) {
-            return None // not provably all-null
+    val schema = footer.getFileMetaData.getSchema
+    // raw-stat → plain-value converter per requested column; an
+    // encoding we cannot convert exactly disables the whole file
+    // (→ no fold).
+    val convs: Seq[Any => Any] = cols.map { name =>
+      val desc = schema.getColumns.asScala
+        .find(_.getPath.mkString(".") == name).getOrElse(return None)
+      val pt = desc.getPrimitiveType
+      if (pt.getPrimitiveTypeName == PrimitiveTypeName.INT96) return None
+      pt.getLogicalTypeAnnotation match {
+        case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          ts.getUnit match {
+            // raw INT64 in the file's unit → Catalyst micros
+            case LogicalTypeAnnotation.TimeUnit.MICROS => identity[Any] _
+            case LogicalTypeAnnotation.TimeUnit.MILLIS =>
+              (v: Any) => Math.multiplyExact(
+                v.asInstanceOf[java.lang.Long].longValue(), 1000L)
+            case _ => return None // NANOS / future units: never fold
           }
-        }
-        (lo, hi)
+        case dec: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
+          // parquet stores decimals as an unscaled INT32/INT64 or a
+          // big-endian two's-complement binary (FLBA/BINARY); either
+          // way the stat converts exactly to a BigDecimal at the
+          // column's declared scale
+          (v: Any) => v match {
+            case i: java.lang.Integer =>
+              java.math.BigDecimal.valueOf(i.longValue(), dec.getScale)
+            case l: java.lang.Long =>
+              java.math.BigDecimal.valueOf(l.longValue(), dec.getScale)
+            case b: org.apache.parquet.io.api.Binary =>
+              new java.math.BigDecimal(
+                new java.math.BigInteger(b.getBytes), dec.getScale)
+            case other => other
+          }
+        case _ => identity[Any] _
       }
-      Some((rows, per))
-    } finally reader.close()
+    }
+    val blocks = footer.getBlocks.asScala.toSeq
+    val rows = blocks.map(_.getRowCount).sum
+    val per = cols.zip(convs).map { case (name, conv) =>
+      var lo: Option[Any] = None
+      var hi: Option[Any] = None
+      for (b <- blocks) {
+        val cc = b.getColumns.asScala.find(_.getPath.toDotString == name)
+          .getOrElse(return None)
+        val st = cc.getStatistics
+        if (st == null || st.isEmpty) {
+          // no stats at all for a chunk with values → untrusted
+          if (cc.getValueCount > 0) return None
+        } else if (st.hasNonNullValue) {
+          val mn = toPlain(st.genericGetMin, conv)
+          val mx = toPlain(st.genericGetMax, conv)
+          lo = Some(lo.fold(mn)(v => if (plainLt(mn, v)) mn else v))
+          hi = Some(hi.fold(mx)(v => if (plainLt(v, mx)) mx else v))
+        } else if (!st.isNumNullsSet || st.getNumNulls != cc.getValueCount) {
+          return None // not provably all-null
+        }
+      }
+      (lo, hi)
+    }
+    Some((rows, per))
   }
 
   private def toPlain(v: Any, conv: Any => Any): Any = conv(v) match {
@@ -234,19 +232,16 @@ object FooterStats {
     case _ => sys.error(s"unexpected stat type: ${a.getClass}")
   }
 
-  /** Fold footers across files (driver for small sets, tasks beyond 64 —
-    * same fan-out seam as Compaction.footerRowCount) and convert to
-    * Catalyst internal values. None = some file lacks usable stats.
+  /** Fold footers across files (`Tables.perFile`: driver for small sets,
+    * tasks beyond 64) and convert to Catalyst internal values.
+    * None = some file lacks usable stats.
     */
   private[plans] def merged(spark: SparkSession, files: Seq[String],
       names: Seq[String], types: Seq[DataType])
       : Option[(Long, Map[String, (Option[Any], Option[Any])])] = {
     if (files.isEmpty) return Some((0L, names.map(n => n -> (None, None)).toMap))
-    val perFile: Seq[Option[(Long, Seq[(Option[Any], Option[Any])])]] =
-      if (files.length <= 64) files.map(readOne(_, names))
-      else spark.sparkContext
-        .parallelize(files, math.min(files.length / 16 + 1, 256))
-        .map(readOne(_, names)).collect().toSeq
+    val perFile = Tables.perFile(spark, files)((conf, p) =>
+      Tables.footer(conf, p)(readOne(_, names)))
     if (perFile.exists(_.isEmpty)) return None
     val ok = perFile.flatten
     val rows = ok.map(_._1).sum

@@ -71,7 +71,7 @@ object Analytics {
       readFn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, (s, d) => {
       // time-sliced staging (e06b's shape): 3 files = 3 micro-batches
-      val raw = s.read.parquet(s"$d/events.parquet")
+      val raw = Tables.read(s, s"$d/events.parquet")
       val rawCols = raw.schema.fieldNames.map(col).toSeq
       val nSlices = 3
       val sliced = raw.withColumn("slice",
@@ -707,12 +707,11 @@ object Analytics {
     // copy per event across all triggers.
     QueryDef("e06b_stream_dedup_triggers", (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val es = graft.streaming.EventStream
       // footer-inferred schema, NOT a hard-coded one: slicing and
       // re-writing in the file's own encoding keeps the staged directory
       // homogeneous whatever ts encoding the external writer shipped
-      val raw = s.read.parquet(s"$d/events.parquet")
+      val raw = Tables.read(s, s"$d/events.parquet")
       val rawCols = raw.schema.fieldNames.map(col).toSeq
       val nSlices = 4
       val sliced = raw.withColumn("slice",
@@ -1225,7 +1224,7 @@ object Analytics {
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
         .repartition(4).write.parquet(inDir)
-      val schema = s.read.parquet(inDir).schema
+      val schema = Tables.schema(s, inDir)
       val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir)
         .writeStream
@@ -1244,7 +1243,7 @@ object Analytics {
       require(commits >= 2, s"expected one commit per micro-batch, got $commits")
       // a manual replay of an already-committed epoch must be a no-op
       val replay = graft.sources.DeltaWrite.appendIdempotent(
-        s.read.parquet(inDir).limit(5), tbl, "e19_sink", 0L)
+        Tables.read(s, inDir).limit(5), tbl, "e19_sink", 0L)
       require(replay.isEmpty, "replayed epoch 0 was double-committed")
       graft.sources.DeltaLog.read(s, tbl)
         .select(col("event_id").cast("long").as("event_id"),
@@ -1280,7 +1279,7 @@ object Analytics {
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
         .repartition(4).write.parquet(inDir)
-      val schema = s.read.parquet(inDir).schema
+      val schema = Tables.schema(s, inDir)
       val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir)
         .writeStream
@@ -1359,13 +1358,13 @@ object Analytics {
           fsys.setTimes(p, 1000000000000L + k * 60000L, -1))
         seen = now.map(_.toString).toSet
       }
-      val schema = s.read.parquet(inDir).schema
+      val schema = Tables.schema(s, inDir)
       val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir)
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val accepted =
-            if (fsys.exists(new Path(accDir))) s.read.parquet(accDir)
+            if (fsys.exists(new Path(accDir))) Tables.read(s, accDir)
             else batch.limit(0)
           graft.operators.Dedup.incrementalExact(accepted, batch)
             .write.mode("append").parquet(accDir)
@@ -1373,7 +1372,7 @@ object Analytics {
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-      s.read.parquet(accDir)
+      Tables.read(s, accDir)
         .select(col("doc_id"), col("lang"), col("source"))
         .orderBy(col("doc_id"))
     }, Some("""

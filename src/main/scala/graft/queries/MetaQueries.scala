@@ -45,7 +45,7 @@ object MetaQueries {
     // the oracle proves the metadata answer equals the true row count.
     QueryDef("p02_footer_count", (s, d) => {
       graft.plans.FooterCount.enable(s)
-      val df = s.read.parquet(Tables.path(d, "lineitem"))
+      val df = Tables.read(s, Tables.path(d, "lineitem"))
         .agg(count(lit(1)).as("n"))
       val leaves = df.queryExecution.optimizedPlan.collectLeaves()
       require(leaves.forall(_.isInstanceOf[
@@ -61,7 +61,7 @@ object MetaQueries {
     // footer fold equals the true aggregate over the data pages.
     QueryDef("p03_footer_minmax", (s, d) => {
       graft.plans.FooterStats.enable(s)
-      val df = s.read.parquet(Tables.path(d, "lineitem")).agg(
+      val df = Tables.read(s, Tables.path(d, "lineitem")).agg(
         min(col("l_shipdate")).as("min_ship"),
         max(col("l_shipdate")).as("max_ship"),
         min(col("l_quantity")).as("min_qty"),

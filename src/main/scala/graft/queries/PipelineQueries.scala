@@ -1296,7 +1296,7 @@ object PipelineQueries {
       val sigDir = s"${SourceQueries.stage}/d12b_sig_store"
       Dedup.minhashStore(docs.filter(!isNew))
         .write.mode("overwrite").parquet(sigDir)
-      Dedup.incrementalLshAgainstStore(s.read.parquet(sigDir),
+      Dedup.incrementalLshAgainstStore(Tables.read(s, sigDir),
           docs.filter(isNew))._1
         .select(col("doc_id"), col("lang"), col("source"))
         .orderBy(col("doc_id"))
@@ -1367,7 +1367,7 @@ object PipelineQueries {
           fsys.setTimes(p, 1100000000000L + k * 60000L, -1))
         seen = now.map(_.toString).toSet
       }
-      val schema = s.read.parquet(inDir).schema
+      val schema = Tables.schema(s, inDir)
       val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir)
         .writeStream

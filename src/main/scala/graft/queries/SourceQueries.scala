@@ -497,7 +497,7 @@ object SourceQueries {
         files.forall(f => graft.operators.Compaction.hasBloomFilter(
           f.getPath, "k")),
         s"bloom filter missing from written footers in $dir")
-      val t = s.read.parquet(dir)
+      val t = Tables.read(s, dir)
       val present = t.filter(col("k") === md5(lit("42")))
         .agg(count(lit(1)).as("n_present"))
       val absent = t.filter(col("k") === md5(lit("absent")))
@@ -3403,7 +3403,7 @@ object SourceQueries {
         .select(col("event_id"), col("user_id"),
           struct(col("event_type"), col("value")).as("meta"))
         .write.mode("overwrite").parquet(dir)
-      s.read.parquet(dir)
+      Tables.read(s, dir)
         .select(col("event_id").cast("long").as("event_id"),
           col("meta.event_type").as("event_type"))
         .orderBy(col("event_id"))
@@ -3537,7 +3537,7 @@ object SourceQueries {
         targetBytes = 64L * 1024 * 1024)
       require(res.filesAfter < res.filesBefore,
         s"compaction did not reduce files: ${res.filesBefore} -> ${res.filesAfter}")
-      s.read.parquet(out)
+      Tables.read(s, out)
         .select(col("event_id").cast("long").as("event_id"),
           col("user_id").cast("long").as("user_id"), col("event_type"))
         .orderBy(col("event_id"))
@@ -3562,7 +3562,7 @@ object SourceQueries {
       val res = graft.operators.Compaction.compactClustered(s, in, out,
         clusterCols = Seq("user_id"), targetBytes = 64L * 1024 * 1024)
       require(res.rows > 0, "clustered compaction lost rows")
-      s.read.parquet(out)
+      Tables.read(s, out)
         .select(col("event_id").cast("long").as("event_id"),
           col("user_id").cast("long").as("user_id"), col("event_type"),
           col("value"))
@@ -3590,7 +3590,7 @@ object SourceQueries {
         zCols = Seq("user_id", "value"), bits = 8,
         targetBytes = 64L * 1024 * 1024)
       require(res.rows > 0, "z-order compaction lost rows")
-      s.read.parquet(out)
+      Tables.read(s, out)
         .filter(col("user_id").between(100L, 200L) &&
           col("value").between(10.0, 50.0))
         .select(col("event_id").cast("long").as("event_id"),
@@ -3618,7 +3618,7 @@ object SourceQueries {
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("dt"))
         .write.mode("overwrite").partitionBy("dt").parquet(dir)
-      s.read.parquet(dir)
+      Tables.read(s, dir)
         .filter(col("dt") >= "2024-01-05" && col("dt") <= "2024-01-10")
         .select(col("event_id").cast("long").as("event_id"),
           col("user_id").cast("long").as("user_id"), col("event_type"),
@@ -3648,7 +3648,7 @@ object SourceQueries {
         .filter(_.getName.endsWith(".parquet"))
       require(files.nonEmpty && files.forall(_.getName.contains(".zstd.")),
         s"zstd codec not applied: ${files.map(_.getName).mkString(",")}")
-      s.read.parquet(dir)
+      Tables.read(s, dir)
         .select(col("l_orderkey").cast("long").as("l_orderkey"),
           col("l_linenumber").cast("long").as("l_linenumber"),
           col("l_quantity"), col("l_returnflag"))

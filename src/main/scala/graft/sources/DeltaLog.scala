@@ -10,6 +10,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.Tables
 import graft.server.MiniJson
 
 /** Minimal read-only Delta Lake table support (reference registers a
@@ -219,7 +220,7 @@ object DeltaLog {
         "in their data, which log-side injection would shadow. Rewrite " +
         "the table with one layout")
     val schema = declared.getOrElse {
-      val footer = FooterSchema(spark, adds.head.path)
+      val footer = Tables.schema(spark, adds.head.path)
       val clash = pvKeys.filter(footer.fieldNames.contains)
       require(clash.isEmpty,
         s"mixed partitioned/unpartitioned Delta table: column(s) " +
@@ -386,7 +387,7 @@ object DeltaLog {
     checkpointVersion.foreach { v =>
       val cp = new File(logDir, f"$v%020d.checkpoint.parquet")
       require(cp.isFile, s"_last_checkpoint names a missing file: $cp")
-      val cpAll = spark.read.parquet(cp.getPath)
+      val cpAll = Tables.read(spark, cp.getPath)
       def structFields(colName: String): Seq[String] =
         cpAll.schema.find(_.name == colName).map(_.dataType).collect {
           case t: org.apache.spark.sql.types.StructType => t.fieldNames.toSeq
@@ -651,7 +652,7 @@ object DeltaLog {
       .filter(v => versionAsOf.forall(_ >= v)).foreach { v =>
       val cp = new File(logDir, f"$v%020d.checkpoint.parquet")
       if (cp.isFile) {
-        val cpAll = spark.read.parquet(cp.getPath)
+        val cpAll = Tables.read(spark, cp.getPath)
         if (cpAll.schema.fieldNames.contains("metaData")) {
           cpAll.where("metaData IS NOT NULL").selectExpr("to_json(metaData)")
             .collect().headOption.foreach { r =>
@@ -705,18 +706,10 @@ object DeltaLog {
     lastCheckpointVersion(logDir).foreach { v =>
       val cp = new File(logDir, f"$v%020d.checkpoint.parquet")
       if (cp.isFile) {
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(cp.getPath),
-            new org.apache.hadoop.conf.Configuration()))
-        val hasTxn =
-          try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
-            .exists(_.getName == "txn")
-          finally reader.close()
-        if (hasTxn) {
-          // tiny driver-side read: the checkpoint is metadata
-          val spark = org.apache.spark.sql.SparkSession.active
-          spark.read.parquet(cp.getPath).where("txn IS NOT NULL")
+        // tiny driver-side read: the checkpoint is metadata
+        val cpAll = Tables.read(SparkSession.active, cp.getPath)
+        if (cpAll.schema.fieldNames.contains("txn")) {
+          cpAll.where("txn IS NOT NULL")
             .selectExpr("txn.appId", "txn.version").collect().foreach { r =>
               val app = r.getString(0)
               val ver = r.getLong(1)

@@ -4,7 +4,12 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.core.Tables
+import graft.plans.FooterStats
 
 /** Minimal Delta Lake WRITE path — append and overwrite commits compatible
   * with [[DeltaLog]]'s reader (and any Delta reader at protocol
@@ -104,7 +109,7 @@ object DeltaWrite {
     * trustworthy footer stats (NaN floats, pre-PARQUET-251 binary): a
     * stats-less add is always scanned.
     */
-  private def fileStats(f: File,
+  private def fileStats(conf: Configuration, f: File,
       schema: org.apache.spark.sql.types.StructType): Option[String] = {
     import org.apache.spark.sql.types._
     val cols = schema.fields.filter(_.dataType match {
@@ -112,7 +117,7 @@ object DeltaWrite {
       case _ => false
     }).map(_.name).toSeq
     if (cols.isEmpty) return None
-    graft.plans.FooterStats.readOne(f.getPath, cols).map { case (rows, per) =>
+    Tables.footer(conf, f.getPath)(FooterStats.readOne(_, cols)).map { case (rows, per) =>
       def render(v: Any): String = v match {
         case b: Array[Byte] =>
           "\"" + jsonEscape(new String(b, StandardCharsets.UTF_8)) + "\""
@@ -127,15 +132,17 @@ object DeltaWrite {
     }
   }
 
-  private def addAction(f: File, stats: Option[String] = None): String =
-    s"""{"add":{"path":"${jsonEscape(f.getName)}","partitionValues":{},""" +
+  /** The `add` action of a file just written in the table root, with
+    * its partition tuple and footer stats over `schema`'s columns.
+    */
+  private def addAction(conf: Configuration, f: File,
+      schema: org.apache.spark.sql.types.StructType,
+      pv: Map[String, String] = Map.empty, dataChange: Boolean = true): String =
+    s"""{"add":{"path":"${jsonEscape(f.getName)}",""" +
+      s""""partitionValues":${pvJson(pv)},""" +
       s""""size":${f.length},"modificationTime":${f.lastModified},""" +
-      stats.fold("")(s => s""""stats":"${jsonEscape(s)}",""") +
-      """"dataChange":true}}"""
-
-  private def addWithStats(f: File,
-      schema: org.apache.spark.sql.types.StructType): String =
-    addAction(f, fileStats(f, schema))
+      fileStats(conf, f, schema).fold("")(s => s""""stats":"${jsonEscape(s)}",""") +
+      s""""dataChange":$dataChange}}"""
 
   /** The append retry loop. Appends' DATA can never conflict (real
     * Delta's conflict matrix allows concurrent appends; only the VERSION
@@ -355,7 +362,7 @@ object DeltaWrite {
     * partition tuple, and footer stats over the DATA columns (partition
     * values live in the path/log, never the footers).
     */
-  private def partitionedAddAction(root: File, f: File,
+  private def partitionedAddAction(conf: Configuration, root: File, f: File,
       pv: Map[String, String],
       dataSchema: org.apache.spark.sql.types.StructType,
       dataChange: Boolean): String = {
@@ -364,7 +371,7 @@ object DeltaWrite {
     s"""{"add":{"path":"${jsonEscape(rel)}",""" +
       s""""partitionValues":${pvJson(pv)},"size":${f.length},""" +
       s""""modificationTime":${f.lastModified},""" +
-      fileStats(f, dataSchema).fold("")(st =>
+      fileStats(conf, f, dataSchema).fold("")(st =>
         s""""stats":"${jsonEscape(st)}",""") +
       s""""dataChange":$dataChange}}"""
   }
@@ -529,19 +536,21 @@ object DeltaWrite {
   private def stageAdds(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, root: File, staged: DataFrame,
       statsSchema: org.apache.spark.sql.types.StructType,
-      partCols: Seq[String]): (Seq[File], Seq[String]) =
+      partCols: Seq[String]): (Seq[File], Seq[String]) = {
+    val conf = spark.sessionState.newHadoopConf()
     if (partCols.isEmpty) {
       val fs = stageDataFiles(staged, root)
-      (fs, fs.map(addWithStats(_, statsSchema)))
+      (fs, fs.map(addAction(conf, _, statsSchema)))
     } else {
       val physParts = physPartitionCols(spark, tablePath, partCols)
       val moved = stagePartitionedFiles(staged, root, physParts)
       val dataSchema = org.apache.spark.sql.types.StructType(
         statsSchema.fields.filterNot(f => physParts.contains(f.name)))
       (moved.map(_._1), moved.map { case (f, pv) =>
-        partitionedAddAction(root, f, pv, dataSchema, dataChange = true)
+        partitionedAddAction(conf, root, f, pv, dataSchema, dataChange = true)
       })
     }
+  }
 
   /** Outcome of a [[merge]] commit. */
   final case class MergeStats(version: Long, filesRewritten: Int,
@@ -1307,9 +1316,10 @@ object DeltaWrite {
       s"createIdMapped: partition column '$c' not in the DataFrame"))
     val physByLogical = logical.fields.zip(physical.fields)
       .map { case (lf, pf) => lf.name -> pf.name }.toMap
+    val conf = df.sparkSession.sessionState.newHadoopConf()
     val adds: Seq[String] =
       if (partitionCols.isEmpty)
-        stageDataFiles(staged, root).map(addWithStats(_, physical))
+        stageDataFiles(staged, root).map(addAction(conf, _, physical))
       else {
         // PARTITIONED staging: hive dirs named by the PHYSICAL column
         // (the pv keys of every future add), data files carry only the
@@ -1321,7 +1331,7 @@ object DeltaWrite {
         val physData = org.apache.spark.sql.types.StructType(
           physical.fields.filterNot(f => physParts.contains(f.name)))
         moved.map { case (f, pv) =>
-          partitionedAddAction(root, f, pv, physData, dataChange = true)
+          partitionedAddAction(conf, root, f, pv, physData, dataChange = true)
         }
       }
     val maxId = logical.fields.length
@@ -1981,6 +1991,7 @@ object DeltaWrite {
     // loop is bounded by touched-partition count, the same class as
     // real OPTIMIZE's per-partition planning.
     val groups = dvAdds.groupBy(_.partitionValues).toSeq
+    val conf = spark.sessionState.newHadoopConf()
     val newAdds = groups.flatMap { case (pv, groupAdds) =>
       val liveRows = rewriteScan(spark, root, request, groupAdds)
       // stage first, then drop zero-row outputs from the FOOTER count:
@@ -1989,18 +2000,11 @@ object DeltaWrite {
       // leave zero survivors — that group publishes no add, same as
       // before.)
       val files = stageDataFiles(liveRows, root).filter { f =>
-        val rows = graft.plans.FooterStats.readOne(f.getPath, Seq.empty)
+        val rows = Tables.footer(conf, f.getPath)(FooterStats.readOne(_, Seq.empty))
           .map(_._1).getOrElse(-1L)
         if (rows == 0L) { f.delete(); false } else true
       }
-      files.map { f =>
-        val stats = fileStats(f, request)
-        s"""{"add":{"path":"${jsonEscape(f.getName)}",""" +
-          s""""partitionValues":${pvJson(pv)},""" +
-          s""""size":${f.length},"modificationTime":${f.lastModified},""" +
-          stats.fold("")(st => s""""stats":"${jsonEscape(st)}",""") +
-          """"dataChange":false}}"""
-      }
+      files.map(addAction(conf, _, request, pv, dataChange = false))
     }
     val version = base + 1
     val removes = dvAdds.map(a =>
@@ -2094,8 +2098,9 @@ object DeltaWrite {
     // change-feed derivation over this epoch re-attaches them without
     // guessing from paths
     val removes = prior.map(a => removeAction(a))
+    val conf = spark.sessionState.newHadoopConf()
     publish(logDir, version, header ++ metaUpdate ++ removes ++
-      files.map(addWithStats(_, physSchema)) :+
+      files.map(addAction(conf, _, physSchema)) :+
       """{"commitInfo":{"operation":"WRITE","operationParameters":{"mode":"Overwrite"}}}""")
     version
   }
@@ -2173,6 +2178,7 @@ object DeltaWrite {
     // live bytes restage as stored (mapped names and ids included) —
     // never a logical decode/re-encode
     val request = rewriteSchema(spark, tablePath, adds).request
+    val conf = spark.sessionState.newHadoopConf()
     val actions = rewriteByPv.toSeq.map { case (pv, group) =>
       val packed = rewriteScan(spark, root, request, group)
         .coalesce(targetFiles)
@@ -2183,16 +2189,10 @@ object DeltaWrite {
         // the replay would keep the file live
         s"""{"remove":{"path":"${jsonEscape(a.recordedPath)}","dataChange":false}}"""
       }
-      val addsJson = files.map { f =>
-        // same footer-derived stats as a data commit — compaction must
-        // not degrade data skipping
-        val stats = fileStats(f, packed.schema)
-        s"""{"add":{"path":"${jsonEscape(f.getName)}",""" +
-          s""""partitionValues":${pvJson(pv)},""" +
-          s""""size":${f.length},"modificationTime":${f.lastModified},""" +
-          stats.fold("")(st => s""""stats":"${jsonEscape(st)}",""") +
-          """"dataChange":false}}"""
-      }
+      // same footer-derived stats as a data commit — compaction must
+      // not degrade data skipping
+      val addsJson = files.map(addAction(conf, _, packed.schema, pv,
+        dataChange = false))
       (group.size, files.size, removes ++ addsJson)
     }
     val version = base + 1
@@ -2376,6 +2376,7 @@ object DeltaWrite {
       .newFixedThreadPool(rewriteParallelism)
     implicit val zEc: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val conf = spark.sessionState.newHadoopConf()
     val groupFutures = groups.map { case (pv, groupAdds) =>
       scala.concurrent.Future {
         val df = rewriteScan(spark, root, scanSchema.request, groupAdds)
@@ -2398,15 +2399,8 @@ object DeltaWrite {
           s"""{"remove":{"path":"${jsonEscape(a.recordedPath)}",""" +
             """"dataChange":false}}"""
         }
-        val addsJson = files.map { f =>
-          val st = fileStats(f, df.schema)
-          s"""{"add":{"path":"${jsonEscape(f.getName)}",""" +
-            s""""partitionValues":${pvJson(pv)},""" +
-            s""""size":${f.length},"modificationTime":${f.lastModified},""" +
-            st.fold("")(x => s""""stats":"${jsonEscape(x)}",""") +
-            """"dataChange":false}}"""
-        }
-        removes ++ addsJson
+        removes ++ files.map(addAction(conf, _, df.schema, pv,
+          dataChange = false))
       }
     }
     val actions =
@@ -2501,8 +2495,8 @@ object DeltaWrite {
     require(DeltaLog.headVersion(logDir) < 0L,
       s"already a Delta table: $tablePath — CONVERT adopts plain parquet only")
     // schema BEFORE creating the log dir (an empty _delta_log would be
-    // invisible to inference anyway, but keep the read pristine)
-    val schema = spark.read.parquet(tablePath).schema
+    // skipped by the footer walk anyway, but keep the read pristine)
+    val schema = Tables.read(spark, tablePath).schema
     // the DRIVER walks only the DIRECTORY tree (one entry per hive
     // partition — metadata small even at 10⁵ partitions); the per-dir
     // FILE listing, the per-file FOOTER reads, AND the add-action
@@ -2554,6 +2548,7 @@ object DeltaWrite {
       ()
     }
     spark.sparkContext.setJobDescription("graft convert manifest")
+    val shipped = new SerializableConfiguration(spark.sessionState.newHadoopConf())
     // per slice: (adds rendered, staging file, first misplaced samples)
     val perSlice: Array[(Long, String, Seq[String])] =
       try spark.sparkContext
@@ -2579,8 +2574,8 @@ object DeltaWrite {
                     misplaced += s"${relPath(rootF, f.getPath)} carries " +
                       s"[${pv.keys.mkString(",")}]"
                 } else {
-                  w.write(partitionedAddAction(rootF, f, pv, dataSchema,
-                    dataChange = true))
+                  w.write(partitionedAddAction(shipped.value, rootF, f, pv,
+                    dataSchema, dataChange = true))
                   w.newLine()
                   n += 1
                 }
@@ -2969,11 +2964,6 @@ object DeltaWrite {
             s"vacuumed: $n"))
       }
     }
-    def pvJson(pv: Map[String, String]): String =
-      pv.map {
-        case (k, null) => s""""${jsonEscape(k)}":null"""
-        case (k, v) => s""""${jsonEscape(k)}":"${jsonEscape(v)}""""
-      }.mkString("{", ",", "}")
     val v = base + 1
     publish(logDir, v,
       metaAction ++

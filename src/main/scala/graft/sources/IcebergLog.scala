@@ -9,8 +9,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.Tables
 import graft.server.MiniJson
 import graft.sources.DeltaWrite.jsonEscape
 
@@ -1231,7 +1233,7 @@ object IcebergLog {
               .filter(f => identityPartIds.contains(f._1))
               .map { case (id, n, _) => mapping.getOrElse(id, n) }
             val footerCols =
-              FooterSchema(spark, data.head.path).fieldNames.toSet
+              Tables.schema(spark, data.head.path).fieldNames.toSet
             if (physNames.forall(footerCols.contains)) Set.empty[Int]
             else identityPartIds
           }
@@ -1257,7 +1259,7 @@ object IcebergLog {
           spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
           scan(fieldIdRequestSchema(fields))
         }
-      case None => scan(FooterSchema(spark, data.head.path))
+      case None => scan(Tables.schema(spark, data.head.path))
     }
   }
 
@@ -1435,7 +1437,7 @@ object IcebergLog {
         "left_anti")
     }
     dels.filter(_.content == 2).foreach { e =>
-      val ed = spark.read.schema(FooterSchema(spark, e.path)).parquet(e.path)
+      val ed = Tables.read(spark, e.path)
       val cond = ed.columns.map(c => cur(c) <=> ed(c)).reduce(_ && _) &&
         lit(e.seq) > cur("__graft_dseq")
       cur = cur.join(broadcast(ed), cond, "left_anti")
@@ -1956,7 +1958,8 @@ object IcebergLog {
     require(moved.nonEmpty, s"no data files produced for $tablePath")
     // the new files are ADDED and sequenced at this snapshot, so
     // pre-existing equality deletes (strictly-older rule) never touch them
-    val fresh = moved.map(f => addedEntry(f, statsFields))
+    val fresh = addedEntries(df.sparkSession,
+      moved.map(_ -> Map.empty[String, Any]), statsFields)
     commitAppend(tablePath, fresh, Map.empty, Seq.empty)(_ => false).get
   }
 
@@ -2032,7 +2035,8 @@ object IcebergLog {
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .sortBy(_.getName).toSeq
     require(files.nonEmpty, s"no parquet files to add under $dataDir")
-    val fresh = files.map(f => addedEntry(f, statsFields))
+    val fresh = addedEntries(SparkSession.active,
+      files.map(_ -> Map.empty[String, Any]), statsFields)
     commitAppend(tablePath, fresh, Map.empty, Seq.empty) { prior =>
       val livePaths = prior.map(e => new File(e.filePath).getAbsolutePath).toSet
       val dup = files.filter(f => livePaths.contains(f.getAbsolutePath))
@@ -2081,9 +2085,7 @@ object IcebergLog {
       s"unsupported partition transform: ${f.transform}"))
     val moved = stagePartitioned(df, new File(tablePath), spec)
     require(moved.nonEmpty, s"no data files produced for $tablePath")
-    val fresh = moved.map { case (f, pv) =>
-      addedEntry(f, statsFields).copy(partitionValues = pv)
-    }
+    val fresh = addedEntries(df.sparkSession, moved, statsFields)
     commitAppend(tablePath, fresh, Map.empty, spec)(_ => false).get
   }
 
@@ -2311,11 +2313,24 @@ object IcebergLog {
     moved
   }
 
-  private[sources] def addedEntry(f: File,
+  /** ADDED manifest entries for files just written, each with its
+    * partition tuple, footers read with the session's Hadoop conf.
+    */
+  private[sources] def addedEntries(spark: SparkSession,
+      files: Seq[(File, Map[String, Any])],
+      statsFields: Seq[(Int, String)]): Seq[FixtureEntry] = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.map { case (f, pv) =>
+      addedEntry(conf, f, statsFields).copy(partitionValues = pv)
+    }
+  }
+
+  private def addedEntry(conf: Configuration, f: File,
       statsFields: Seq[(Int, String)]): FixtureEntry = {
     // one footer read per file just written (no data re-read): the row
     // count is spec-required in the manifest; bounds only when asked
-    val footer = graft.plans.FooterStats.readOne(f.getPath, statsFields.map(_._2))
+    val footer = Tables.footer(conf, f.getPath)(
+      graft.plans.FooterStats.readOne(_, statsFields.map(_._2)))
     val rows = footer.map(_._1).getOrElse(0L)
     val (lo, hi) = footer
       .map { case (_, per) =>
@@ -2632,7 +2647,8 @@ object IcebergLog {
     // the epoch scan (which reads state >= base), then a claim of base+1
     // that fails if ANY commit landed after — so a racing same-epoch
     // worker can never double the batch
-    val sid = commitAppend(tablePath, moved.map(f => addedEntry(f, statsFields)),
+    val sid = commitAppend(tablePath, addedEntries(df.sparkSession,
+        moved.map(_ -> Map.empty[String, Any]), statsFields),
       Map("graft.sink.app-id" -> appId, "graft.sink.epoch" -> epoch.toString),
       Seq.empty)(_ => committed)
     if (sid.isEmpty) moved.foreach(f => Files.deleteIfExists(f.toPath))
@@ -2681,7 +2697,7 @@ object IcebergLog {
       case (_, n, t) =>
         org.apache.spark.sql.types.StructField(n, icebergToSparkType(t))
     })
-    case None => FooterSchema(spark, data.head.path)
+    case None => Tables.schema(spark, data.head.path)
   }
 
   /** The rewriting verbs refuse a PHYSICALLY name-mapped table: it is a
@@ -2827,9 +2843,7 @@ object IcebergLog {
     val nextEntries = entries.map { e =>
       if (touchedPaths(e.path)) existingEntry(e).copy(status = 2)
       else existingEntry(e)
-    } ++ staged.map { case (f, pv) =>
-      addedEntry(f, statsFields).copy(partitionValues = pv)
-    }
+    } ++ addedEntries(spark, staged, statsFields)
     val sid = commitSnapshot(tablePath, base, nextEntries,
       operation = operation)
     ReplaceStats(sid, touchedPaths.size, staged.size, rowsDeleted,
@@ -3166,9 +3180,7 @@ object IcebergLog {
         if (touchedSet(e.path)) existingEntry(e).copy(status = 2)
         else existingEntry(e)) ++
       t.dels.map(existingEntry) ++ // untouched old files still need them
-      staged.map { case (f, pv) =>
-        addedEntry(f, statsFields).copy(partitionValues = pv)
-      }
+      addedEntries(spark, staged, statsFields)
     val sid = commitSnapshot(tablePath, t.base, nextEntries,
       operation = "overwrite", schemaFields = evolvedSchema, nameMapping = evolvedMapping)
     MergeStats(sid, touched.size, staged.size, st.rows, batch.count - st.keys)
@@ -3243,9 +3255,7 @@ object IcebergLog {
           .map(x => FixtureEntry(1, x.getPath, st.rows, content = 1))
       val sid = commitSnapshot(tablePath, t.base,
         (t.data ++ t.dels).map(existingEntry) ++
-          staged.map { case (f, pv) =>
-            addedEntry(f, statsFields).copy(partitionValues = pv)
-          } ++ delFile,
+          addedEntries(spark, staged, statsFields) ++ delFile,
         operation = "overwrite")
       MergeStats(sid, 0, staged.size, st.rows, batch.count - st.keys)
     } finally matched.foreach { m => m.unpersist(); () }
@@ -3374,9 +3384,8 @@ object IcebergLog {
     val tombstones = (data ++ dels).map(e =>
       existingEntry(e).copy(status = 2))
     val sid = commitSnapshot(tablePath, base,
-      tombstones ++ staged.map { case (f, pv) =>
-        addedEntry(f, statsFields).copy(partitionValues = pv)
-      }, operation = "replace")
+      tombstones ++ addedEntries(spark, staged, statsFields),
+      operation = "replace")
     RewriteStats(sid, data.size, dels.size, staged.size)
   }
 }

@@ -230,9 +230,8 @@ object Uniform {
     val op =
       if (priorData.size == carried.size) "append" else "overwrite"
     val sid = IcebergLog.commitSnapshot(tablePath, base,
-      carried.map(IcebergLog.existingEntry) ++
-        fresh.map(a => IcebergLog.addedEntry(new File(a.path), statsResolved)
-          .copy(partitionValues = typedPv(a))),
+      carried.map(IcebergLog.existingEntry) ++ IcebergLog.addedEntries(spark,
+        fresh.map(a => new File(a.path) -> typedPv(a)), statsResolved),
       summary = Map("delta-version" -> deltaVersion.toString),
       operation = op,
       partitionSpec = spec, schemaFields = schemaRecord,

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import graft.core.Tables
+
 /** Structured Streaming over the events table. The reference is batch-only
   * (SURVEY §2.10) — this extends the engine for stream-shaped workloads the
   * testdata models: watermarked tumbling-window aggregation with late-data
@@ -12,20 +14,9 @@ import org.apache.spark.sql.types._
   */
 object EventStream {
 
-  /** Probe the events parquet footers for the ACTUAL file schema — a
-    * streaming read needs an explicit schema, and hard-coding one broke
-    * when the external writer switched `ts` from TIMESTAMP(NANOS) to
-    * TIMESTAMP_NTZ(micros) between rounds. A batch read infers from the
-    * footers (the reference's ListingTable behavior, `src/db.rs:134-137`),
-    * so the stream always reads with the encoding the files really carry.
-    */
-  def fileSchema(spark: SparkSession, dir: String): StructType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(dir).schema
-  }
-
-  /** Streaming source over a directory of event parquet files, normalized
-    * to a TimestampType `ts` whatever the physical encoding (see
+  /** Streaming source over a directory of event parquet files, read with
+    * the files' own footer schema (`Tables.schema`) and normalized to a
+    * TimestampType `ts` whatever the physical encoding (see
     * `Tables.normalizeEventTs`).
     * `maxFilesPerTrigger` = None reads everything in one micro-batch —
     * the mode dedup-parity checks use, where cross-trigger watermark
@@ -34,9 +25,9 @@ object EventStream {
     */
   def source(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = Some(4)): DataFrame = {
-    val r = spark.readStream.schema(fileSchema(spark, dir))
+    val r = spark.readStream.schema(Tables.schema(spark, dir))
     maxFilesPerTrigger.foreach(m => r.option("maxFilesPerTrigger", m.toString))
-    graft.core.Tables.normalizeEventTs(r.parquet(dir))
+    Tables.normalizeEventTs(r.parquet(dir))
   }
 
   /** Append one synthetic event to a staged events directory IN THE
@@ -49,7 +40,7 @@ object EventStream {
   def appendSyntheticEvent(spark: SparkSession, dir: String, eventId: Long,
       ts: java.time.Instant, userId: Long, eventType: String,
       value: Double, props: String): Unit = {
-    val schema = fileSchema(spark, dir)
+    val schema = Tables.schema(spark, dir)
     val micros = ts.getEpochSecond * 1000000L + ts.getNano / 1000L
     val tsCol = schema("ts").dataType match {
       case LongType => lit(micros * 1000L) // nanos-as-long
@@ -91,7 +82,7 @@ object EventStream {
     */
   def stageLateDataFixture(spark: SparkSession, sfDir: String,
       dir: String): Seq[() => Unit] = {
-    val ev = graft.core.Tables.loadEvents(spark, sfDir)
+    val ev = Tables.loadEvents(spark, sfDir)
     val root = new java.io.File(dir)
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
@@ -224,10 +215,8 @@ object EventStream {
   }
 
   /** Batch-equivalent of [[hourlyAgg]] for result parity checks. */
-  def hourlyAggBatch(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    hourlyAgg(graft.core.Tables.normalizeEventTs(spark.read.parquet(dir)))
-  }
+  def hourlyAggBatch(spark: SparkSession, dir: String): DataFrame =
+    hourlyAgg(Tables.normalizeEventTs(Tables.read(spark, dir)))
 
   /** Ordered funnel analysis: for each user, the first time each stage
     * completed STRICTLY AFTER the previous stage (a later view doesn't

@@ -3,11 +3,15 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.{col, count, lit, md5}
 import org.apache.spark.sql.types._
 
-import graft.core.{CatalogBootstrap, UrlTableRewrite}
+import graft.core.{CatalogBootstrap, Tables, UrlTableRewrite}
 import graft.exec.{AnalyzeRunner, BenchmarkRunner, DdlTranslate, ExecutionContext, QueryProfile}
 import graft.functions.ParquetMetadataTable
+import graft.operators.Compaction
+import graft.plans.FooterCount
 import graft.tables.{MapTable, MetaTables}
 
 /** App-surface components mirroring the reference's own features
@@ -195,6 +199,7 @@ class AppSurfaceSpec extends SparkSpec {
   }
 
   test("parquet_metadata reads the footer with the session's Hadoop conf") {
+    // and so do table reads, FooterCount and the bloom-filter check
     val hadoop = spark.sparkContext.hadoopConfiguration
     hadoop.set("fs.graftsession.impl", classOf[SessionSchemeFs].getName)
     hadoop.setBoolean("fs.graftsession.impl.disable.cache", true)
@@ -205,6 +210,27 @@ class AppSurfaceSpec extends SparkSpec {
         .collect().map(_.getString(0)).toSet
       assert(cols === ParquetMetadataTable(spark, s"$sf0001/region.parquet")
         .collect().map(_.getAs[String]("path_in_schema")).toSet)
+      // the table read takes its schema from the footer with that conf
+      val region = Tables.load(spark, s"graftsession:$sf0001", "region")
+      assert(region.collect().toSet ===
+        Tables.load(spark, sf0001, "region").collect().toSet)
+      // so does the footer row count (the rule keeps the scan on a
+      // footer it cannot open), in a session of its own so the rule
+      // stays out of the other tests
+      val counting = spark.newSession()
+      FooterCount.enable(counting)
+      val n = Tables.read(counting, path).agg(count(lit(1)))
+      assert(n.queryExecution.optimizedPlan.collectLeaves()
+        .forall(_.isInstanceOf[LocalRelation]), n.queryExecution.optimizedPlan)
+      assert(n.head.getLong(0) === 5L)
+      // and the bloom-filter footer check
+      val bloom = Files.createTempDirectory("graft-session-bloom").toString
+      Compaction.writeWithBloom(spark.range(100)
+        .select(md5(col("id").cast("string")).as("k")), bloom, Seq("k"))
+      val written = new java.io.File(bloom).listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      assert(written.nonEmpty && written.forall(f =>
+        Compaction.hasBloomFilter(s"graftsession:${f.getPath}", "k")))
     } finally {
       hadoop.unset("fs.graftsession.impl")
       hadoop.unset("fs.graftsession.impl.disable.cache")

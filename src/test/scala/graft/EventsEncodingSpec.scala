@@ -107,6 +107,56 @@ class EventsEncodingSpec extends SparkSpec {
     }
   }
 
+  test("a physical TIMESTAMP(NANOS) events file loads and streams to canonical instants") {
+    // Spark never writes TIMESTAMP(NANOS); parquet-mr does. Every session
+    // reads it as raw nanos (SessionFactory.plain), so a fresh session
+    // reads it without any read-time conf change
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  optional int64 event_id;
+        |  optional int64 ts (TIMESTAMP(NANOS,true));
+        |  optional int64 user_id;
+        |  optional binary event_type (STRING);
+        |  optional double value;
+        |  optional binary props (STRING);
+        |}""".stripMargin)
+    val expected = canonical.orderBy("event_id").collect().toSeq
+    assert(expected.head.schema.fieldNames.toSeq ===
+      Seq("event_id", "ts", "user_id", "event_type", "value", "props"))
+    val dir = Files.createTempDirectory("graft-enc-nanos-file").toString
+    val writer = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
+      .withType(schema).withConf(spark.sessionState.newHadoopConf()).build()
+    val groups = new SimpleGroupFactory(schema)
+    try expected.foreach { r =>
+      val g = groups.newGroup()
+      if (!r.isNullAt(0)) g.add("event_id", r.getLong(0))
+      if (!r.isNullAt(1)) {
+        val t = r.getTimestamp(1).toInstant
+        g.add("ts", t.getEpochSecond * 1000000000L + t.getNano)
+      }
+      if (!r.isNullAt(2)) g.add("user_id", r.getLong(2))
+      if (!r.isNullAt(3)) g.add("event_type", r.getString(3))
+      if (!r.isNullAt(4)) g.add("value", r.getDouble(4))
+      if (!r.isNullAt(5)) g.add("props", r.getString(5))
+      writer.write(g)
+    } finally writer.close()
+    val fresh = spark.newSession()
+    assert(Tables.read(fresh, dir).schema("ts").dataType === LongType)
+    assert(Tables.loadEvents(fresh, dir).orderBy("event_id").collect().toSeq ===
+      expected)
+    val q = EventStream.source(fresh, dir, None).writeStream
+      .format("memory").queryName("enc_nanos_file").start()
+    try {
+      q.processAllAvailable()
+      assert(fresh.table("enc_nanos_file").orderBy("event_id").collect().toSeq ===
+        expected)
+    } finally q.stop()
+  }
+
   test("an unrecognized ts encoding fails loudly, naming the type") {
     val bad = canonical.withColumn("ts", col("ts").cast(StringType))
     val err = intercept[IllegalArgumentException] {
